@@ -17,11 +17,6 @@ package graft
   *    per-query as "warm":false).
   *
   * Round 11 additions:
-  *  - GRAPH-FAMILY PREFIX SHARING: Bench sets -Dgraft.bench.sharePrefix=1
-  *    so d128/d130 reuse one simhash pair build and d73/d95 one jaccard
-  *    pair build (SparkEntry.sharedPrefix) — the r10 deadline was consumed
-  *    by exactly this family rebuilding identical prefixes. The artifact's
-  *    "share_prefix" flag marks the mode; correctness runs never share.
   *  - VARIANCE GUARD (interleaved since round 13 — the round-12 header
   *    described this design but the code still drained only after the
   *    schedule; r13 implemented it): any query whose min
@@ -149,10 +144,9 @@ package graft
   *  - CENSOR CLASSIFICATION: only a Spark job-CANCELLATION exception
   *    counts as a censored rep — a genuine failure thrown after the budget
   *    expired lands in `failed` (r18 ADVICE).
-  *  - SHARE MEMBERS NAMED: the artifact's `share_members` array lists the
-  *    queries whose warm mins exclude a shared prefix build (the r11 graph
-  *    family d73/d95/d128/d130). The r18-added p91/s166 shares were
-  *    REMOVED (r18 verdict #2): both queries now measure full lineage.
+  *  - FULL LINEAGE: every query builds its own lineage in every rep — no
+  *    query reuses another's (or an earlier rep's) build, so each min
+  *    includes the query's whole declared work.
   *
   * The stdout line is a COMPACT summary (total, counts, slowest-10) —
   * the full 141-query line exceeded the driver's ~2.2 KB stdout-tail
@@ -470,6 +464,18 @@ private[graft] object BenchUtil {
   def capRotation(starved: Seq[String], priors: Map[String, Double],
                   cap: Int): Seq[String] =
     starved.sortBy(n => -priors.getOrElse(n, 0.5)).take(math.max(cap, 0))
+
+  /** The SPARK_GRAFT_QUERIES comma filter: None when unset, else the named
+    * queries. A name outside `known` fails the run — a stale filter would
+    * otherwise bench nothing and still write an artifact. */
+  def queryFilter(spec: Option[String], known: Set[String]): Option[Set[String]] =
+    spec.map { s =>
+      val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.diff(known)
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_QUERIES names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
 }
 
 object Bench {
@@ -592,23 +598,13 @@ object Bench {
     // every rep carried ≥ watchJitMs of JIT, one extra warm rep is granted
     val watchRatio = sys.env.getOrElse("SPARK_GRAFT_BENCH_WATCH_RATIO", "1.75").toDouble
     val watchJitMs = sys.env.getOrElse("SPARK_GRAFT_BENCH_WATCH_JIT_MS", "2000").toLong
-    // graph-family prefix sharing (see SparkEntry.sharedPrefix); opt out
-    // with SPARK_GRAFT_SHARE_PREFIX=0 to measure full per-query lineage
-    val sharePrefix = sys.env.getOrElse("SPARK_GRAFT_SHARE_PREFIX", "1") == "1"
-    if (sharePrefix) System.setProperty("graft.bench.sharePrefix", "1")
+    // optional comma-separated query filter (e.g. the dedup/ANN family for
+    // the sf1 stress artifact, whose dir has only documents + embeddings)
+    val pool = SparkEntry.queries
+    val only = BenchUtil.queryFilter(sys.env.get("SPARK_GRAFT_QUERIES"), pool.keySet)
     // the library's own session factory (incl. the scale-aware AQE knobs):
     // the bench must measure the configuration users actually run
     val spark = core.Engine.session(s"local[$cpus]", cpus.toInt)
-    // optional comma-separated query filter (e.g. the dedup/ANN family for
-    // the sf1 stress artifact, whose dir has only documents + embeddings).
-    // Bench-only queries (composed stress flows, measured alternatives) join
-    // the pool ONLY when named explicitly — an unfiltered run benches
-    // exactly the driver's correctness surface.
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val pool =
-      if (only.isDefined) SparkEntry.queries ++ SparkEntry.benchOnlyQueries
-      else SparkEntry.queries
     // host identity, recorded in the artifact and compared against the
     // prior's recorded host: the r14 watch entries (s131/q127) were
     // sub-second driver-host floors priced against a faster builder
@@ -813,16 +809,8 @@ object Bench {
       val serveTierJson = queryList.map(_._1)
         .filter(n => serveCutoff > 0 && judgePrior.get(n).exists(_ <= serveCutoff))
         .map("\"" + _ + "\"").mkString("[", ",", "]")
-      // the prefix-sharing members, named (round 19, r18 ADVICE): a
-      // consumer must read THESE mins as post-prefix iteration cost; the
-      // bare share_prefix boolean never said which queries shared
-      val shareMembersJson =
-        (if (sharePrefix) SparkEntry.sharedPrefixQueries.toSeq.sorted
-         else Seq.empty[String])
-          .filter(n => queryList.exists(_._1 == n))
-          .map(jstr).mkString("[", ",", "]")
       val art =
-        s"""{"sf":${jstr(sfDir)},"host":${jstr(host)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_host":${jstr(priorHost)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(reserveS)},"fat_cutoff_s":${fmt(fatCutoff)},"serve_cutoff_s":${fmt(serveCutoff)},"serve_tier":$serveTierJson,"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"share_prefix":$sharePrefix,"share_members":$shareMembersJson,"wall_s":${fmt(elapsed)},"jit_ms":${jitMs - jit0},"gc_ms":${gcMs - gc0},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":$nWarm,"failed":$failedJson,"skipped":$skippedJson,"requeued":$requeuedJson,"guard_skipped":$guardSkippedJson,"watch":$watchJson,"watch_reran":$watchReranJson,"watch_rep_failed":$watchRepFailedJson,"censored":$censoredJson,"queries":$detail}"""
+        s"""{"sf":${jstr(sfDir)},"host":${jstr(host)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_host":${jstr(priorHost)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(reserveS)},"fat_cutoff_s":${fmt(fatCutoff)},"serve_cutoff_s":${fmt(serveCutoff)},"serve_tier":$serveTierJson,"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"wall_s":${fmt(elapsed)},"jit_ms":${jitMs - jit0},"gc_ms":${gcMs - gc0},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":$nWarm,"failed":$failedJson,"skipped":$skippedJson,"requeued":$requeuedJson,"guard_skipped":$guardSkippedJson,"watch":$watchJson,"watch_reran":$watchReranJson,"watch_rep_failed":$watchRepFailedJson,"censored":$censoredJson,"queries":$detail}"""
       val out = java.nio.file.Paths.get(artifact)
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out, (art + "\n").getBytes("UTF-8"))

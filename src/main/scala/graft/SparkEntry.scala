@@ -112,52 +112,23 @@ object SparkEntry {
     s.catalog.dropTempView(name): Unit
   }
 
-  /** Bench-only graph-family prefix sharing. d128 and d130 build the
-    * IDENTICAL simhash pair graph; d73 and d95 the identical jaccard pair
-    * graph — four queries, two pair builds. Under
-    * `-Dgraft.bench.sharePrefix=1` (set ONLY by Bench.main) each prefix is
-    * computed once per (session, sfDir) and `localCheckpoint`ed so the
-    * sibling query and reps 2+ reuse it: localCheckpoint persists at RDD
-    * level, surviving the `catalog.clearCache()` Bench issues between reps.
-    * Correctness runs (Verify / the driver / sbt test) never set the flag,
-    * so every query there builds its own full lineage. Results are
-    * identical either way — the prefix is deterministic and sharing only
-    * moves WHERE the build cost is paid (the first toucher's first rep);
-    * the bench artifact records `share_prefix` so warm mins for these four
-    * queries are read as post-prefix iteration cost. */
-  private val prefixMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  private def sharedPrefix(s: SparkSession, dir: String, key: String)
-                          (build: => DataFrame): DataFrame =
-    if (!sys.props.get("graft.bench.sharePrefix").contains("1")) build
-    else prefixMemo.getOrElseUpdate((s, dir, key), build.localCheckpoint())
-
-  /** d128/d130 shared prefix: simhash near-dup pair graph (d24 semantics). */
+  /** Simhash near-dup pair graph (d24 semantics), read by d128 and d130. */
   private def simhashPairGraph(s: SparkSession, dir: String): DataFrame =
-    sharedPrefix(s, dir, "simhash_pairs") {
-      Dedup.simHashPairs(Dedup.simHash(t(s, dir, "documents"), "doc_id", "text"),
-        maxDist = 3)
-    }
+    Dedup.simHashPairs(Dedup.simHash(t(s, dir, "documents"), "doc_id", "text"),
+      maxDist = 3)
 
-  /** d73/d95 shared prefix: 3-gram Jaccard ≥ 0.8 pair graph (d22 semantics,
-    * uncapped — both call sites pass no maxShingleDf). */
+  /** 3-gram Jaccard ≥ 0.8 pair graph (d22 semantics, but uncapped: no
+    * maxShingleDf). Four consumers: d73 and d173 read it directly, d95
+    * and d172 through [[jaccardCcGraph]]. Each builds its own lineage. */
   private def jaccardPairGraph(s: SparkSession, dir: String): DataFrame =
-    sharedPrefix(s, dir, "jaccard_pairs") {
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.8)
-        .select(col("id_a"), col("id_b"))
-    }
+    Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
+        n = 3, threshold = 0.8)
+      .select(col("id_a"), col("id_b"))
 
-  /** d95 shared prefix, one stage deeper: the component map over the
-    * jaccard pair graph — the SAME CC d73 computes. d73 deliberately stays
-    * on the raw pair prefix (so every bench round still measures a WARM
-    * iterative-CC run there); d95 consumes the component map directly and
-    * its warm min reads as the priority-dedup logic alone. Outside bench
-    * mode this is just d95's own full lineage. */
+  /** The component map over [[jaccardPairGraph]] — the same CC d73
+    * computes — read by d95 and d172. */
   private def jaccardCcGraph(s: SparkSession, dir: String): DataFrame =
-    sharedPrefix(s, dir, "jaccard_cc") {
-      Dedup.connectedComponents(jaccardPairGraph(s, dir), "id_a", "id_b")
-    }
+    Dedup.connectedComponents(jaccardPairGraph(s, dir), "id_a", "id_b")
 
   /** The p90/p91 composed-corpus pass through near-dup cluster dedup
     * (exact dedup → quality floor → boilerplate span prune → LSH pair
@@ -197,20 +168,6 @@ object SparkEntry {
     Dedup.dedupByClusters(pruned, pairs, "doc_id")
   }
 
-  /** The bench-mode prefix-sharing MEMBER SET, exported so the bench
-    * artifact can NAME which queries' warm mins exclude a shared build
-    * (r18 verdict #2 / ADVICE: a bare `share_prefix` boolean left
-    * consumers unable to tell which mins to read as post-prefix cost).
-    * Exactly the r11 graph family: d128/d130 share one simhash pair
-    * build, d73/d95 one jaccard pair build (d95 one CC stage deeper).
-    * The r18-added p91/s166 shares were REMOVED this round (r18 verdict
-    * #2: neither was deadline-necessary and their published mins
-    * understated the queries' declared work) — p91 and s166 now always
-    * build their full lineage, in bench mode too. */
-  val sharedPrefixQueries: Set[String] =
-    Set("d73_dup_clusters", "d95_priority_dedup",
-      "d128_pagerank", "d130_cluster_split")
-
   /** Exact long cents of a 2-dp double. The true value is an integer k of
     * cents, the double is within ±ε of k/100, and floor(k + 0.5 ± ε) = k for
     * either sign — so this recovers k exactly with codegen'd double/long ops,
@@ -248,8 +205,8 @@ object SparkEntry {
   val stopwords: Seq[String] = Seq("the", "a")
 
   /** The frozen BPE tokenizer artifact: the first 48 merges trained by
-    * `Bpe.trainBatched` on the sf0.01 corpus (dev tool `BpeFreeze`, same
-    * config as x97_bpe_train64). Training happens once (t97/x97 cover it);
+    * `Bpe.trainBatched` on the sf0.01 corpus (`graft.Dev bpe-freeze`,
+    * 64 merges). Training happens once (t97 covers it);
     * production encodes the full corpus with the PUBLISHED list — which is
     * why t102 applies a constant instead of retraining per run, exactly
     * like running a released tokenizer's merges file. */
@@ -1591,8 +1548,7 @@ object SparkEntry {
     // Every stage is also separately oracle-verified (d21/t63/d87/d23/d73/
     // d81); this row proves their COMPOSITION is, too
     "p90_composed_corpus" -> ((s, dir) => {
-      // full lineage on purpose, never the shared prefix: p90 is where the
-      // bench measures the corpus pass itself (p91 builds it too)
+      // p91 builds the same corpus pass, each from its own lineage
       val deduped = composedDedupedBuild(s, dir)
       graft.ops.Sampling.temperatureBalance(deduped, "lang", "doc_id")
         .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
@@ -1608,9 +1564,8 @@ object SparkEntry {
     // boundaries, bin assignments and all
     "p91_composed_prep" -> ((s, dir) => {
       val d = t(s, dir, "documents")
-      // full lineage ALWAYS (r18 verdict #2 unwound the bench-mode share):
       // p91's warm min measures the whole declared chain, corpus pass
-      // included, in every mode
+      // included
       val deduped = composedDedupedBuild(s, dir)
       val balanced = graft.ops.Sampling.temperatureBalance(deduped, "lang", "doc_id")
         .transform(Checkpointing.stage) // consumed by contamination AND the anti-join
@@ -2079,8 +2034,7 @@ object SparkEntry {
     // rank from the stashed model
     "s166_whitened_ann" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      // fits its own model in EVERY mode (r18 verdict #2 unwound the
-      // bench-mode share): s166's warm min includes the whitening fit
+      // fits its own model: s166's warm min includes the whitening fit
       val (mu, w) = Similarity.whitenModel(e, "embedding", dim = 64, k = 8)
       whitenModelStash(dir) = (mu, w)
       val y = graft.ops.Similarity.whiten(e, "vec_id", "embedding", mu, w)
@@ -2827,13 +2781,13 @@ object SparkEntry {
     }),
 
     // TRIANGLE / clustering-coefficient diagnostic (round 17) over the
-    // near-dup pair graph (the d73/d95 shared prefix): coefficient → 1
+    // near-dup pair graph (the d73/d95 pair graph): coefficient → 1
     // marks a doc whose near-dups are all near-dups of EACH OTHER (a true
     // template/duplicate clique — safe to collapse), → 0 marks transitive
     // chains where CC merged docs that never matched directly (the
     // classic over-merge smell worth auditing before a dedup drop).
-    // Near-dup graphs are df-capped, so the wedge join's Σ deg² bound
-    // holds at any corpus
+    // The graph is NOT df-capped: the wedge join is bounded only by
+    // Σ deg², i.e. by how many near-duplicates each doc has
     "d173_triangle_stats" -> ((s, dir) => {
       graft.ops.Graph.triangleStats(jaccardPairGraph(s, dir), "id_a", "id_b")
         .orderBy(col("id"))
@@ -2857,8 +2811,7 @@ object SparkEntry {
     // d73's near-dup components — keep every duplicate, downweight it so
     // a doc duplicated k times carries ~one doc of gradient mass
     // (duplication often correlates with quality; dropping loses signal a
-    // weight keeps). Consumes the d95 shared component-map prefix, so the
-    // warm bench min reads as the weighting logic alone
+    // weight keeps). Reads the same component map d95 does
     "d172_dup_weights" -> ((s, dir) => {
       graft.ops.Sampling.clusterWeights(t(s, dir, "documents"),
           jaccardCcGraph(s, dir), "doc_id", "node", "component")
@@ -2890,173 +2843,6 @@ object SparkEntry {
     "q58_stream_window", "q68_stream_dedup", "q94_stream_neardup",
     "q96_stream_join", "q124_stream_scd2", "q140_stream_quota",
     "q172_stream_moments", "q175_stream_psi", "p72_stream_pipeline")
-
-  /** Bench-only queries: runnable by [[Bench]] when explicitly named in
-    * SPARK_GRAFT_QUERIES, never part of the driver correctness surface
-    * (`queries`/`oracleSql`) — so they don't perturb the round-over-round
-    * shared-query bench comparison either.
-    *  - x23_minhash_lsh_inrow: d23 with `pairJoin = false` — the measured
-    *    alternative candidate-pair shape (in-row bucket-list expansion);
-    *    committed evidence that the streamed equi-join default is a timing
-    *    wash at d23's bucket sizes (within ±20% across sf0.1 and 10× runs,
-    *    each shape winning some) while staying bounded on degenerate
-    *    buckets.
-    *  - x22_jaccard_inrow: d22 with `pairJoin = false` — the legacy in-row
-    *    pair expansion (per-shingle collect_list + interpreted k² lambda),
-    *    kept for head-to-head evidence against the streamed equi-join
-    *    default that replaced it in r7.
-    *  - x74_neardup_fixed: d74 with `planes` pinned at 4 instead of
-    *    `autoPlanes` — since r8 the driver query ships the auto contract
-    *    (planes tracks log₂ n, near-linear candidates), and this is the
-    *    fixed-knob alternative kept for head-to-head stress evidence (at
-    *    10× it went 17.5× superlinear from per-bucket densification).
-    *    At the sf0.01 gate n=500 ⇒ autoPlanes=4, so both forms coincide
-    *    there — the split only shows at stress scale.
-    *  - x25_jaccard_uncapped: d22 with `maxShingleDf = 0` — the exact
-    *    uncapped form (every boilerplate shingle keeps its full k² pair
-    *    fan-out), kept for head-to-head evidence against the capped driver
-    *    default that replaced it in r8.
-    *  - x92_semantic_dedup_fixed: p92 at planes=4, the fixed-knob
-    *    alternative of the now-auto driver query (same rationale as x74).
-    *  - x97_bpe_train64: the full 64-merge BPE training loop (batched
-    *    top-k extraction + vocab pruning) — the end-to-end cost t97's
-    *    single pair-count statistic doesn't show.
-    *  - x97_bpe_train1k: the same loop at 1024 merges — the depth
-    *    measurement for the 10k-50k-merge production regime the r13
-    *    checkpoint rotation targets (bounds rounds/merge and s/merge).
-    *  - x120_pq_trained: s120 with a TRAINED per-subspace k-means codebook
-    *    (Similarity.pqCodebookTrained, the s36 trainCap precedent) instead
-    *    of the md5 grid — the real-deployment form. Trained artifacts are
-    *    rows-only (no SQL oracle replays k-means), so it lives here;
-    *    ScaleJoinsSpec bounds it against exact brute force (full-expand
-    *    equality + tight-expand recall floor) and s120's hash-exact
-    *    oracle stays as is. */
-  def benchOnlyQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // t144 decomposition probes (r17 — the confirmed 1.75× riser): the
-    // three stages measured alone, to localize the floor shift
-    "x144_under_only" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      graft.ops.TextIndex.bigramLogProbScoreUnder(d,
-        d.filter(col("lang") === "en"), "doc_id", "text", 0.5)
-    }),
-    "x144_corpus_only" -> ((s, dir) => {
-      graft.ops.TextIndex.bigramLogProbScore(t(s, dir, "documents"),
-        "doc_id", "text", 0.5)
-    }),
-    // the pre-r17 two-call composition, kept as the measured control for
-    // the fused dsirResample (identical numbers by construction)
-    "x144_twocall" -> ((s, dir) => {
-      val d = t(s, dir, "documents")
-      val underTarget = graft.ops.TextIndex.bigramLogProbScoreUnder(
-          d, d.filter(col("lang") === "en"), "doc_id", "text", 0.5)
-        .select(col("doc_id"), col("avg_logprob").as("lp_target"))
-      val underCorpus = graft.ops.TextIndex.bigramLogProbScore(
-          d, "doc_id", "text", 0.5)
-        .select(col("doc_id"), col("avg_logprob").as("lp_corpus"))
-      underTarget.join(underCorpus, Seq("doc_id"))
-        .select(col("doc_id"), col("lp_target"), col("lp_corpus"),
-          (floor((col("lp_target") - col("lp_corpus")) * lit(1e6) + lit(0.5))
-            / lit(1e6)).as("importance"))
-        .orderBy(col("importance").desc, col("doc_id").asc)
-    }),
-    "x23_minhash_lsh_inrow" -> ((s, dir) => {
-      Dedup.minHashLsh(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, numHashes = 64, bands = 16, verifyThreshold = 0.8,
-          pairJoin = false)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "x22_jaccard_inrow" -> ((s, dir) => {
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.8, pairJoin = false)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    "x74_neardup_fixed" -> ((s, dir) => {
-      Similarity.nearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding",
-          threshold = 0.35, planes = 4, tables = 2, dim = 64)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // d22 with the 100 TB mitigation OFF: every boilerplate shingle keeps
-    // its full k² pair fan-out — the exact form, measured against the
-    // capped driver default
-    "x25_jaccard_uncapped" -> ((s, dir) => {
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.8, maxShingleDf = 0)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-    // p92 with planes pinned at 4: the fixed-knob semantic-dedup
-    // alternative, for head-to-head stress against the shipped auto form
-    "x92_semantic_dedup_fixed" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val pairs = Similarity.nearDupPairs(e, "vec_id", "embedding",
-          threshold = 0.35, planes = 4, tables = 2, dim = 64)
-        .select(col("id_a"), col("id_b"))
-      val cc = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      val sizes = cc.groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
-      e.select(col("vec_id"))
-        .join(cc.select(col("node").as("vec_id"), col("component")), Seq("vec_id"), "left")
-        .join(sizes, Seq("component"), "left")
-        .select(col("vec_id"),
-          coalesce(col("component"), col("vec_id")).as("cluster_id"),
-          coalesce(col("cluster_size"), lit(1L)).as("cluster_size"),
-          when(col("component").isNull || col("component") === col("vec_id"), 1L)
-            .otherwise(0L).as("keep"))
-        .orderBy(col("vec_id"))
-    }),
-    // end-to-end 64-merge BPE training (batched top-k merge extraction +
-    // per-round vocab pruning); returns the ordered merge table
-    "x97_bpe_train64" -> ((s, dir) => {
-      import s.implicits._
-      val (merges, rounds) = graft.ops.Bpe.trainBatched(
-        t(s, dir, "documents"), "text", numMerges = 64)
-      System.err.println(s"[x97] 64 merges in $rounds pair-count rounds")
-      merges.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-        .toDF("rank", "a", "b")
-    }),
-    // BPE training at realistic DEPTH (round 14): 1024 merges — the
-    // r13 Truncator vocab-checkpoint rotation was built for the
-    // 10k-50k-merge regime but only 64 merges had ever been measured;
-    // this bounds per-merge driver-loop cost (pair-count rounds per
-    // merge, seconds per merge warm) one decade closer to production
-    "x97_bpe_train1k" -> ((s, dir) => {
-      import s.implicits._
-      val (merges, rounds) = graft.ops.Bpe.trainBatched(
-        t(s, dir, "documents"), "text", numMerges = 1024)
-      System.err.println(s"[x97_1k] ${merges.length} merges in $rounds pair-count rounds")
-      merges.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-        .toDF("rank", "a", "b")
-    }),
-    "x120_pq_trained" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val cb = Similarity.pqCodebookTrained(emb, "vec_id", "embedding",
-        m = 8, k = 16, subDim = 8)
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 8),
-          "vec_id", "embedding", k = 10, codebook = cb, expand = 4)
-        .orderBy(col("query_id"), col("neighbor_id"))
-    }),
-    // s148's WRITE side: one full index build (encode + bucket partition
-    // layout) to a fresh temp dir per rep — the amortized build cost the
-    // serve-only driver row deliberately excludes via the q50 caching
-    // rule; emits the bucket-dir count so the measured action IS the write
-    "x148_ann_index_write" -> ((s, dir) => {
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val path = java.nio.file.Files.createTempDirectory("graft_x148")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      // reclaim in finally — a throwing rep must not litter /tmp either.
-      // The timed rep thus includes listing + deleting the fresh layout: a
-      // bounded, deliberate bias (the metric answers "what does a build
-      // cost end to end", and a production rebuild pays the old layout's
-      // teardown too)
-      try {
-        Similarity.writeAnnIndex(emb, "vec_id", "embedding",
-          Similarity.pqCodebook(8, 16, 8), planes = 3, dim = 64, path.toString)
-        val n = path.toFile.listFiles().count(_.getName.startsWith("bucket="))
-        Seq(n.toLong).toDF("n_buckets")
-      } finally rm(path.toFile)
-    })
-  )
 
   // ---- oracle SQL (DuckDB dialect, same parquet tables) --------------------
 

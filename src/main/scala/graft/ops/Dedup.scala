@@ -81,34 +81,24 @@ object Dedup {
           / lit(1e6))
   }
 
-  /** All ordered (a < b) pairs from a sorted id array, expanded in-expression
-    * (no self-join): for a bucket of k ids this emits k(k-1)/2 structs. */
-  private def orderedPairs(ids: Column): Column =
-    flatten(transform(ids, x =>
-      transform(filter(ids, y => y > x), y => struct(x.as("id_a"), y.as("id_b")))))
-
   /** Exact n-gram Jaccard similarity pairs with sim >= `threshold`, via an
     * inverted shingle index (see object doc). `bandCols` restricts candidates
     * to equal values of those columns (e.g. language) — both a semantic guard
     * and a fan-out reducer. `maxShingleDf`: drop shingles appearing in more
     * than this many docs (0 = keep all, exact result).
     *
-    * Pair counting (`pairJoin`): the default streams the shingle index
-    * through a codegen'd (shingle, bands) self equi-join and hash-aggregates
-    * the resulting (id_a, id_b) co-occurrence stream — the same
-    * bounded-memory shape as [[minHashLsh]]/[[simHashPairs]]: a boilerplate
-    * shingle shared by k docs is STREAMED as k² join rows (partial-combined
-    * map-side), never materialized as one k-element aggregate row, and the
-    * k² inner loop runs in whole-stage codegen instead of the interpreted
-    * (CodegenFallback) pair lambda. `pairJoin = false` keeps the legacy
-    * in-row expansion — one exchange fewer, but one collected id list per
-    * shingle and an interpreted k² expansion: acceptable only when a
-    * positive `maxShingleDf` bounds k.
+    * Pair counting streams the shingle index through a codegen'd
+    * (shingle, bands) self equi-join and hash-aggregates the resulting
+    * (id_a, id_b) co-occurrence stream — the same bounded-memory shape as
+    * [[minHashLsh]]/[[simHashPairs]]: a boilerplate shingle shared by k
+    * docs is STREAMED as k² join rows (partial-combined map-side), never
+    * materialized as one k-element aggregate row, and the k² inner loop
+    * runs in whole-stage codegen.
     */
   def jaccardPairs(df0: DataFrame, idCol: String, textCol: String, n: Int,
                    threshold: Double, bandCols: Seq[String] = Nil,
-                   maxShingleDf: Long = 0L, pairJoin: Boolean = true): DataFrame =
-    pairCore(df0, idCol, textCol, n, bandCols, maxShingleDf, pairJoin)
+                   maxShingleDf: Long = 0L): DataFrame =
+    pairCore(df0, idCol, textCol, n, bandCols, maxShingleDf)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
@@ -123,8 +113,8 @@ object Dedup {
     * Same candidate shapes, exchanges, and skew guards as jaccardPairs. */
   def containmentPairs(df0: DataFrame, idCol: String, textCol: String, n: Int,
                        threshold: Double, bandCols: Seq[String] = Nil,
-                       maxShingleDf: Long = 0L, pairJoin: Boolean = true): DataFrame =
-    pairCore(df0, idCol, textCol, n, bandCols, maxShingleDf, pairJoin)
+                       maxShingleDf: Long = 0L): DataFrame =
+    pairCore(df0, idCol, textCol, n, bandCols, maxShingleDf)
       .withColumn("containment",
         col("inter").cast("double") / least(col("sz_a"), col("sz_b")))
       .filter(col("containment") >= threshold)
@@ -142,7 +132,7 @@ object Dedup {
     * index, so every output value is exact. */
   def jaccardHistogram(df0: DataFrame, idCol: String, textCol: String, n: Int,
                        minJ: Double, maxShingleDf: Long = 0L): DataFrame =
-    pairCore(df0, idCol, textCol, n, Nil, maxShingleDf, pairJoin = true)
+    pairCore(df0, idCol, textCol, n, Nil, maxShingleDf)
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= minJ)
@@ -184,8 +174,7 @@ object Dedup {
     *    same class the r18 shingle-window had; `maxShingleDf` bounds it
     *    when the cap is on. */
   private def pairCore(df0: DataFrame, idCol: String, textCol: String, n: Int,
-                       bandCols: Seq[String], maxShingleDf: Long,
-                       pairJoin: Boolean): DataFrame = {
+                       bandCols: Seq[String], maxShingleDf: Long): DataFrame = {
     val df = graft.core.Par.widen(df0)
     val sh0 = df.select(
       (col(idCol).as("id") +: bandCols.map(col)) :+
@@ -194,61 +183,45 @@ object Dedup {
     // be computed BEFORE any df-based filter (Jaccard denominators stay exact
     // set sizes even when hot shingles are dropped from the numerator).
     val sizes = sh0.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = if (pairJoin) {
-      val keyed = sh0.withColumn("__h", xxhash64(col("shingle")))
-      // ONE hash-keyed exchange computes everything string-identity needs
-      // (two window COUNTS over it — no strings inside any aggregate):
-      //   __df = rows per (h, shingle) — the global doc frequency (each
-      //          doc holds one row per distinct shingle, the identity the
-      //          r18 window used), immune to collisions by construction;
-      //   __nh = rows per h — equal to __df for every row iff the hash
-      //          carries exactly one distinct shingle, so __nh > __df IS
-      //          the exact collision predicate.
-      // Both windows share the hashpartitioning(__h) exchange (subset
-      // clustering) and one (h, shingle) local sort of 8-byte-keyed rows.
-      val wH = Window.partitionBy(col("__h"))
-      val wHS = Window.partitionBy(col("__h"), col("shingle"))
-      val marked = keyed
-        .withColumn("__nh", count(lit(1)).over(wH))
-        .withColumn("__df", count(lit(1)).over(wHS))
-      val capped =
-        if (maxShingleDf > 0) marked.filter(col("__df") <= maxShingleDf)
-        else marked
-      // strings leave the stream HERE: the join key is (h, dis) where dis
-      // carries the shingle only under a detected 64-bit collision
-      // (expected never) and "" otherwise — equality on (h, dis) is
-      // provably string equality, so `inter` is exact
-      val slim = capped
-        .select((col("id") +: col("__h") +:
-          when(col("__nh") > col("__df"), col("shingle")).otherwise(lit(""))
-            .as("__dis") +:
-          bandCols.map(col)): _*)
-      val a = slim.select((col("id").as("id_a") +: col("__h") +: col("__dis") +:
+    val keyed = sh0.withColumn("__h", xxhash64(col("shingle")))
+    // ONE hash-keyed exchange computes everything string-identity needs
+    // (two window COUNTS over it — no strings inside any aggregate):
+    //   __df = rows per (h, shingle) — the global doc frequency (each
+    //          doc holds one row per distinct shingle, the identity the
+    //          r18 window used), immune to collisions by construction;
+    //   __nh = rows per h — equal to __df for every row iff the hash
+    //          carries exactly one distinct shingle, so __nh > __df IS
+    //          the exact collision predicate.
+    // Both windows share the hashpartitioning(__h) exchange (subset
+    // clustering) and one (h, shingle) local sort of 8-byte-keyed rows.
+    val wH = Window.partitionBy(col("__h"))
+    val wHS = Window.partitionBy(col("__h"), col("shingle"))
+    val marked = keyed
+      .withColumn("__nh", count(lit(1)).over(wH))
+      .withColumn("__df", count(lit(1)).over(wHS))
+    val capped =
+      if (maxShingleDf > 0) marked.filter(col("__df") <= maxShingleDf)
+      else marked
+    // strings leave the stream HERE: the join key is (h, dis) where dis
+    // carries the shingle only under a detected 64-bit collision
+    // (expected never) and "" otherwise — equality on (h, dis) is
+    // provably string equality, so `inter` is exact
+    val slim = capped
+      .select((col("id") +: col("__h") +:
+        when(col("__nh") > col("__df"), col("shingle")).otherwise(lit(""))
+          .as("__dis") +:
         bandCols.map(col)): _*)
-      val b = slim.select((col("id").as("id_b") +: col("__h") +: col("__dis") +:
-        bandCols.map(col)): _*)
-      // both sides inherit hashpartitioning(__h) from the one window
-      // exchange (AQE stage reuse dedupes the statically-duplicated
-      // subtree), and (h) co-partitioning satisfies the (h, dis, bands)
-      // join keys — the join itself adds NO exchange
-      a.join(b, Seq("__h", "__dis") ++ bandCols)
-        .filter(col("id_a") < col("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    } else {
-      val sh = if (maxShingleDf > 0) {
-        // legacy in-row path keeps the window form: it has no self-join
-        // whose exchange the aggregate shape could share
-        val w = Window.partitionBy(col("shingle"))
-        sh0.withColumn("df", count(lit(1)).over(w))
-          .filter(col("df") <= maxShingleDf).drop("df")
-      } else sh0
-      sh.groupBy((col("shingle") +: bandCols.map(col)): _*)
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) > 1)
-        .select(explode(orderedPairs(col("ids"))).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    }
+    val a = slim.select((col("id").as("id_a") +: col("__h") +: col("__dis") +:
+      bandCols.map(col)): _*)
+    val b = slim.select((col("id").as("id_b") +: col("__h") +: col("__dis") +:
+      bandCols.map(col)): _*)
+    // both sides inherit hashpartitioning(__h) from the one window
+    // exchange (AQE stage reuse dedupes the statically-duplicated
+    // subtree), and (h) co-partitioning satisfies the (h, dis, bands)
+    // join keys — the join itself adds NO exchange
+    val inter = a.join(b, Seq("__h", "__dis") ++ bandCols)
+      .filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
     // sizes is one row per doc and post-aggregation tiny relative to the pair
     // set — AQE converts these to broadcast joins from runtime stats.
     inter
@@ -346,70 +319,45 @@ object Dedup {
     * verify pipeline). With b bands of r rows, P(candidate | J=s) =
     * 1-(1-s^r)^b.
     *
-    * Candidate expansion (`pairJoin`): the default is a codegen'd
-    * (band, bsig) self equi-join with first-collision-band unique emission
-    * (the simHashPairs shape) — every bucket is STREAMED through the join,
-    * so no per-bucket array ever materializes (a bucket of k mutually-equal
-    * docs is the skew case LSH invites; AQE's skew-join split applies to a
-    * join but cannot split one k-element aggregate row), and the k² loop
-    * runs in whole-stage codegen. `pairJoin = false` keeps the in-row
-    * expansion: one exchange fewer, 24-byte exchange rows, but an
-    * interpreted (CodegenFallback) pair lambda and one collected id list
-    * per bucket. Measured r6 head-to-head (sf0.1 min-of-6 twice, 10×
-    * stress corpus min-of-4): the shapes land within ±20% of each other
-    * and each wins some runs (1.28/1.31, 1.55/1.76, 1.92/1.60 join/in-row)
-    * — timing is a wash at these near-singleton bucket sizes, so the
-    * bounded-memory shape is the default.
+    * Candidate expansion is a codegen'd (band, bsig) self equi-join with
+    * first-collision-band unique emission (the simHashPairs shape) — every
+    * bucket is STREAMED through the join, so no per-bucket array ever
+    * materializes (a bucket of k mutually-equal docs is the skew case LSH
+    * invites; AQE's skew-join split applies to a join but cannot split one
+    * k-element aggregate row), and the k² loop runs in whole-stage codegen.
     */
   def minHashLsh(df0: DataFrame, idCol: String, textCol: String, n: Int = 3,
                  numHashes: Int = 64, bands: Int = 16,
-                 verifyThreshold: Double = 0.0,
-                 pairJoin: Boolean = true): DataFrame = {
+                 verifyThreshold: Double = 0.0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val df = graft.core.Par.widen(df0)
     val sigB = bandSignatures(df, idCol, textCol, n, numHashes, bands)
-    val cand = if (pairJoin) {
-      // codegen'd (band, bsig) equi-join with first-collision-band unique
-      // emission — the simHashPairs shape: the O(k²) per-bucket loop stays
-      // inside whole-stage codegen and no distinct pass exists. Rows carry
-      // the full band array (8·bands bytes) so the first-collision
-      // predicate can compare lower bands in-row. The repartition sits
-      // BELOW the per-side renames on purpose: it is the very distribution
-      // the self-join requires, so EnsureRequirements adds no further
-      // exchange and ReuseExchange evaluates the signature projection once
-      // for both sides (the old aggregate got that reuse for free from its
-      // own exchange).
-      val banded = sigB
-        .select(col("id"), col("bands"),
-          posexplode(col("bands")).as(Seq("band", "bsig")))
-        .repartition(col("band"), col("bsig"))
-      val a = banded.select(col("id").as("id_a"), col("bands").as("ba"),
-        col("band"), col("bsig"))
-      val b = banded.select(col("id").as("id_b"), col("bands").as("bb"),
-        col("band"), col("bsig"))
-      // first-collision band: every band BELOW this bucket's must differ
-      val first = (0 until bands - 1).foldLeft(lit(true)) { (acc, j) =>
-        acc && (lit(j) >= col("band") ||
-          element_at(col("ba"), j + 1) =!= element_at(col("bb"), j + 1))
-      }
-      a.join(b, Seq("band", "bsig"))
-        .filter(col("id_a") < col("id_b") && first)
-        .select(col("id_a"), col("id_b"))
-    } else {
-      // in-row expansion: one exchange fewer and 24-byte exchange rows; the
-      // pair lambda runs interpreted (CodegenFallback) and each bucket
-      // materializes one collected id list — a timing wash vs the join at
-      // near-singleton buckets (±20% across runs, see Scaladoc), but
-      // unbounded on a degenerate all-duplicates bucket, hence not default
-      val banded = sigB.select(col("id"),
+    // codegen'd (band, bsig) equi-join with first-collision-band unique
+    // emission — the simHashPairs shape: the O(k²) per-bucket loop stays
+    // inside whole-stage codegen and no distinct pass exists. Rows carry
+    // the full band array (8·bands bytes) so the first-collision
+    // predicate can compare lower bands in-row. The repartition sits
+    // BELOW the per-side renames on purpose: it is the very distribution
+    // the self-join requires, so EnsureRequirements adds no further
+    // exchange and ReuseExchange evaluates the signature projection once
+    // for both sides (the old aggregate got that reuse for free from its
+    // own exchange).
+    val banded = sigB
+      .select(col("id"), col("bands"),
         posexplode(col("bands")).as(Seq("band", "bsig")))
-      banded.groupBy(col("band"), col("bsig"))
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .filter(size(col("ids")) > 1)
-        .select(explode(orderedPairs(col("ids"))).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-        .dropDuplicates("id_a", "id_b")
+      .repartition(col("band"), col("bsig"))
+    val a = banded.select(col("id").as("id_a"), col("bands").as("ba"),
+      col("band"), col("bsig"))
+    val b = banded.select(col("id").as("id_b"), col("bands").as("bb"),
+      col("band"), col("bsig"))
+    // first-collision band: every band BELOW this bucket's must differ
+    val first = (0 until bands - 1).foldLeft(lit(true)) { (acc, j) =>
+      acc && (lit(j) >= col("band") ||
+        element_at(col("ba"), j + 1) =!= element_at(col("bb"), j + 1))
     }
+    val cand = a.join(b, Seq("band", "bsig"))
+      .filter(col("id_a") < col("id_b") && first)
+      .select(col("id_a"), col("id_b"))
     if (verifyThreshold <= 0) cand
     else verifyJaccard(df, idCol, textCol, cand, n, verifyThreshold)
   }
@@ -634,7 +582,6 @@ object Dedup {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      val roundT0 = System.nanoTime()
       // min over own + neighbors' labels
       val viaNbr = sym.join(labels.select(col("node").as("m"), col("label")), "m")
         .select(col("n").as("node"), col("label"))
@@ -653,14 +600,9 @@ object Dedup {
         .select(col("node"), coalesce(col("kl"), col("label")).as("label")))
       labels = jumped
       iter += 1
-      val t0 = System.nanoTime()
       val curSum = labelSum(labels) // cached-block aggregate (truncate materialized)
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
-      // dev visibility only: round pacing for scale tuning, off by default
-      if (sys.env.contains("GRAFT_CC_LOG")) System.err.println(
-        f"[cc] round $iter probe ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"wall ${(System.nanoTime() - roundT0) / 1e9}%.2f s converged=$converged")
     }
     sym.unpersist()
     // a partially-converged label map would silently split real clusters
@@ -771,14 +713,12 @@ object Dedup {
     * needs no distinct and the 4×-duplicated pair stream never exists, let
     * alone shuffles. */
   /** Banded-Hamming geometry of the 60-bit fingerprint family: 4 bands of
-    * 15 bits. Shared (private[graft]) with the M113Probe adjudication tool
-    * so a geometry change here cannot silently desynchronize the probe's
-    * bucket-occupancy numbers from the production candidate set. */
-  private[graft] val simHashBands: Int = 4
-  private[graft] def simHashBandSig(fp: Column, j: Int): Column =
+    * 15 bits. */
+  private val simHashBands: Int = 4
+  private def simHashBandSig(fp: Column, j: Int): Column =
     shiftright(fp, j * 15).bitwiseAND(0x7FFFL)
   /** (id, simhash) → exploded (id, simhash, band, bsig) banding rows. */
-  private[graft] def simHashBanded(sims: DataFrame): DataFrame =
+  private def simHashBanded(sims: DataFrame): DataFrame =
     sims.select(col("id"), col("simhash"),
       posexplode(array((0 until simHashBands).map(b =>
         simHashBandSig(col("simhash"), b)): _*)).as(Seq("band", "bsig")))

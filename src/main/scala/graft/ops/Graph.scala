@@ -198,13 +198,13 @@ object Graph {
     *
     * Triangles via the canonical-orientation join: edges deduped to
     * a < b, then (x,y)⋈(y,z)⋈(x,z) — each triangle counted exactly once.
-    * Work is Σ_v deg(v)², so the join is safe where degree is BOUNDED —
-    * exactly the graphs this pipeline owns ([[Similarity.mutualKnnEdges]]
-    * caps degree at k by construction; near-dup graphs are df-capped). On
-    * an unbounded-degree graph, orient by (degree, id) before the wedge
-    * join (bounds work by arboricity) — deliberately not done here: the
-    * extra degree join costs on every call and no producer in this
-    * library emits an unbounded-degree graph.
+    * Work is Σ_v deg(v)², so the join is cheap where degree is small:
+    * [[Similarity.mutualKnnEdges]] caps degree at k by construction; a
+    * near-dup graph's degree is a doc's near-duplicate count, which is not
+    * capped (a template copied m times is a clique of degree m − 1).
+    * On a high-degree graph, orient by (degree, id) before the wedge join
+    * (bounds work by arboricity) — not done here: the extra degree join
+    * costs on every call.
     *
     * coefficient = 2·T / (deg·(deg−1)) through the portable 6 dp floor;
     * deg < 2 → 0.0 (division-free). Output: (id, degree, triangles,

@@ -613,11 +613,10 @@ object Similarity {
     * SMALL (planes bound the candidate-pair blowup); serving wants them
     * big enough that a query's own bucket still holds the k·expand
     * re-rank candidate set with margin, or recall collapses before the
-    * `expand` knob can buy it back — RecallProbe's committed curve shows
-    * exactly that: at the 500-vector gate corpus recall@10 DEGRADES
-    * monotonically in planes because the expected bucket occupancy
-    * n/2^planes binds below k·expand (bench/RECALLPROBE_r14 notes,
-    * docs/PLANS.md round-14 entry). The contract here is the LARGEST
+    * `expand` knob can buy it back — the recall curve recorded in
+    * docs/PLANS.md (round-14 entry) shows exactly that: at the 500-vector
+    * gate corpus recall@10 DEGRADES monotonically in planes because the
+    * expected bucket occupancy n/2^planes binds below k·expand. The contract here is the LARGEST
     * `planes` whose expected occupancy n/2^planes stays at or above
     * `occupancyFactor`·k·expand: per-query coarse ADC cost is then
     * ~flat (≈ occupancyFactor·k·expand rows scanned per query) while

@@ -323,4 +323,16 @@ class BenchUtilSpec extends AnyFunSuite {
     assert(math.abs(BenchUtil.projectedCostS(serves, 1.2, 3, serveCutoff = 0.2) - 2.0) < 1e-9)
     assert(math.abs(BenchUtil.scheduledReserveS(serves, 1.2, 3, serveCutoff = 0.2) - 2.0) < 1e-9)
   }
+
+  test("queryFilter: unset runs everything; an unknown name fails fast") {
+    val known = Set("q01_agg", "d22_jaccard_pairs")
+    assert(BenchUtil.queryFilter(None, known).isEmpty)
+    assert(BenchUtil.queryFilter(Some(" q01_agg ,,d22_jaccard_pairs"), known)
+      .contains(known))
+    // a stale filter naming a removed query must not bench nothing and
+    // still write an artifact
+    val e = intercept[IllegalArgumentException](
+      BenchUtil.queryFilter(Some("q01_agg,x22_jaccard_inrow"), known))
+    assert(e.getMessage.contains("x22_jaccard_inrow") && !e.getMessage.contains("q01_agg"))
+  }
 }

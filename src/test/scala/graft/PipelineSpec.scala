@@ -52,17 +52,33 @@ class PipelineSpec extends SparkSpec {
     assert(sw.length == 1 && sw.head.getDouble(2) == 1.0)
   }
 
-  test("jaccardPairs: streamed join shape ≡ in-row shape (sf0.001, with and without df cap)") {
+  test("jaccardPairs ≡ exact Jaccard over plain Scala shingle sets (sf0.001, with and without df cap)") {
     val d = core.Tables.documents(spark, sf("sf0.001"))
-    def pairs(join: Boolean, cap: Long) =
-      Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.5, maxShingleDf = cap, pairJoin = join)
+    def pairs(cap: Long) =
+      Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.5, maxShingleDf = cap)
         .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val joinShape = pairs(join = true, cap = 0)
-    assert(joinShape.nonEmpty)
-    assert(joinShape == pairs(join = false, cap = 0))
-    // under a shingle-df cap, both shapes drop the same hot shingles from the
-    // numerator while keeping exact denominators
-    assert(pairs(join = true, cap = 5) == pairs(join = false, cap = 5))
+    // the reference: each doc's distinct trigram set, collected once; pairs
+    // and intersections are counted in plain Scala
+    val sets = d.select(col("doc_id"),
+        array_distinct(TextFunctions.shingles(col("text"), 3)))
+      .as[(Long, Seq[String])].collect()
+      .map { case (id, sh) => id -> sh.toSet }.filter(_._2.nonEmpty).sortBy(_._1)
+    val df = sets.toSeq.flatMap(_._2).groupBy(identity).map { case (k, v) => k -> v.size }
+    def reference(cap: Long) = (for {
+      i <- sets.indices; j <- (i + 1) until sets.length
+      (a, sa) = sets(i); (b, sb) = sets(j)
+      // a df cap drops hot shingles from the numerator only; the
+      // denominator keeps the exact set sizes
+      inter = sa.intersect(sb).count(s => cap <= 0 || df(s) <= cap)
+      jac = inter.toDouble / (sa.size + sb.size - inter)
+      if inter > 0 && jac >= 0.5
+    } yield (a, b, BigDecimal(jac).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
+    val uncapped = reference(0)
+    assert(uncapped.nonEmpty)
+    assert(pairs(0) == uncapped)
+    val capped = reference(5)
+    assert(capped != uncapped, "df cap 5 must drop some hot shingle at sf0.001")
+    assert(pairs(5) == capped)
   }
 
   test("jaccardPairs: degenerate boilerplate shingle — bounded join shape, no collected lists") {
@@ -91,19 +107,6 @@ class PipelineSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(lsh == exact)
     assert(exact.nonEmpty) // the corpus has planted near-dups
-    // the codegen'd equi-join candidate shape (first-collision-band unique
-    // emission) must produce the identical verified pair set — it is the
-    // same banding, only the pair-expansion strategy differs
-    val joined = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16,
-        verifyThreshold = 0.8, pairJoin = true)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(joined == exact)
-    // and the UNVERIFIED candidate sets match too (the emission rule itself)
-    val candInRow = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16)
-      .as[(Long, Long)].collect().toSet
-    val candJoin = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16, pairJoin = true)
-      .as[(Long, Long)].collect().toSet
-    assert(candJoin == candInRow)
   }
 
   test("minHashLsh: degenerate all-duplicates bucket — every pair once, no collected lists") {
@@ -132,7 +135,7 @@ class PipelineSpec extends SparkSpec {
     // otherwise the signature projection (the dominant per-row cost) runs
     // twice over the corpus
     val d = core.Tables.documents(spark, sf("sf0.001"))
-    val pairs = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16, pairJoin = true)
+    val pairs = Dedup.minHashLsh(d, "doc_id", "text", 3, 64, 16)
     pairs.collect() // drive to the final adaptive plan
     val fin = pairs.queryExecution.executedPlan.toString
     assert(fin.contains("isFinalPlan=true"), fin)

@@ -744,8 +744,9 @@ class ScaleJoinsSpec extends SparkSpec {
     import ops.Similarity.autoServingPlanes
     // the gate corpora (k=10, expand=4 → target occupancy 160): 500
     // vectors → 1 plane, sf0.1's 2000 → 3, the 10× stress corpus's
-    // 20000 → 6 — the knob tracks corpus growth (RecallProbe's committed
-    // r15 curve shows recall at these picks vs the fixed-knob grid)
+    // 20000 → 6 — the knob tracks corpus growth (docs/PLANS.md, "Round-15
+    // PQ serving auto-sizing contract", records recall at these picks vs
+    // the fixed-knob grid)
     assert(autoServingPlanes(500, 10, 4) == 1)
     assert(autoServingPlanes(2000, 10, 4) == 3)
     assert(autoServingPlanes(20000, 10, 4) == 6)
@@ -768,8 +769,9 @@ class ScaleJoinsSpec extends SparkSpec {
   }
 
   test("lshPqTopKAuto: auto planes release the bucket constraint the fixed knob binds") {
-    // the committed RecallProbe curve's driving observation, pinned: at
-    // the 500-vector gate corpus the fixed serving knob (planes=3,
+    // the recall curve's driving observation (docs/PLANS.md, "Round-15
+    // PQ serving auto-sizing contract"), pinned: at the 500-vector gate
+    // corpus the fixed serving knob (planes=3,
     // expected occupancy 62.5 < k·expand·4) BINDS recall at the bucket,
     // not the codebook — auto sizing (planes=1, occupancy 250) must be
     // at least as good at every expand (deterministic md5 hyperplanes +
