@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
   * getCacheLocs RDD-monitor-then-class-lock order) that a SINGLE green
   * test run can miss. This main loops the two trigger shapes back to
   * back in one JVM:
-  *   - long-path connectedComponents (the PropertySpec trigger: deep
-  *     pointer-jump rounds, broadcast-heavy hop joins), and
+  *   - long-path connectedComponents (the PropertySpec trigger: a
+  *     [[longPath]] long enough to span two iterative-cache partitions, so the
+  *     partition-local union-find seed leaves several pointer-jump rounds
+  *     with broadcast-heavy hop joins), and
   *   - a pageRank iteration loop (pre-fix the WIDEST window: an explicit
   *     broadcast exchange every round).
   * A regression shows up as a hang (run under `timeout`); correctness is
@@ -27,6 +29,13 @@ import org.apache.spark.sql.functions._
   * (keeping the race window exercised) without the 32-thread timeout
   * flakiness; an explicit arg/env still overrides in either direction. */
 object DeadlockSoak {
+  /** Edges of a 20,000-node path, ids 0..19999 in path order (diameter
+    * 19,999). Its symmetrized edge list is 39,998 rows — two
+    * iterative-cache partitions of 32k rows — so the partition-local
+    * union-find seed of connectedComponents leaves fragments and the loop
+    * still runs several merge rounds. */
+  val longPath: Seq[(Long, Long)] = (0L until 19999L).map(i => (i, i + 1))
+
   def main(args: Array[String]): Unit = {
     val iterations = args.headOption.map(_.toInt).getOrElse(10)
     val threads = args.lift(1).map(_.toInt)
@@ -42,14 +51,11 @@ object DeadlockSoak {
     import spark.implicits._
     val t0 = System.nanoTime()
     for (i <- 1 to iterations) {
-      // long path: n-1 edges, diameter n-1, non-monotone ids — forces
-      // ~log2(n) rounds, each with broadcast-planned hop joins
-      val n = 300L
-      val edges = (0L until n - 1).map(i => (i * 7919L % 1000000L + i * 2L,
-        (i + 1) * 7919L % 1000000L + (i + 1) * 2L)).toDF("a", "b")
-      val cc = ops.Dedup.connectedComponents(edges, "a", "b").collect()
-      val minId = (0L until n).map(i => i * 7919L % 1000000L + i * 2L).min
-      require(cc.length == n && cc.forall(_.getLong(1) == minId),
+      // long path over two edge partitions: the local seed cuts it into
+      // fragments, and merging them takes several rounds, each with
+      // broadcast-planned hop joins
+      val cc = ops.Dedup.connectedComponents(longPath.toDF("a", "b"), "a", "b").collect()
+      require(cc.length == 20000 && cc.forall(_.getLong(1) == 0L),
         s"soak iter $i: CC wrong (${cc.length} rows)")
       // pageRank on a small dense-ish graph: every round broadcasts the
       // rank relation — the widest pre-fix race window

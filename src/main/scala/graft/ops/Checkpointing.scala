@@ -22,18 +22,22 @@ import org.apache.spark.sql.{DataFrame, Row}
   * AQE broadcast-exchange thread's getCacheLocs RDD-monitor-then-class-
   * lock order — observed live in the round-11 verdict's jstack:
   * dag-scheduler-event-loop ⇄ broadcast-exchange-24, hung forever at 0%
-  * CPU). The `count()` runs while the calling driver thread is the RDD's
-  * ONLY referent, so markCheckpointed completes before any concurrent
-  * planner thread can touch the RDD. CheckpointingSpec pins the
-  * discipline: `isCheckpointed` must already be true when eager() returns
-  * — deleting the count() fails that spec deterministically, it does not
-  * just re-open an intermittent race.
+  * CPU). The materializing job — one RDD-level `runJob` whose tasks also
+  * fold their partition (a row count by default; connectedComponents'
+  * label sum, so its convergence test needs no job of its own) — runs
+  * while the calling driver thread is the RDD's ONLY referent, so
+  * markCheckpointed completes before any concurrent planner thread can
+  * touch the RDD. It is never a SQL aggregate over a lazily checkpointed
+  * frame: that planner-owned job is the deadlock shape itself.
+  * CheckpointingSpec pins the discipline: `isCheckpointed` must already be
+  * true when eager() returns — deleting the materializing job fails that
+  * spec deterministically, it does not just re-open an intermittent race.
   *
   * Why the unpersist rotation: every truncated round leaves cached blocks
   * behind (the local path's localCheckpoint blocks, the reliable path's
   * pre-checkpoint cache). Across up to maxIter rounds those label-map RDDs
   * would pile up in executor storage on a long-running job, so once a
-  * round's count() returns, all OLDER rounds' blocks are unpersisted:
+  * round's materializing job returns, all OLDER rounds' blocks are unpersisted:
   * future plans reference only the newest checkpointed RDD (a
   * localCheckpointed RDD is never recomputed — blocks either exist or the
   * job has already failed — and the reliable path re-reads its checkpoint
@@ -83,10 +87,15 @@ private[graft] object Checkpointing {
     /** Checkpoint + materialize `rdd` eagerly in this thread; rotate out
       * the previous round's blocks. Returns the same RDD, now
       * checkpointed. */
-    def eager[T](rdd: RDD[T]): RDD[T] = {
+    def eager[T](rdd: RDD[T]): RDD[T] = { eagerFold(rdd)(rowCount); rdd }
+
+    /** [[eager]] whose materializing job also folds each partition;
+      * returns the exact sum of the per-partition folds. */
+    private def eagerFold[T](rdd: RDD[T])(fold: Iterator[T] => BigInt): BigInt = {
       if (reliable) { rdd.cache(); rdd.checkpoint() }
       else rdd.localCheckpoint()
-      rdd.count() // EAGER: materialize serially; no concurrent planner yet
+      // EAGER: materialize serially, no concurrent planner yet
+      val total = rdd.sparkContext.runJob(rdd, fold).sum
       pendingUnpersist += rdd
       while (pendingUnpersist.length > 1) { // newest is live; older are unreachable
         val old = pendingUnpersist.remove(0)
@@ -95,25 +104,34 @@ private[graft] object Checkpointing {
         // off), so a long maxIter loop would otherwise leave one
         // node-sized file set per round on the checkpoint store until
         // context stop. Safe by the same argument as the unpersist: the
-        // newest round's count() has returned, its own files are complete,
-        // and every future plan reads ONLY the newest checkpoint (each
-        // round's plan is rebuilt over the newest RDD — nothing references
-        // an older round's files once its successor is materialized).
+        // newest round's materializing job has returned, its own files are
+        // complete, and every future plan reads ONLY the newest checkpoint
+        // (each round's plan is rebuilt over the newest RDD — nothing
+        // references an older round's files once its successor is
+        // materialized).
         old.getCheckpointFile.foreach { f =>
           val p = new org.apache.hadoop.fs.Path(f)
           p.getFileSystem(old.sparkContext.hadoopConfiguration).delete(p, true)
         }
         old.unpersist(blocking = false)
       }
-      rdd
+      total
     }
 
     /** Truncate a DataFrame's lineage AND its carried Statistics: eager
       * checkpoint of its row RDD, then a fresh frame over that RDD (stats
       * reset to the session default — see object scaladoc). */
-    def truncate(df: DataFrame): DataFrame = {
-      val rdd: RDD[Row] = eager(df.rdd)
-      df.sparkSession.createDataFrame(rdd, df.schema)
+    def truncate(df: DataFrame): DataFrame = truncateFold(df)(rowCount)._1
+
+    /** [[truncate]] that also returns the sum of `fold` over the
+      * checkpointed rows' partitions, computed by the same materializing
+      * job (no second plan over the new frame). */
+    def truncateFold(df: DataFrame)(fold: Iterator[Row] => BigInt): (DataFrame, BigInt) = {
+      val rdd: RDD[Row] = df.rdd
+      val total = eagerFold(rdd)(fold)
+      (df.sparkSession.createDataFrame(rdd, df.schema), total)
     }
   }
+
+  private def rowCount[T](rows: Iterator[T]): BigInt = BigInt(rows.size)
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -481,23 +481,29 @@ object Dedup {
     * node takes the min of its own and its neighbors' labels, then
     * short-circuits TWICE through the previous map (label(label), then once
     * more — each hop is a cheap label-map-sized join, and two hops per
-    * edge-join round roughly halves the rounds a chain needs), so
-    * convergence needs O(log diameter) rounds, not O(diameter). The
-    * identity-label start round is fused into initialization: the first
-    * "min of self and neighbors" over identity labels IS `min(n, min(m))
-    * group by n`, one aggregate — no separate node-list round. Near-dup
-    * clusters are tight in practice (a couple of rounds); `maxIter` caps a
-    * pathological chain. Each round shuffles only the edge list and the
-    * label map — both candidate-set sized, orders of magnitude below the
-    * corpus — and the driver-side loop performs one scalar aggregate per
-    * round (a convergence check over the round's already-materialized
-    * blocks, never a data collect).
+    * edge-join round roughly halves the rounds a chain needs): a path whose
+    * ids rise along it converges in O(log diameter) rounds, though one
+    * whose ids zigzag can still need many (26 for PropertySpec's
+    * 300-node sawtooth from min-of-neighbors start labels). The start
+    * labels are local-then-global (Kiveris et al., SoCC 2014): a union-find
+    * over each cached edge partition solves that partition's subgraph
+    * exactly, and each node starts at the min id of its partition-local
+    * component (min over the partitions that see it) — a valid start
+    * labeling (label(x) <= x, inside x's component), so the loop only has
+    * to merge across partitions. An edge list that fits one partition is
+    * solved exactly before the loop, whose first round only confirms it;
+    * near-dup clusters are tight, so larger edge lists need a few merge
+    * rounds. `maxIter` caps a pathological chain. Each round shuffles only the edge
+    * list and the label map — both candidate-set sized, orders of
+    * magnitude below the corpus — and the convergence test costs no job of
+    * its own: the round's checkpointing job also returns the label map's
+    * exact sum (never a data collect).
     * Each round's label map is checkpointed: the round's plan references the
     * previous map several times, so without truncating lineage the logical
     * plan would grow multiplicatively per round and planning time would
     * dominate within ~8 rounds. The truncation is EAGER AND SERIAL — each
-    * round's `localCheckpoint` is materialized by its own `count()` before
-    * the loop plans anything against it (pass `checkpointDir` for a
+    * round's `localCheckpoint` is materialized by its own RDD-level job
+    * before the loop plans anything against it (pass `checkpointDir` for a
     * reliable `checkpoint` to durable storage instead, which survives
     * executor churn on a real cluster — same shape, durable truncation).
     * Eagerness is a CORRECTNESS requirement, not a pacing choice: a lazily
@@ -527,7 +533,6 @@ object Dedup {
     // doCheckpoint deadlock; old rounds' blocks rotated out): see
     // Checkpointing's scaladoc, pinned by CheckpointingSpec.
     val truncator = new Checkpointing.Truncator(reliable = checkpointDir.isDefined)
-    def truncate(df: DataFrame): DataFrame = truncator.truncate(df)
     // cached pre-partitioned on m — the per-round neighbor join's key — so
     // the edge list (the one relation here that isn't label-map-thin)
     // crosses the network ONCE at build, not once per round: the cached
@@ -535,9 +540,10 @@ object Dedup {
     // requirement every round. NOT deduplicated: min-propagation is
     // idempotent, so duplicate edges cost join fan-out but never change a
     // label — candidate-pair producers emit unique pairs already, and a
-    // caller with a genuinely dirty edge list can distinct() it themselves
-    val sym0 = edges.select(col(srcCol).as("n"), col(dstCol).as("m"))
-      .union(edges.select(col(dstCol).as("n"), col(srcCol).as("m")))
+    // caller with a genuinely dirty edge list can distinct() it themselves.
+    // Ids are bigint at every caller (the cast is a no-op for them).
+    val sym0 = edges.select(col(srcCol).cast("long").as("n"), col(dstCol).cast("long").as("m"))
+      .union(edges.select(col(dstCol).cast("long").as("n"), col(srcCol).cast("long").as("m")))
       .repartition(col("m")).cache()
     // ITERATIVE-CACHE PARTITION CAP (round 19, r18 verdict #3 — the
     // Graph.pageRank discipline, see Par.iterCachePartitions): a cached
@@ -557,28 +563,18 @@ object Dedup {
         sym0.unpersist(blocking = false)
         compact
       }
-    // round 0 fused into initialization: over identity start labels, "min of
-    // own and neighbors' labels" IS min(n, min(m)) grouped by n — one
-    // aggregate replaces the identity-map build plus a full first round
-    var labels = truncate(sym.groupBy(col("n")).agg(min(col("m")).as("__mn"))
-      .select(col("n").as("node"), least(col("n"), col("__mn")).as("label")))
-    // convergence probe: labels only ever DECREASE (min-propagation + jumps
-    // that follow label(x) <= x), so the label map changed iff its exact
-    // sum dropped — one aggregate over the just-checkpointed map, instead of
-    // a full prev-vs-next join per round. decimal(38,0): overflow-proof for
-    // any id range (a wrapped bigint sum could collide and stop us early).
-    // The probe fires EVERY round: truncate already materialized the
-    // round's blocks, so the probe is a node-sized aggregate over cached
-    // partitions — scheduling overhead only — and per-round probing stops
-    // at the earliest converged round instead of paying a confirmed-
-    // converged extra round on even-round fixpoints. (The previous
-    // odd-round batching existed to let the probe double as the lazy
-    // checkpoint's materializing action; eager truncation — required to
-    // close the doCheckpoint deadlock, see above — removes that role.)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO) // empty graph: SUM() is NULL
-    var prevSum = labelSum(labels)
+    // start labels: partition-local union-find over the cached edge
+    // partitions, then the min over every partition that saw the node
+    val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val seed = sym.as[(Long, Long)](pair).mapPartitions(localComponents)(pair).toDF("node", "label")
+      .groupBy(col("node")).agg(min(col("label")).as("label"))
+    // convergence: labels only ever DECREASE (min-propagation + jumps that
+    // follow label(x) <= x), so the label map changed iff its exact sum
+    // dropped. The sum comes out of the checkpointing job itself (a
+    // per-partition fold beside the materialization), so no round plans a
+    // second job over the map; BigInt so no id range can wrap the sum into
+    // a false match.
+    var (labels, prevSum) = truncator.truncateFold(seed)(sumLabels)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -596,12 +592,12 @@ object Dedup {
       val hop1 = stepped.join(jumpTbl, col("label") === col("jn"), "left")
         .select(col("node"), coalesce(col("jl"), col("label")).as("label"))
       val jumpTbl2 = labels.select(col("node").as("kn"), col("label").as("kl"))
-      val jumped = truncate(hop1.join(jumpTbl2, col("label") === col("kn"), "left")
-        .select(col("node"), coalesce(col("kl"), col("label")).as("label")))
+      val (jumped, curSum) = truncator.truncateFold(
+        hop1.join(jumpTbl2, col("label") === col("kn"), "left")
+          .select(col("node"), coalesce(col("kl"), col("label")).as("label")))(sumLabels)
       labels = jumped
       iter += 1
-      val curSum = labelSum(labels) // cached-block aggregate (truncate materialized)
-      converged = curSum.compareTo(prevSum) == 0
+      converged = curSum == prevSum
       prevSum = curSum
     }
     sym.unpersist()
@@ -612,6 +608,31 @@ object Dedup {
         "raise maxIter (pointer jumping needs ~log2(graph diameter) rounds)")
     labels.withColumnRenamed("label", "component")
   }
+
+  /** Union-find over one partition's (n, m) edge rows: every node the rows
+    * touch, paired with the min id of its component WITHIN these rows.
+    * Union keeps the smaller root, so a root is its component's min id. */
+  private def localComponents(rows: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val next = parent(c); parent(c) = r; c = next } // path compression
+      r
+    }
+    rows.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(x => (x, find(x)))
+  }
+
+  /** Per-partition fold of a (node, label) map's exact label sum. */
+  private def sumLabels(rows: Iterator[Row]): BigInt =
+    rows.foldLeft(BigInt(0))((s, r) => s + r.getLong(1))
 
   /** Cluster-resolution dedup: drop every clustered document except its
     * cluster's canonical (min-id) member; documents in no near-dup pair pass

@@ -7,7 +7,9 @@ import org.apache.spark.storage.StorageLevel
   * intermittent driver deadlock whose fix is exactly "the checkpoint is
   * materialized inside truncate, in the calling thread, before any
   * concurrent planner exists" — these tests make deleting the eager
-  * `count()` a DETERMINISTIC failure instead of a re-opened race. */
+  * materializing job (an RDD-level `runJob` that also returns the
+  * caller's per-partition fold) a DETERMINISTIC failure instead of a
+  * re-opened race. */
 class CheckpointingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -45,7 +47,7 @@ class CheckpointingSpec extends SparkSpec {
     // deadlock window). A lazy localCheckpoint leaves this false until the
     // first external action.
     assert(out.isCheckpointed, "eager() returned a NOT-yet-checkpointed RDD — " +
-      "the serial count() (deadlock fix, r11 verdict) has been removed")
+      "the serial materializing job (deadlock fix, r11 verdict) has been removed")
     assert(out eq rdd)
   }
 

@@ -916,16 +916,20 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("connectedComponents: long chain converges under the iteration cap") {
-    // path of 200 nodes: hash-min alone needs ~199 rounds; pointer jumping
-    // must close it within the default 25
+    // path of 200 nodes: hash-min alone needs ~199 rounds; the
+    // partition-local union-find seed solves it (one edge partition) and
+    // the loop confirms it well within the default maxIter of 50
     val edges = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val cc = Dedup.connectedComponents(edges, "id_a", "id_b")
     assert(cc.select("component").distinct().as[Long].collect().toSeq == Seq(1L))
     assert(cc.count() == 200)
     // hitting the cap before convergence must fail loudly, not return a
-    // partially-merged (wrong) clustering
+    // partially-merged (wrong) clustering — on a 20,000-node path, whose
+    // two edge partitions leave the seed in fragments that need more than
+    // two rounds to merge
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(edges, "id_a", "id_b", maxIter = 2)
+      Dedup.connectedComponents(DeadlockSoak.longPath.toDF("id_a", "id_b"),
+        "id_a", "id_b", maxIter = 2)
     }
     // an EMPTY edge list (no near-dup pairs found — the common case for a
     // clean corpus slice) converges immediately to an empty label map, and

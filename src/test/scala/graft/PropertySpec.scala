@@ -1,6 +1,8 @@
 package graft
 
 import graft.ops.{Dedup, Relational}
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -130,49 +132,81 @@ class PropertySpec extends SparkSpec {
   private val edgesGen: Gen[List[(Long, Long)]] =
     Gen.listOf(Gen.zip(Gen.choose(0L, 15L), Gen.choose(0L, 15L)))
 
+  /** Reference components: plain union-find over the edge list, each node
+    * labeled with its component's min member id. */
+  private def unionFindComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    // union-find roots are path-dependent; normalize to min member id
+    nodes.groupBy(find).values.flatMap(g => g.map(_ -> g.min)).toMap
+  }
+
   test("connectedComponents equals a driver union-find on random graphs") {
     forAll(edgesGen, cases = 8) { edges =>
       whenever(edges.nonEmpty) {
-        // reference: plain union-find over the same edge list
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          val p = parent.getOrElseUpdate(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        edges.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-        // union-find roots are path-dependent; normalize to min member id
-        val expected = nodes.groupBy(find).values
-          .flatMap(g => g.map(_ -> g.min)).toMap
         val got = Dedup.connectedComponents(
             edges.toDF("a", "b"), "a", "b")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(got == expected, s"edges=$edges")
+        assert(got == unionFindComponents(edges), s"edges=$edges")
       }
     }
   }
 
+  /** Edges of a path over n nodes with non-monotone ids (a sawtooth). */
+  private def sawPath(n: Long): Seq[(Long, Long)] = {
+    def id(i: Long) = i * 7919L % 1000000L + i * 2L
+    (0L until n - 1).map(i => (id(i), id(i + 1)))
+  }
+
   test("connectedComponents: long path graphs (the deep-round regime)") {
     // Regression guard for the r8 stats-compounding planner blowup: a path
-    // of n nodes has diameter n-1, forcing ~log2(n) pointer-jump rounds —
-    // the regime where carried join statistics compounded exponentially
-    // (random sparse graphs converge in 1-3 rounds and never saw it).
-    for (n <- Seq(64L, 300L)) {
-      val edges = (0L until n - 1).map(i => (i * 7919L % 1000000L + i * 2L, // non-monotone ids
-        (i + 1) * 7919L % 1000000L + (i + 1) * 2L))
-      val df = edges.toDF("a", "b")
+    // of n nodes has diameter n-1, the regime where carried join statistics
+    // compounded exponentially (random sparse graphs converge in 1-3 rounds
+    // and never saw it). The 64- and 300-node paths (non-monotone ids) fit
+    // one edge partition, so the partition-local union-find seed solves
+    // them and one round confirms; the 20,000-node path spans two edge
+    // partitions, whose seed fragments take several rounds to merge.
+    for (edges <- Seq(sawPath(64L), sawPath(300L), DeadlockSoak.longPath)) {
       val t0 = System.nanoTime()
-      val got = Dedup.connectedComponents(df, "a", "b").collect()
+      val got = Dedup.connectedComponents(edges.toDF("a", "b"), "a", "b").collect()
       val secs = (System.nanoTime() - t0) / 1e9
-      val minId = edges.flatMap(e => Seq(e._1, e._2)).min
-      assert(got.length == n && got.forall(_.getLong(1) == minId))
+      assert(got.length == edges.length + 1)
+      assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap == unionFindComponents(edges))
       // pre-fix this exploded past 10 minutes on 300 nodes; post-fix each
       // round is sub-second — generous bound to stay host-noise-proof
       assert(secs < 120.0, f"long-path CC took $secs%.1f s")
     }
+  }
+
+  test("connectedComponents on one edge partition: seed is exact, one confirming round") {
+    // Every job the builder call starts: edge count, edge relayout, the
+    // union-find seed's checkpoint, and ONE loop round whose checkpointing
+    // job also returns the convergence sum. Measured on the 300-node path
+    // (598 edge rows, one iterative-cache partition) under local[4]: a
+    // min-aggregate seed needs 26 rounds with a separate label-sum plan
+    // after each, 192 jobs; the union-find seed with the sum folded into
+    // the checkpointing job runs 13.
+    val edges = sawPath(300L).toDF("a", "b")
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      Dedup.connectedComponents(edges, "a", "b")
+      ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 20, s"connectedComponents ran ${jobs.get} jobs")
   }
 
   test("funnel ≡ driver brute force on random event sequences") {
