@@ -1,169 +1,61 @@
 package graft
 
-/** Benchmark entrypoint (driver contract: ONE JSON line on stdout).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark entrypoint. Driver contract: ONE JSON line on stdout; the
+  * per-query detail goes to the artifact at `SPARK_GRAFT_BENCH_OUT`.
   *
-  * QUERY-MAJOR scheduling (round 10): each query runs `reps` times
-  * back-to-back, so its plans/codegen stay hot and min-of-reps is a WARM
-  * minimum even when the host is slow — the round-7/round-9 failure mode
-  * (pass-major scheduling + a slow host = the deadline consumed by one
-  * all-cold pass, every published number a JIT artifact) cannot recur:
-  *  - queries run cheapest-first (ordered by the latest committed
-  *    bench/BENCH_local_r*.json mins), so a deadline truncates the
-  *    expensive TAIL, not the whole surface;
-  *  - the artifact is (re)written after every query, so an external kill
-  *    loses at most the in-flight query;
-  *  - on deadline, everything reached has a warm min (reps 2+ of a query
-  *    are only skipped when the deadline hits between its reps — flagged
-  *    per-query as "warm":false).
+  * The policy (each rule's history is in BASELINE.md and docs/PLANS.md):
+  *  - Query-major: a query runs its reps back to back, so min-of-reps is a
+  *    warm minimum. Queries run cheapest-first by the prior artifact's mins
+  *    (the newest bench/BENCH_local_r*.json, or `SPARK_GRAFT_BENCH_ORDER`).
+  *    Up to [[BenchUtil.ROTATE_CAP]] queries the prior run never measured
+  *    rotate to the front, behind the cheapest query as a warmup.
+  *  - Reps: `SPARK_GRAFT_PASSES` (default 3). Fat priors run one fewer and
+  *    serve reads two ([[BenchUtil.repsFor]]). The schedule degrades to 2
+  *    reps upfront ([[BenchUtil.planReps]]) or mid-run
+  *    ([[BenchUtil.shouldDegrade]]) when it would overrun the deadline less
+  *    the requeue reserve.
+  *  - Deadline (`SPARK_GRAFT_BENCH_DEADLINE_S`, default 420): no query and
+  *    no further rep starts past it, except a streaming query's warm rep 2.
+  *  - Censor: a batch query's rep that overruns its budget
+  *    ([[BenchUtil.censorBudgetS]], [[BenchUtil.rep1CensorBudgetS]]) is
+  *    cancelled through its Spark job group. It leaves a null pass: never a
+  *    min, never a failure.
+  *  - One re-run path: after every rep-set [[BenchUtil.suspectS]] decides
+  *    whether the query is a suspect (a censored rep or a storm min). A
+  *    suspect re-runs once, uncensored, in a later window when
+  *    [[BenchUtil.drainVerdict]] allows; otherwise it is published in
+  *    `guard_skipped`. A min in [[BenchUtil.watchBand]] is only named in
+  *    `watch`.
+  *  - A prior from another scale factor orders the schedule but judges
+  *    nothing: no censor, suspects, tiers or rep planning.
   *
-  * Round 11 additions:
-  *  - VARIANCE GUARD (interleaved since round 13 — the round-12 header
-  *    described this design but the code still drained only after the
-  *    schedule; r13 implemented it): any query whose min
-  *    exceeds ~3.5× its prior committed min (the ordering source) is
-  *    requeued for one extra rep-set — r10 published d22 at 18.35 s
-  *    (14.7× builder) because all three reps landed in one
-  *    host-contention storm and nothing re-checked. A suspect is flagged
-  *    the moment its rep-set lands and requeued MID-SCHEDULE once (a) a
-  *    configurable time gap has passed — the re-run must be a different
-  *    host window, or it would just re-measure the same storm — and (b)
-  *    its estimated cost (inflated min × reps) fits the remaining
-  *    budget; leftovers drain after the schedule. The r11 end-of-run
-  *    guard detected six storms but the 420 s deadline had already been
-  *    consumed — the mechanism failed exactly when needed; interleaving
-  *    spends requeue budget while it still exists (storm-flagged CHEAP
-  *    queries run early under cheapest-first, so their re-window is
-  *    cheap and early too). Requeued names + trigger ratios land in the
-  *    artifact ("requeued"), so a number that STAYS high after the
-  *    re-run is a regression, not noise. A suspect no window could
-  *    re-run is flagged in "guard_skipped" — INCLUDING when the deadline
-  *    truncates the schedule itself (its min is storm-suspect either
-  *    way; silently publishing it as clean was the r12-advice bug);
-  *    "complete" reflects the SCHEDULE only — a deadline trip inside the
-  *    end drain cannot retroactively mark a fully measured run
-  *    incomplete. Priors from a different scale factor (the artifact's
-  *    "sf" differs from this run's, or is missing) order the schedule
-  *    but are excluded from the guard and the fat-rep cutoff — absolute
-  *    cross-scale comparisons would spuriously requeue every
-  *    honestly-scaling query.
-  *  - PER-REP GC/JIT DELTAS: each rep records how much JVM GC and JIT
-  *    time it absorbed ("gc_ms"/"jit_ms" arrays per query) — a storm or
-  *    compile spike is visible in the artifact instead of being
-  *    indistinguishable from a plan regression.
-  *
-  * Round 14 additions:
-  *  - WATCH TIER: the storm guard's 3.5× trigger is deliberately
-  *    storm-sized, so an honest ~2× regression published unretested
-  *    (r13's q94: 6.20 s vs a 3.28 s prior, builder 2.65 s at the same
-  *    HEAD — 2.3×, under the trigger). A min above ~1.75× its prior that
-  *    does NOT trip the guard is named in the artifact's "watch" map;
-  *    when every rep also carried heavy JIT (≥ 2 s — compile cost, the
-  *    benign cause) one extra back-to-back warm rep is granted within
-  *    budget ("watch_reran" records the pre-rep ratio). No sub-trigger
-  *    riser can publish silently anymore.
-  *  - SCHEDULE RESERVE: a mid-schedule requeue's budget gate now
-  *    subtracts the prior-estimated cost of the still-unmeasured
-  *    scheduled queries — a requeue could otherwise starve first
-  *    measurements and mark the run incomplete, a failure mode the old
-  *    end-of-schedule drain could not cause.
-  *
-  * Round 15 additions:
-  *  - HOST-AWARE PRIORS: the artifact records which host produced it
-  *    ("host", from SPARK_GRAFT_BENCH_HOST or the hostname; "hostname"
-  *    carries the raw machine name ALONGSIDE the role so env-var drift
-  *    between rounds can't reclassify a same-machine prior — raw names
-  *    win when both sides have one, BenchUtil.isCrossHost) and which
-  *    host produced its prior ("prior_host"/"prior_hostname"); a
-  *    cross-host (or pre-field, unattributed) prior widens the absolute
-  *    riser gap to 1.0 s for BOTH the watch band and the storm guard
-  *    (BenchUtil.hostGap — one definition; a fast-denominator cross-host
-  *    min could otherwise reach the 3.5× storm trigger and burn requeue
-  *    budget on an honest slower-host floor) — r14's two watch entries
-  *    were sub-second driver-host floors priced against a faster builder
-  *    host's priors (the third such incident after d22/q94).
-  *  - TWO-BAND WATCH RATIO: priors ≥ 2 s watch at 1.5× (multi-second
-  *    warm mins are stable; d128's 1.66× riser slipped under 1.75×).
-  *  - watch_rep_failed: a watch bonus rep that throws is recorded
-  *    in-band (name → pre-rep ratio) — it leaves a null in the passes
-  *    array while "failed" stays empty by design (the scheduled rep-set
-  *    already passed), and the null needs an in-artifact explanation.
-  *
-  * Round 17 additions (r16 verdict #1 — the surface outgrew the schedule;
-  * BENCH_r16 was the first incomplete driver artifact since r10, with six
-  * queries never measured and seven storm-suspect mins published without
-  * the guard's second window):
-  *  - SCHEDULE-AWARE REP PLANNING: before the first query, the whole
-  *    schedule's cost is projected from the priors (min × repsFor, 0.5 s
-  *    for unknowns) and the sub-fat tier's reps degrade globally (3→2)
-  *    until the projection fits deadline − reserve with 15% headroom
-  *    (BenchUtil.planReps). "planned_reps"/"eff_reps" in the artifact.
-  *  - MID-RUN DEGRADE RE-CHECK: the plan assumes a host; the run measures
-  *    it. After each query the observed inflation (elapsed vs projected-
-  *    so-far, BenchUtil.hostScale) re-prices the remaining schedule; an
-  *    overrun drops the REMAINING queries to 2 reps while the decision
-  *    still buys coverage ("degraded_at_s").
-  *  - EXPLICIT REQUEUE RESERVE: planning targets deadline − reserve_s
-  *    (default 45 s, SPARK_GRAFT_BENCH_RESERVE_S), so the guard's second
-  *    windows have a protected budget — guard_skipped can only be
-  *    nonempty when storms exceed the reserve, not whenever the schedule
-  *    is tight. First measurements still gate on the FULL deadline.
-  *  - SELF-ARMING TAIL-FIRST: queries the PRIOR artifact's deadline never
-  *    measured ("skipped") auto-rotate to the front of this schedule —
-  *    the starved tail cannot starve two rounds in a row.
-  *
-  * Round 18 additions (r17 verdict #1/#2/#7 — planReps and the reserve
-  * both engaged in the r17 driver run and it STILL blew the deadline,
-  * because individual storm reps ran to completion):
-  *  - STORM-CENSOR: each rep runs in its own Spark job group, cancelled by
-  *    a watchdog past max(censorRatio × prior, floor) + hostGap
-  *    (BenchUtil.censorBudgetS; runReps). Censored reps are null passes
-  *    (never mins, never failures, "censored" in the artifact); the query
-  *    re-runs UNCENSORED in a fresh window via the requeue machinery.
-  *  - STREAMING WARM-REP GUARANTEE: SparkEntry.streamingQueries get rep 2
-  *    even past the deadline — a 1-rep streaming min is a JIT measurement.
-  *  - DRIVER-AWARE TAIL-FIRST ARMING: the live artifact path's own
-  *    "skipped" list is always unioned in (the r17 driver ordered itself
-  *    from the builder artifact, whose empty skipped list disarmed it).
-  *  - SERVE-READ TIER: same-scale priors ≤ serve_cutoff_s (default 0.2 s)
-  *    run 2 reps — the warm-min invariant kept, the third rep of a stable
-  *    0.1 s serve read returned to the schedule budget ("serve_tier" in
-  *    the artifact names the members).
-  *
-  * Round 19 additions (r18 verdict #1/#2 — the r18 driver run measured
-  * 78/181 at 32 cpus, the worst coverage since r10, because the round's
-  * own tail-first arming front-loaded four heavyweights onto a cold JVM
-  * and the rep-1 censor exemption made exactly those reps uncancellable):
-  *  - REP-1 CENSOR BUDGET: rep 1 is boxed too, at the wider
-  *    max(ratio × prior, 3 × floor) + 10 s allowance (one-time builds fit;
-  *    a 91 s storm rep on a 5 s prior dies at ~25 s). The r18 exemption is
-  *    gone for every query, shared-prefix members included.
-  *  - ROTATION CAP + WARMUP FIRST: at most 3 starved queries rotate to the
-  *    front (largest priors), and the cheapest-prior query is promoted
-  *    ahead of the rotated block so session init/JIT lands in its rep-set,
-  *    not inside a heavyweight's measured rep 1.
-  *  - CENSOR CLASSIFICATION: only a Spark job-CANCELLATION exception
-  *    counts as a censored rep — a genuine failure thrown after the budget
-  *    expired lands in `failed` (r18 ADVICE).
-  *  - FULL LINEAGE: every query builds its own lineage in every rep — no
-  *    query reuses another's (or an earlier rep's) build, so each min
-  *    includes the query's whole declared work.
-  *
-  * The stdout line is a COMPACT summary (total, counts, slowest-10) —
-  * the full 141-query line exceeded the driver's ~2.2 KB stdout-tail
-  * capture in r8 AND r9 (`parsed: null`); per-query detail lives in the
-  * committed artifact. The stdout "value" is null whenever any query
-  * FAILED (a failure-tainted sum is not comparable round-over-round);
-  * on a deadline truncation value is the partial sum and the consumer
-  * must gate on "deadline_hit"/"n_queries" before comparing totals.
-  */
-/** Pure helpers of the bench harness, split out so the logic that feeds the
-  * driver's gate artifact (JSON escaping, prior-artifact parsing, the rep
-  * policy) is unit-testable without a SparkSession (BenchUtilSpec). */
+  * A failed query leaves a null pass, nulls the total and exits 1. The
+  * stdout line is compact (total, counts, slowest 10) so it fits the
+  * driver's stdout-tail window. */
 private[graft] object BenchUtil {
-  /** JSON string literal: escapes backslash, quote and all control chars —
-    * env-derived paths (sfDir, artifact, order source) are interpolated
-    * into the artifact and the stdout line, and a quote or backslash in
-    * one would otherwise emit invalid JSON. */
+  /** Fat-tier cutoff: a same-scale prior at or above it runs one fewer rep. */
+  val FAT_CUTOFF_S = 1.2
+  /** Storm trigger: a min above this multiple of its prior is a suspect. */
+  val GUARD_RATIO = 3.5
+  /** A mid-schedule re-run waits this long after the flag, for a new host window. */
+  val GUARD_GAP_S = 60.0
+  /** Censor budget: max(ratio × prior, floor) + hostGap per rep. */
+  val CENSOR_RATIO = 3.0
+  val CENSOR_FLOOR_S = 2.0
+  /** Extra rep-1 censor allowance for first-run JIT and one-time builds. */
+  val CENSOR_REP1_ALLOW_S = 10.0
+  /** Serve tier: a same-scale prior at or below it runs 2 reps. */
+  val SERVE_CUTOFF_S = 0.2
+  /** At most this many starved queries rotate to the front of a run. */
+  val ROTATE_CAP = 3
+  /** Schedule budget held back for suspects' re-runs. */
+  val RESERVE_S = 45.0
+  /** Watch band: a sub-trigger min above this multiple of its prior is named. */
+  val WATCH_RATIO = 1.75
+
+  /** JSON string literal: escapes backslash, quote and all control chars. */
   def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -174,120 +66,60 @@ private[graft] object BenchUtil {
     case c => c.toString
   } + "\""
 
-  /** Parse a committed bench artifact's own "sf" string, its "host"
-    * identity (empty for pre-r15 artifacts, which predate the field —
-    * callers must treat empty as UNKNOWN host, i.e. cross-host for the
-    * watch band's purposes), its raw "hostname" (r15.1: the physical
-    * machine name recorded ALONGSIDE the role, because "host" mixes two
-    * namespaces — an env-var role like "builder" one round and a raw
-    * hostname the next would reclassify a genuinely same-host prior as
-    * cross-host on string inequality alone) and per-query warm mins out
-    * of its JSON text. Regex-based by design (no JSON library in the
-    * unmanaged-classpath budget); malformed input degrades to no
-    * priors, never an error. The literal `"host":"` / `"hostname":"`
-    * anchors cannot cross-match ("prior_host"/"prior_hostname" are
-    * preceded by '_', not '"'; "hostname" does not contain `"host":`). */
-  def parsePrior(txt: String): (String, String, String, Map[String, Double]) = {
+  /** A bench artifact's "sf", raw "hostname" (empty when unrecorded) and
+    * per-query warm mins. Regex-based (no JSON library on the classpath);
+    * malformed input degrades to no priors, never an error. The
+    * `"hostname":"` anchor cannot match "prior_hostname", which is preceded
+    * by '_'. */
+  def parsePrior(txt: String): (String, String, Map[String, Double]) = {
     val q = "\"([A-Za-z0-9_]+)\":\\{\"passes\":\\[[^\\]]*\\],\"min\":([0-9.]+)".r
     val sfRe = "\"sf\":\"([^\"]*)\"".r
-    val hostRe = "\"host\":\"([^\"]*)\"".r
     val hostNameRe = "\"hostname\":\"([^\"]*)\"".r
     (sfRe.findFirstMatchIn(txt).map(_.group(1)).getOrElse(""),
-      hostRe.findFirstMatchIn(txt).map(_.group(1)).getOrElse(""),
       hostNameRe.findFirstMatchIn(txt).map(_.group(1)).getOrElse(""),
       q.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap)
   }
 
-  /** Absolute riser gap by prior provenance — ONE definition feeding both
-    * the watch band and the storm guard: 0.3 s absorbs same-host
-    * sub-second noise; a cross-host (or unattributed) prior gets 1.0 s,
-    * which a host-speed delta on a sub-second query cannot reach while a
-    * real multi-second regression still does. (r15.1: the storm guard
-    * previously kept the same-host gap against cross-host priors — the
-    * s131-class fast-denominator could reach 3.5× of a faster host's
-    * sub-second prior and burn requeue budget on an honest floor.) */
+  /** Absolute riser gap, one definition for the watch band, the storm
+    * trigger and the censor: 0.3 s absorbs same-host sub-second noise; a
+    * cross-host prior gets 1.0 s, which a host-speed delta on a sub-second
+    * query cannot reach while a real multi-second regression still does. */
   def hostGap(crossHost: Boolean): Double = if (crossHost) 1.0 else 0.3
 
-  /** Same-host decision for judging priors: raw hostnames decide when both
-    * sides recorded one (role labels drift with env vars — the same
-    * machine must never be reclassified cross-host because one round set
-    * SPARK_GRAFT_BENCH_HOST and the other didn't); when EITHER side lacks
-    * a hostname, provenance is UNKNOWN → cross-host. (r16, r15 advice:
-    * the previous fallback compared role labels, so a pre-r15.1 prior
-    * recording role "builder" matched the same label on a *different*
-    * machine and got the narrow 0.3 s same-host gap — the r14
-    * false-positive class, persisting for legacy priors. A role label is
-    * not a machine identity; only a raw-hostname match earns the narrow
-    * gap, and the cost of widening a genuinely-same-host legacy prior's
-    * gap to 1.0 s is a less sensitive watch band for one round, not a
-    * wrong number. The role "host" fields stayed in the ARTIFACT for
-    * provenance display, but no longer feed this decision — hence the
-    * hostname-only signature.) */
+  /** Raw hostnames decide; when either side lacks one the provenance is
+    * unknown, which counts as cross-host. */
   def isCrossHost(priorHostName: String, hostName: String): Boolean =
     if (priorHostName.nonEmpty && hostName.nonEmpty) priorHostName != hostName
     else true
 
-  /** Rep policy: fat queries (same-scale prior min ≥ cutoff) run one fewer
-    * rep — but never MORE than the configured count (at reps=1 a naive
-    * floor-of-2 would double the expensive tail instead of thinning it)
-    * and never below the 2 that keep a min warm (unless the configured
-    * count is itself below 2).
-    *
-    * SERVE-READ TIER (round 18, r17 verdict #7 — the surface-growth
-    * budget arithmetic): queries whose same-scale prior min is already at
-    * the serve floor (≤ serveCutoff, default 0.2 s — the amortized-layout
-    * reads: q154 XML 0.05 s, q155 JDBC 0.04 s, q161 proto 0.12 s, q50,
-    * s148, and the ~2 dozen sub-0.2 s projections) run TWO reps instead
-    * of three: rep 1 pays JIT/cache priming, rep 2 is the warm serve
-    * read, and a third warm rep of a stable 0.1 s floor buys nothing the
-    * watch/guard bands don't already cover. The warm-min invariant (≥ 2
-    * successful reps) is deliberately kept — a 1-rep tier would publish
-    * the PRIMING rep as the min (q154's rep 1 is ~3.4 s of layout build +
-    * JIT against its 0.05 s serve floor). serveCutoff = 0 disables. */
+  /** Rep policy: a fat prior (≥ fatCutoff) runs one fewer rep, clamped to
+    * [2, reps]; a serve read (prior ≤ serveCutoff) runs 2 — rep 1 primes,
+    * rep 2 is the warm read. Never more than `reps`; serveCutoff = 0
+    * disables the serve tier. */
   def repsFor(prior: Option[Double], fatCutoff: Double, reps: Int,
               serveCutoff: Double = 0.0): Int =
     if (prior.exists(_ >= fatCutoff)) (reps - 1).max(2).min(reps)
     else if (serveCutoff > 0 && prior.exists(_ <= serveCutoff)) 2.min(reps)
     else reps
 
-  /** The prior artifact's own "skipped" list — the queries ITS deadline
-    * never measured. Round 17 (r16 verdict #1c): these auto-rotate to the
-    * FRONT of this run's schedule, so cheapest-first + a binding deadline
-    * cannot starve the same expensive tail two rounds in a row (r16's six
-    * never-measured queries were exactly r15's... fully measured tail —
-    * the surface grew past the schedule and the deadline landed on
-    * whoever ran last; self-arming tail-first makes the starvation
-    * rotate instead of stick). Anchored on the ',' the artifact writer
-    * always emits before "skipped" so the regex cannot cross-match
-    * "guard_skipped" (an object, not an array, but belt and braces). */
+  /** The prior artifact's "skipped" list: the queries its deadline never
+    * measured. Anchored on the ',' or '{' before the key, so it cannot
+    * match "guard_skipped". */
   def parseSkipped(txt: String): Seq[String] =
     "[,{]\"skipped\":\\[([^\\]]*)\\]".r.findFirstMatchIn(txt)
       .map(_.group(1)).getOrElse("")
       .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
 
-  /** Prior-projected wall cost of running `priors` at `reps` (each query
-    * min × its rep count; unknown priors at the scheduler's 0.5 s
-    * mid-cost estimate). The projection UNDERESTIMATES wall clock — reps
-    * cost more than the warm min (rep 1 pays JIT) and a slow host
-    * inflates everything — which is exactly why [[planReps]] takes a
-    * headroom factor and the mid-run [[hostScale]] re-check exists. */
+  /** Prior-projected cost of running `priors` at `reps`: min × reps each,
+    * 0.5 s for an unknown prior. It underestimates the wall clock (rep 1
+    * pays JIT), hence [[planReps]]'s headroom and the mid-run re-check. */
   def projectedCostS(priors: Seq[Option[Double]], fatCutoff: Double, reps: Int,
                      serveCutoff: Double = 0.0): Double =
     priors.map(p => p.getOrElse(0.5) * repsFor(p, fatCutoff, reps, serveCutoff)).sum
 
-  /** SCHEDULE-AWARE REP PLANNING (round 17, r16 verdict #1a): the largest
-    * rep count in [2, reps] whose headroom-inflated projection fits
-    * `budgetS` (the deadline MINUS the explicit requeue reserve). 159
-    * queries × 3 reps no longer fit 420 s on a stormy host — r16's driver
-    * run was the first incomplete one since r10, with six queries never
-    * measured and seven storm mins published unverified. Degrading the
-    * sub-fat tier 3→2 globally (the fat tier already runs 2) trades the
-    * third warm rep — which buys ~nothing on a stable min — for complete
-    * coverage. With no projectable priors the configured count stands
-    * (nothing to plan from); if even 2 reps do not fit, 2 is still the
-    * answer (a warm min needs two successful reps — below that the
-    * numbers stop meaning anything; the deadline machinery handles the
-    * overflow as before, now with the tail rotated front). */
+  /** The largest rep count in [2, reps] whose headroom-inflated projection
+    * fits `budgetS`. With no priors the configured count stands; when even
+    * 2 does not fit the answer is still 2, the warm-min floor. */
   def planReps(priors: Seq[Option[Double]], fatCutoff: Double, reps: Int,
                budgetS: Double, headroom: Double = 1.15,
                serveCutoff: Double = 0.0): Int =
@@ -296,143 +128,60 @@ private[graft] object BenchUtil {
       .find(r => projectedCostS(priors, fatCutoff, r, serveCutoff) * headroom <= budgetS)
       .getOrElse(2)
 
-  /** Observed wall-clock inflation of THIS run vs its prior-projected cost
-    * so far (floored at 1): the empirical correction for everything the
-    * projection cannot know — rep-1 JIT, interleaved guard work, a host
-    * slower than the prior's. Drives the MID-RUN degrade re-check. */
+  /** This run's wall-clock inflation over its projection so far, floored at 1. */
   def hostScale(elapsedS: Double, predictedSoFarS: Double): Double =
     if (predictedSoFarS > 0) math.max(elapsedS / predictedSoFarS, 1.0) else 1.0
 
-  /** Mid-run degrade decision (round 17): true when the host-scaled
-    * projection of the remaining schedule no longer fits the budget —
-    * the upfront plan assumed a host; the run measures it. */
+  /** Mid-run degrade: the host-scaled remaining projection overruns the budget. */
   def shouldDegrade(elapsedS: Double, scale: Double, remainingProjectedS: Double,
                     budgetS: Double): Boolean =
     elapsedS + scale * remainingProjectedS > budgetS
 
-  /** Mid-schedule requeue eligibility for a storm-flagged suspect: the
-    * re-run must land in a DIFFERENT host window than the reps that
-    * triggered the flag (≥ gapS seconds since flagging — an immediate
-    * re-run would just re-measure the same storm) AND its estimated cost
-    * (the inflated storm min × the reps a requeue would run — a deliberate
-    * overestimate: a healthy re-run is cheaper, a still-stormy one isn't)
-    * must fit before the deadline. Pure so BenchUtilSpec can pin both
-    * gates without a SparkSession. */
+  /** Mid-schedule re-run gates: ≥ gapS since the flag (a re-run in the same
+    * host window would re-measure the same storm) and the estimated cost
+    * fits before `deadlineS`. */
   def requeueEligible(flaggedAtS: Double, nowS: Double, gapS: Double,
                       estCostS: Double, deadlineS: Double): Boolean =
     (nowS - flaggedAtS) >= gapS && (nowS + estCostS) <= deadlineS
 
-  /** Prior-estimated cost of the still-unmeasured scheduled queries — the
-    * budget a MID-SCHEDULE requeue must not consume (round 14): the old
-    * gate checked only now+estCost≤deadline and reserved nothing for the
-    * rest of the schedule, so a storm requeue could starve first
-    * measurements and mark the run incomplete — a failure mode the
-    * end-of-schedule drain could never cause. Queries with no prior use
-    * the scheduler's own 0.5 s mid-cost estimate. */
+  /** Prior-estimated cost of the still-unmeasured scheduled queries: the
+    * budget a mid-schedule re-run must leave to first measurements. */
   def scheduledReserveS(remainingPriors: Seq[Option[Double]],
                         fatCutoff: Double, reps: Int,
                         serveCutoff: Double = 0.0): Double =
-    remainingPriors.map(p => p.getOrElse(0.5) * repsFor(p, fatCutoff, reps, serveCutoff)).sum
+    projectedCostS(remainingPriors, fatCutoff, reps, serveCutoff)
 
-  /** Sub-trigger riser band ("watch" tier, round 14; host- and
-    * size-aware since round 15). The storm guard's 3.5× trigger is
-    * deliberately storm-sized, so an honest ~2× regression publishes
-    * unretested (r13's q94: 6.20 s vs a 3.28 s prior — 2.3×, never
-    * re-run, while the builder measured 2.65 s at the same HEAD). A min
-    * above the band's ratio × prior that does NOT trip the storm guard
-    * lands in the artifact's "watch" map — named, never silently
-    * published as clean — and when every rep also carried heavy JIT
-    * (compile cost, the usual benign cause) one extra back-to-back warm
-    * rep is granted within budget so the query can clear itself.
-    *
-    * Round-15 calibration, from two r14 misses:
-    *  - TWO-BAND RATIO: the 1.75× ratio is tuned for the sub-second
-    *    noise floor, but a multi-second query's warm min is far more
-    *    stable — d128_pagerank published a 1.66× riser (2.71→4.51 s,
-    *    ~6% of the whole surface's total) under the 1.75× band,
-    *    unexamined. Priors ≥ 2 s watch at 1.5× instead; the 0.3 s
-    *    absolute gap already keeps the noise floor out of the tighter
-    *    band.
-    *  - CROSS-HOST GAP: the 0.3 s gap was calibrated for SAME-host
-    *    noise; a prior measured on a systematically faster host blows
-    *    through it on sub-second queries (r14: s131 at 2.51× and q127
-    *    at 2.21× of BUILDER priors — both honest driver-host floors,
-    *    both isolated-probe-adjudicated as such; the third occurrence
-    *    of the cross-host fast-denominator trap after d22 and q94).
-    *    When the prior's recorded host differs from this run's — or the
-    *    prior predates the host field (pre-r15 artifacts, exactly the
-    *    unattributed class that caused the r14 entries) — the band
-    *    requires a 1.0 s absolute gap: a host-speed delta on a
-    *    sub-second query cannot reach it, a real multi-second
-    *    regression still does (d128's 1.8 s gap would). */
+  /** Sub-trigger riser band: a min above watchRatio × prior (1.5× for
+    * priors ≥ 2 s, whose warm mins are stabler), more than hostGap above it
+    * and not above the storm trigger. Such a min is named in the artifact's
+    * "watch" map, never re-run. */
   def watchBand(min: Double, prior: Double, watchRatio: Double,
                 guardRatio: Double, crossHost: Boolean = false): Boolean = {
     val ratio = if (prior >= 2.0) math.min(watchRatio, 1.5) else watchRatio
     min > prior * ratio && (min - prior) > hostGap(crossHost) && min <= prior * guardRatio
   }
 
-  /** STORM-CENSOR budget for one rep (round 18, r17 verdict #1 — the
-    * missing third mechanism): planReps and the reserve both engaged in the
-    * r17 driver run and it STILL blew the 420 s deadline, because an
-    * individual storm rep runs to completion — d81's two ~11 s reps burned
-    * ~22 s on a query whose same-HEAD floor is 0.3 s, and the 8
-    * guard_skipped rows carried ≈ 27 s of storm inflation ≈ exactly the
-    * budget that starved 4 queries. A rep is therefore time-boxed at
-    * max(ratio × prior, floor) + hostGap: past that the rep's Spark job
-    * group is cancelled, its elapsed stays charged to the wall clock but
-    * its (censored, incomplete) time never becomes a min, and the query is
-    * flagged into the SAME requeue machinery a storm suspect uses — the
-    * fresh-window re-run (uncensored, so a genuine 3×+ regression still
-    * gets its honest number) publishes the real min. No comparable prior →
-    * no censor (nothing to box against): None. The 2 s default floor keeps
-    * honest rep-1 JIT (typically ≤ 1.5 s on sub-second queries) out of the
-    * censor; the cross-host gap keeps a faster prior host from boxing an
-    * honest slower floor. */
+  /** Censor budget of reps 2+: max(ratio × prior, floor) + hostGap. The
+    * floor keeps honest JIT out of the censor; no comparable prior, no
+    * censor (None). */
   def censorBudgetS(prior: Option[Double], censorRatio: Double, floorS: Double,
                     crossHost: Boolean): Option[Double] =
     prior.map(p => math.max(censorRatio * p, floorS) + hostGap(crossHost))
 
-  /** REP-1 censor budget (round 19, r18 verdict #1a): rep 1 was EXEMPT from
-    * the censor entirely (the r18 review fix protecting legitimate one-time
-    * builds — p91's corpus pass, q155's Derby boot, q154's layout write,
-    * the shared-prefix priming rep), and that exemption is exactly how
-    * d128's 91.3 s storm rep ran uncensored and consumed a fifth of the
-    * r18 driver deadline. Rep 1 now gets a budget too, just WIDER: the
-    * floor is tripled (a one-time build on a sub-second-prior query gets
-    * ≥ 6 s) and a flat `allowS` (default 10 s) absorbs first-run JIT and
-    * any residual init — so q154's ~3.4 s layout-build rep 1 against its
-    * 0.05 s prior fits a ~16 s budget with 4× headroom, while a d128-class
-    * storm rep on a ~5 s prior dies at ~25 s instead of never. The
-    * shared-prefix queries get the same budget: a healthy prefix-priming
-    * rep (prefix build + iterations ≈ 8-10 s at sf0.1) fits it, and a
-    * STORMY one is precisely what must be censored — the uncensored
-    * fresh-window requeue re-pays the build honestly. */
+  /** Rep 1's wider censor budget: max(ratio × prior, 3 × floor) + allowS +
+    * hostGap, so one-time builds and first-run JIT fit while a storm rep
+    * still dies. */
   def rep1CensorBudgetS(prior: Option[Double], censorRatio: Double,
                         floorS: Double, allowS: Double,
                         crossHost: Boolean): Option[Double] =
     prior.map(p =>
       math.max(censorRatio * p, floorS * 3) + allowS + hostGap(crossHost))
 
-  /** True when `e`'s cause chain looks like Spark's job-group cancellation
-    * (round 19, r18 ADVICE: the censor catch classified ANY exception as a
-    * censored rep once the watchdog had fired, so a genuine query failure
-    * thrown just after the budget expired was hidden from `failed`,
-    * recorded as censored, and burned an uncensored requeue window where
-    * it would fail again). Two signals, walked down the cause chain (the
-    * cancel can surface wrapped, e.g. inside a stage failure):
-    *  - exception CLASS: CancellationException / InterruptedException —
-    *    how a cancelled broadcast/checkpoint future surfaces, typically
-    *    with a NULL message (r19 review: a message-only check would
-    *    misclassify exactly those as genuine failures, nulling the run's
-    *    total — the inversion of the bug this method fixes);
-    *  - MESSAGE substring "cancel": Spark's scheduler signals group
-    *    cancellation as a SparkException ("Job N cancelled because of
-    *    cancellation of job group G" / "cancelled as part of cancellation
-    *    of all jobs in group").
-    * The residual over-breadth (a real failure whose message happens to
-    * contain "cancel") is bounded by the call site: this method is only
-    * consulted AFTER the watchdog fired for the rep, so both conditions
-    * must coincide for a misclassification. */
+  /** True when `e`'s cause chain is Spark's job-group cancellation: a
+    * CancellationException or InterruptedException (how a cancelled
+    * broadcast or checkpoint future surfaces, often with a null message),
+    * or a message containing "cancel". Only consulted after the censor
+    * fired for the rep, so a genuine failure still lands in `failed`. */
   def isCancellation(e: Throwable): Boolean = {
     var t = e
     var seen = 0
@@ -451,16 +200,9 @@ private[graft] object BenchUtil {
     false
   }
 
-  /** TAIL-FIRST ROTATION CAP (round 19, r18 verdict #1b): the r18 driver
-    * run rotated ALL of the prior run's starved queries to the front —
-    * four heavyweights (d130, p90, d128, p91) landed on a cold JVM where
-    * rep 1 also paid Spark init + full JIT, the rep-1 censor exemption
-    * made those reps uncancellable, and the schedule never recovered
-    * (78/181 measured). The rotation now takes at most `cap` queries —
-    * the ones with the LARGEST priors (most at risk of deadline
-    * starvation under cheapest-first; unknown priors sort at the 0.5 s
-    * mid-cost estimate) — and the rest of the starved set keeps its
-    * cheapest-first position, where the ordinary schedule reaches it. */
+  /** The starved queries that rotate to the front: at most `cap`, largest
+    * priors first (unknown at 0.5 s); the rest keep their cheapest-first
+    * slot. */
   def capRotation(starved: Seq[String], priors: Map[String, Double],
                   cap: Int): Seq[String] =
     starved.sortBy(n => -priors.getOrElse(n, 0.5)).take(math.max(cap, 0))
@@ -476,34 +218,68 @@ private[graft] object BenchUtil {
         s"SPARK_GRAFT_QUERIES names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
       names
     }
+
+  /** The one suspect rule, applied after every rep-set. A query is a
+    * suspect when a rep was censored (`censoredS`, that rep's elapsed time)
+    * or when its min exceeds GUARD_RATIO × prior by more than hostGap.
+    * Returns the storm seconds the re-run is priced by; None for a query
+    * that failed, was already re-run, or has no same-scale prior. */
+  def suspectS(prior: Option[Double], min: Option[Double], censoredS: Option[Double],
+               crossHost: Boolean, failed: Boolean, rerun: Boolean): Option[Double] =
+    if (failed || rerun) None
+    else prior.flatMap { p =>
+      censoredS.orElse(min.filter(m => m > p * GUARD_RATIO && m - p > hostGap(crossHost)))
+    }
+
+  /** Where the schedule stands when a pending suspect is drained. */
+  sealed trait Phase
+  case object MidSchedule extends Phase
+  case object ScheduleDone extends Phase
+  case object Truncated extends Phase
+
+  /** What the drain does with one pending suspect. */
+  sealed trait Verdict
+  case object Rerun extends Verdict
+  case object Wait extends Verdict
+  case object Skip extends Verdict
+
+  /** The one drain rule. Mid-schedule a suspect re-runs once GUARD_GAP_S
+    * has passed and its cost fits the deadline less the rest of the
+    * schedule's `reserveS`. After a complete schedule only the deadline
+    * gates (waiting cannot buy a new window). A truncated schedule re-runs
+    * nothing: its suspects are published as guard_skipped. */
+  def drainVerdict(phase: Phase, flaggedAtS: Double, nowS: Double, estCostS: Double,
+                   deadlineS: Double, reserveS: Double): Verdict = phase match {
+    case MidSchedule =>
+      if (requeueEligible(flaggedAtS, nowS, GUARD_GAP_S, estCostS, deadlineS - reserveS)) Rerun
+      else Wait
+    case ScheduleDone => if (nowS <= deadlineS) Rerun else Skip
+    case Truncated => Skip
+  }
 }
 
 object Bench {
-  import BenchUtil.{jstr, parsePrior}
-  private def jitMs: Long = {
-    val c = java.lang.management.ManagementFactory.getCompilationMXBean
-    if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else -1L
-  }
+  import BenchUtil._
+
+  /** The bench's seven settings, read from the environment by [[main]]. */
+  final case class Settings(sfDir: String, cpus: Int, artifact: String,
+                            order: Option[String], queries: Option[String],
+                            passes: Int, deadlineS: Double)
+
   private def gcMs: Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime.max(0L)).sum
   }
 
-  /** Per-query warm mins from the newest committed round artifact
-    * (bench/BENCH_local_r{N}.json, highest N; override with
-    * SPARK_GRAFT_BENCH_ORDER). Used to order cheapest-first and as the
-    * variance-guard reference — a parse failure degrades to name order
-    * and no guard, never to an error. Also returns the prior artifact's
-    * own "sf" string: a prior from a DIFFERENT scale still orders the
-    * schedule usefully (relative costs are stable across scale), but its
-    * absolute mins must not feed the variance guard or the fat-rep
-    * cutoff — a 10× run judged against sf0.1 priors would spuriously
-    * requeue every query whose honest scale ratio exceeds guardRatio. */
-  private def priorMins(): (String, String, String, String, Map[String, Double], Seq[String]) = {
+  /** The prior: (order source, its sf, its hostname, its per-query mins,
+    * the queries it skipped). The chosen file is `order`, else the newest
+    * bench/BENCH_local_r{N}.json. The live artifact's skipped list is
+    * always unioned in (never its mins), so a run that starved queries
+    * rotates them front next time whatever the order source. */
+  private def priorMins(s: Settings): (String, String, String, Map[String, Double], Seq[String]) = {
     import java.nio.file.{Files, Paths}
-    val explicit = sys.env.get("SPARK_GRAFT_BENCH_ORDER").map(Paths.get(_))
-    val chosen = explicit.orElse {
+    val chosen = s.order.map(Paths.get(_)).orElse {
       val dir = Paths.get("bench")
       if (!Files.isDirectory(dir)) None
       else {
@@ -517,33 +293,19 @@ object Bench {
         }.sortBy(-_._1).headOption.map(_._2)
       }
     }
-    // SELF-ARMING TAIL-FIRST, driver-aware (round 18, r17 verdict #1): the
-    // r17 driver run ordered itself from the committed BUILDER artifact —
-    // whose "skipped" list is empty — so tail-first had nothing to arm on
-    // and the driver's OWN four starved queries (recorded only in its
-    // bench/BENCH_local.json) starved again. The live artifact path is now
-    // ALWAYS consulted for its skipped list (never for mins/ordering — its
-    // numbers may be the storm-laden run this machinery exists to survive),
-    // unioned with the chosen prior's.
-    val liveSkipped = {
-      val live = Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        "bench/BENCH_local.json"))
+    val live = Paths.get(s.artifact)
+    val liveSkipped =
       if (Files.isReadable(live) && !chosen.contains(live))
-        BenchUtil.parseSkipped(new String(Files.readAllBytes(live), "UTF-8"))
+        parseSkipped(new String(Files.readAllBytes(live), "UTF-8"))
       else Seq.empty
-    }
     chosen match {
       case Some(p) if Files.isReadable(p) =>
         val txt = new String(Files.readAllBytes(p), "UTF-8")
-        val (priorSf, priorHost, priorHostName, mins) = parsePrior(txt)
-        // a non-empty artifact parsing to zero mins means the detail
-        // format drifted from parsePrior's regex — degrade loudly, not
-        // silently (order falls back to names, guard + fat cutoff disarm)
+        val (priorSf, priorHostName, mins) = parsePrior(txt)
         if (txt.trim.nonEmpty && mins.isEmpty)
-          System.err.println(s"[bench] prior $p is non-empty but parsed to ZERO mins — format drift? (name order, no variance guard)")
-        (p.toString, priorSf, priorHost, priorHostName, mins,
-          (BenchUtil.parseSkipped(txt) ++ liveSkipped).distinct)
-      case _ => ("none", "", "", "", Map.empty, liveSkipped)
+          System.err.println(s"[bench] prior $p is non-empty but parsed to ZERO mins — format drift? (name order, nothing judged)")
+        (p.toString, priorSf, priorHostName, mins, (parseSkipped(txt) ++ liveSkipped).distinct)
+      case _ => ("none", "", "", Map.empty, liveSkipped)
     }
   }
 
@@ -551,364 +313,176 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val artifact = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench/BENCH_local.json")
-    // 3 back-to-back reps per query: rep 1 pays that query's JIT, reps 2-3
-    // are warm; min-of-3 estimates the same statistic pass-major min-of-3
-    // did, without needing three full passes to fit the deadline.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt.max(1)
-    // Wall-clock deadline (seconds, from just before the first query): no
-    // NEW query (and no additional rep) starts past it. Worst-case
-    // overshoot = one in-flight rep; the running artifact already holds
-    // every completed query either way.
-    val deadlineS = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_S", "420").toDouble
-    // adaptive reps: a query whose prior committed min is already ≥ this
-    // cutoff runs ONE fewer rep (never below 2 — two successful reps keep
-    // the min warm). The warm min of a multi-second query is stable enough
-    // that a third rep buys ~nothing, and the skipped reps are exactly what
-    // let the full 141-query surface fit the 420 s deadline (the r11 dry
-    // run finished 140/141 at 423 s — the fat tail's third reps were the
-    // overrun). Set to a huge value to disable.
-    val fatCutoff = sys.env.getOrElse("SPARK_GRAFT_BENCH_FAT_CUTOFF_S", "1.2").toDouble
-    // variance guard: requeue any measured query whose min landed above
-    // ratio × its prior committed min AND at least 0.3 s above it (sub-
-    // second queries bounce around 2-3× on this host as pure noise)
-    val guardRatio = sys.env.getOrElse("SPARK_GRAFT_BENCH_GUARD_RATIO", "3.5").toDouble
-    // minimum seconds between flagging a storm suspect and its requeue —
-    // the re-run must land in a DIFFERENT host window than the reps that
-    // triggered it, or the requeue just re-measures the same storm
-    val guardGapS = sys.env.getOrElse("SPARK_GRAFT_BENCH_GUARD_GAP_S", "60").toDouble
-    // storm-censor (round 18, see BenchUtil.censorBudgetS): a rep is
-    // time-boxed at max(ratio × prior, floor) + hostGap via Spark job-group
-    // cancellation; censored queries re-run UNCENSORED in a fresh window
-    // through the ordinary requeue machinery. SPARK_GRAFT_BENCH_CENSOR=0
-    // disarms (e.g. for isolated probes that WANT the storm's full shape).
-    val censorOn = sys.env.getOrElse("SPARK_GRAFT_BENCH_CENSOR", "1") == "1"
-    // serve-read tier (round 18, see BenchUtil.repsFor): same-scale priors
-    // at or under this floor run 2 reps — the third warm rep of a stable
-    // 0.1 s serve read buys nothing and the schedule budget is the scarce
-    // resource (r17 verdict #7). 0 disables.
-    val serveCutoff = sys.env.getOrElse("SPARK_GRAFT_BENCH_SERVE_CUTOFF_S", "0.2").toDouble
-    val censorRatio = sys.env.getOrElse("SPARK_GRAFT_BENCH_CENSOR_RATIO", "3.0").toDouble
-    val censorFloorS = sys.env.getOrElse("SPARK_GRAFT_BENCH_CENSOR_FLOOR_S", "2.0").toDouble
-    // rep-1 allowance added on top of the tripled censor floor (see
-    // BenchUtil.rep1CensorBudgetS): first-run JIT + any one-time build
-    val censorRep1AllowS =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CENSOR_REP1_ALLOW_S", "10.0").toDouble
-    // watch tier (see BenchUtil.watchBand): risers above this ratio that sit
-    // UNDER the storm trigger are named in the artifact's "watch" map; when
-    // every rep carried ≥ watchJitMs of JIT, one extra warm rep is granted
-    val watchRatio = sys.env.getOrElse("SPARK_GRAFT_BENCH_WATCH_RATIO", "1.75").toDouble
-    val watchJitMs = sys.env.getOrElse("SPARK_GRAFT_BENCH_WATCH_JIT_MS", "2000").toLong
-    // optional comma-separated query filter (e.g. the dedup/ANN family for
-    // the sf1 stress artifact, whose dir has only documents + embeddings)
-    val pool = SparkEntry.queries
-    val only = BenchUtil.queryFilter(sys.env.get("SPARK_GRAFT_QUERIES"), pool.keySet)
-    // the library's own session factory (incl. the scale-aware AQE knobs):
-    // the bench must measure the configuration users actually run
+    val settings = Settings(sfDir, cpus.toInt, artifact,
+      order = sys.env.get("SPARK_GRAFT_BENCH_ORDER"),
+      queries = sys.env.get("SPARK_GRAFT_QUERIES"),
+      passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt.max(1),
+      deadlineS = sys.env.getOrElse("SPARK_GRAFT_BENCH_DEADLINE_S", "420").toDouble)
+    // the library's own session factory: the bench measures the
+    // configuration users run
     val spark = core.Engine.session(s"local[$cpus]", cpus.toInt)
-    // host identity, recorded in the artifact and compared against the
-    // prior's recorded host: the r14 watch entries (s131/q127) were
-    // sub-second driver-host floors priced against a faster builder
-    // host's priors — nothing in either artifact said which host wrote
-    // it. SPARK_GRAFT_BENCH_HOST names the role explicitly (e.g.
-    // "driver"/"builder"); the hostname fallback still distinguishes
-    // physical hosts when the env var is unset.
+    val line = run(spark, settings)
+    println(line)
+    spark.stop()
+    // the line's own failed list decides the exit code
+    if (!line.contains("\"failed\":[]")) sys.exit(1)
+  }
+
+  /** Runs the schedule on `spark`, writes the artifact and returns the
+    * stdout line. */
+  def run(spark: SparkSession, settings: Settings): String = {
+    val Settings(sfDir, cpus, artifact, _, _, reps, deadlineS) = settings
+    val pool = SparkEntry.queries
+    val only = queryFilter(settings.queries, pool.keySet)
     val hostName =
       try java.net.InetAddress.getLocalHost.getHostName catch { case _: Exception => "" }
-    val host = sys.env.getOrElse("SPARK_GRAFT_BENCH_HOST",
-      if (hostName.isEmpty) "unknown" else hostName)
-    val (orderSource, priorSf, priorHost, priorHostName, prior, priorSkipped) = priorMins()
-    // raw hostnames decide when both sides carry one (role labels drift
-    // with env vars; the machine doesn't); ANY missing hostname = unknown
-    // provenance = cross-host — unattributed priors are exactly how the
-    // r14 false-positive watch entries happened, and a matching role
-    // label proves nothing about the machine (r16)
-    val crossHost = BenchUtil.isCrossHost(priorHostName, hostName)
-    // a prior from another scale — or one whose scale is UNKNOWN (missing/
-    // unparsed "sf": e.g. a hand-pointed SPARK_GRAFT_BENCH_ORDER file) —
-    // orders the schedule (relative costs are stable) but must not judge
-    // absolute times: guard + fat cutoff off. Treating unknown as
-    // same-scale would arm the guard against mins it cannot compare.
+    val (orderSource, priorSf, priorHostName, prior, priorSkipped) = priorMins(settings)
+    val crossHost = isCrossHost(priorHostName, hostName)
+    // a prior from another (or an unknown) scale orders the schedule but
+    // cannot judge absolute times
     val priorComparable = prior.nonEmpty && priorSf == sfDir
     val judgePrior = if (priorComparable) prior else Map.empty[String, Double]
     if (prior.nonEmpty && !priorComparable)
-      System.err.println(s"[bench] prior $orderSource is sf=${if (priorSf.isEmpty) "<unknown>" else priorSf}, run is sf=$sfDir — ordering only (variance guard + fat cutoff disabled)")
+      System.err.println(s"[bench] prior $orderSource is sf=${if (priorSf.isEmpty) "<unknown>" else priorSf}, run is sf=$sfDir — ordering only (nothing judged)")
     if (prior.nonEmpty && priorComparable && crossHost)
-      System.err.println(s"[bench] prior $orderSource host=${if (priorHost.isEmpty) "<unrecorded>" else priorHost} differs from this run's host=$host — watch band at the 1.0 s cross-host gap")
-    // cheapest-first; queries with no committed min (new this round) slot
-    // at a mid-cost 0.5 s estimate rather than the front (they may be
-    // expensive) or the back (they would never get driver numbers).
-    // Cheapest-first + a binding deadline systematically starves the
-    // expensive tail of fresh numbers; SPARK_GRAFT_BENCH_TAIL_FIRST=k
-    // rotates the k priciest to the FRONT for a periodic tail-focused
-    // sweep (off by default — the driver run should maximize coverage).
-    val tailFirst = sys.env.getOrElse("SPARK_GRAFT_BENCH_TAIL_FIRST", "0").toInt
+      System.err.println(s"[bench] prior $orderSource hostname=${if (priorHostName.isEmpty) "<unrecorded>" else priorHostName} differs from this run's $hostName — cross-host gap 1.0 s")
+    // cheapest-first; a query with no prior slots at a mid-cost 0.5 s
     val cheapFirst = pool.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .sortBy { case (name, _) => (prior.getOrElse(name, 0.5), name) }
-    val explicitTail =
-      if (tailFirst <= 0) cheapFirst
-      else cheapFirst.takeRight(tailFirst).reverse ++ cheapFirst.dropRight(tailFirst)
-    // SELF-ARMING TAIL-FIRST (round 17, r16 verdict #1c): queries the PRIOR
-    // run's deadline never measured rotate to the front of this one — the
-    // starved tail gets first claim on the budget instead of starving
-    // again. No-op when the prior was complete (skipped empty).
-    //
-    // ROTATION CAP + WARMUP FIRST (round 19, r18 verdict #1b): the r18
-    // driver run rotated four heavyweights onto a cold JVM, where every
-    // measured rep 1 also paid Spark init + first codegen and the (then
-    // uncensorable) rep 1s consumed the schedule — 78/181 measured. At
-    // most SPARK_GRAFT_BENCH_ROTATE_CAP (default 3) starved queries
-    // rotate per run (largest priors first — the ones cheapest-first
-    // would starve again); the rest keep their cheapest-first slots. And
-    // whenever anything rotated, the single cheapest-prior query is
-    // promoted ahead of the rotated block so ITS rep-set absorbs session
-    // init/JIT before any heavyweight is measured.
-    val rotateCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROTATE_CAP", "3").toInt
-    // intersect the starved list with THIS run's pool before capping (r19
-    // review): otherwise rotation slots are consumed by starved queries a
-    // query filter (or a renamed/removed query) keeps out of the run, and
-    // a runnable starved query misses its slot and starves again
-    val runnable = explicitTail.map(_._1).toSet
-    val starved = BenchUtil.capRotation(
-      priorSkipped.filter(runnable.contains), prior, rotateCap).toSet
+    // the starved list is intersected with THIS run's pool before capping,
+    // so a filtered-out or removed query cannot take a rotation slot
+    val runnable = cheapFirst.map(_._1).toSet
+    val starved = capRotation(priorSkipped.filter(runnable.contains), prior, ROTATE_CAP).toSet
     if (priorSkipped.count(runnable.contains) > starved.size)
-      System.err.println(s"[bench] prior run skipped ${priorSkipped.size} queries — rotation capped at $rotateCap (largest priors); the rest stay cheapest-first")
+      System.err.println(s"[bench] prior run skipped ${priorSkipped.size} queries — rotation capped at $ROTATE_CAP (largest priors); the rest stay cheapest-first")
     val queryList =
-      if (starved.isEmpty) explicitTail
+      if (starved.isEmpty) cheapFirst
       else {
-        val (front, rest) = explicitTail.partition { case (n, _) => starved.contains(n) }
-        if (front.nonEmpty)
-          System.err.println(s"[bench] auto-rotated to the front: ${front.map(_._1).mkString(", ")}")
-        if (front.isEmpty || rest.isEmpty) front ++ rest
+        val (front, rest) = cheapFirst.partition { case (n, _) => starved.contains(n) }
+        System.err.println(s"[bench] auto-rotated to the front: ${front.map(_._1).mkString(", ")}")
+        if (rest.isEmpty) front
         else {
+          // the cheapest query absorbs session init and JIT before any
+          // rotated heavyweight is measured
           val warm = rest.minBy { case (n, _) => (prior.getOrElse(n, 0.5), n) }
           System.err.println(s"[bench] warmup-first: ${warm._1} promoted ahead of the rotated block")
           warm +: (front ++ rest.filterNot(_._1 == warm._1))
         }
       }
-    // a throwing query must surface as a FAILURE, not masquerade as a fast
-    // timing — its failed rep is recorded as null (excluded from min/total)
-    // and the process exits non-zero
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     val benchT0 = System.nanoTime()
-    val (jit0, gc0) = (jitMs, gcMs)
+    val (jit0, gc0) = (Dev.jitMs, gcMs)
     def elapsed: Double = (System.nanoTime() - benchT0) / 1e9
     var deadlineHit = false
-    // per query, in run order: (seconds or None=failed, gc delta ms, jit delta ms)
+    // per rep: seconds (None = failed or censored), gc and jit deltas in ms
     case class Rep(secs: Option[Double], gc: Long, jit: Long)
     val results = scala.collection.mutable.LinkedHashMap[String, Vector[Rep]]()
-    // requeued queries → the min/prior ratio that triggered the guard
+    // name → min/prior ratio that flagged it: re-run, or never re-run
     val requeued = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // guard suspects the deadline prevented from re-running → trigger ratio
-    // (their published min is storm-suspect: no second time window checked it)
     val guardSkipped = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // sub-trigger risers that STAYED above the watch band → final min/prior
-    // ratio (a consumer must not read their mins as round-over-round clean)
+    // name → final min/prior ratio of a sub-trigger riser
     val watch = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // watch-band risers granted the extra warm rep → ratio BEFORE that rep
-    // (the adjudication is visible even when the extra rep cleared it)
-    val watchReran = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // watch bonus reps that THREW → the pre-rep ratio. The scheduled
-    // rep-set already passed, so the flake must not taint the run (failed
-    // stays empty, exit 0) — but it leaves a null in the passes array,
-    // and the documented invariant "a null pass implies an entry in
-    // failed" needs an in-band explanation, not just a stderr line
-    val watchRepFailed = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // storm-censored queries → the per-rep budget (s) whose overrun
-    // cancelled the rep. A censored rep leaves a null in the passes array
-    // (excluded from min, NOT a failure — third member of the null-pass
-    // invariant alongside failed / watch_rep_failed); the query re-runs
-    // uncensored via the requeue machinery, so a surviving entry here with
-    // a published min means the fresh window adjudicated it
+    // name → the censor budget (s) its cancelled rep overran
     val censored = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // storm suspects pending a second window (declared before runReps so a
-    // censored rep can flag directly into the requeue machinery)
-    case class Suspect(ratio: Double, flaggedAtS: Double, stormMin: Double)
+    case class Suspect(ratio: Double, flaggedAtS: Double, stormS: Double)
     val pending = scala.collection.mutable.LinkedHashMap[String, Suspect]()
-    // EXPLICIT REQUEUE RESERVE (round 17, r16 verdict #1b): the schedule
-    // plans against deadline − reserve, leaving the variance guard's
-    // second windows a protected budget — guard_skipped can then only be
-    // nonempty when storms EXCEED the reserve, not whenever the schedule
-    // is merely tight. The deadline gate on first measurements stays the
-    // FULL deadline: coverage first — the reserve shapes planning, it
-    // never truncates a first measurement that still fits.
-    val reserveS = sys.env.getOrElse("SPARK_GRAFT_BENCH_RESERVE_S", "45").toDouble
-    val scheduleBudgetS = (deadlineS - reserveS).max(0.0)
-    // SCHEDULE-AWARE REP PLANNING (round 17, r16 verdict #1a): project the
-    // whole schedule's cost from the priors BEFORE the first query and
-    // degrade the sub-fat tier's reps (3→2) until it fits with ~15%
-    // headroom — r16's driver run (159 queries × 3 reps on a stormy host)
-    // consumed the 420 s deadline with six queries never measured. Only a
-    // same-scale prior can project; without one the configured count
-    // stands, as before.
+    // planning targets deadline − reserve, so suspects' re-runs have a
+    // protected budget; first measurements still gate on the full deadline
+    val scheduleBudgetS = (deadlineS - RESERVE_S).max(0.0)
     val plannedReps =
       if (priorComparable)
-        BenchUtil.planReps(queryList.map { case (n, _) => judgePrior.get(n) },
-          fatCutoff, reps, scheduleBudgetS, serveCutoff = serveCutoff)
+        planReps(queryList.map { case (n, _) => judgePrior.get(n) },
+          FAT_CUTOFF_S, reps, scheduleBudgetS, serveCutoff = SERVE_CUTOFF_S)
       else reps
-    // effective reps may degrade AGAIN mid-run when the measured host is
-    // slower than the projection assumed (BenchUtil.hostScale re-check)
     var effReps = plannedReps
     var degradedAtS: Option[Double] = None
     if (plannedReps < reps)
-      System.err.println(f"[bench] rep planning: ${queryList.size} queries at $reps reps project past ${scheduleBudgetS}%.0f s (deadline ${deadlineS}%.0f − reserve ${reserveS}%.0f) — degraded to $plannedReps reps upfront")
-    // prior-projected cost of the queries measured SO FAR, at the reps they
-    // were actually assigned — the denominator of the host-scale estimate
+      System.err.println(f"[bench] rep planning: ${queryList.size} queries at $reps reps project past ${scheduleBudgetS}%.0f s (deadline ${deadlineS}%.0f − reserve ${RESERVE_S}%.0f) — degraded to $plannedReps reps upfront")
+    // prior-projected cost of the reps run so far; the first rep-set
+    // (Spark init, first codegen) is excluded from the host-scale estimate
     var projectedSoFarS = 0.0
-    // the FIRST scheduled rep-set's wall + projection, excluded from the
-    // scale estimate: a fresh JVM's first query pays Spark init + first
-    // codegen regardless of host health, and cheapest-first makes its
-    // projected cost tiny — the raw cumulative ratio read 21× at 4 s
-    // elapsed on a perfectly healthy run (the r17 false degrade; wall
-    // finished at 215 s of a 375 s budget). Steady-state inflation is
-    // (elapsed − first wall) / (projected − first projection).
     var firstWallS = 0.0
     var firstProjS = 0.0
-    // rep policy (see BenchUtil.repsFor): fat cutoff judged against
-    // same-scale priors only
     def repsFor(name: String): Int =
-      BenchUtil.repsFor(judgePrior.get(name), fatCutoff, effReps, serveCutoff)
+      BenchUtil.repsFor(judgePrior.get(name), FAT_CUTOFF_S, effReps, SERVE_CUTOFF_S)
     // Locale.ROOT: a comma-decimal default locale would emit invalid JSON
     def fmt(d: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    def minOf(ts: Vector[Rep]): Option[Double] = {
-      val ok = ts.flatMap(_.secs); if (ok.isEmpty) None else Some(ok.min)
-    }
+    def minOf(ts: Vector[Rep]): Option[Double] = ts.flatMap(_.secs).minOption
     def isWarm(ts: Vector[Rep]): Boolean = ts.flatMap(_.secs).size >= 2
+    def names(ns: Iterable[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def ratios(m: collection.Map[String, Double]) =
+      m.map { case (n, r) => s""""$n":${fmt(r)}""" }.mkString("{", ",", "}")
+    def mins = results.toSeq.flatMap { case (n, ts) => minOf(ts).map(n -> _) }
+    // null whenever a query failed: its cost silently vanishes from the sum
+    def totalJson = if (failed.isEmpty) fmt(mins.map(_._2).sum) else "null"
     def writeArtifact(done: Boolean): Unit = {
-      val mins = results.toSeq.flatMap { case (n, ts) => minOf(ts).map(n -> _) }
-      val nWarm = results.count { case (_, ts) => isWarm(ts) }
-      val total = mins.map(_._2).sum
-      // a failure-tainted total is NOT comparable round-over-round (the
-      // failed query's cost silently vanishes from the sum) — null it and
-      // let n_queries say how many mins the total aggregates
-      val totalJson = if (failed.isEmpty) fmt(total) else "null"
       val detail = results.toSeq.sortBy(_._1).map { case (n, ts) =>
         val per = ts.map(_.secs.map(fmt).getOrElse("null")).mkString("[", ",", "]")
         val gcs = ts.map(_.gc.toString).mkString("[", ",", "]")
         val jits = ts.map(_.jit.toString).mkString("[", ",", "]")
         s""""$n":{"passes":$per,"min":${minOf(ts).map(fmt).getOrElse("null")},"warm":${isWarm(ts)},"gc_ms":$gcs,"jit_ms":$jits}"""
       }.mkString("{", ",", "}")
-      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val skipped = queryList.map(_._1).filterNot(results.contains)
-      val skippedJson = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val requeuedJson = requeued.map { case (n, r) => s""""$n":${fmt(r)}""" }
-        .mkString("{", ",", "}")
-      val guardSkippedJson = guardSkipped.map { case (n, r) => s""""$n":${fmt(r)}""" }
-        .mkString("{", ",", "}")
-      val watchJson = watch.map { case (n, r) => s""""$n":${fmt(r)}""" }
-        .mkString("{", ",", "}")
-      val watchReranJson = watchReran.map { case (n, r) => s""""$n":${fmt(r)}""" }
-        .mkString("{", ",", "}")
-      val watchRepFailedJson = watchRepFailed.map { case (n, r) => s""""$n":${fmt(r)}""" }
-        .mkString("{", ",", "}")
-      val censoredJson = censored.map { case (n, r) => s""""$n":${fmt(r)}""" }
-        .mkString("{", ",", "}")
-      // the serve-tier members, named so a consumer reads their mins as
-      // min-of-2 serve reads (r17 verdict #7)
-      val serveTierJson = queryList.map(_._1)
-        .filter(n => serveCutoff > 0 && judgePrior.get(n).exists(_ <= serveCutoff))
-        .map("\"" + _ + "\"").mkString("[", ",", "]")
+      val serveTier = queryList.map(_._1).filter(n => judgePrior.get(n).exists(_ <= SERVE_CUTOFF_S))
       val art =
-        s"""{"sf":${jstr(sfDir)},"host":${jstr(host)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_host":${jstr(priorHost)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(reserveS)},"fat_cutoff_s":${fmt(fatCutoff)},"serve_cutoff_s":${fmt(serveCutoff)},"serve_tier":$serveTierJson,"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"wall_s":${fmt(elapsed)},"jit_ms":${jitMs - jit0},"gc_ms":${gcMs - gc0},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":$nWarm,"failed":$failedJson,"skipped":$skippedJson,"requeued":$requeuedJson,"guard_skipped":$guardSkippedJson,"watch":$watchJson,"watch_reran":$watchReranJson,"watch_rep_failed":$watchRepFailedJson,"censored":$censoredJson,"queries":$detail}"""
+        s"""{"sf":${jstr(sfDir)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(RESERVE_S)},"fat_cutoff_s":${fmt(FAT_CUTOFF_S)},"serve_cutoff_s":${fmt(SERVE_CUTOFF_S)},"serve_tier":${names(serveTier)},"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"wall_s":${fmt(elapsed)},"jit_ms":${Dev.jitMs - jit0},"gc_ms":${gcMs - gc0},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":${results.count { case (_, ts) => isWarm(ts) }},"failed":${names(failed)},"skipped":${names(skipped)},"requeued":${ratios(requeued)},"guard_skipped":${ratios(guardSkipped)},"watch":${ratios(watch)},"censored":${ratios(censored)},"queries":$detail}"""
       val out = java.nio.file.Paths.get(artifact)
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out, (art + "\n").getBytes("UTF-8"))
     }
-    // the storm-censor watchdog's clock: one shared daemon thread that
-    // cancels a rep's Spark job group when its budget expires (runReps)
+    // the censor's clock: one daemon thread cancels a rep's job group when
+    // its budget expires
     val censorExec = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
       (r: Runnable) => { val t = new Thread(r, "bench-censor"); t.setDaemon(true); t })
-    /** One rep-set (up to `reps` reps, deadline-gated between reps) of a
-      * query, appended to any reps it already has. Sets deadlineHit when
-      * the gate trips mid-set.
-      *
-      * STORM-CENSOR (round 18, see BenchUtil.censorBudgetS): each rep runs
-      * in its own Spark job group; a watchdog cancels the group once the
-      * rep overruns max(censorRatio × prior, floor) + hostGap. The
-      * cancelled rep leaves a null pass (never a min, never a failure),
-      * the overrun is charged to the wall clock, and the query flags into
-      * the SAME pending/requeue machinery a storm suspect uses — where the
-      * re-run is UNCENSORED (`censor = false`), so a genuine 3×+
-      * regression still publishes its honest number from a fresh window.
-      * The streaming family is exempt (cancelJobGroup mid-microbatch can
-      * wedge a stream's temp checkpoint; the family has the warm-rep
-      * guarantee below instead), as are reps with no comparable prior.
-      *
-      * STREAMING WARM-REP GUARANTEE (round 18, r17 verdict #2): a
-      * streaming rep re-pays per-run serde/codegen that batch queries
-      * don't, so a 1-rep streaming min is a JIT measurement, not a query
-      * time — q96 published 2.836 s with 2.7 s of JIT inside it when the
-      * r17 deadline fell mid-rep-set. The deadline gate may truncate a
-      * streaming query's rep-set only AFTER rep 2: rep 2 runs even past
-      * the deadline (deadlineHit is still set, so no NEW query starts). */
-    def runReps(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-                nReps: Int = reps, censor: Boolean = true): Unit = {
+    /** One rep-set of `name` (up to `nReps` reps, deadline-gated between
+      * reps), appended to the reps it already has, then judged by the
+      * suspect rule. A censored or failed rep ends the rep-set. Streaming
+      * queries are never censored (cancelling mid-microbatch can wedge a
+      * stream's checkpoint) and run their warm rep 2 even past the
+      * deadline: a 1-rep streaming min is a JIT measurement. */
+    def runReps(name: String, fn: (SparkSession, String) => DataFrame,
+                nReps: Int, censor: Boolean): Unit = {
       val isStreaming = SparkEntry.streamingQueries.contains(name)
-      val budgetS: Option[Double] =
-        if (censorOn && censor && !isStreaming)
-          BenchUtil.censorBudgetS(judgePrior.get(name), censorRatio, censorFloorS, crossHost)
-        else None
-      // rep 1 gets a WIDER budget instead of the r18 exemption (see
-      // BenchUtil.rep1CensorBudgetS): legitimate one-time builds fit it,
-      // a d128-class storm rep no longer runs to completion
-      val rep1BudgetS: Option[Double] =
-        if (censorOn && censor && !isStreaming)
-          BenchUtil.rep1CensorBudgetS(judgePrior.get(name), censorRatio,
-            censorFloorS, censorRep1AllowS, crossHost)
-        else None
+      val p = judgePrior.get(name)
+      val (rep1BudgetS, budgetS) =
+        if (censor && !isStreaming)
+          (rep1CensorBudgetS(p, CENSOR_RATIO, CENSOR_FLOOR_S, CENSOR_REP1_ALLOW_S, crossHost),
+            censorBudgetS(p, CENSOR_RATIO, CENSOR_FLOOR_S, crossHost))
+        else (None, None)
       var ts = results.getOrElse(name, Vector.empty[Rep])
+      var censoredS: Option[Double] = None
       var rep = 0
       var stop = false
       while (rep < nReps && !stop) {
         rep += 1
-        // a streaming query with one successful (cold) rep gets its warm
-        // rep 2 even past the deadline — one bounded overshoot, instead of
-        // publishing a JIT artifact as the family's min
         val mustWarm = rep == 2 && isStreaming && ts.flatMap(_.secs).nonEmpty
-        if (rep > 1 && elapsed > deadlineS && !mustWarm) {
-          // keep what we have rather than discard the query; the
-          // per-query "warm" flag records the downgrade
-          deadlineHit = true; stop = true
-        } else {
-          if (rep > 1 && elapsed > deadlineS) deadlineHit = true
-          val (g0, j0) = (gcMs, jitMs)
+        val late = rep > 1 && elapsed > deadlineS
+        if (late) deadlineHit = true
+        if (late && !mustWarm) stop = true
+        else {
+          val (g0, j0) = (gcMs, Dev.jitMs)
           // unique per invocation: a reused group id would be pre-cancelled
-          // by a previous rep's AndFutureJobs cancellation
+          // by an earlier rep's AndFutureJobs cancellation
           val group = s"bench-$name-rep$rep-${System.nanoTime()}"
           val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-          // interruptOnCancel = false: cancellation lands at task record
-          // boundaries — an interrupt could wedge an in-flight file writer
+          // interruptOnCancel = false: an interrupt could wedge a file writer
           spark.sparkContext.setJobGroup(group, s"bench $name rep $rep", false)
-          // Rep 1 is censored at the WIDER rep-1 budget (round 19, r18
-          // verdict #1a — the r18 full exemption let d128's 91.3 s storm
-          // rep run to completion): one-time builds (q154's layout write,
-          // q155's Derby boot, a shared-prefix priming rep) fit the
-          // tripled floor + 10 s allowance; a storm rep dies at ~25 s on
-          // a 5 s prior instead of never, and the uncensored fresh-window
-          // requeue re-pays any wasted build honestly.
           val repBudgetS = if (rep == 1) rep1BudgetS else budgetS
           val watchdog = repBudgetS.map { b =>
             censorExec.schedule(new Runnable {
               def run(): Unit = {
                 fired.set(true)
-                // AndFutureJobs: a rep is many Spark jobs (collect()s during
-                // construction, checkpoint materializations, AQE stages, the
-                // final count) — plain cancelJobGroup only kills ACTIVE jobs
-                // and a cancel landing between jobs would cancel nothing
+                // AndFutureJobs: a rep is many jobs, and a cancel landing
+                // between two of them must still stop the next
                 spark.sparkContext.cancelJobGroupAndFutureJobs(group)
               }
             }, (b * 1000).toLong, java.util.concurrent.TimeUnit.MILLISECONDS)
           }
           val t0 = System.nanoTime()
           val ok = try { fn(spark, sfDir).count(); true } catch {
-            // censored by the watchdog — a null pass, NOT a failure. Only a
-            // CANCELLATION exception counts (round 19, r18 ADVICE): a
-            // genuine query failure thrown after the budget expired must
-            // still land in `failed`, not masquerade as a censored rep and
-            // burn an uncensored requeue window where it fails again.
-            case e: Throwable if fired.get() && BenchUtil.isCancellation(e) =>
-              false
+            case e: Throwable if fired.get() && isCancellation(e) => false
             case e: Throwable =>
               failed += name
               System.err.println(s"[bench] FAILED $name: ${e.getMessage}")
@@ -917,218 +491,104 @@ object Bench {
           watchdog.foreach(_.cancel(false))
           spark.sparkContext.clearJobGroup()
           val secs = (System.nanoTime() - t0) / 1e9
-          ts :+= Rep(if (ok) Some(secs) else None, gcMs - g0, jitMs - j0)
+          ts :+= Rep(if (ok) Some(secs) else None, gcMs - g0, Dev.jitMs - j0)
           spark.catalog.clearCache() // drop operator-internal persists between reps
-          if (!ok && fired.get() && !failed.contains(name)) {
-            // storm-censored: the overrun stays on the wall clock, the rep
-            // never becomes a min, and the query joins the requeue queue
-            // for an uncensored fresh-window re-run
+          if (!ok && !failed.contains(name)) {
             val b = repBudgetS.getOrElse(0.0)
             censored(name) = b
-            System.err.println(f"[bench] storm-censor: $name rep $rep cancelled at $secs%.1f s (budget $b%.1f s) — queued for an uncensored fresh-window re-run")
-            if (!requeued.contains(name) && !pending.contains(name))
-              judgePrior.get(name).foreach { p =>
-                pending(name) = Suspect(secs / p, elapsed, secs)
-              }
-            stop = true
-          } else if (!ok) stop = true // don't re-run a throwing query twice more
+            censoredS = Some(secs)
+            System.err.println(f"[bench] storm-censor: $name rep $rep cancelled at $secs%.1f s (budget $b%.1f s)")
+          }
+          stop = !ok
         }
       }
       results(name) = ts
       System.err.println(f"[bench] $name ${ts.map(_.secs.map(fmt).getOrElse("FAIL")).mkString("/")} s min=${minOf(ts).map(fmt).getOrElse("-")}")
+      suspectS(p, minOf(ts), censoredS, crossHost, failed.contains(name), requeued.contains(name)) match {
+        case Some(stormS) =>
+          pending(name) = Suspect(stormS / p.get, elapsed, stormS)
+          System.err.println(f"[bench] suspect: $name (${stormS / p.get}%.1fx prior) — one uncensored re-run in a later window")
+        case None =>
+          for (m <- minOf(ts); pr <- p
+               if !failed.contains(name) && !requeued.contains(name) &&
+                 watchBand(m, pr, WATCH_RATIO, GUARD_RATIO, crossHost)) {
+            watch(name) = m / pr
+            System.err.println(f"[bench] watch: $name min ${m / pr}%.2fx prior (sub-trigger riser) — named in artifact")
+          }
+      }
       writeArtifact(done = false)
     }
-    // variance guard, INTERLEAVED (see header): suspects are flagged the
-    // moment their rep-set lands (a min far above the prior committed min
-    // usually means every rep landed in one host-contention storm — r10's
-    // d22: 18.35 s published vs a 1.25 s prior, storm visible in adjacent
-    // queries' reps) and requeued mid-schedule once the guardGapS window
-    // has passed and the estimated cost fits the remaining budget —
-    // spending requeue budget while it still exists, instead of the r11
-    // failure (end-of-run guard detected six storms after the deadline had
-    // consumed the budget). A min that SURVIVES the re-run is a real
-    // regression and stays high with its trigger ratio on record.
-    // (Suspect/pending are declared above runReps so a censored rep can
-    // flag directly into this machinery.)
-    val byName = pool.toMap
-    // flag at land time; at most one requeue per query per run
-    def flagIfSuspect(name: String): Unit =
-      if (!failed.contains(name) && !requeued.contains(name) && !pending.contains(name))
-        for {
-          ts <- results.get(name); m <- minOf(ts); p <- judgePrior.get(name)
-          if m > p * guardRatio && m - p > BenchUtil.hostGap(crossHost)
-        } {
-          pending(name) = Suspect(m / p, elapsed, m)
-          System.err.println(f"[bench] variance guard: flagged $name (min ${m / p}%.1fx prior) — eligible for requeue after ${guardGapS}%.0f s")
-        }
-    def requeueNow(n: String, s: Suspect, when: String): Unit = {
-      pending.remove(n)
-      requeued(n) = s.ratio
-      System.err.println(f"[bench] variance guard: requeue $n $when (min ${s.ratio}%.1fx prior)")
-      // the fresh-window re-run is UNCENSORED: this is the second look the
-      // censor/guard machinery promised, so a genuine 3×+ regression runs
-      // to completion here and publishes its honest number
-      byName.get(n).foreach(runReps(n, _, repsFor(n), censor = false))
-    }
-    // ONE reserve definition for BOTH mid-schedule budget gates (requeue +
-    // watch bonus rep) — the documented invariant is that they reserve the
-    // SAME remaining-schedule cost, so the expression must not fork
-    def remainingReserve(): Double = BenchUtil.scheduledReserveS(
-      queryList.map(_._1).filterNot(results.contains).map(judgePrior.get),
-      fatCutoff, effReps, serveCutoff)
-    // between scheduled queries: requeue every suspect whose gap has passed
-    // and whose (storm-inflated) cost estimate fits the budget LEFT AFTER
-    // reserving the rest of the schedule's prior-estimated cost — a
-    // mid-schedule requeue must never starve a first measurement (the end
-    // drain has no remaining schedule, so no reserve applies there)
-    def drainEligible(): Unit =
-      if (pending.nonEmpty) {
-        val reserve = remainingReserve()
-        pending.toSeq.foreach { case (n, s) =>
-          if (!deadlineHit &&
-              BenchUtil.requeueEligible(s.flaggedAtS, elapsed, guardGapS,
-                s.stormMin * repsFor(n), deadlineS - reserve))
-            requeueNow(n, s, "mid-schedule")
+    /** Offers every pending suspect to [[BenchUtil.drainVerdict]]: a
+      * re-run is uncensored (a genuine 3×+ regression publishes its honest
+      * number), and a suspect that cannot re-run lands in guard_skipped. */
+    def drain(phase: Phase): Unit = if (pending.nonEmpty) {
+      // the rest of the schedule's prior-estimated cost: a mid-schedule
+      // re-run must not starve a first measurement
+      val reserve =
+        if (phase != MidSchedule) 0.0
+        else scheduledReserveS(queryList.map(_._1).filterNot(results.contains)
+          .map(judgePrior.get), FAT_CUTOFF_S, effReps, SERVE_CUTOFF_S)
+      pending.toSeq.foreach { case (n, s) =>
+        // a re-run that tripped the deadline truncates the schedule
+        val at = if (phase == MidSchedule && deadlineHit) Truncated else phase
+        drainVerdict(at, s.flaggedAtS, elapsed, s.stormS * repsFor(n), deadlineS, reserve) match {
+          case Rerun =>
+            pending.remove(n)
+            requeued(n) = s.ratio
+            System.err.println(f"[bench] requeue $n ${if (at == MidSchedule) "mid-schedule" else "at end drain"} (${s.ratio}%.1fx prior)")
+            runReps(n, pool(n), repsFor(n), censor = false)
+          case Skip =>
+            pending.remove(n)
+            guardSkipped(n) = s.ratio
+            System.err.println(f"[bench] NO BUDGET to requeue $n (${s.ratio}%.1fx prior) — flagged guard_skipped")
+          case Wait =>
         }
       }
-    // watch tier (see BenchUtil.watchBand): a sub-trigger riser is NAMED in
-    // the artifact; all-heavy-JIT reps earn one extra back-to-back warm rep
-    // (budget-gated against the SAME remaining-schedule reserve as a
-    // requeue — an extra rep must not starve a first measurement either) —
-    // if the fresh rep clears the band the published min is honest and only
-    // "watch_reran" records the adjudication
-    def watchIfRiser(name: String,
-                     fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      if (!failed.contains(name) && !pending.contains(name) && !requeued.contains(name))
-        for {
-          ts <- results.get(name); m <- minOf(ts); p <- judgePrior.get(name)
-          if BenchUtil.watchBand(m, p, watchRatio, guardRatio, crossHost)
-        } {
-          val allHeavyJit = ts.nonEmpty && ts.forall(_.jit >= watchJitMs)
-          // cost estimate for the bonus rep: the WORST observed rep, not the
-          // min — the all-heavy-JIT class that triggers this is exactly the
-          // class whose next rep can pay JIT again (the q94 streaming family
-          // re-pays codegen per rep), and a min-based estimate would admit a
-          // rep that overshoots the deadline and truncates the schedule
-          val estRep = ts.flatMap(_.secs).maxOption.getOrElse(m)
-          if (allHeavyJit && !deadlineHit &&
-              elapsed + estRep <= deadlineS - remainingReserve()) {
-            watchReran(name) = m / p
-            System.err.println(f"[bench] watch tier: $name min ${m / p}%.2fx prior with all-heavy-JIT reps — granting one extra warm rep")
-            val failedBefore = failed.contains(name)
-            // adjudication-only rep, UNCENSORED (r18 review): a censored
-            // bonus rep would convert the one-rep adjudication into a full
-            // requeue the watch gate never budgeted for
-            runReps(name, fn, nReps = 1, censor = false)
-            // the bonus rep is ADJUDICATION-ONLY: the scheduled rep-set
-            // already passed, so a flake here must not null the run's total
-            // and exit non-zero — drop the taint (the null rep stays visible
-            // in the passes array) and keep the watch entry un-cleared
-            if (!failedBefore && failed.contains(name)) {
-              failed -= name
-              watch(name) = m / p
-              watchRepFailed(name) = m / p
-              System.err.println(s"[bench] watch tier: $name bonus rep FAILED — kept as watch entry (watch_rep_failed), run not tainted")
-              writeArtifact(done = false)
-            } else
-              for (m2 <- minOf(results(name))
-                   if BenchUtil.watchBand(m2, p, watchRatio, guardRatio, crossHost))
-                watch(name) = m2 / p
-          } else {
-            watch(name) = m / p
-            System.err.println(f"[bench] watch tier: $name min ${m / p}%.2fx prior (sub-trigger riser) — named in artifact")
-          }
-        }
+    }
     val it = queryList.iterator
     while (it.hasNext && !deadlineHit) {
       val (name, fn) = it.next()
       if (elapsed > deadlineS) {
         deadlineHit = true
-        val nWarm = results.count { case (_, ts) => isWarm(ts) }
-        System.err.println(f"[bench] deadline ${deadlineS}%.0f s hit after $elapsed%.1f s — ${results.size}/${queryList.size} queries measured, $nWarm warm")
+        System.err.println(f"[bench] deadline ${deadlineS}%.0f s hit after $elapsed%.1f s — ${results.size}/${queryList.size} queries measured")
       } else {
-        val assigned = repsFor(name)
         val prevReps = results.get(name).map(_.size).getOrElse(0)
-        runReps(name, fn, assigned)
-        // credit the reps that actually RAN (r17 review): a failed or
-        // deadline-truncated rep-set spends less wall than `assigned`
-        // projected — crediting the full count would deflate the scale
-        // estimate and suppress the degrade on a genuinely slow host
+        runReps(name, fn, repsFor(name), censor = true)
+        // credit the reps that actually ran: a failed or truncated rep-set
+        // costs less than assigned, and crediting the full count would hide
+        // a slow host from the degrade check
         val actualReps = results.get(name).map(_.size).getOrElse(0) - prevReps
         projectedSoFarS += judgePrior.get(name).getOrElse(0.5) * actualReps
         if (firstWallS == 0.0) { firstWallS = elapsed; firstProjS = projectedSoFarS }
-        // MID-RUN DEGRADE RE-CHECK (round 17): the upfront plan projected a
-        // host; the run measures it. When the observed STEADY-STATE
-        // inflation (warmup-discounted elapsed vs projected-so-far) says
-        // the remaining schedule no longer fits the reserve-protected
-        // budget, drop the remaining queries to 2 reps — complete coverage
-        // over a third warm rep, decided while it still changes something.
-        // EVIDENCE GATE (r17.1, after the false fire above): no decision
-        // until ≥ 30 s of warmup-discounted projection has been measured —
-        // below that the ratio is JIT/noise, not the host.
+        // mid-run degrade, once ≥ 30 s of warmup-discounted projection has
+        // been measured (below that the ratio is JIT and noise)
         if (effReps > 2 && priorComparable && projectedSoFarS - firstProjS >= 30.0) {
-          val remainingProjected = BenchUtil.projectedCostS(
+          val remainingProjected = projectedCostS(
             queryList.collect { case (n, _) if !results.contains(n) => judgePrior.get(n) },
-            fatCutoff, effReps, serveCutoff)
-          val scale = BenchUtil.hostScale(elapsed - firstWallS, projectedSoFarS - firstProjS)
-          if (BenchUtil.shouldDegrade(elapsed, scale, remainingProjected, scheduleBudgetS)) {
+            FAT_CUTOFF_S, effReps, SERVE_CUTOFF_S)
+          val scale = hostScale(elapsed - firstWallS, projectedSoFarS - firstProjS)
+          if (shouldDegrade(elapsed, scale, remainingProjected, scheduleBudgetS)) {
             effReps = 2
             degradedAtS = Some(elapsed)
             System.err.println(f"[bench] mid-run degrade at $elapsed%.1f s: steady-state host scale $scale%.2fx × remaining projection $remainingProjected%.1f s overruns budget ${scheduleBudgetS}%.0f s — remaining queries at 2 reps")
           }
         }
-        flagIfSuspect(name)
-        watchIfRiser(name, fn)
-        drainEligible()
+        drain(MidSchedule)
       }
     }
-    // The schedule's completeness is decided HERE: a deadline trip inside
-    // the end drain below must not retroactively mark a fully measured
-    // schedule incomplete (every query already has its warm min; only the
-    // guard's second look was cut short — recorded separately).
+    // completeness is the schedule's: a deadline trip inside the end drain
+    // cannot mark a fully measured schedule incomplete
     val scheduleDone = !deadlineHit
-    if (scheduleDone) {
-      // end drain: the last chance, so the gap gate no longer applies
-      // (waiting idle cannot buy a different host window, and for cheap
-      // early-flagged suspects the end of the schedule IS a later window);
-      // only the budget gate remains. A suspect the deadline prevents from
-      // re-running lands in guard_skipped — its published min is
-      // storm-suspect and a consumer must not read it as a clean number.
-      pending.toSeq.foreach { case (n, s) =>
-        if (elapsed <= deadlineS) requeueNow(n, s, "at end drain")
-        else {
-          pending.remove(n); guardSkipped(n) = s.ratio
-          System.err.println(f"[bench] variance guard: NO BUDGET to requeue $n (min ${s.ratio}%.1fx prior) — flagged guard_skipped")
-        }
-      }
-    } else {
-      // truncated schedule: no requeue budget by definition, but suspects
-      // must STILL be flagged (r12 advice: silently publishing their
-      // storm-suspect mins as clean numbers was the bug)
-      pending.toSeq.foreach { case (n, s) =>
-        pending.remove(n); guardSkipped(n) = s.ratio
-        System.err.println(f"[bench] variance guard: schedule truncated before $n could re-run (min ${s.ratio}%.1fx prior) — flagged guard_skipped")
-      }
-    }
+    drain(if (scheduleDone) ScheduleDone else Truncated)
     writeArtifact(done = scheduleDone)
-    val mins = results.toSeq.flatMap { case (n, ts) => minOf(ts).map(n -> _) }
-    val total = mins.map(_._2).sum
+    censorExec.shutdown()
     val nWarm = results.count { case (_, ts) => isWarm(ts) }
-    // slowest-10 only: keeps the line well under the driver's ~2.2 KB
-    // stdout-tail capture; the artifact has the full per-query map
     val slow = mins.sortBy(-_._2).take(10)
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // value mirrors the artifact's total_min: null when any query failed
-    // (the sum silently drops the failed query's cost and is NOT
-    // comparable); on deadline truncation value is the partial sum —
-    // consumers must gate on deadline_hit / n_queries before comparing.
-    val valueJson = if (failed.isEmpty) fmt(total) else "null"
-    println(s"""{"metric":"total","value":$valueJson,"unit":"sec","n_queries":${mins.size},"n_warm":$nWarm,"deadline_hit":$deadlineHit,"failed":$failedJson,"artifact":${jstr(artifact)},"queries":$slow,"sf":${jstr(sfDir)}}""")
-    spark.stop()
-    if (failed.nonEmpty) {
+    if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} queries FAILED: ${failed.mkString(", ")}")
-      sys.exit(1)
-    }
+    // on a deadline truncation value is the partial sum: consumers gate on
+    // deadline_hit and n_queries before comparing
+    s"""{"metric":"total","value":$totalJson,"unit":"sec","n_queries":${mins.size},"n_warm":$nWarm,"deadline_hit":$deadlineHit,"failed":${names(failed)},"artifact":${jstr(artifact)},"queries":$slow,"sf":${jstr(sfDir)}}"""
   }
 }

@@ -107,7 +107,7 @@ object Dev {
   private def janinoCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
-  private def jitMs: Long = {
+  private[graft] def jitMs: Long = {
     val c = java.lang.management.ManagementFactory.getCompilationMXBean
     if (c != null && c.isCompilationTimeMonitoringSupported) c.getTotalCompilationTime else -1L
   }

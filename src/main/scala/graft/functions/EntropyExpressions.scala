@@ -84,27 +84,12 @@ object EntropyExpressions {
     (Math.log(n.toDouble) - sum / n.toDouble) / Math.log(2.0)
   }
 
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register both functions in the session's registry (idempotent) and
-    * return a Column — the registry-based construction the other native
-    * expressions here use to stay on the public Column API. */
-  private def call(spark: org.apache.spark.sql.SparkSession, name: String, c: Column): Column = {
-    registered.computeIfAbsent(spark.sessionState.toString, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "char_entropy", exprs => CharEntropy(exprs.head), "built-in")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "token_entropy", exprs => TokenEntropy(exprs.head), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function(name, c)
-  }
-
+  /** Columns invoking the two functions ([[Registry.call]]). */
   def charEntropy(spark: org.apache.spark.sql.SparkSession, text: Column): Column =
-    call(spark, "char_entropy", text)
+    Registry.call(spark, "char_entropy", exprs => CharEntropy(exprs.head), text)
 
   def tokenEntropy(spark: org.apache.spark.sql.SparkSession, tokens: Column): Column =
-    call(spark, "token_entropy", tokens)
+    Registry.call(spark, "token_entropy", exprs => TokenEntropy(exprs.head), tokens)
 }
 
 /** `char_entropy(string) → double`: Shannon entropy in bits/codepoint of

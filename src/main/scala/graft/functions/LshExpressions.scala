@@ -110,25 +110,18 @@ case class LshBuckets(child: Expression, planes: Int, tables: Int, dim: Int)
 }
 
 object LshExpressions {
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register `lsh_buckets` (idempotent) and return a Column invoking it —
-    * registry-based construction on the public Column API, same pattern as
-    * [[VectorExpressions.cosineNative]]. planes/tables/dim ride as int
-    * literals and are folded into the expression at resolution. */
+  /** A Column invoking `lsh_buckets` ([[Registry.call]]). planes/tables/dim
+    * ride as int literals and are folded into the expression at
+    * resolution. */
   def lshBuckets(spark: org.apache.spark.sql.SparkSession, vec: Column,
-                 planes: Int, tables: Int, dim: Int): Column = {
-    registered.computeIfAbsent(spark.sessionState.toString, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "lsh_buckets", exprs => LshBuckets(exprs.head,
-          exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int],
-          exprs(3).eval().asInstanceOf[Int]), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function("lsh_buckets", vec,
+                 planes: Int, tables: Int, dim: Int): Column =
+    Registry.call(spark, "lsh_buckets",
+      exprs => LshBuckets(exprs.head,
+        exprs(1).eval().asInstanceOf[Int],
+        exprs(2).eval().asInstanceOf[Int],
+        exprs(3).eval().asInstanceOf[Int]),
+      vec,
       org.apache.spark.sql.functions.lit(planes),
       org.apache.spark.sql.functions.lit(tables),
       org.apache.spark.sql.functions.lit(dim))
-  }
 }

@@ -139,11 +139,7 @@ case class MinHash64(child: Expression, numHashes: Int, bands: Int = 0)
 }
 
 object MinHashExpression {
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register `min_hash64` (idempotent) and return a Column invoking it —
-    * registry-based construction on the public Column API, same pattern as
-    * [[VectorExpressions.cosineNative]]. `bands = 0` returns the k raw
+  /** A Column invoking `min_hash64` ([[Registry.call]]). `bands = 0` returns the k raw
     * minima; `bands > 0` returns the banded signatures directly (ONE
     * output array — callers must keep the expression referenced exactly
     * once per projection: CollapseProject inlines multi-referenced
@@ -151,16 +147,12 @@ object MinHashExpression {
     * that re-evaluation measured a 35× regression when the minima array
     * was split into per-hash columns with element_at). */
   def minHash64(spark: org.apache.spark.sql.SparkSession, shingles: Column,
-                numHashes: Int, bands: Int = 0): Column = {
-    registered.computeIfAbsent(spark.sessionState.toString, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "min_hash64", exprs => MinHash64(exprs.head,
-          exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int]), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function("min_hash64", shingles,
+                numHashes: Int, bands: Int = 0): Column =
+    Registry.call(spark, "min_hash64",
+      exprs => MinHash64(exprs.head,
+        exprs(1).eval().asInstanceOf[Int],
+        exprs(2).eval().asInstanceOf[Int]),
+      shingles,
       org.apache.spark.sql.functions.lit(numHashes),
       org.apache.spark.sql.functions.lit(bands))
-  }
 }

@@ -93,19 +93,10 @@ case class PHash60Raw(child: Expression, cropBytes: Int) extends UnaryExpression
 }
 
 object PHashExpression {
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register `graft_phash60_<crop>` (idempotent per session and crop) and
-    * return a Column invoking it — the registry-based construction every
-    * graft custom expression uses. */
+  /** A Column invoking `graft_phash60_<crop>`, one function per crop
+    * ([[Registry.call]]). */
   def pHash60Native(spark: org.apache.spark.sql.SparkSession, text: Column,
-                    cropBytes: Int): Column = {
-    val name = s"graft_phash60_$cropBytes"
-    registered.computeIfAbsent(spark.sessionState.toString + "/" + name, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, exprs => PHash60Raw(exprs.head, cropBytes), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function(name, text)
-  }
+                    cropBytes: Int): Column =
+    Registry.call(spark, s"graft_phash60_$cropBytes",
+      exprs => PHash60Raw(exprs.head, cropBytes), text)
 }

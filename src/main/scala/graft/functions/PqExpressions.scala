@@ -107,25 +107,18 @@ case class PqDistTable(child: Expression, codebook: Seq[Double], m: Int, kc: Int
 }
 
 object PqExpressions {
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register `pq_dist_table` (idempotent) and return a Column invoking it.
-    * The codebook rides as an array<double> literal folded into the
-    * expression at resolution — any codebook (md5-grid or trained) works. */
+  /** A Column invoking `pq_dist_table` ([[Registry.call]]). The codebook
+    * rides as an array<double> literal folded into the expression at
+    * resolution — any codebook (md5-grid or trained) works. */
   def pqDistTable(spark: org.apache.spark.sql.SparkSession, vec: Column,
-                  codebook: Array[Array[Array[Double]]]): Column = {
-    val m = codebook.length; val kc = codebook(0).length
-    registered.computeIfAbsent(spark.sessionState.toString, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "pq_dist_table", exprs => PqDistTable(exprs.head,
-          exprs(1).eval().asInstanceOf[ArrayData].toDoubleArray().toSeq,
-          exprs(2).eval().asInstanceOf[Int],
-          exprs(3).eval().asInstanceOf[Int]), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function("pq_dist_table", vec,
+                  codebook: Array[Array[Array[Double]]]): Column =
+    Registry.call(spark, "pq_dist_table",
+      exprs => PqDistTable(exprs.head,
+        exprs(1).eval().asInstanceOf[ArrayData].toDoubleArray().toSeq,
+        exprs(2).eval().asInstanceOf[Int],
+        exprs(3).eval().asInstanceOf[Int]),
+      vec,
       org.apache.spark.sql.functions.lit(codebook.flatten.flatten),
-      org.apache.spark.sql.functions.lit(m),
-      org.apache.spark.sql.functions.lit(kc))
-  }
+      org.apache.spark.sql.functions.lit(codebook.length),
+      org.apache.spark.sql.functions.lit(codebook(0).length))
 }

@@ -74,18 +74,14 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleExpression {
-  /** Registry-based Column constructor (public Column surface, same pattern
-    * as [[VectorExpressions.cosineNative]]); one registry entry per n. */
+  /** A Column invoking `graft_word_shingles_<n>`, one function per n
+    * ([[Registry.call]]). */
   def wordShingles(text: Column, n: Int): Column =
     wordShingles(SparkSession.active, text, n)
 
   /** Explicit-session form: registries are per-session, so a caller holding
     * a `newSession()` (scoped-conf streaming queries) must register there —
     * `SparkSession.active` still points at the parent. */
-  def wordShingles(spark: SparkSession, text: Column, n: Int): Column = {
-    val name = s"graft_word_shingles_$n"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WordShingles(exprs.head, n), "built-in")
-    org.apache.spark.sql.functions.call_function(name, text)
-  }
+  def wordShingles(spark: SparkSession, text: Column, n: Int): Column =
+    Registry.call(spark, s"graft_word_shingles_$n", exprs => WordShingles(exprs.head, n), text)
 }

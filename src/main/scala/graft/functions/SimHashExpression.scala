@@ -116,17 +116,7 @@ case class SimHash60(child: Expression) extends UnaryExpression {
 }
 
 object SimHashExpression {
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register `sim_hash60` (idempotent) and return a Column invoking it —
-    * registry-based construction on the public Column API, same pattern as
-    * [[VectorExpressions.cosineNative]] / [[TokenCountsExpression]]. */
-  def simHash60(spark: org.apache.spark.sql.SparkSession, tokens: Column): Column = {
-    registered.computeIfAbsent(spark.sessionState.toString, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "sim_hash60", exprs => SimHash60(exprs.head), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function("sim_hash60", tokens)
-  }
+  /** A Column invoking `sim_hash60` ([[Registry.call]]). */
+  def simHash60(spark: org.apache.spark.sql.SparkSession, tokens: Column): Column =
+    Registry.call(spark, "sim_hash60", exprs => SimHash60(exprs.head), tokens)
 }

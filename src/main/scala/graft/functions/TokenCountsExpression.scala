@@ -103,17 +103,7 @@ case class TokenCounts(child: Expression) extends UnaryExpression {
 }
 
 object TokenCountsExpression {
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register `token_counts` in the session's function registry (idempotent)
-    * and return a Column invoking it — same registry-based construction as
-    * [[VectorExpressions.cosineNative]] to stay on the public Column API. */
-  def tokenCounts(spark: org.apache.spark.sql.SparkSession, arr: Column): Column = {
-    registered.computeIfAbsent(spark.sessionState.toString, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "token_counts", exprs => TokenCounts(exprs.head), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function("token_counts", arr)
-  }
+  /** A Column invoking `token_counts` ([[Registry.call]]). */
+  def tokenCounts(spark: org.apache.spark.sql.SparkSession, arr: Column): Column =
+    Registry.call(spark, "token_counts", exprs => TokenCounts(exprs.head), arr)
 }

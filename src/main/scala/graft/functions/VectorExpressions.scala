@@ -74,17 +74,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  private val registered = new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  /** Register `cosine_native` in the session's function registry (idempotent)
-    * and return a Column invoking it. Registry-based construction keeps us on
-    * the public Column surface (Spark 4 decouples Column from catalyst). */
-  def cosineNative(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column = {
-    registered.computeIfAbsent(spark.sessionState.toString, { _ =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "cosine_native", exprs => CosineSimilarity(exprs.head, exprs(1)), "built-in")
-      true
-    })
-    org.apache.spark.sql.functions.call_function("cosine_native", a, b)
-  }
+  /** A Column invoking `cosine_native` ([[Registry.call]]). */
+  def cosineNative(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
+    Registry.call(spark, "cosine_native", exprs => CosineSimilarity(exprs.head, exprs(1)), a, b)
 }

@@ -30,15 +30,15 @@ class BenchUtilSpec extends AnyFunSuite {
         |"queries":{"q01_agg":{"passes":[0.5,0.2,0.3],"min":0.200,"warm":true,"gc_ms":[1,2,3],"jit_ms":[4,5,6]},
         |"d22_jaccard_pairs":{"passes":[1.5,null,1.2],"min":1.200,"warm":true,"gc_ms":[0,0,0],"jit_ms":[0,0,0]}}}"""
         .stripMargin.replace("\n", "")
-    val (sf, host, hostName, mins) = BenchUtil.parsePrior(txt)
+    val (sf, hostName, mins) = BenchUtil.parsePrior(txt)
     assert(sf == "/root/testdata/sf0.1")
-    assert(host == "driver" && hostName == "vm-a")
+    assert(hostName == "vm-a")
     assert(mins == Map("q01_agg" -> 0.2, "d22_jaccard_pairs" -> 1.2))
-    // the r15 field layout must not cross-match: "host" never reads the
-    // "hostname"/"prior_host"/"prior_hostname" values
+    // the r15 field layout must not cross-match: "hostname" never reads the
+    // "prior_hostname" value
     val r15 = """{"sf":"/s","host":"builder","hostname":"vm-b","order_source":"x","prior_host":"driver","prior_hostname":"vm-a","queries":{}}"""
-    val (_, h2, hn2, _) = BenchUtil.parsePrior(r15)
-    assert(h2 == "builder" && hn2 == "vm-b")
+    val (_, hn2, _) = BenchUtil.parsePrior(r15)
+    assert(hn2 == "vm-b")
   }
 
   test("parsePrior: pre-r15 artifact (no host field) parses to empty host") {
@@ -49,19 +49,19 @@ class BenchUtilSpec extends AnyFunSuite {
       """{"sf":"/root/testdata/sf0.1","cpus":32,
         |"queries":{"q01_agg":{"passes":[0.5],"min":0.500,"warm":false,"gc_ms":[0],"jit_ms":[0]}}}"""
         .stripMargin.replace("\n", "")
-    val (sf, host, hostName, mins) = BenchUtil.parsePrior(txt)
-    assert(sf == "/root/testdata/sf0.1" && host == "" && hostName == ""
+    val (sf, hostName, mins) = BenchUtil.parsePrior(txt)
+    assert(txt.startsWith(s"""{"sf":"$sf",""") && hostName == ""
       && mins == Map("q01_agg" -> 0.5))
   }
 
   test("parsePrior degrades to empty on malformed or alien input") {
-    assert(BenchUtil.parsePrior("") == ("", "", "", Map.empty))
-    assert(BenchUtil.parsePrior("not json at all") == ("", "", "", Map.empty))
+    assert(BenchUtil.parsePrior("") == ("", "", Map.empty))
+    assert(BenchUtil.parsePrior("not json at all") == ("", "", Map.empty))
     // a failed query (min null) contributes no prior — the regex requires
     // a numeric min, so the query simply has no ordering/guard reference
     val failedOnly =
       """{"sf":"/x","queries":{"bad_q":{"passes":[null],"min":null,"warm":false,"gc_ms":[0],"jit_ms":[0]}}}"""
-    assert(BenchUtil.parsePrior(failedOnly) == ("/x", "", "", Map.empty))
+    assert(BenchUtil.parsePrior(failedOnly) == ("/x", "", Map.empty))
   }
 
   test("isCrossHost: raw hostnames decide; anything less = cross") {
@@ -334,5 +334,79 @@ class BenchUtilSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       BenchUtil.queryFilter(Some("q01_agg,x22_jaccard_inrow"), known))
     assert(e.getMessage.contains("x22_jaccard_inrow") && !e.getMessage.contains("q01_agg"))
+  }
+
+  test("policy constants: the values every artifact since r17 records") {
+    import BenchUtil._
+    assert((FAT_CUTOFF_S, GUARD_RATIO, GUARD_GAP_S, SERVE_CUTOFF_S, RESERVE_S) ==
+      ((1.2, 3.5, 60.0, 0.2, 45.0)))
+    assert((CENSOR_RATIO, CENSOR_FLOOR_S, CENSOR_REP1_ALLOW_S, ROTATE_CAP, WATCH_RATIO) ==
+      ((3.0, 2.0, 10.0, 3, 1.75)))
+  }
+
+  test("suspectS: a censored rep is a suspect even when the rep-set has no min") {
+    // every rep censored: no min, the censored rep's elapsed prices the re-run
+    assert(BenchUtil.suspectS(Some(0.3), None, Some(2.6), crossHost = false,
+      failed = false, rerun = false).contains(2.6))
+    // a censored rep beats a clean min from an earlier rep of the set
+    assert(BenchUtil.suspectS(Some(0.3), Some(0.35), Some(2.6), crossHost = true,
+      failed = false, rerun = false).contains(2.6))
+    // no comparable prior: nothing was censored and nothing can be judged
+    assert(BenchUtil.suspectS(None, None, None, crossHost = false,
+      failed = false, rerun = false).isEmpty)
+  }
+
+  test("suspectS: a storm min is a suspect; the trigger needs both ratio and gap") {
+    // r10's d22: 18.35 s against a 1.25 s prior
+    assert(BenchUtil.suspectS(Some(1.25), Some(18.35), None, crossHost = false,
+      failed = false, rerun = false).contains(18.35))
+    // ratio 3.6× but a 0.9 s gap: a storm same-host, not cross-host
+    assert(BenchUtil.suspectS(Some(0.346), Some(1.25), None, crossHost = false,
+      failed = false, rerun = false).contains(1.25))
+    assert(BenchUtil.suspectS(Some(0.346), Some(1.25), None, crossHost = true,
+      failed = false, rerun = false).isEmpty)
+    // ratio boundary: exactly 3.5× is not above the trigger
+    assert(BenchUtil.suspectS(Some(1.0), Some(3.5), None, crossHost = false,
+      failed = false, rerun = false).isEmpty)
+  }
+
+  test("suspectS: a watch-band min is not a suspect, only named") {
+    // r13's q94 shape: 6.2 s against 3.28 s is in the watch band ...
+    assert(BenchUtil.watchBand(6.2, 3.28, BenchUtil.WATCH_RATIO, BenchUtil.GUARD_RATIO))
+    // ... and no re-run is owed for it
+    assert(BenchUtil.suspectS(Some(3.28), Some(6.2), None, crossHost = false,
+      failed = false, rerun = false).isEmpty)
+  }
+
+  test("suspectS: a query is re-run at most once, and a failed query never") {
+    for (censoredS <- Seq(None, Some(9.0))) {
+      assert(BenchUtil.suspectS(Some(1.25), Some(18.35), censoredS, crossHost = false,
+        failed = false, rerun = true).isEmpty)
+      assert(BenchUtil.suspectS(Some(1.25), Some(18.35), censoredS, crossHost = false,
+        failed = true, rerun = false).isEmpty)
+    }
+  }
+
+  test("drainVerdict: mid-schedule needs the gap and a cost inside the reserve; after the schedule only the deadline") {
+    import BenchUtil.{MidSchedule, Rerun, ScheduleDone, Skip, Wait, drainVerdict}
+    // flagged at 10 s: the 60 s gap is unmet at 30 s, whatever the budget
+    assert(drainVerdict(MidSchedule, 10.0, 30.0, 5.0, 420.0, 0.0) == Wait)
+    // gap met, cost fits deadline − reserve
+    assert(drainVerdict(MidSchedule, 10.0, 70.0, 5.0, 420.0, 100.0) == Rerun)
+    // gap met, cost fits the deadline but not deadline − reserve: waits
+    // (the end drain, which reserves nothing, can still take it)
+    assert(drainVerdict(MidSchedule, 10.0, 300.0, 50.0, 420.0, 100.0) == Wait)
+    assert(drainVerdict(ScheduleDone, 10.0, 300.0, 50.0, 420.0, 100.0) == Rerun)
+    // after a complete schedule neither the gap nor the cost gates
+    assert(drainVerdict(ScheduleDone, 10.0, 11.0, 1000.0, 420.0, 0.0) == Rerun)
+    assert(drainVerdict(ScheduleDone, 10.0, 420.0, 0.0, 420.0, 0.0) == Rerun)
+    // ... only the deadline does
+    assert(drainVerdict(ScheduleDone, 10.0, 420.5, 0.0, 420.0, 0.0) == Skip)
+  }
+
+  test("drainVerdict: a truncated schedule sends every pending suspect to guard_skipped") {
+    import BenchUtil.{Skip, Truncated, drainVerdict}
+    for ((flagged, now, cost) <- Seq((0.0, 100.0, 1.0), (10.0, 11.0, 0.0), (0.0, 500.0, 50.0)))
+      assert(drainVerdict(Truncated, flagged, now, cost, 420.0, 0.0) == Skip)
   }
 }
