@@ -373,10 +373,12 @@ object Bench {
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     val benchT0 = System.nanoTime()
     val (jit0, gc0) = (Dev.jitMs, gcMs)
+    val (compiles0, compileNs0) = (Dev.janinoCompiles, Dev.janinoCompileNs)
     def elapsed: Double = (System.nanoTime() - benchT0) / 1e9
     var deadlineHit = false
-    // per rep: seconds (None = failed or censored), gc and jit deltas in ms
-    case class Rep(secs: Option[Double], gc: Long, jit: Long)
+    // per rep: seconds (None = failed or censored), gc and jit deltas in
+    // ms, Janino compiles (codegen cache misses)
+    case class Rep(secs: Option[Double], gc: Long, jit: Long, compiles: Long)
     val results = scala.collection.mutable.LinkedHashMap[String, Vector[Rep]]()
     // name → min/prior ratio that flagged it: re-run, or never re-run
     val requeued = scala.collection.mutable.LinkedHashMap[String, Double]()
@@ -422,12 +424,15 @@ object Bench {
         val per = ts.map(_.secs.map(fmt).getOrElse("null")).mkString("[", ",", "]")
         val gcs = ts.map(_.gc.toString).mkString("[", ",", "]")
         val jits = ts.map(_.jit.toString).mkString("[", ",", "]")
-        s""""$n":{"passes":$per,"min":${minOf(ts).map(fmt).getOrElse("null")},"warm":${isWarm(ts)},"gc_ms":$gcs,"jit_ms":$jits}"""
+        val compiles = ts.map(_.compiles.toString).mkString("[", ",", "]")
+        val minCompiles = ts.filter(_.secs.isDefined).minByOption(_.secs.get)
+          .map(_.compiles.toString).getOrElse("null")
+        s""""$n":{"passes":$per,"min":${minOf(ts).map(fmt).getOrElse("null")},"warm":${isWarm(ts)},"gc_ms":$gcs,"jit_ms":$jits,"compiles":$compiles,"min_compiles":$minCompiles}"""
       }.mkString("{", ",", "}")
       val skipped = queryList.map(_._1).filterNot(results.contains)
       val serveTier = queryList.map(_._1).filter(n => judgePrior.get(n).exists(_ <= SERVE_CUTOFF_S))
       val art =
-        s"""{"sf":${jstr(sfDir)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(RESERVE_S)},"fat_cutoff_s":${fmt(FAT_CUTOFF_S)},"serve_cutoff_s":${fmt(SERVE_CUTOFF_S)},"serve_tier":${names(serveTier)},"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"wall_s":${fmt(elapsed)},"jit_ms":${Dev.jitMs - jit0},"gc_ms":${gcMs - gc0},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":${results.count { case (_, ts) => isWarm(ts) }},"failed":${names(failed)},"skipped":${names(skipped)},"requeued":${ratios(requeued)},"guard_skipped":${ratios(guardSkipped)},"watch":${ratios(watch)},"censored":${ratios(censored)},"queries":$detail}"""
+        s"""{"sf":${jstr(sfDir)},"hostname":${jstr(hostName)},"cpus":$cpus,"scheduling":"query-major","order_source":${jstr(orderSource)},"prior_hostname":${jstr(priorHostName)},"reps":$reps,"planned_reps":$plannedReps,"eff_reps":$effReps,"degraded_at_s":${degradedAtS.map(fmt).getOrElse("null")},"reserve_s":${fmt(RESERVE_S)},"fat_cutoff_s":${fmt(FAT_CUTOFF_S)},"serve_cutoff_s":${fmt(SERVE_CUTOFF_S)},"serve_tier":${names(serveTier)},"deadline_s":${fmt(deadlineS)},"deadline_hit":$deadlineHit,"complete":$done,"wall_s":${fmt(elapsed)},"jit_ms":${Dev.jitMs - jit0},"gc_ms":${gcMs - gc0},"janino_compiles":${Dev.janinoCompiles - compiles0},"janino_compile_ms":${(Dev.janinoCompileNs - compileNs0) / 1000000},"total_min":$totalJson,"n_queries":${mins.size},"n_warm":${results.count { case (_, ts) => isWarm(ts) }},"failed":${names(failed)},"skipped":${names(skipped)},"requeued":${ratios(requeued)},"guard_skipped":${ratios(guardSkipped)},"watch":${ratios(watch)},"censored":${ratios(censored)},"queries":$detail}"""
       val out = java.nio.file.Paths.get(artifact)
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out, (art + "\n").getBytes("UTF-8"))
@@ -462,7 +467,7 @@ object Bench {
         if (late) deadlineHit = true
         if (late && !mustWarm) stop = true
         else {
-          val (g0, j0) = (gcMs, Dev.jitMs)
+          val (g0, j0, c0) = (gcMs, Dev.jitMs, Dev.janinoCompiles)
           // unique per invocation: a reused group id would be pre-cancelled
           // by an earlier rep's AndFutureJobs cancellation
           val group = s"bench-$name-rep$rep-${System.nanoTime()}"
@@ -491,7 +496,8 @@ object Bench {
           watchdog.foreach(_.cancel(false))
           spark.sparkContext.clearJobGroup()
           val secs = (System.nanoTime() - t0) / 1e9
-          ts :+= Rep(if (ok) Some(secs) else None, gcMs - g0, Dev.jitMs - j0)
+          ts :+= Rep(if (ok) Some(secs) else None, gcMs - g0, Dev.jitMs - j0,
+            Dev.janinoCompiles - c0)
           spark.catalog.clearCache() // drop operator-internal persists between reps
           if (!ok && !failed.contains(name)) {
             val b = repBudgetS.getOrElse(0.0)

@@ -104,8 +104,13 @@ object Dev {
     }
   }
 
-  private def janinoCompiles: Long =
+  /** Janino compiles so far in this JVM: each is a codegen cache miss. */
+  private[graft] def janinoCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Nanoseconds spent in Janino compiles so far in this JVM. */
+  private[graft] def janinoCompileNs: Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
 
   private[graft] def jitMs: Long = {
     val c = java.lang.management.ManagementFactory.getCompilationMXBean

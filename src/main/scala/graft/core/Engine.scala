@@ -48,11 +48,41 @@ object Engine {
       // one HEAD — four rounds of incidents). graft adds no session
       // artifacts (addArtifact is a Spark Connect multi-tenancy surface),
       // so isolation buys nothing here and costs the whole codegen cache
-      // per streaming run; with it off, warm q94 reps compile only the 2
-      // unavoidable fresh-lambda-id serde projections. Must be set at
-      // session creation — a runtime conf.set is documented to no-op.
+      // per streaming run; with it off, a warm q94 rep compiles only its 2
+      // fresh-lambda-id serde projections and a warm q68 rep compiles
+      // nothing (`graft.Dev exec` at sf0.01). Must be set at session
+      // creation — a runtime conf.set is documented to no-op.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // hold every class graft generates (see CodegenCacheEntries)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Whole-stage class names without the codegen stage id. AQE numbers
+      // a query's codegen stages in the order its query stages are
+      // planned, which varies run to run, and the id in the class name is
+      // the only part of the source it changes: with it, a warm d22 rep
+      // recompiled 0–12 classes whose sources differed only in the id.
+      // The id stays in the plan (`*(n)`).
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
+
+  /** Entries in Spark's codegen cache (default 100), sized so the cache
+    * holds every class graft generates and a warm query compiles nothing.
+    *
+    * Measured: with a cache larger than the working set, a run's Janino
+    * compiles are its distinct generated classes. Verify over the 181
+    * driver queries compiles 1,955 at sf0.01; Bench (whose `count()`
+    * prunes columns) compiles 1,519 at sf0.01 and 1,527 at sf0.1. At 100
+    * entries a traced perfbench corpus pass (d22, d130, q68) recompiled
+    * 121 classes, and one Verify sf0.01 run compiled 4,357. The cache is a
+    * Guava LRU split into 4 segments that evict independently, so a
+    * working set overflows a segment well before it reaches the whole
+    * cache; hence over 2× the largest count. Re-count with
+    * `runMain graft.Bench` at the scale in question (the artifact's
+    * `janino_compiles`).
+    *
+    * A static conf: `CodeGenerator` builds its cache once per JVM from the
+    * conf of the first session that generates code, so the value applies
+    * only to JVMs whose sessions come from [[session]]. */
+  val CodegenCacheEntries = 8192
 
   def session(master: String = "local[32]", cpus: Int = 32): SparkSession = {
     val s = builder(master, cpus).getOrCreate()

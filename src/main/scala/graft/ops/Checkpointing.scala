@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.graft.Blocks
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -113,7 +114,8 @@ private[graft] object Checkpointing {
           val p = new org.apache.hadoop.fs.Path(f)
           p.getFileSystem(old.sparkContext.hadoopConfiguration).delete(p, true)
         }
-        old.unpersist(blocking = false)
+        // not old.unpersist: it WARNs for every locally checkpointed RDD
+        Blocks.drop(old)
       }
       total
     }

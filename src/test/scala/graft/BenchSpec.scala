@@ -51,5 +51,15 @@ class BenchSpec extends SparkSpec {
     // both timed (a censored rep in the first set would stop it early)
     val passes = art.get("queries").get(storm).get("passes").asScala.toSeq
     assert(passes.size >= 3 && passes.takeRight(2).forall(_.isNumber), passes)
+    // Janino compiles: run totals, and per query each rep's and the min rep's
+    for (f <- Seq("janino_compiles", "janino_compile_ms")) assert(art.get(f).isIntegralNumber, f)
+    for (q <- Seq(storm, calm)) {
+      val detail = art.get("queries").get(q)
+      assert(detail.get("compiles").size == detail.get("passes").size, detail)
+      assert(detail.get("min_compiles").isIntegralNumber, detail)
+    }
+    // a warm rep finds every class of q01 in the codegen cache
+    val calmCompiles = art.get("queries").get(calm).get("compiles")
+    assert(calmCompiles.size >= 2 && calmCompiles.get(1).asLong == 0, calmCompiles)
   }
 }

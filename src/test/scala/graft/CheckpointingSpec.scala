@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.storage.StorageLevel
 
 /** Pins the EAGER-truncate discipline shared by connectedComponents and
@@ -58,9 +62,34 @@ class CheckpointingSpec extends SparkSpec {
     val r2 = t.eager(spark.range(200).rdd)
     // r1's label-map blocks are unreachable once r2 is checkpointed — on a
     // long maxIter loop they would otherwise pile up in executor storage
-    assert(r1.getStorageLevel == StorageLevel.NONE, "older round's blocks not unpersisted")
-    assert(r2.getStorageLevel != StorageLevel.NONE)
+    val persistent = spark.sparkContext.getPersistentRDDs
+    assert(!persistent.contains(r1.id), "older round's blocks not unpersisted")
+    assert(persistent.contains(r2.id) && r2.getStorageLevel != StorageLevel.NONE)
     assert(r2.isCheckpointed)
+  }
+
+  test("connectedComponents on longPath frees every rotated round's blocks") {
+    // the rotation drops blocks through the context, not RDD.unpersist
+    // (which WARNs for each locally checkpointed round): every persisted
+    // RDD the loop's stages touched is gone from the context's registry
+    // except the final round, which the result frame reads
+    val persisted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(r => persisted.add(r.id))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val cc = ops.Dedup.connectedComponents(DeadlockSoak.longPath.toDF("a", "b"), "a", "b")
+      assert(cc.count() == 20000)
+      ListenerBus.drain(sc)
+      val seen = persisted.asScala.toSet
+      val live = seen.filter(sc.getPersistentRDDs.contains)
+      val rotated = seen -- live
+      assert(live.size <= 1, s"persisted RDDs left after the loop: $live")
+      assert(rotated.size >= 3, s"expected several rotated rounds, saw $rotated")
+    } finally sc.removeSparkListener(l)
   }
 
   test("truncate(): resets carried plan Statistics (the per-round stats cube)") {

@@ -31,4 +31,22 @@ class DevSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(lag)
     }
   }
+
+  test("warm reps of the corpus queries compile no class: the codegen cache holds graft's working set") {
+    // the three perfbench corpus queries generate about 110 classes: at
+    // Spark's default 100 entries (four LRU segments of 25) the warm round
+    // recompiled 63 of them, and with the AQE-ordered stage id in each
+    // class name a warm d22 rep still recompiled up to 12
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      core.Engine.CodegenCacheEntries.toString)
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+    val names = Seq("d22_jaccard_pairs", "d130_cluster_split", "q68_stream_dedup")
+    val timer = new Dev.RepTimer(spark)
+    try {
+      val Seq(cold, warm) = (1 to 2).map(_ => names.map(timer.run(_, sf("sf0.001"))))
+      val lines = names.zip(cold.zip(warm))
+        .map { case (n, (c, w)) => s"$n cold: ${c.line}\n$n warm: ${w.line}" }.mkString("\n")
+      assert(warm.map(_.janinoCompiles).sum == 0, lines)
+    } finally timer.close()
+  }
 }
