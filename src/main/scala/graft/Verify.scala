@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry spec's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -26,25 +26,28 @@ object Verify {
     // an order-preserving sorted-glob read (DuckDB default) sees the same
     // row order the single file would have. The driver path is unchanged.
     val noCoalesce = sys.env.get("SPARK_GRAFT_VERIFY_NO_COALESCE").contains("1")
-    // the dump below generates stash-backed oracle SQL (s143 pqt, d74/p92
-    // auto planes) — scope it to THIS run's dir so a stale stash from a
-    // different scale fails loudly instead of emitting wrong SQL
-    SparkEntry.oracleScope = Some(sfDir)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val ran = SparkEntry.specs.filter(q => only.forall(_.contains(q.name)))
+    ran.foreach { q =>
       try {
-        val res = fn(spark, sfDir)
+        val res = q.build(spark, sfDir)
         (if (noCoalesce) res else res.coalesce(1))
-          .write.mode("overwrite").parquet(s"$outDir/$name")
+          .write.mode("overwrite").parquet(s"$outDir/${q.name}")
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       finally spark.catalog.clearCache() // drop operator-internal persists
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${BenchUtil.jstr(k)}: ${BenchUtil.jstr(v)}" }.mkString("{", ",", "}")
+    // the oracles of the queries this run attempted, each at this run's dir
+    // (a FromData oracle refits its constants from the tables here); a
+    // query that failed above keeps its key, so the check reports it
+    val json = ran.flatMap { q =>
+      val sql = try q.oracleSql(spark, sfDir) catch { case e: Exception =>
+        System.err.println(s"[verify] ${q.name} oracle failed: ${e.getMessage}")
+        Some("SELECT error('oracle generation failed; see the Verify log')")
+      }
+      sql.map(v => s"${BenchUtil.jstr(q.name)}: ${BenchUtil.jstr(v)}")
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -894,7 +894,7 @@ object Similarity {
     * StrictMath (fdlibm — bit-exact on every JVM, unlike java.lang.Math's
     * 2-ulp licence) for every transcendental — so the same matrix yields
     * the same eigenpairs on any machine, which is what lets the oracle
-    * replay a projection from stashed constants.
+    * replay a projection from a refit's constants.
     *
     * Returns (eigenvalues, eigenvectors-as-rows), sorted by eigenvalue
     * DESC with index-order tie-break; each vector sign-normalized (its
@@ -960,8 +960,8 @@ object Similarity {
     * the DECIMAL-quantized, floor-rounded corpus statistics (deterministic
     * and engine-portable); the eigensolve is [[jacobiEigen]]'s
     * deterministic driver artifact — so the model is a pure function of
-    * the corpus, and an oracle can replay the PROJECTION from the model's
-    * stashed constants (the s143 trained-codebook precedent).
+    * the corpus, and an oracle can refit it at the same dir and replay the
+    * PROJECTION from its constants (the s143 trained-codebook precedent).
     *
     * Scale shape: two corpus passes (means, second moments) whose shuffles
     * carry dimension-sized groups; the driver holds d² doubles. Returns

@@ -1,30 +1,51 @@
 package graft
 
 /** Driver-contract smoke: `entry` must return rows on sf0.001 (t1 gate),
-  * and every declared oracle key must correspond to a query. */
+  * and the spec list must describe every driver query once: a unique
+  * name, an oracle or a rows-only reason that names its spec bound, and
+  * the streaming flag. */
 class EntrySpec extends SparkSpec {
+  import graft.query.{QuerySpec, RowsOnly}
 
   test("entry returns rows on sf0.001 (driver t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("spec names are unique; the derived views hold every spec") {
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, s"duplicate names: ${names.diff(names.distinct)}")
+    assert(SparkEntry.queries.keySet == names.toSet)
+  }
+
   test("every oracle key has a matching query; queries without oracle are known") {
-    val qs = SparkEntry.queries.keySet
-    val os = SparkEntry.oracleSql.keySet
-    assert(os.subsetOf(qs), s"orphan oracles: ${os.diff(qs)}")
-    // the sanctioned rows-only set: randomized sketch (q57), iterative
-    // float optimization (s36), and the unigram hard-EM stage (t153 —
-    // per-word Viterbi DP has no SQL replay; its seed stage t152 is
-    // oracle-exact and UnigramSpec carries the EM bound)
-    val rowsOnly = qs.diff(os)
-    assert(rowsOnly == Set("s36_ann_ivf", "q57_approx_distinct", "t153_unigram_lm"),
-      s"unexpected rows-only queries: $rowsOnly")
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    // rows-only is read from the RowsOnly specs: each names its spec bound
+    val rowsOnly = SparkEntry.specs.collect { case QuerySpec(n, _, RowsOnly(r), _) => n -> r }.toMap
+    assert(rowsOnly.keySet == Set("s36_ann_ivf", "q57_approx_distinct", "t153_unigram_lm"),
+      s"unexpected rows-only queries: ${rowsOnly.keySet}")
+    val bound = """.*bound: (\w+) "(.*)"$""".r
+    rowsOnly.foreach { case (n, reason) =>
+      val bound(suite, testName) = reason: @unchecked
+      val tests = Class.forName(s"graft.$suite").getDeclaredConstructor().newInstance()
+        .asInstanceOf[org.scalatest.Suite].testNames
+      assert(tests.contains(testName), s"$n names a missing bound: $suite \"$testName\"")
+    }
+    assert(SparkEntry.oracleSql.keySet.intersect(rowsOnly.keySet).isEmpty)
+  }
+
+  test("streamingQueries is read from the specs' streaming flag") {
+    assert(SparkEntry.streamingQueries == Set(
+      "q58_stream_window", "q68_stream_dedup", "q94_stream_neardup",
+      "q96_stream_join", "q124_stream_scd2", "q140_stream_quota",
+      "q172_stream_moments", "q175_stream_psi", "p72_stream_pipeline"))
   }
 
   test("all queries execute on sf0.001 (empty results allowed, e.g. anti-join)") {
     val dir = sf("sf0.001")
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, dir).count() // throws on any planning/execution error
+      // toRdd computes every output column; count() would let Catalyst
+      // prune the plan down to a column-less row count
+      val n = fn(spark, dir).queryExecution.toRdd.count() // throws on any planning/execution error
       assert(n >= 0, name)
       spark.catalog.clearCache()
     }

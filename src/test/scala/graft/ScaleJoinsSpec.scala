@@ -600,64 +600,30 @@ class ScaleJoinsSpec extends SparkSpec {
     assert(rows(got) == rows(mem))
   }
 
-  test("s143 pqt tier: the query run stashes the trained codebook; the oracle inlines it") {
-    // the oracle's pqt tier can only be generated AFTER the query runs in
-    // this JVM (Verify's flow: all queries, then the SQL dump) — before
-    // the run it must fail LOUDLY, never emit silently-wrong SQL
-    SparkEntry.trainedPqCodebook.clear()
-    assert(SparkEntry.oracleSql("s143_pq_recall").contains("error("),
-      "pre-run oracle must be the loud error() form")
+  /** A spec's oracle SQL at `dir`, as Verify writes it. */
+  private def oracleAt(name: String, dir: String): String =
+    SparkEntry.specs.find(_.name == name).get.oracleSql(spark, dir).get
+
+  test("s143 pqt tier: three tiers per query; the trained codebook refits bit-for-bit") {
     val rows = SparkEntry.queries("s143_pq_recall")(spark, sf("sf0.001")).collect()
     assert(rows.map(_.getString(0)).distinct.sorted.toSeq == Seq("lshpq", "pq", "pqt"))
     // all three tiers report every query (full-scan tiers k rows each;
     // lshpq may prune below k but never to a missing query row)
     val nq = rows.map(_.getLong(1)).distinct.length
     assert(rows.groupBy(_.getString(0)).forall(_._2.length == nq))
-    val cbt = SparkEntry.trainedPqCodebook.get(sf("sf0.001"))
-    assert(cbt.nonEmpty, "query run must stash the trained codebook")
-    val sql = SparkEntry.oracleSql("s143_pq_recall")
-    assert(!sql.contains("error("), "post-run oracle must be the real replay")
-    // the stashed constants are inlined verbatim (shortest-roundtrip form)
-    assert(sql.contains(s"CAST('${java.lang.Double.toString(cbt.get(0)(0)(0))}' AS DOUBLE)"))
-    assert(sql.contains("AS T)") && sql.contains("rep_pt"))
-    // a stash from a DIFFERENT dir than the oracle's scope fails loudly
-    // instead of emitting another scale's constants (the Verify contract)
-    SparkEntry.oracleScope = Some("/some/other/dir")
-    try assert(SparkEntry.oracleSql("s143_pq_recall").contains("error("))
-    finally SparkEntry.oracleScope = None
-    // refit at the same dir reproduces the stash bit-for-bit (the
-    // determinism the oracle's exactness rests on)
-    val refit = ops.Similarity.pqCodebookTrained(
+    // the oracle refits at the same dir: a refit reproduces the fit
+    // bit-for-bit (the determinism the oracle's exactness rests on)
+    def fit() = ops.Similarity.pqCodebookTrained(
       core.Tables.embeddings(spark, sf("sf0.001")), "vec_id", "embedding",
       m = 8, k = 16, subDim = 8)
-    assert(refit.flatten.flatten.toSeq == cbt.get.flatten.flatten.toSeq)
+    assert(fit().flatten.flatten.toSeq == fit().flatten.flatten.toSeq)
   }
 
-  test("d74/p92 auto-planes: the run's knob is stashed; the oracle replays it at any scale") {
-    // the s143 pqt lifecycle applied to the auto-planes contract: before
-    // any run the oracle is the loud error() form; after a run it inlines
-    // the plane count the run ACTUALLY derived from its corpus — so the
-    // former permanent gate-scale pin verifies exact at every SF
-    SparkEntry.autoPlanesUsed.clear()
-    assert(SparkEntry.oracleSql("d74_embed_neardup_lsh").contains("error("))
-    assert(SparkEntry.oracleSql("p92_semantic_dedup").contains("error("))
+  test("d74/p92 auto-planes: the oracle inlines autoPlanes(n); d74 equals the fixed-knob form") {
     val n = core.Tables.embeddings(spark, sf("sf0.001")).count()
     val expected = ops.Similarity.autoPlanes(n)
     val rows = SparkEntry.queries("d74_embed_neardup_lsh")(spark, sf("sf0.001")).collect()
-    assert(SparkEntry.autoPlanesUsed.get(sf("sf0.001")).contains(expected))
-    // scope check: a mismatched oracle scope turns the stash back into the
-    // loud error() form
-    SparkEntry.oracleScope = Some("/some/other/dir")
-    try assert(SparkEntry.oracleSql("d74_embed_neardup_lsh").contains("error("))
-    finally SparkEntry.oracleScope = None
-    // ambiguity check (round 16, dir-keyed stashes): with TWO dirs stashed
-    // and no scope set, nobody can say which run is being replayed — the
-    // oracle must fail closed, not pick an arbitrary winner
-    SparkEntry.autoPlanesUsed("/some/other/dir") = expected + 1
-    try assert(SparkEntry.oracleSql("d74_embed_neardup_lsh").contains("error("),
-      "unscoped multi-dir stash must yield the error() form")
-    finally SparkEntry.autoPlanesUsed.remove("/some/other/dir")
-    val sql = SparkEntry.oracleSql("d74_embed_neardup_lsh")
+    val sql = oracleAt("d74_embed_neardup_lsh", sf("sf0.001"))
     assert(!sql.contains("error("))
     // the bucket expression carries exactly `expected` CASE terms per table
     // (2 tables) — the knob is verifiably inlined, not a fixed constant
@@ -671,18 +637,11 @@ class ScaleJoinsSpec extends SparkSpec {
     assert(rows.toSeq.map(_.toSeq) == fixed.toSeq.map(_.toSeq))
   }
 
-  test("s151 auto-serving: the run's knob is stashed, scoped, and replayed") {
-    SparkEntry.autoServingPlanesUsed.clear()
-    assert(SparkEntry.oracleSql("s151_lshpq_auto").contains("error("))
+  test("s151 auto-serving: the oracle replays autoServingPlanes; the row equals the fixed-knob form") {
     val e = core.Tables.embeddings(spark, sf("sf0.001"))
     val expected = ops.Similarity.autoServingPlanes(e.count(), k = 10, expand = 4)
     val rows = SparkEntry.queries("s151_lshpq_auto")(spark, sf("sf0.001")).collect()
-    assert(SparkEntry.autoServingPlanesUsed.get(sf("sf0.001")).contains(expected))
-    assert(!SparkEntry.oracleSql("s151_lshpq_auto").contains("error("))
-    // scope mismatch regenerates the loud error()
-    SparkEntry.oracleScope = Some("/some/other/dir")
-    try assert(SparkEntry.oracleSql("s151_lshpq_auto").contains("error("))
-    finally SparkEntry.oracleScope = None
+    assert(!oracleAt("s151_lshpq_auto", sf("sf0.001")).contains("error("))
     // and the row equals the fixed-knob serving form at the same planes
     val fixed = ops.Similarity.lshPqTopK(e, e.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 10, codebook = ops.Similarity.pqCodebook(8, 16, 8),

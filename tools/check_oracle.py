@@ -49,4 +49,9 @@ for name in sorted(os.listdir(out_dir)):
         rows = diff.any(axis=1)
         print("  got:", got2[rows].head(3).to_dict("records"))
         print("  exp:", exp2[rows].head(3).to_dict("records"))
+# Verify skips the output of a query that failed (logged to stderr), but
+# keeps its oracle key: no output is a failure, not a silent omission
+for name in sorted(oracle):
+    if not os.path.isdir(os.path.join(out_dir, name)):
+        bad.append(name); print(f"FAIL {name}: missing output")
 print(f"\n{len(ok)} exact-match, {len(bad)} failing: {bad}")
