@@ -272,7 +272,7 @@ object RelationalQueries {
     // §2.1 CSV source: write a slice as CSV, reload through the sniffing
     // loader (dialect + schema), verify against the parquet-born oracle.
     QuerySpec("q20_csv_roundtrip", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+      val tmp = scratchDir("csv")
       val slice = t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 100 === 0)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -600,7 +600,7 @@ object RelationalQueries {
     // only as FUTURE work): write a slice as JSON lines, reload with an
     // explicit schema, verify against the parquet-born oracle
     QuerySpec("q60_json_roundtrip", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+      val tmp = scratchDir("json")
       val slice = t(s, dir, "orders")
         .filter(col("o_orderkey") % 100 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"), col("o_orderpriority"))
@@ -622,9 +622,8 @@ object RelationalQueries {
     // Oracle: the XML/JDBC roundtrips write and re-read the slice byte-faithfully;
     // the oracle is the parquet-born slice itself
     QuerySpec("q154_xml_roundtrip", (s, dir) => {
-      // write ONCE per (JVM, dir) — the q50/s148 caching rule: a bench rep
-      // measures the read path, the build amortizes, and /tmp does not
-      // grow per rep (r16 review); the layout is reclaimed at JVM exit
+      // write ONCE per (JVM, dir) through roundtripDir: a bench rep
+      // measures the read path and the build amortizes
       val tmp = roundtripDir("xml", dir, tableFingerprint(s, dir, "customer")) { tmp =>
         t(s, dir, "customer")
           .filter(col("c_custkey") % 50 === 0)
@@ -657,8 +656,7 @@ object RelationalQueries {
       // ONE embedded Derby database per (JVM, dir): Derby keeps every
       // booted database registered (page cache + threads) until JVM exit,
       // so a per-rep `create=true` accumulated instances and /tmp dirs
-      // unboundedly (r16 review). Same q50/s148 amortized-write rule as
-      // q154; the dir is reclaimed at JVM exit.
+      // unboundedly. Same roundtripDir layout as q154.
       val props = new java.util.Properties
       val db = roundtripDir("derby", dir, tableFingerprint(s, dir, "supplier")) { tmp =>
         t(s, dir, "supplier")
@@ -744,7 +742,7 @@ object RelationalQueries {
     // o_orderpriority, so it is NULL for them after the merged read
     QuerySpec("q77_schema_merge", (s, dir) => {
       val o = t(s, dir, "orders")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_merge").toString
+      val tmp = scratchDir("merge")
       o.filter(col("o_orderkey") % 100 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
         .write.mode("overwrite").parquet(s"$tmp/gen=1")
@@ -761,40 +759,18 @@ object RelationalQueries {
         |ORDER BY o_orderkey""".stripMargin)),
 
     // date-partitioned layout + partition pruning: events written
-    // partitionBy(event_date) once per (JVM, source fingerprint) — same
-    // cache rule as q50's bucketed tables — then a 3-day filter reads ONLY
-    // those directories (PlanFingerprintSpec pins the pruned partition
-    // count). At 100 TB this is the difference between scanning 30 days
-    // and scanning 3
+    // partitionBy(event_date) once per (JVM, source fingerprint) — a
+    // roundtripDir layout — then a 3-day filter reads ONLY those
+    // directories (PlanFingerprintSpec pins the pruned partition count).
+    // At 100 TB this is the difference between scanning 30 days and
+    // scanning 3
     // Oracle: pruning is a layout property, so the oracle just filters the original
     // table by day — a hash match proves the partitioned roundtrip lost and
     // invented nothing
     QuerySpec("q78_partition_prune", (s, dir) => {
-      val conf = s.sparkContext.hadoopConfiguration
-      val sfx = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$dir|events:${tableFingerprint(s, dir, "events")}".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_part_$sfx"
-      val done = new org.apache.hadoop.fs.Path(s"$root/_SUCCESS")
-      val fs = done.getFileSystem(conf)
-      if (!fs.exists(done)) {
-        // stage under a process-unique dir and rename into place: two JVMs
-        // (e.g. Verify and Bench) can race this check, and an in-place
-        // overwrite would delete the directory out from under the other's
-        // read. rename is atomic on a local fs; the loser just cleans up.
-        val stage = s"$root.stage.${java.lang.ProcessHandle.current().pid()}"
-        val stageP = new org.apache.hadoop.fs.Path(stage)
+      val root = roundtripDir("part", dir, tableFingerprint(s, dir, "events")) { tmp =>
         t(s, dir, "events").withColumn("event_date", to_date(col("ts")))
-          .write.mode("overwrite").partitionBy("event_date").parquet(stage)
-        if (fs.exists(done) ||
-            !fs.rename(stageP, new org.apache.hadoop.fs.Path(root))) {
-          fs.delete(stageP, true) // lost the race: the winner's layout stands
-        } else {
-          // a winner sneaking in between the exists and the rename makes
-          // POSIX rename drop stage INSIDE root — detect and remove
-          val nested = new org.apache.hadoop.fs.Path(s"$root/${stageP.getName}")
-          if (fs.exists(nested)) fs.delete(nested, true)
-        }
+          .write.mode("overwrite").partitionBy("event_date").parquet(tmp)
       }
       s.read.parquet(root)
         .filter(col("event_date").between(lit("2024-01-10"), lit("2024-01-12")))
@@ -832,7 +808,7 @@ object RelationalQueries {
     // compaction pass is lossless
     // Oracle: compaction is a layout change only — the original table is the oracle
     QuerySpec("q83_compacted_write", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
+      val tmp = scratchDir("compact")
       graft.io.Sinks.writeCompacted(
         t(s, dir, "documents").select(col("doc_id"), col("lang"), col("source"), col("n_chars")),
         s"$tmp/out", targetRows = 200L)
@@ -873,7 +849,7 @@ object RelationalQueries {
     // oracle reads the ORIGINAL parquet, so a hash match proves write/read
     // fidelity of the ORC path end-to-end)
     QuerySpec("q64_orc_roundtrip", (s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+      val tmp = scratchDir("orc")
       val slice = t(s, dir, "customer")
         .filter(col("c_custkey") % 50 === 0)
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))

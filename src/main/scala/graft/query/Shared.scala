@@ -6,10 +6,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Helpers the query families share: table access, the exact-cents sums,
-  * the memoized child sessions and round-trip dirs, the pair-graph
+  * the memoized child sessions, the scratch directories, the pair-graph
   * builders, the stopword list, the frozen BPE merges and the PSI oracle
   * that p174 and q175 both replay. Every family imports this object, and
   * it reads no family.
+  *
+  * Scratch rule: every file a query builder writes goes under ONE scratch
+  * root per JVM ([[scratchDir]]), and one shutdown hook deletes that root
+  * when the JVM exits. A layout the query reads but does not time (q78,
+  * q154, q155, q161, s148, s158) is built once per JVM through
+  * [[roundtripDir]]; a round-trip whose write is the timed work (q20, q60,
+  * q64, q77, q83, p72) and every streaming checkpoint take a fresh
+  * [[scratchDir]] per call. The one exception is q50's bucketed tables:
+  * `saveAsTable` needs the catalog, so they live in the session warehouse.
   *
   * Numeric-parity convention: every SUM/AVG over double columns goes through
   * DECIMAL(18,2) (exact cents, order-independent) and back to double, so the
@@ -89,36 +98,42 @@ object Shared {
     })
   }
 
-  /** Length:mtime fingerprint of one source parquet under `dir` — the s148
-    * data-fingerprint rule, shared by every amortized-layout cache key so
-    * a regenerated source file invalidates the derived layout instead of
-    * serving it stale (r16 advice). */
+  /** Length:mtime fingerprint of one source parquet under `dir`, the
+    * source part of every layout key (q50's tables, [[roundtripDir]]). */
   private[query] def tableFingerprint(s: SparkSession, dir: String, table: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
     val st = p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p)
     s"${st.getLen}:${st.getModificationTime}"
   }
 
-  /** One materialized roundtrip layout per (JVM, kind, dir, source
-    * fingerprint): `build` runs on first request, later callers reuse the
-    * path, and a JVM shutdown hook reclaims the directory — the
-    * temp-layout discipline of the source-roundtrip queries (q154 XML,
-    * q155 Derby, s158 index append). The key folds the SOURCE table's
-    * length:mtime (r16 advice — the s148 rule): a long-lived JVM whose
-    * parquet is regenerated under the same dir must rebuild the layout,
-    * not serve the stale one and diverge from the fresh oracle. */
+  /** The JVM's scratch root, a `graft_scratch*` directory in
+    * `java.io.tmpdir` created on first use. One shutdown hook deletes the
+    * whole tree when the JVM exits. */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile): Unit))
+    root
+  }
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong
+
+  /** A fresh, empty directory under the scratch root. */
+  private[graft] def scratchDir(kind: String): String =
+    java.nio.file.Files.createDirectory(
+      scratchRoot.resolve(s"${kind}_${scratchSeq.incrementAndGet()}")).toString
+
+  /** One layout per (JVM, kind, dir, fingerprint): `build` writes it into
+    * a fresh [[scratchDir]] on first request and later callers reuse the
+    * path. `fp` must name everything the layout derives from: the source
+    * table's length:mtime ([[tableFingerprint]]), so a regenerated parquet
+    * rebuilds the layout instead of serving a stale one, plus any layout
+    * parameter (s148's planes and codebook). */
   private val roundtripDirs =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]
 
   private[query] def roundtripDir(kind: String, dir: String, fp: String)(build: String => Unit): String =
     roundtripDirs.computeIfAbsent((kind, dir, fp), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft_$kind").toString
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
-      }))
+      val tmp = scratchDir(kind)
       build(tmp)
       tmp
     })

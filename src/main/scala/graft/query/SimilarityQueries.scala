@@ -186,39 +186,28 @@ object SimilarityQueries {
 
     // PERSISTED PQ serving index (round 15): s123's composition with the
     // LSH bucket as the STORAGE partition key. writeAnnIndex lays out
-    // (id, pq_codes) partitionBy(bucket) once per (JVM, dir, data
-    // fingerprint) — q50's bucketed-table caching rule — and
-    // queryAnnIndex pushes the query set's bucket values as LITERAL
-    // partition filters, so whole bucket= directories are pruned before
-    // a byte is read (ScaleJoinsSpec asserts the file-level prune). The
-    // chain downstream is lshPqTopK's verbatim, so the s123 oracle
-    // replays this result bit-for-bit too
+    // (id, pq_codes) partitionBy(bucket) once per (JVM, dir, layout key)
+    // — a roundtripDir layout — and queryAnnIndex pushes the query set's
+    // bucket values as LITERAL partition filters, so whole bucket=
+    // directories are pruned before a byte is read (ScaleJoinsSpec
+    // asserts the file-level prune). The chain downstream is lshPqTopK's
+    // verbatim, so the s123 oracle replays this result bit-for-bit too
     // Oracle: the persisted-index path is lshPqTopK's math over a partitionBy
     // layout — same oracle chain as s123
     QuerySpec("s148_ann_partitioned", (s, dir) => {
       val emb = t(s, dir, "embeddings")
-      // the layout knobs, declared ONCE: the cache fingerprint below and
-      // the write/query calls interpolate these same vals (r15 advice —
-      // detached string literals in the key meant a knob edit could serve
-      // a stale on-disk index silently, the exact failure the key exists
-      // to prevent)
+      // the layout knobs, declared ONCE: the layout key and the
+      // write/query calls interpolate these same vals, so a knob edit
+      // builds a new index instead of serving stale bucket=/code
+      // partitions
       val planes = 3
       val (cbM, cbK, cbSub) = (8, 16, 8)
       val cb = graft.ops.Similarity.pqCodebook(cbM, cbK, cbSub)
-      // cache key = data fingerprint (q50's rule) PLUS every parameter the
-      // on-disk layout was derived under (planes, codebook spec, a layout
-      // version) — a knob edit must invalidate the index, or stale
-      // bucket=/code partitions would serve silently-wrong candidates
-      val sfx = {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.digest(s"$dir|${tableFingerprint(s, dir, "embeddings")}|planes=$planes|cb=grid-$cbM-$cbK-$cbSub|v1"
-            .getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString.take(12)
-      }
-      val path = s"spark-warehouse/graft_ann_$sfx"
-      if (!new java.io.File(s"$path/_SUCCESS").exists())
+      val fp = s"${tableFingerprint(s, dir, "embeddings")}|planes=$planes|cb=grid-$cbM-$cbK-$cbSub|v1"
+      val path = roundtripDir("ann", dir, fp) { tmp =>
         graft.ops.Similarity.writeAnnIndex(emb, "vec_id", "embedding", cb,
-          planes = planes, dim = 64, path = path)
+          planes = planes, dim = 64, path = tmp)
+      }
       graft.ops.Similarity.queryAnnIndex(emb, emb.filter(col("vec_id") < 8),
           "vec_id", "embedding", k = 10, codebook = cb, planes = planes, dim = 64,
           path = path, expand = 4)

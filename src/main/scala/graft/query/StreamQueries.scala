@@ -2,7 +2,7 @@ package graft.query
 
 import graft.core.Tables
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Shared._
@@ -20,20 +20,10 @@ object StreamQueries {
       // the reduced shuffle-partition conf away from the main session
       // while keeping one stable classloader so codegen cache-hits
       val s = streamSession(s0)
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      // file-stream sources take a directory; glob-filter to the events table
-      val raw = graft.streaming.Streams.readStream(s, dir, rawSchema,
-        glob = Some("events.parquet"))
-      val ev = Tables.normalizeEventTs(raw)
+      val ev = eventStream(s, dir)
       val agged = graft.streaming.Streams.windowedAgg(ev, "ts", "event_type", "1 hour",
         aggs = Seq(count(lit(1)).as("n"), round(dsum(col("value")), 2).as("total")))
-      freshMemorySink(s, "graft_q58_sink")
-      val sq = agged.writeStream.format("memory").queryName("graft_q58_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      s.table("graft_q58_sink")
+      drainToMemory(s, "graft_q58_sink", agged, "complete")
         .select(col("event_type"), unix_timestamp(col("window_start")).as("window_start_s"),
           col("n"), col("total"))
         .orderBy(col("event_type"), col("window_start_s"))
@@ -50,20 +40,11 @@ object StreamQueries {
     // Oracle: the doubled stream deduped on event_id must equal the original table
     QuerySpec("q68_stream_dedup", (s0, dir) => {
       val s = streamSession(s0) // memoized scoped child, see q58
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val raw = graft.streaming.Streams.readStream(s, dir, rawSchema,
-        glob = Some("events.parquet"))
-      val ev = Tables.normalizeEventTs(raw)
+      val ev = eventStream(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"))
       val deduped = graft.streaming.Streams.dedupStream(
         ev.union(ev), Seq("event_id"), "ts")
-      freshMemorySink(s, "graft_q68_sink")
-      val sq = deduped.writeStream.format("memory").queryName("graft_q68_sink")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      s.table("graft_q68_sink")
+      drainToMemory(s, "graft_q68_sink", deduped, "append")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("n_distinct"))
         .orderBy(col("event_type"))
@@ -95,7 +76,7 @@ object StreamQueries {
         .filter(col("quality") >= 0.3)
         .select(col("doc_id"), col("lang"), col("quality"),
           md5(TextFunctions.scrub(col("text"))).as("scrub_md5"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_p72").toString
+      val tmp = scratchDir("p72")
       val sq = graft.streaming.Streams.writeStreamParquet(
         scored, s"$tmp/out", s"$tmp/ck", availableNow = true)
       sq.awaitTermination()
@@ -134,13 +115,7 @@ object StreamQueries {
       val markers = graft.streaming.Streams.nearDupMarkStream(
         ev, "doc_id", "text", "ts", n = 3, numHashes = 64, bands = 16,
         threshold = 0.8)
-      freshMemorySink(s, "graft_q94_sink")
-      val sq = markers.writeStream.format("memory").queryName("graft_q94_sink")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      val dropped = s.table("graft_q94_sink").distinct()
+      val dropped = drainToMemory(s, "graft_q94_sink", markers, "append").distinct()
         .withColumnRenamed("id", "doc_id")
       t(s, dir, "documents").join(dropped, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"))
@@ -162,10 +137,7 @@ object StreamQueries {
     // sides bound the join state; the batch oracle is the same range join
     QuerySpec("q96_stream_join", (s0, dir) => {
       val s = streamSession(s0) // memoized scoped child, see q58
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      def stream() = Tables.normalizeEventTs(
-        graft.streaming.Streams.readStream(s, dir, rawSchema,
-          glob = Some("events.parquet")))
+      def stream() = eventStream(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val clicks = stream().filter(col("event_type") === "click")
       val views = stream().filter(col("event_type") === "view")
@@ -173,13 +145,7 @@ object StreamQueries {
           clicks, views, "user_id", "ts", window = "6 HOUR")
         .select(col("l_event_id").as("click_id"), col("r_event_id").as("view_id"),
           col("l_user_id").as("user_id"))
-      freshMemorySink(s, "graft_q96_sink")
-      val sq = joined.writeStream.format("memory").queryName("graft_q96_sink")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      s.table("graft_q96_sink").orderBy(col("click_id"), col("view_id"))
+      drainToMemory(s, "graft_q96_sink", joined, "append").orderBy(col("click_id"), col("view_id"))
     }, Sql(
       """SELECT c.event_id AS click_id, v.event_id AS view_id, c.user_id
         |FROM events c JOIN events v
@@ -197,19 +163,11 @@ object StreamQueries {
     QuerySpec("q140_stream_quota", (s0, dir) => {
       val s = streamSession(s0) // memoized scoped child, see q58
       import s.implicits._
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val raw = graft.streaming.Streams.readStream(s, dir, rawSchema,
-        glob = Some("events.parquet"))
-      val ev = Tables.normalizeEventTs(raw)
+      val ev = eventStream(s, dir)
         .select(col("user_id"), col("event_id"), col("ts_ns"))
         .as[graft.streaming.Streams.QuotaEvt]
       val kept = graft.streaming.Streams.quotaStream(ev, quota = 5)
-      freshMemorySink(s, "graft_q140_sink")
-      val sq = kept.toDF().writeStream.format("memory")
-        .queryName("graft_q140_sink").outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      sq.awaitTermination()
-      s.table("graft_q140_sink")
+      drainToMemory(s, "graft_q140_sink", kept.toDF(), "append")
         .select(col("user_id"), col("event_id"), col("ts_ns"))
         .orderBy(col("user_id"), col("ts_ns"), col("event_id"))
     }, Sql(
@@ -227,19 +185,11 @@ object StreamQueries {
     QuerySpec("q124_stream_scd2", (s0, dir) => {
       val s = streamSession(s0) // memoized scoped child, see q58
       import s.implicits._
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val raw = graft.streaming.Streams.readStream(s, dir, rawSchema,
-        glob = Some("events.parquet"))
-      val ev = Tables.normalizeEventTs(raw)
+      val ev = eventStream(s, dir)
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts_ns"))
         .as[graft.streaming.Streams.Scd2Evt]
       val closed = graft.streaming.Streams.scd2Stream(ev)
-      freshMemorySink(s, "graft_q124_sink")
-      val sq = closed.toDF().writeStream.format("memory")
-        .queryName("graft_q124_sink").outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      sq.awaitTermination()
-      s.table("graft_q124_sink")
+      drainToMemory(s, "graft_q124_sink", closed.toDF(), "append")
         .orderBy(col("user_id"), col("valid_from"), col("event_type"))
     }, Sql(
       """WITH e AS (SELECT user_id, event_id, event_type,
@@ -281,14 +231,9 @@ object StreamQueries {
         static.schema, glob = Some("documents.parquet"))
       val curBinned = graft.ops.Stats.psiBinnedCounts(
         raw.filter(col("lang") === "zh"), "n_chars", mn, w, 10)
-      freshMemorySink(s, "graft_q175_sink")
-      val sq = curBinned.writeStream.format("memory").queryName("graft_q175_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
+      val cur = drainToMemory(s, "graft_q175_sink", curBinned, "complete")
       graft.ops.Stats.psiReport(s, baseCounts,
-          s.table("graft_q175_sink").select(col("bin"), col("n")), mn, w, 10)
+          cur.select(col("bin"), col("n")), mn, w, 10)
         .orderBy(col("bin"))
     }, Sql(psiEnZhOracle), streaming = true),
 
@@ -303,19 +248,10 @@ object StreamQueries {
     // plain batch aggregation + the p170/q09 derivations
     QuerySpec("q172_stream_moments", (s0, dir) => {
       val s = streamSession(s0)
-      val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-      val raw = graft.streaming.Streams.readStream(s, dir, rawSchema,
-        glob = Some("events.parquet"))
-      val ev = Tables.normalizeEventTs(raw)
+      val ev = eventStream(s, dir)
       val sk = graft.ops.Stats.momentsSketchBy(ev, Seq("event_type"), "value")
-      freshMemorySink(s, "graft_q172_sink")
-      val sq = sk.writeStream.format("memory").queryName("graft_q172_sink")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      sq.awaitTermination()
-      graft.ops.Stats.momentsReport(s.table("graft_q172_sink"),
-          keys = Seq("event_type"))
+      graft.ops.Stats.momentsReport(
+          drainToMemory(s, "graft_q172_sink", sk, "complete"), keys = Seq("event_type"))
         .orderBy(col("event_type"))
     }, Sql(
       """WITH m AS (SELECT event_type, count(value) AS n,
@@ -339,7 +275,17 @@ object StreamQueries {
   private def streamSession(s0: SparkSession): SparkSession =
     childSession(s0, "stream8", "spark.sql.shuffle.partitions" -> "8")
 
-  /** Memory-sink hygiene for the SHARED stream session (r16 review): with
+  /** The events table as a file stream (glob-filtered out of the table
+    * directory), `ts` normalized as in the batch table. */
+  private def eventStream(s: SparkSession, dir: String): DataFrame =
+    Tables.normalizeEventTs(graft.streaming.Streams.readStream(s, dir,
+      s.read.parquet(s"$dir/events.parquet").schema, glob = Some("events.parquet")))
+
+  /** One AvailableNow run of `df` into the memory sink `name`, returning
+    * the sink's table. The checkpoint is a fresh scratch dir, deleted once
+    * the run has terminated, so no run resumes an earlier one.
+    *
+    * Memory-sink hygiene for the SHARED stream session: with
     * newSession()-per-run each run's sink view died with its session; the
     * memoized child retains them, so before (re)starting a fixed-name
     * memory sink we stop any still-active query of that name (an
@@ -348,8 +294,16 @@ object StreamQueries {
     * rep's MemorySink rows). Callers must consume a run's result before
     * the NEXT invocation of the same query — true of every driver surface
     * (Bench counts, Verify writes, specs collect, each before moving on). */
-  private def freshMemorySink(s: SparkSession, name: String): Unit = {
+  private def drainToMemory(s: SparkSession, name: String, df: DataFrame,
+                            mode: String): DataFrame = {
     s.streams.active.filter(q => q.name == name).foreach(_.stop())
-    s.catalog.dropTempView(name): Unit
+    s.catalog.dropTempView(name)
+    val ck = scratchDir("ckpt")
+    df.writeStream.format("memory").queryName(name).outputMode(mode)
+      .option("checkpointLocation", ck)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ck))
+    s.table(name)
   }
 }

@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 class BenchSpec extends SparkSpec {
 
   test("Bench.run: a storm suspect is re-run once, uncensored, at the end drain") {
-    val dir = Files.createTempDirectory("graft-bench")
+    val dir = tempDir()
     val (storm, calm) = ("d22_jaccard_pairs", "q01_pricing_summary")
     val hostName = java.net.InetAddress.getLocalHost.getHostName
     // a same-sf, same-host prior: storm's warm min at sf0.001 (0.5–1 s on

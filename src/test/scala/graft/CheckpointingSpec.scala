@@ -18,26 +18,16 @@ class CheckpointingSpec extends SparkSpec {
   import spark.implicits._
 
   /** Suite-lifetime checkpoint dir: tests that point the shared session's
-    * context at a per-test temp dir MUST reset here in `finally` BEFORE
-    * deleting that dir — the checkpoint dir is JVM-global state on the
-    * shared session, and any later checkpoint (this suite or another)
-    * would otherwise write into a deleted directory. (Suites run serially
-    * under sbt's single test JVM — SparkSpec's documented contract — so no
-    * parallel test can observe the mid-test mutation.) */
+    * context at a per-test [[tempDir]] MUST reset here in `finally` —
+    * the checkpoint dir is JVM-global state on the shared session, and any
+    * later checkpoint (this suite or another) would otherwise write into a
+    * deleted directory. (Suites run serially under sbt's single test JVM —
+    * SparkSpec's documented contract — so no parallel test can observe the
+    * mid-test mutation.) The dir must outlive this suite, so it is a plain
+    * scratch dir, deleted with the scratch root at JVM exit. */
   private lazy val suiteCkptDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_spec_ckpt").toString
+    val d = graft.query.Shared.scratchDir("spec_ckpt")
     spark.sparkContext.setCheckpointDir(d)
-    // the dir must outlive this suite (the checkpoint dir is JVM-global —
-    // later suites write into it), so it can't be deleted in afterAll;
-    // a shutdown hook bounds the on-disk leak to the JVM lifetime
-    sys.addShutdownHook {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p))
-          scala.util.Using.resource(java.nio.file.Files.list(p))(_.forEach(rm(_)))
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      try rm(java.nio.file.Paths.get(d)) catch { case _: Exception => () }
-    }
     d
   }
 
@@ -115,7 +105,7 @@ class CheckpointingSpec extends SparkSpec {
     assert(local.count() == 40)
     // flagged: real checkpoint files (executor churn re-reads files instead
     // of recomputing the composed pass's shared prefix — p90/p91's tier)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stage_ckpt")
+    val dir = tempDir()
     spark.sparkContext.setCheckpointDir(dir.toString)
     System.setProperty("graft.stage.reliableCheckpoint", "1")
     try {
@@ -129,12 +119,11 @@ class CheckpointingSpec extends SparkSpec {
     } finally {
       System.clearProperty("graft.stage.reliableCheckpoint")
       spark.sparkContext.setCheckpointDir(suiteCkptDir) // before deleting the active dir
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }
 
   test("reliable tier writes real checkpoint files eagerly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir().toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val t = new ops.Checkpointing.Truncator(reliable = true)
@@ -158,7 +147,6 @@ class CheckpointingSpec extends SparkSpec {
       assert(out2.count() == 600)
     } finally {
       spark.sparkContext.setCheckpointDir(suiteCkptDir) // before deleting the active dir
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }
 
@@ -170,7 +158,7 @@ class CheckpointingSpec extends SparkSpec {
         .select("lang", "n_docs").as[(String, Long)].collect().toSeq
     val local = run()
     assert(local.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("graft_p90_ckpt")
+    val dir = tempDir()
     spark.sparkContext.setCheckpointDir(dir.toString)
     System.setProperty("graft.stage.reliableCheckpoint", "1")
     try {
@@ -178,7 +166,6 @@ class CheckpointingSpec extends SparkSpec {
     } finally {
       System.clearProperty("graft.stage.reliableCheckpoint")
       spark.sparkContext.setCheckpointDir(suiteCkptDir) // before deleting the active dir
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }
 }

@@ -9,7 +9,7 @@ import java.nio.file.{Files, Path}
 class CsvSpec extends SparkSpec {
 
   private def tmpCsv(content: String): String = {
-    val p: Path = Files.createTempFile("graft_test", ".csv")
+    val p: Path = tempDir().resolve("t.csv")
     Files.writeString(p, content)
     p.toString
   }
@@ -107,7 +107,7 @@ class CsvSpec extends SparkSpec {
   test("sniffEncoding fallback chain (decode.rs:9-21)") {
     val utf8 = tmpCsv("a,b\nx,1\n")
     assert(Csv.sniffEncoding(utf8) == "UTF-8")
-    val latin = Files.createTempFile("graft_latin", ".csv")
+    val latin = tempDir().resolve("latin.csv")
     Files.write(latin, "a,b\ncaf\u00e9,1\n".getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
     assert(Csv.sniffEncoding(latin.toString) == "ISO-8859-1")
   }
@@ -116,15 +116,15 @@ class CsvSpec extends SparkSpec {
     // '\u00e9' is 2 bytes in UTF-8; sampleBytes = 4 cuts between its lead and
     // continuation bytes \u2014 without the tail trim the strict decoder fails
     // and a valid UTF-8 file is misdetected as a single-byte charset
-    val p = Files.createTempFile("graft_boundary", ".csv")
+    val p = tempDir().resolve("boundary.csv")
     Files.write(p, "abc\u00e9x,1\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     assert(Csv.sniffEncoding(p.toString, sampleBytes = 4) == "UTF-8")
     // a 3-byte char cut after 2 of its bytes
-    val p3 = Files.createTempFile("graft_boundary3", ".csv")
+    val p3 = tempDir().resolve("boundary3.csv")
     Files.write(p3, "ab\u20ac,1\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     assert(Csv.sniffEncoding(p3.toString, sampleBytes = 4) == "UTF-8")
     // trim never eats complete content: full-buffer sample of pure ASCII
-    val pa = Files.createTempFile("graft_ascii", ".csv")
+    val pa = tempDir().resolve("ascii.csv")
     Files.write(pa, "abcd".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
     assert(Csv.sniffEncoding(pa.toString, sampleBytes = 4) == "UTF-8")
   }
@@ -132,7 +132,7 @@ class CsvSpec extends SparkSpec {
   test("roundtrip: write then load preserves values") {
     import spark.implicits._
     val df = Seq((1L, "a", 1.5), (2L, "b", -2.25)).toDF("id", "s", "v")
-    val dir = Files.createTempDirectory("graft_rt").toString
+    val dir = tempDir().toString
     Csv.write(df.coalesce(1), dir)
     val back = Csv.load(spark, dir, dialect = Some(CsvDialect(',', 0, header = true)))
     assert(back.orderBy("id").collect().map(_.toSeq).toSeq ==
@@ -144,7 +144,7 @@ class CsvSpec extends SparkSpec {
     // the idempotent-reprocessing contract q78's layout relies on: re-running
     // one day's job must replace that day's directory and NOTHING else
     // (static overwrite mode would wipe every other partition)
-    val dir = Files.createTempDirectory("graft_dpo").toString
+    val dir = tempDir().toString
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
@@ -168,7 +168,7 @@ class CsvSpec extends SparkSpec {
     val n = docs.count()
     val target = 20L
     val expectFiles = ((n + target - 1) / target).toInt
-    val dir = Files.createTempDirectory("graft_compact_spec").toString
+    val dir = tempDir().toString
     val reported = Sinks.writeCompacted(docs, s"$dir/out", target)
     assert(reported == expectFiles)
     val parts = new java.io.File(s"$dir/out").listFiles
@@ -184,7 +184,7 @@ class CsvSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val rows = Seq((1L, "a < b & c > d"), (2L, "\"quoted\" 'text'"), (3L, "plain"))
-    val dir = Files.createTempDirectory("graft_xml_spec").toString
+    val dir = tempDir().toString
     rows.toDF("id", "s").coalesce(1).write.mode("overwrite")
       .option("rowTag", "row").format("xml").save(dir)
     val schema = StructType(Seq(
@@ -197,7 +197,7 @@ class CsvSpec extends SparkSpec {
 
   test("JDBC (embedded Derby): sharded partition-column read equals the table") {
     import spark.implicits._
-    val db = Files.createTempDirectory("graft_derby_spec").resolve("db").toString
+    val db = tempDir().resolve("db").toString
     val url = s"jdbc:derby:$db;create=true"
     val props = new java.util.Properties
     val df = (1L to 100L).map(i => (i, s"n$i", i * 1.5)).toDF("id", "name", "v")

@@ -166,7 +166,7 @@ class PipelineSpec extends SparkSpec {
       df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
     // the bandSignatures store round-trips through parquet bit-for-bit:
     // probing stored history signatures = recomputing them from text
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sigs").toString
+    val tmp = tempDir().toString
     Dedup.bandSignatures(history, "doc_id", "text").write.mode("overwrite").parquet(tmp)
     val viaStore = set(Dedup.incrementalMinHashLsh(batch, history, "doc_id", "text",
       historySigs = Some(spark.read.parquet(tmp)), verifyThreshold = 0.8))
@@ -1153,7 +1153,7 @@ class PipelineSpec extends SparkSpec {
 
   test("connectedComponents with a reliable checkpoint dir matches localCheckpoint") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ck").toString
+    val dir = tempDir().toString
     val got = Dedup.connectedComponents(edges, "id_a", "id_b",
         checkpointDir = Some(dir))
       .orderBy("node").as[(Long, Long)].collect().toSeq
@@ -1170,7 +1170,7 @@ class PipelineSpec extends SparkSpec {
     val docs = core.Tables.documents(spark, sf("sf0.001"))
     val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.8)
       .select(col("id_a"), col("id_b"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_d73").toString
+    val dir = tempDir().toString
     def flow(cc: org.apache.spark.sql.DataFrame) = {
       val sizes = cc.groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
       cc.join(sizes, "component")
@@ -1187,7 +1187,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("binaryFile ingestion: attachBinaryFiles → extractFeatures (production entry path)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bin")
+    val tmp = tempDir()
     Seq("a.bin" -> "alpha payload", "b.bin" -> "beta").foreach { case (n, s) =>
       java.nio.file.Files.write(tmp.resolve(n), s.getBytes("UTF-8")) }
     val files = spark.read.format("binaryFile").load(tmp.toString)

@@ -85,34 +85,27 @@ class ProtoSpec extends SparkSpec {
     val src = core.Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         col("o_orderpriority"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_proto").toString
-    try {
-      Proto.writeProto(src.repartition(4), tmp)
-      assert(new java.io.File(s"$tmp/_SUCCESS").exists(), "_SUCCESS marker")
-      val schema = StructType(Seq(
-        StructField("o_orderkey", LongType), StructField("o_orderstatus", StringType),
-        StructField("o_totalprice", DoubleType), StructField("o_orderpriority", StringType)))
-      val back = Proto.readProto(spark, tmp, schema)
-      assert(back.count() == src.count())
-      // exact content equality, both directions
-      assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
-      // reader parallelism = file count (4 non-empty write partitions)
-      assert(back.rdd.getNumPartitions >= 1)
-      // the task-commit protocol leaves no attempt temp files behind
-      assert(!new java.io.File(tmp).listFiles().exists(_.getName.endsWith(".tmp")))
-      // an UNCOMMITTED layout (no _SUCCESS) must fail loudly, not return
-      // a silently truncated dataset (r17 review)
-      assert(new java.io.File(s"$tmp/_SUCCESS").delete())
-      val ex = intercept[IllegalArgumentException] {
-        Proto.readProto(spark, tmp, schema)
-      }
-      assert(ex.getMessage.contains("_SUCCESS"))
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(new java.io.File(tmp))
+    val tmp = tempDir().toString
+    Proto.writeProto(src.repartition(4), tmp)
+    assert(new java.io.File(s"$tmp/_SUCCESS").exists(), "_SUCCESS marker")
+    val schema = StructType(Seq(
+      StructField("o_orderkey", LongType), StructField("o_orderstatus", StringType),
+      StructField("o_totalprice", DoubleType), StructField("o_orderpriority", StringType)))
+    val back = Proto.readProto(spark, tmp, schema)
+    assert(back.count() == src.count())
+    // exact content equality, both directions
+    assert(back.exceptAll(src).isEmpty && src.exceptAll(back).isEmpty)
+    // reader parallelism = file count (4 non-empty write partitions)
+    assert(back.rdd.getNumPartitions >= 1)
+    // the task-commit protocol leaves no attempt temp files behind
+    assert(!new java.io.File(tmp).listFiles().exists(_.getName.endsWith(".tmp")))
+    // an UNCOMMITTED layout (no _SUCCESS) must fail loudly, not return
+    // a silently truncated dataset
+    assert(new java.io.File(s"$tmp/_SUCCESS").delete())
+    val ex = intercept[IllegalArgumentException] {
+      Proto.readProto(spark, tmp, schema)
     }
+    assert(ex.getMessage.contains("_SUCCESS"))
   }
 
   test("q161 driver row: spark result matches the parquet-born slice") {

@@ -528,7 +528,7 @@ class ScaleJoinsSpec extends SparkSpec {
   test("ann partitioned index: bucket= dirs prune at the scan; result ≡ in-memory lshPqTopK") {
     val e = core.Tables.embeddings(spark, sf("sf0.001"))
     val cb = ops.Similarity.pqCodebook(8, 16, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_spec").toString
+    val dir = tempDir().toString
     ops.Similarity.writeAnnIndex(e, "vec_id", "embedding", cb,
       planes = 2, dim = 64, path = dir)
     val nParts = new java.io.File(dir).listFiles().count(_.getName.startsWith("bucket="))
@@ -569,7 +569,7 @@ class ScaleJoinsSpec extends SparkSpec {
   test("appendAnnIndex: grown layout ≡ full rebuild ≡ in-memory; existing files untouched") {
     val e = core.Tables.embeddings(spark, sf("sf0.001"))
     val cb = ops.Similarity.pqCodebook(8, 16, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_incr").toString
+    val dir = tempDir().toString
     // base = 80% of the corpus; batch = the remaining 20%
     ops.Similarity.writeAnnIndex(e.filter(col("vec_id") % 5 =!= 0),
       "vec_id", "embedding", cb, planes = 2, dim = 64, path = dir)

@@ -8,6 +8,24 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.Engine.session("local[4]", 4)
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  private var testDirs = List.empty[java.io.File]
+
+  /** A fresh, empty directory for the running test, under the JVM's
+    * scratch root; it is deleted with everything under it when the test
+    * ends, pass or fail. */
+  def tempDir(): java.nio.file.Path = {
+    val d = java.nio.file.Paths.get(graft.query.Shared.scratchDir("test"))
+    testDirs ::= d.toFile
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally {
+      testDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+      testDirs = Nil
+    }
 }
 
 /** Reference test fixtures (FIXTURES.md; agnes src/test_utils.rs:9-137).

@@ -154,7 +154,7 @@ class StreamingSpec extends SparkSpec {
   test("writeStreamParquet: file sink lands rows with checkpointing") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Event]
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val dir = tempDir().toString
     val q = Streams.writeStreamParquet(mem.toDF(), s"$dir/out", s"$dir/ckpt", triggerMs = 100)
     try {
       mem.addData(batch: _*)
