@@ -35,38 +35,17 @@ case class BloomBitsetContains(child: Expression, words: Broadcast[Array[Long]])
       s"bloom_bitset_contains requires array<bigint> positions, got $t")
   }
 
-  override def nullSafeEval(positions: Any): Any = {
-    val arr = positions.asInstanceOf[ArrayData]
-    val w = words.value
-    var i = 0
-    while (i < arr.numElements()) {
-      val p = arr.getLong(i)
-      if (((w((p >>> 6).toInt) >>> (p & 63L)) & 1L) == 0L) return false
-      i += 1
-    }
-    true
-  }
+  override def nullSafeEval(positions: Any): Any =
+    BloomExpressions.containsAll(positions.asInstanceOf[ArrayData], words.value)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // the broadcast handle rides the references array; its value() is
     // resolved ONCE per task into a plain long[] field, so the per-row code
-    // is just shifts and masks
+    // is one call over that array
     val bcRef = ctx.addReferenceObj("bloomBitsetBc", words)
     val w = ctx.addMutableState("long[]", "bloomBitsetWords",
       v => s"$v = (long[]) $bcRef.value();")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      s"""
-         |${ev.value} = true;
-         |for (int $i = 0; $i < $arr.numElements(); $i++) {
-         |  long $p = $arr.getLong($i);
-         |  if ((($w[(int)($p >>> 6)] >>> ($p & 63L)) & 1L) == 0L) {
-         |    ${ev.value} = false; break;
-         |  }
-         |}
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.functions.BloomExpressions.containsAll($arr, $w)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -74,6 +53,17 @@ case class BloomBitsetContains(child: Expression, words: Broadcast[Array[Long]])
 }
 
 object BloomExpressions {
+
+  /** The probe kernel: true iff every position's bit is set in `words`. */
+  def containsAll(positions: ArrayData, words: Array[Long]): Boolean = {
+    var i = 0
+    while (i < positions.numElements()) {
+      val p = positions.getLong(i)
+      if (((words((p >>> 6).toInt) >>> (p & 63L)) & 1L) == 0L) return false
+      i += 1
+    }
+    true
+  }
 
   /** One Broadcast per distinct bitset ARRAY (identity-keyed): the
     * documented usage probes many arriving batches against one history
@@ -92,10 +82,10 @@ object BloomExpressions {
 
   /** Broadcast `words` (or reuse the live broadcast for this exact array)
     * and return a probe Column over `positions` (array<bigint> of bit
-    * positions). Registry-based construction keeps us on the public Column
-    * surface (same pattern as [[VectorExpressions.cosineNative]]); the
-    * function name embeds the broadcast id so concurrent probes over
-    * different bitsets never clobber each other's builder. */
+    * positions) through [[Registry.call]]; the function name embeds the
+    * broadcast id, so concurrent probes over different bitsets never
+    * clobber each other's builder and repeat probes of one bitset register
+    * it once. */
   def bitsetContains(spark: SparkSession, positions: Column,
                      words: Array[Long]): Column = {
     val bc = broadcasts.synchronized {
@@ -103,9 +93,7 @@ object BloomExpressions {
       if (b == null) { b = spark.sparkContext.broadcast(words); broadcasts.put(words, b) }
       b
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name(bc), exprs => BloomBitsetContains(exprs.head, bc), "built-in")
-    org.apache.spark.sql.functions.call_function(name(bc), positions)
+    Registry.call(spark, name(bc), exprs => BloomBitsetContains(exprs.head, bc), positions)
   }
 
   /** Eagerly reclaim the probe's executor memory for `words`: unregister

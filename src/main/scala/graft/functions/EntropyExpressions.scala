@@ -29,7 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Per-row projection only: no exchange, no state — at 100 TB this is a
   * pure map over the scan, and the expression stays inside whole-stage
   * codegen (the generated code is one static call into the tight count
-  * loop below, the [[PqExpressions]] precedent).
+  * loop below, which eval runs too — the shape of every graft native, see
+  * [[ShingleKernel]]).
   */
 object EntropyExpressions {
 
@@ -111,13 +112,9 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val v = ctx.freshName("v")
-      s"""
-         |double $v = graft.functions.EntropyExpressions.charEntropyOf($s);
-         |if (Double.isNaN($v)) { ${ev.isNull} = true; } else { ${ev.value} = $v; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, s =>
+      s"""${ev.value} = graft.functions.EntropyExpressions.charEntropyOf($s);
+         |${ev.isNull} = Double.isNaN(${ev.value});""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -143,13 +140,9 @@ case class TokenEntropy(child: Expression) extends UnaryExpression {
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val v = ctx.freshName("v")
-      s"""
-         |double $v = graft.functions.EntropyExpressions.tokenEntropyOf($a);
-         |if (Double.isNaN($v)) { ${ev.isNull} = true; } else { ${ev.value} = $v; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = graft.functions.EntropyExpressions.tokenEntropyOf($a);
+         |${ev.isNull} = Double.isNaN(${ev.value});""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3,13 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** `lsh_buckets(array<float>, planes, tables, dim) → array<bigint>`: all
-  * `tables` sign-signature LSH bucket ids in ONE codegen'd pass over the
-  * vector.
+  * `tables` sign-signature LSH bucket ids in ONE pass over the vector.
   *
   * The composable formulation ([[graft.ops.Similarity.lshBucket]]'s
   * per-plane `aggregate(zip_with(vec, weights), 0.0, +)`) runs
@@ -29,10 +28,10 @@ import org.apache.spark.sql.types._
   * against matrix row t·planes+p is >= 0. A null vector element poisons
   * every projection to SQL NULL exactly like `zip_with`'s null product —
   * every sign test fails — so the row lands in bucket 0 of every table.
-  * Callers keep the `requireDim` guard OUTSIDE this expression: a
-  * dim/data mismatch must raise before evaluation, never silently
-  * truncate (the expression itself reads min(len, dim) elements only as
-  * defense in depth).
+  * Callers keep the `requireDim` guard OUTSIDE this expression, so a
+  * dim/data mismatch raises before evaluation with the caller's message;
+  * the kernel [[LshExpressions.lshBucketsOf]] (which eval and the one-call
+  * generated code share) raises on a mismatch too, never truncating.
   */
 case class LshBuckets(child: Expression, planes: Int, tables: Int, dim: Int)
     extends UnaryExpression {
@@ -56,60 +55,46 @@ case class LshBuckets(child: Expression, planes: Int, tables: Int, dim: Int)
     out
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = math.min(v.numElements(), dim)
-    val out = new Array[Long](tables)
-    var hasNull = false
-    var i = 0
-    while (i < n && !hasNull) { hasNull = v.isNullAt(i); i += 1 }
-    if (!hasNull) {
-      val pt = planes * tables
-      var p = 0
-      while (p < pt) {
-        var acc = 0.0
-        val off = p * dim
-        var j = 0
-        while (j < n) { acc += v.getFloat(j).toDouble * flatMatrix(off + j); j += 1 }
-        if (acc >= 0) out(p / planes) |= 1L << (p % planes)
-        p += 1
-      }
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    LshExpressions.lshBucketsOf(input.asInstanceOf[ArrayData], flatMatrix, planes, tables, dim)
 
-  // janino: raw types, fully-qualified names; the flattened matrix rides
-  // along as a referenced object (one per generated class, read-only)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val mat = ctx.addReferenceObj("lshMat", flatMatrix, "double[]")
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val out = ctx.freshName("out"); val hasNull = ctx.freshName("hasNull")
-      val p = ctx.freshName("p"); val acc = ctx.freshName("acc"); val off = ctx.freshName("off")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |long[] $out = new long[$tables];
-         |boolean $hasNull = false;
-         |for (int $i = 0; $i < $n && !$hasNull; $i++) $hasNull = $a.isNullAt($i);
-         |if (!$hasNull) {
-         |  for (int $p = 0; $p < ${planes * tables}; $p++) {
-         |    double $acc = 0.0;
-         |    int $off = $p * $dim;
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      $acc += ((double) $a.getFloat($j)) * $mat[$off + $j];
-         |    }
-         |    if ($acc >= 0) $out[$p / $planes] |= 1L << ($p % $planes);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  // the flattened matrix rides along as a referenced object (one per
+  // generated class, read-only)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val mat = ctx.addReferenceObj("lshMat", flatMatrix, "double[]")
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.LshExpressions.lshBucketsOf($a, $mat, $planes, $tables, $dim)")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object LshExpressions {
+  /** The bucket kernel over the row-major `planes·tables × dim` matrix. */
+  def lshBucketsOf(v: ArrayData, mat: Array[Double], planes: Int, tables: Int,
+                   dim: Int): ArrayData = {
+    val n = v.numElements()
+    if (n != dim)
+      throw new IllegalArgumentException(s"lsh_buckets: vector length $n != dim $dim")
+    val out = new Array[Long](tables)
+    var hasNull = false
+    var i = 0
+    while (i < n && !hasNull) { hasNull = v.isNullAt(i); i += 1 }
+    if (!hasNull) {
+      var p = 0
+      while (p < planes * tables) {
+        var acc = 0.0
+        val off = p * dim
+        var j = 0
+        while (j < n) { acc += v.getFloat(j).toDouble * mat(off + j); j += 1 }
+        if (acc >= 0) out(p / planes) |= 1L << (p % planes)
+        p += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
   /** A Column invoking `lsh_buckets` ([[Registry.call]]). planes/tables/dim
     * ride as int literals and are folded into the expression at
     * resolution. */

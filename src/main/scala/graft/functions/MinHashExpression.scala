@@ -3,13 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /** `min_hash64(array<string>, k) → array<bigint>`: all `k` seeded MinHash
-  * minima of a document's shingle set in ONE codegen'd pass — no explode,
-  * no aggregate, no exchange.
+  * minima of a document's shingle set in ONE pass — no explode, no
+  * aggregate, no exchange. Eval and the generated code both call the
+  * kernel [[MinHashExpression.minHash64Of]].
   *
   * A MinHash signature is a per-DOCUMENT statistic (k seeded-hash minima
   * over the doc's shingles), so — like [[SimHash60]] — it never needed
@@ -46,17 +47,32 @@ case class MinHash64(child: Expression, numHashes: Int, bands: Int = 0)
       s"min_hash64 requires array<string>, got $other")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
+  override def nullSafeEval(input: Any): Any =
+    MinHashExpression.minHash64Of(input.asInstanceOf[ArrayData], numHashes, bands)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""${ev.value} = graft.functions.MinHashExpression.minHash64Of($a, $numHashes, $bands);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinHashExpression {
+  /** The signature kernel: the k minima (or `bands` banded hashes) of
+    * `shingles`; null when the array is empty. */
+  def minHash64Of(shingles: ArrayData, numHashes: Int, bands: Int): ArrayData = {
+    val n = shingles.numElements()
     if (n == 0) return null
-    val mins = Array.fill(numHashes)(Long.MaxValue)
+    val mins = new Array[Long](numHashes)
+    java.util.Arrays.fill(mins, Long.MaxValue)
     var i = 0
     while (i < n) {
       val h =
-        if (arr.isNullAt(i)) 42L
+        if (shingles.isNullAt(i)) 42L
         else {
-          val t = arr.getUTF8String(i)
+          val t = shingles.getUTF8String(i)
           XXH64.hashUnsafeBytes(t.getBaseObject, t.getBaseOffset, t.numBytes, 42L)
         }
       val base = XXH64.hashLong(h, 42L)
@@ -68,77 +84,20 @@ case class MinHash64(child: Expression, numHashes: Int, bands: Int = 0)
       }
       i += 1
     }
-    if (bands == 0) new GenericArrayData(mins)
-    else {
-      val r = numHashes / bands
-      val out = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var hash = 42L
-        var j = 0
-        while (j < r) { hash = XXH64.hashLong(mins(b * r + j), hash); j += 1 }
-        out(b) = hash
-        b += 1
-      }
-      new GenericArrayData(out)
+    if (bands == 0) return UnsafeArrayData.fromPrimitiveArray(mins)
+    val r = numHashes / bands
+    val out = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var hash = 42L
+      var j = 0
+      while (j < r) { hash = XXH64.hashLong(mins(b * r + j), hash); j += 1 }
+      out(b) = hash
+      b += 1
     }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  // janino: raw types, fully-qualified names
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = "org.apache.spark.sql.catalyst.expressions.XXH64"
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val mins = ctx.freshName("mins"); val t = ctx.freshName("t")
-      val h = ctx.freshName("h"); val base = ctx.freshName("base"); val s = ctx.freshName("s")
-      val result =
-        if (bands == 0)
-          s"${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);"
-        else {
-          val r = numHashes / bands
-          val out = ctx.freshName("out"); val b = ctx.freshName("b")
-          val bh = ctx.freshName("bh"); val k = ctx.freshName("k")
-          s"""
-             |long[] $out = new long[$bands];
-             |for (int $b = 0; $b < $bands; $b++) {
-             |  long $bh = 42L;
-             |  for (int $k = 0; $k < $r; $k++) $bh = $xxh.hashLong($mins[$b * $r + $k], $bh);
-             |  $out[$b] = $bh;
-             |}
-             |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           """.stripMargin
-        }
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $mins = new long[$numHashes];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $h;
-         |    if ($a.isNullAt($i)) {
-         |      $h = 42L;
-         |    } else {
-         |      UTF8String $t = $a.getUTF8String($i);
-         |      $h = $xxh.hashUnsafeBytes($t.getBaseObject(), $t.getBaseOffset(), $t.numBytes(), 42L);
-         |    }
-         |    long $base = $xxh.hashLong($h, 42L);
-         |    for (int $j = 0; $j < $numHashes; $j++) {
-         |      long $s = $xxh.hashInt($j, $base);
-         |      if ($s < $mins[$j]) $mins[$j] = $s;
-         |    }
-         |  }
-         |  $result
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MinHashExpression {
   /** A Column invoking `min_hash64` ([[Registry.call]]). `bands = 0` returns the k raw
     * minima; `bands > 0` returns the banded signatures directly (ONE
     * output array — callers must keep the expression referenced exactly

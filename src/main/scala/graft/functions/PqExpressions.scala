@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the product-quantization distance table:
@@ -17,10 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * produces a multi-hundred-KB whole-stage-codegen source whose JANINO
   * COMPILE dominates the query (measured ~10 s per fresh plan at sf0.1 —
   * the arithmetic itself is microseconds); and expression trees that large
-  * can silently fall out of codegen entirely. Here the generated code is a
-  * constant-size triple loop over a referenced `double[]` — compiles
-  * instantly, runs vectorizable-tight, and both PQ encoding (argmin per
-  * table row) and ADC lookups downstream become small generic array ops.
+  * can silently fall out of codegen entirely. Here the generated code is
+  * one call into the kernel [[PqExpressions.pqDistTableOf]] (a triple loop
+  * over a referenced `double[]`, which eval runs too) — compiles
+  * instantly, and both PQ encoding (argmin per table row) and ADC lookups
+  * downstream become small generic array ops.
   *
   * The codebook rides as a structurally-comparable `Seq[Double]`
   * constructor field (NOT an Array — case-class equality on arrays is
@@ -43,11 +44,26 @@ case class PqDistTable(child: Expression, codebook: Seq[Double], m: Int, kc: Int
           s"pq_dist_table requires array<float>, got $other")
     }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    PqExpressions.pqDistTableOf(input.asInstanceOf[ArrayData], cb, m, kc, subDim)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cbRef = ctx.addReferenceObj("pqcb", cb, "double[]")
+    defineCodeGen(ctx, ev, v =>
+      s"graft.functions.PqExpressions.pqDistTableOf($v, $cbRef, $m, $kc, $subDim)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object PqExpressions {
+  /** The distance-table kernel over the flat `m × kc × subDim` codebook. */
+  def pqDistTableOf(v: ArrayData, cb: Array[Double], m: Int, kc: Int,
+                    subDim: Int): ArrayData = {
     // guard the geometry explicitly: a short/long vector would otherwise
     // surface as an opaque ArrayIndexOutOfBoundsException from deep inside
-    // the (generated) triple loop, with no hint which column was wrong
+    // the triple loop, with no hint which column was wrong
     if (v.numElements() != m * subDim)
       throw new IllegalArgumentException(
         s"pq_dist_table: vector length ${v.numElements()} != m*subDim = ${m * subDim}")
@@ -69,44 +85,9 @@ case class PqDistTable(child: Expression, codebook: Seq[Double], m: Int, kc: Int
       }
       s += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqcb", cb, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out"); val s = ctx.freshName("s")
-      val c = ctx.freshName("c"); val j = ctx.freshName("j")
-      val d = ctx.freshName("d"); val x = ctx.freshName("x")
-      val base = ctx.freshName("base")
-      s"""
-         |if ($v.numElements() != ${m * subDim}) {
-         |  throw new IllegalArgumentException(
-         |    "pq_dist_table: vector length " + $v.numElements() +
-         |    " != m*subDim = ${m * subDim}");
-         |}
-         |double[] $out = new double[${m * kc}];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  for (int $c = 0; $c < $kc; $c++) {
-         |    double $d = 0.0;
-         |    int $base = ($s * $kc + $c) * $subDim;
-         |    for (int $j = 0; $j < $subDim; $j++) {
-         |      double $x = (double) $v.getFloat($s * $subDim + $j) - $cbRef[$base + $j];
-         |      $d += $x * $x;
-         |    }
-         |    $out[$s * $kc + $c] = $d;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PqExpressions {
   /** A Column invoking `pq_dist_table` ([[Registry.call]]). The codebook
     * rides as an array<double> literal folded into the expression at
     * resolution — any codebook (md5-grid or trained) works. */

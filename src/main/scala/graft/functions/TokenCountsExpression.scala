@@ -3,13 +3,14 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `token_counts(array<string>) → map<string, bigint>`: per-row term
-  * frequencies in one codegen'd pass over the token array.
+  * frequencies in one pass over the token array: eval and the generated
+  * code both call the kernel [[TokenCountsExpression.tokenCountsOf]].
   *
   * This turns the corpus-level `explode + groupBy(doc, token)` TF shape —
   * whose hash aggregate induces a full corpus shuffle — into a narrow
@@ -36,73 +37,43 @@ case class TokenCounts(child: Expression) extends UnaryExpression {
       s"token_counts requires array<string>, got $other")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val m = new java.util.LinkedHashMap[UTF8String, java.lang.Long]()
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val t = arr.getUTF8String(i)
-        val prev = m.get(t)
-        m.put(t, if (prev == null) 1L else prev + 1L)
-      }
-      i += 1
-    }
-    val sz = m.size()
-    val keys = new Array[Any](sz)
-    val vals = new Array[Any](sz)
-    val it = m.entrySet().iterator()
-    var j = 0
-    while (it.hasNext) {
-      val e = it.next()
-      keys(j) = e.getKey
-      vals(j) = e.getValue.longValue()
-      j += 1
-    }
-    new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals))
-  }
+  override def nullSafeEval(input: Any): Any =
+    TokenCountsExpression.tokenCountsOf(input.asInstanceOf[ArrayData])
 
-  // janino: raw types only (no generics), fully-qualified class names
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val m = ctx.freshName("m"); val t = ctx.freshName("t")
-      val prev = ctx.freshName("prev"); val sz = ctx.freshName("sz")
-      val keys = ctx.freshName("keys"); val vals = ctx.freshName("vals")
-      val it = ctx.freshName("it"); val e = ctx.freshName("e"); val j = ctx.freshName("j")
-      s"""
-         |int $n = $a.numElements();
-         |java.util.LinkedHashMap $m = new java.util.LinkedHashMap();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    UTF8String $t = $a.getUTF8String($i);
-         |    Object $prev = $m.get($t);
-         |    $m.put($t, $prev == null ? (Object) 1L : (Object) (((Long) $prev).longValue() + 1L));
-         |  }
-         |}
-         |int $sz = $m.size();
-         |Object[] $keys = new Object[$sz];
-         |Object[] $vals = new Object[$sz];
-         |java.util.Iterator $it = $m.entrySet().iterator();
-         |int $j = 0;
-         |while ($it.hasNext()) {
-         |  java.util.Map.Entry $e = (java.util.Map.Entry) $it.next();
-         |  $keys[$j] = $e.getKey();
-         |  $vals[$j] = ((Long) $e.getValue()).longValue();
-         |  $j++;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($keys),
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($vals));
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.TokenCountsExpression.tokenCountsOf($a)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object TokenCountsExpression {
+  /** The term-frequency kernel: each distinct non-null token, in first-
+    * occurrence order, to its count. Counts live in one-slot `long[]`
+    * cells, so counting boxes nothing. */
+  def tokenCountsOf(tokens: ArrayData): MapData = {
+    val cells = new java.util.LinkedHashMap[UTF8String, Array[Long]]()
+    var i = 0
+    while (i < tokens.numElements()) {
+      if (!tokens.isNullAt(i)) {
+        val t = tokens.getUTF8String(i)
+        var c = cells.get(t)
+        if (c == null) { c = new Array[Long](1); cells.put(t, c) }
+        c(0) += 1
+      }
+      i += 1
+    }
+    val keys = new Array[Any](cells.size)
+    val counts = new Array[Long](cells.size)
+    val it = cells.entrySet.iterator
+    var j = 0
+    while (it.hasNext) {
+      val e = it.next()
+      keys(j) = e.getKey; counts(j) = e.getValue()(0); j += 1
+    }
+    new ArrayBasedMapData(new GenericArrayData(keys), UnsafeArrayData.fromPrimitiveArray(counts))
+  }
+
   /** A Column invoking `token_counts` ([[Registry.call]]). */
   def tokenCounts(spark: org.apache.spark.sql.SparkSession, arr: Column): Column =
     Registry.call(spark, "token_counts", exprs => TokenCounts(exprs.head), arr)

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -14,8 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * `aggregate` fold, see [[graft.ops.Similarity.cosine]]) materializes three
   * intermediate arrays per comparison; at ANN scale (corpus × queries
   * comparisons) that allocation dominates. This expression fuses the whole
-  * computation into one pass over the two arrays — no intermediates — with
-  * full whole-stage-codegen support via [[doGenCode]].
+  * computation into one pass over the two arrays — no intermediates —
+  * inside whole-stage codegen: the generated code is one call into
+  * [[VectorExpressions.cosineOf]], which eval runs too.
   *
   * Semantics match the composable form bit-for-bit: elements are widened
   * float→double, products accumulated left-to-right, result =
@@ -37,9 +37,19 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorExpressions.cosineOf(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorExpressions.cosineOf($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object VectorExpressions {
+  /** The cosine kernel: one pass over both arrays, no intermediates. */
+  def cosineOf(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -52,28 +62,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val xi = ctx.freshName("xi"); val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = (double) $a.getFloat($i);
-         |  double $yi = (double) $b.getFloat($i);
-         |  $dot += $xi * $yi; $na += $xi * $xi; $nb += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object VectorExpressions {
   /** A Column invoking `cosine_native` ([[Registry.call]]). */
   def cosineNative(spark: org.apache.spark.sql.SparkSession, a: Column, b: Column): Column =
     Registry.call(spark, "cosine_native", exprs => CosineSimilarity(exprs.head, exprs(1)), a, b)

@@ -213,27 +213,14 @@ object Multimodal {
     }
   }
 
-  /** The byte-level fallback of [[pHash60Images]] — the same sampling rule
-    * as [[pHash60]]'s expression (evenly spaced chars in the `cropBytes`
-    * prefix of the UTF-8 decode, mean-thresholded by cross-multiplication),
-    * computed in Scala so the image path and the opaque-byte path share one
-    * operator. PipelineSpec pins it bit-equal to the expression form. */
-  private[graft] def pHashBytesFallback(bytes: Array[Byte], cropBytes: Int): Option[Long] = {
-    // CODEPOINTS, not UTF-16 chars (r16 review): Spark's length()/substr()/
-    // ascii() over the binary→string cast count and index codepoints, so a
-    // non-BMP payload (4-byte UTF-8 = one codepoint = TWO Java chars) would
-    // diverge from pHash60 under charAt/String.length — exactly the
-    // non-ASCII class this fallback exists to share an operator with.
-    // (Invalid UTF-8 is undefined in both engines and stays out of scope.)
-    val cps = new String(bytes, "UTF-8").codePoints().toArray
-    if (cps.length < cropBytes) return None
-    val n = PHashBits
-    val s = Array.tabulate(n)(i => cps((cropBytes - 1) * i / (n - 1)))
-    val sum = s.sum
-    var sig = 0L; var i = 0
-    while (i < n) { if (s(i) * n > sum) sig |= 1L << i; i += 1 }
-    Some(sig)
-  }
+  /** The byte-level fallback of [[pHash60Images]]: [[pHash60]]'s kernel
+    * ([[graft.functions.PHashExpression.pHash60Of]]) over the payload's
+    * UTF-8 bytes, so the image path and the opaque-byte path share one
+    * operator and one sampling rule (code points of the `cropBytes`
+    * prefix). PipelineSpec pins it bit-equal to the expression form. */
+  private[graft] def pHashBytesFallback(bytes: Array[Byte], cropBytes: Int): Option[Long] =
+    Some(graft.functions.PHashExpression.pHash60Of(
+      org.apache.spark.unsafe.types.UTF8String.fromBytes(bytes), cropBytes)).filter(_ >= 0)
 
   /** Perceptual hashes over a MIXED media column: payloads that decode as
     * real images (PNG/JPEG/GIF/BMP via javax.imageio) get the
@@ -313,8 +300,8 @@ object Multimodal {
     * 60 positions on any length change and push every near-dup past the
     * band threshold).
     *
-    * Engine-portable by construction: samples are byte values via ascii()
-    * over the UTF-8 decode (the test corpus is pure ASCII, so byte == char
+    * Engine-portable by construction: samples are code points via ascii()
+    * over the UTF-8 decode (on the pure-ASCII test corpus, the byte values
     * — the m107 contract), the mean compare is integer cross-multiplication
     * (`s_i · nBits > Σs` — no float division to round differently), and the
     * fold is shiftleft/bitwiseOR (ANSI-safe). Pure projection over the

@@ -1520,16 +1520,23 @@ class PipelineSpec extends SparkSpec {
     assert(pairs == Seq((1L, 2L, 0L)))
   }
 
+  // 130 code points each: multi-byte BMP characters, and non-BMP ones (one
+  // code point, two Java chars, four UTF-8 bytes)
+  private val nonAsciiText = (0 until 130).map(i => "aé中ßz€"(i % 6)).mkString
+  private val nonBmpText = (0 until 130).map(i => Seq("😀", "x", "𝄞")(i % 3)).mkString
+
   test("pHash60 expression ≡ unrolled Column form on the real corpus") {
     val media = graft.multimodal.Multimodal.attachBinary(
-      core.Tables.documents(spark, sf("sf0.001")), "doc_id", "text")
+      core.Tables.documents(spark, sf("sf0.001")).select("doc_id", "text")
+        .union(Seq((-1L, nonAsciiText), (-2L, nonBmpText)).toDF("doc_id", "text")),
+      "doc_id", "text")
     for (crop <- Seq(64, 120)) {
       val fast = graft.multimodal.Multimodal.pHash60(media, crop)
         .as[(Long, Long)].collect().toMap
       val slow = graft.multimodal.Multimodal.pHash60Unrolled(media, crop)
         .as[(Long, Long)].collect().toMap
       assert(fast == slow, s"crop=$crop: expression and unrolled form diverge")
-      assert(fast.nonEmpty)
+      assert(fast.contains(-1L) && fast.contains(-2L) && fast.size > 2)
     }
   }
 
@@ -1548,12 +1555,13 @@ class PipelineSpec extends SparkSpec {
     val inv = png(20, 12)((x, _) => g(255 - x * 255 / 19))   // inverted ramp
     val txt = ("the quick brown fox " * 8).getBytes("UTF-8") // 160 ASCII bytes
     val rows = Seq(1L -> grad, 2L -> grad2x, 3L -> inv, 4L -> txt,
-      5L -> "short".getBytes("UTF-8"))
+      5L -> "short".getBytes("UTF-8"), 6L -> nonAsciiText.getBytes("UTF-8"),
+      7L -> nonBmpText.getBytes("UTF-8"))
     val media = rows.toDF("media_id", "media")
     val got = graft.multimodal.Multimodal.pHash60Images(media, cropBytes = 120)
       .as[(Long, Long)].collect().toMap
     // the sub-crop non-image payload drops; everything else hashes
-    assert(got.keySet == Set(1L, 2L, 3L, 4L))
+    assert(got.keySet == Set(1L, 2L, 3L, 4L, 6L, 7L))
     // driver-side reference of the image rule on the decoded fixture
     val ref = graft.multimodal.Multimodal.readImage(grad)
       .map(graft.multimodal.Multimodal.pHashImage).get
@@ -1567,10 +1575,12 @@ class PipelineSpec extends SparkSpec {
       s"inverted image only ${dist(got(1L), got(3L))} bits away")
     // non-image payloads fall back to pHash60's byte rule, bit-for-bit
     val textOnly = graft.multimodal.Multimodal.pHash60(
-      Seq(4L -> new String(txt, "UTF-8")).toDF("doc_id", "text")
+      Seq(4L -> new String(txt, "UTF-8"), 6L -> nonAsciiText, 7L -> nonBmpText)
+        .toDF("doc_id", "text")
         .select(col("doc_id").as("media_id"), encode(col("text"), "UTF-8").as("media")),
       cropBytes = 120).as[(Long, Long)].collect().toMap
-    assert(got(4L) == textOnly(4L), "byte fallback must equal the expression path")
+    for (id <- Seq(4L, 6L, 7L))
+      assert(got(id) == textOnly(id), s"byte fallback must equal the expression path ($id)")
   }
 
   test("JPEG decoder drift canary: fixed fixture pins pHashImage + features (r16 advice)") {

@@ -44,4 +44,23 @@ class RegistrySpec extends SparkSpec {
     // a second registration would replace the builder (and log a WARN)
     assert(registry.lookupFunctionBuilder(id).exists(_ eq first.get))
   }
+
+  test("two probes of one bloom bitset register its function once, equal rows") {
+    val s = spark.newSession()
+    val registry = s.sessionState.functionRegistry
+    val words = Array(0x5L, -1L) // bits 0 and 2, then all of 64..127
+    val pos = s.range(4).select(array(col("id"), col("id") + 64).as("pos"))
+    def probe() = pos.select(BloomExpressions.bitsetContains(s, col("pos"), words))
+      .collect().map(_.getBoolean(0)).toSeq
+    val first = probe()
+    val ids = registry.listFunction().filter(_.funcName.startsWith("graft_bloom_bitset_"))
+    assert(ids.size == 1, ids)
+    val builder = registry.lookupFunctionBuilder(ids.head)
+    val second = probe()
+    // a second registration would replace the builder (and log a WARN)
+    assert(registry.lookupFunctionBuilder(ids.head).exists(_ eq builder.get))
+    assert(first == Seq(true, false, true, false) && second == first)
+    BloomExpressions.release(s, words)
+    assert(!registry.functionExists(ids.head))
+  }
 }
