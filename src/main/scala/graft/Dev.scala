@@ -24,13 +24,15 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
   * Every timed rep goes through [[RepTimer.run]]. */
 object Dev {
   /** One timed rep: wall time and the Spark work its jobs did (jobs run
-    * while the query is built included), plus Janino compiles (codegen cache misses) and JVM JIT
-    * time spent during it. `qe` is the executed query, for plan reads. */
-  final case class Rep(wallS: Double, jobs: Long, stages: Long, tasks: Long,
+    * while the query is built included; `buildJobs` counts those alone),
+    * plus Janino compiles (codegen cache misses) and JVM JIT time spent
+    * during it. `qe` is the executed query, for plan reads. */
+  final case class Rep(wallS: Double, jobs: Long, buildJobs: Long, stages: Long, tasks: Long,
                        shuffleWriteBytes: Long, shuffleReadBytes: Long, inputBytes: Long,
                        janinoCompiles: Long, jitMs: Long, qe: QueryExecution) {
     def line: String =
-      f"jobs=$jobs stages=$stages tasks=$tasks shuffleW=${shuffleWriteBytes / 1024}KB " +
+      f"jobs=$jobs build_jobs=$buildJobs stages=$stages tasks=$tasks " +
+        f"shuffleW=${shuffleWriteBytes / 1024}KB " +
         f"shuffleR=${shuffleReadBytes / 1024}KB input=${inputBytes / 1024}KB " +
         f"wall=$wallS%.3f s janino_compiles=$janinoCompiles jit_ms=$jitMs"
   }
@@ -41,13 +43,18 @@ object Dev {
     * by the stream thread unchanged. */
   private val RepKey = "graft.dev.rep"
 
+  /** Set on the jobs a rep starts while its query is built, before the
+    * query's own `toRdd`; a stream thread started by the builder inherits
+    * it like [[RepKey]]. */
+  private val BuildKey = "graft.dev.build"
+
   /** Runs timed reps of `SparkEntry.queries` on `spark`, each in its own job
     * group, counting the Spark work of that rep alone. */
   final class RepTimer(spark: SparkSession) {
     private val sc = spark.sparkContext
     private val seq = new AtomicLong
     private final class Counts {
-      val jobs, stages, tasks, shufW, shufR, input = new AtomicLong
+      val jobs, buildJobs, stages, tasks, shufW, shufR, input = new AtomicLong
     }
     private val byRep = new ConcurrentHashMap[String, Counts]
     private val stageRep = new ConcurrentHashMap[Int, String]
@@ -56,6 +63,7 @@ object Dev {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(RepKey))).foreach { rep =>
           counts(rep).jobs.incrementAndGet()
+          if (e.properties.getProperty(BuildKey) != null) counts(rep).buildJobs.incrementAndGet()
           e.stageIds.foreach(stageRep.put(_, rep))
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -84,23 +92,26 @@ object Dev {
       val rep = s"graft-dev-${seq.incrementAndGet()}"
       sc.setJobGroup(rep, name)
       sc.setLocalProperty(RepKey, rep)
+      sc.setLocalProperty(BuildKey, "true")
       val (janino0, jit0) = (janinoCompiles, jitMs)
       val t0 = System.nanoTime()
       val (qe, wallS) =
         try {
           val qe = build(spark, dir).queryExecution
+          sc.setLocalProperty(BuildKey, null)
           qe.toRdd.count()
           (qe, (System.nanoTime() - t0) / 1e9)
         } finally {
           sc.setLocalProperty(RepKey, null)
+          sc.setLocalProperty(BuildKey, null)
           sc.clearJobGroup()
           spark.catalog.clearCache()
         }
       val (janino, jit) = (janinoCompiles - janino0, jitMs - jit0)
       ListenerBus.drain(sc)
       val c = counts(rep)
-      Rep(wallS, c.jobs.get, c.stages.get, c.tasks.get, c.shufW.get, c.shufR.get,
-        c.input.get, janino, jit, qe)
+      Rep(wallS, c.jobs.get, c.buildJobs.get, c.stages.get, c.tasks.get, c.shufW.get,
+        c.shufR.get, c.input.get, janino, jit, qe)
     }
   }
 

@@ -207,7 +207,12 @@ object Par {
   * values as the same UTC instants the oracle engine's `epoch()` assumes.
   */
 object Tables {
-  import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+  import org.apache.hadoop.fs.Path
+  import org.apache.parquet.format.converter.ParquetMetadataConverter
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+  import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
   /** Normalize an events-shaped frame (any `ts` flavor) to `ts_ns` long at
     * the original ts position + µs TIMESTAMP `ts` appended last. Pure
@@ -226,8 +231,38 @@ object Tables {
       throw new IllegalArgumentException(s"events.ts has unsupported type $other")
   }
 
+  /** The schema `spark.read.parquet(path)` infers, read from the parquet
+    * footer on the driver. Spark's inference reads the same footer inside a
+    * one-task job (`SchemaMergeUtils.mergeSchemasInParallel`), even with
+    * `mergeSchema` off; this calls the two functions that task calls, with
+    * the session's conf, so Spark's row metadata (nullability, decimals,
+    * nested types), `nanosAsLong` and TIMESTAMP_NTZ inference all hold. A
+    * directory is read through its first data file in path order, the file
+    * Spark's inference reads when there is no summary file. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    val file = if (!st.isDirectory) st else {
+      val data = fs.listStatus(p).filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      require(data.nonEmpty, s"no parquet data file in $path")
+      data.minBy(_.getPath.toString)
+    }
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** A driver table, read with its footer schema ([[schemaOf]]): building
+    * the read starts no Spark job. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") normalizeEventTs(df) else df
   }
 

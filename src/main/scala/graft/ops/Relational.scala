@@ -85,7 +85,10 @@ object Relational {
     val (l, lc) = withRowIndexCounted(left, "__bind_idx")
     val (r, rc) = withRowIndexCounted(right, "__bind_idx2")
     require(lc == rc, s"bindColumns: row count mismatch ($lc vs $rc)")
-    l.join(r, l("__bind_idx") === r("__bind_idx2"), "inner")
+    // the merge hint fixes the plan: both sides are RDD scans of unknown
+    // size, so AQE would broadcast whichever side's shuffle stage finished
+    // first, and the join's generated class would change with that race
+    l.join(r.hint("merge"), l("__bind_idx") === r("__bind_idx2"), "inner")
       .drop("__bind_idx", "__bind_idx2")
   }
 

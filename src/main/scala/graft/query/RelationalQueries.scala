@@ -867,7 +867,7 @@ object RelationalQueries {
       val s = childSession(s0, "v2pushdown",
         "spark.sql.sources.useV1SourceList" -> "",
         "spark.sql.parquet.aggregatePushdown" -> "true")
-      s.read.parquet(s"$dir/lineitem.parquet")
+      t(s, dir, "lineitem")
         .agg(expr("count(*)").as("n_rows"),
           min(col("l_quantity")).as("min_qty"),
           max(col("l_quantity")).as("max_qty"),

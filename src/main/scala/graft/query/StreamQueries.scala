@@ -62,7 +62,7 @@ object StreamQueries {
     // exact expected sink content
     QuerySpec("p72_stream_pipeline", (s0, dir) => {
       val s = streamSession(s0) // memoized scoped child, see q58
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = Tables.schemaOf(s, s"$dir/documents.parquet")
       val docs = graft.streaming.Streams.readStream(s, dir, schema,
         glob = Some("documents.parquet"))
       // synthetic event-time: arrival-order surrogate derived from doc_id,
@@ -107,7 +107,7 @@ object StreamQueries {
     // this corpus — d23's oracle row proves it)
     QuerySpec("q94_stream_neardup", (s0, dir) => {
       val s = streamSession(s0) // memoized scoped child, see q58
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
+      val schema = Tables.schemaOf(s, s"$dir/documents.parquet")
       val docs = graft.streaming.Streams.readStream(s, dir, schema,
         glob = Some("documents.parquet"))
       // synthetic event-time from doc_id (see p72): arrival order is id order
@@ -219,7 +219,7 @@ object StreamQueries {
     // computation as p174 ⇒ the SAME oracle proves stream ≡ batch
     QuerySpec("q175_stream_psi", (s0, dir) => {
       val s = streamSession(s0)
-      val static = s.read.parquet(s"$dir/documents.parquet")
+      val static = t(s, dir, "documents")
       val (mn, mx) = graft.ops.Stats.psiBaseRange(
         static.filter(col("lang") === "en"), "n_chars")
       val w = (mx - mn) / 10
@@ -279,7 +279,7 @@ object StreamQueries {
     * directory), `ts` normalized as in the batch table. */
   private def eventStream(s: SparkSession, dir: String): DataFrame =
     Tables.normalizeEventTs(graft.streaming.Streams.readStream(s, dir,
-      s.read.parquet(s"$dir/events.parquet").schema, glob = Some("events.parquet")))
+      Tables.schemaOf(s, s"$dir/events.parquet"), glob = Some("events.parquet")))
 
   /** One AvailableNow run of `df` into the memory sink `name`, returning
     * the sink's table. The checkpoint is a fresh scratch dir, deleted once

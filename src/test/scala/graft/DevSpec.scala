@@ -32,6 +32,17 @@ class DevSpec extends SparkSpec {
     }
   }
 
+  test("Dev reps count the jobs a query starts while it is built: q01 none, q60 its JSON write") {
+    val timer = new Dev.RepTimer(spark)
+    try {
+      val Seq(q01, q60) = Seq("q01_pricing_summary", "q60_json_roundtrip")
+        .map(timer.run(_, sf("sf0.001")))
+      assert(q01.buildJobs == 0 && q01.jobs > 0, q01.line)
+      assert(q60.buildJobs == 1 && q60.jobs > 1, q60.line)
+      assert(q01.line.contains("build_jobs=0"), q01.line)
+    } finally timer.close()
+  }
+
   test("warm reps of the corpus queries compile no class: the codegen cache holds graft's working set") {
     // the three perfbench corpus queries generate about 110 classes: at
     // Spark's default 100 entries (four LRU segments of 25) the warm round

@@ -58,6 +58,17 @@ class RelationalSpec extends SparkSpec {
     assert(ann.getAs[Float]("VacationHrs") == 22.5f)
   }
 
+  test("bindColumns joins by sort-merge, never by a broadcast of whichever side finished first") {
+    // enough rows that no shuffle partition is empty: AQE keeps a join
+    // with mostly empty partitions off broadcast anyway
+    val bound = Relational.bindColumns(spark.range(4000).toDF("a"),
+      spark.range(4000).select((col("id") * 2).as("b")))
+    assert(bound.collect().forall(r => r.getLong(1) == 2 * r.getLong(0)))
+    val plan = bound.queryExecution.executedPlan.toString
+    assert(plan.contains("isFinalPlan=true") && plan.contains("SortMergeJoin"), plan)
+    assert(!plan.contains("BroadcastHashJoin"), plan)
+  }
+
   test("bindColumns rejects mismatched row counts (view.rs:629-636)") {
     intercept[IllegalArgumentException] {
       Relational.bindColumns(emp, dept)
