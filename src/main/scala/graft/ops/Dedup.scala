@@ -712,6 +712,17 @@ object Dedup {
       .filter(col("simhash").isNotNull)
   }
 
+  /** Banded-Hamming geometry of the 60-bit fingerprint family: 4 bands of
+    * 15 bits. */
+  private val simHashBands: Int = 4
+  private def simHashBandSig(fp: Column, j: Int): Column =
+    shiftright(fp, j * 15).bitwiseAND(0x7FFFL)
+  /** (id, simhash) → exploded (id, simhash, band, bsig) banding rows. */
+  private def simHashBanded(sims: DataFrame): DataFrame =
+    sims.select(col("id"), col("simhash"),
+      posexplode(array((0 until simHashBands).map(b =>
+        simHashBandSig(col("simhash"), b)): _*)).as(Seq("band", "bsig")))
+
   /** Hamming-distance pairs over simhash fingerprints within `maxDist`, using
     * 4 × 15-bit band buckets (any pair at distance ≤ 3 must share a band —
     * pigeonhole): a bucket EQUI-join on (band, signature) with the distance
@@ -733,17 +744,6 @@ object Dedup {
     * shift/compares on the fingerprints already in the row) — so the output
     * needs no distinct and the 4×-duplicated pair stream never exists, let
     * alone shuffles. */
-  /** Banded-Hamming geometry of the 60-bit fingerprint family: 4 bands of
-    * 15 bits. */
-  private val simHashBands: Int = 4
-  private def simHashBandSig(fp: Column, j: Int): Column =
-    shiftright(fp, j * 15).bitwiseAND(0x7FFFL)
-  /** (id, simhash) → exploded (id, simhash, band, bsig) banding rows. */
-  private def simHashBanded(sims: DataFrame): DataFrame =
-    sims.select(col("id"), col("simhash"),
-      posexplode(array((0 until simHashBands).map(b =>
-        simHashBandSig(col("simhash"), b)): _*)).as(Seq("band", "bsig")))
-
   def simHashPairs(sims: DataFrame, maxDist: Int = 3): DataFrame = {
     // 4 bands guarantee recall only through distance 3 (pigeonhole: 4
     // differing bits can avoid sharing any band) — a larger maxDist would

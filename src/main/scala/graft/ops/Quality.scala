@@ -154,8 +154,9 @@ object Quality {
     // STAGED: the score relation feeds two sequential stat passes (MAD
     // depends on the median, so they cannot fuse), and re-deriving the
     // score from the scan per pass dominated the op's cost when the score
-    // is expression-heavy — the x169 head-to-head measured the staged
-    // form at 0.59× (1.15 vs 1.95 s warm at sf0.1)
+    // is expression-heavy — the head-to-head in docs/PLANS.md ("Round-17:
+    // robustZ staging") measured the staged form at 0.59× (1.15 vs 1.95 s
+    // warm at sf0.1)
     val scores = graft.ops.Checkpointing.stage(
       df.select(col(scoreCol).cast("double").as("__score"))
         .filter(col("__score").isNotNull))

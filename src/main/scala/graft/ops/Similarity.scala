@@ -52,11 +52,20 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", graft.functions.VectorExpressions.cosineNative(
         corpus.sparkSession, col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
+    cosineTopK(scored, "query_id", k)
+  }
+
+  /** The family's ranking contract, written once: per `key`, the `k` rows
+    * of highest `cosine`, ties broken by `neighbor_id` ascending, cosine
+    * rounded to 4 dp. Every exact top-k here ends in it (the candidate
+    * generator varies, the ranking never does). Output (key, neighbor_id,
+    * cosine). */
+  private[graft] def cosineTopK(scored: DataFrame, key: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col(key))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
+      .select(col(key), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
   }
 
   /** Hard-negative mining for contrastive/embedding training: for each
@@ -139,10 +148,9 @@ object Similarity {
     requireDim(vec, dim, sigBits.reduce(_ + _))
   }
 
-  /** Per-table sign-signature buckets for OR-amplified LSH: table `t` uses
-    * hyperplane rows [t·planes, (t+1)·planes) of
+  /** (outId, tbl, bucket) rows, one per OR-amplified LSH table: table `t`
+    * uses hyperplane rows [t·planes, (t+1)·planes) of
     * `planeMatrix(tables·planes, dim)`, so the tables are independent.
-    * Returns array<long> of `tables` bucket ids.
     *
     * Computed by the codegen'd [[graft.functions.LshBuckets]] expression —
     * one fused pass over the vector for all planes×tables projections (the
@@ -153,10 +161,18 @@ object Similarity {
     * null-element → bucket-0 degradation — which is exactly why
     * [[requireDim]] stays wrapped OUTSIDE the expression, raising before a
     * dim mismatch can silently collapse the join. */
-  private def lshBucketTables(spark: org.apache.spark.sql.SparkSession, vec: Column,
-                              planes: Int, tables: Int, dim: Int): Column =
-    requireDim(vec, dim,
-      graft.functions.LshExpressions.lshBuckets(spark, vec, planes, tables, dim))
+  private def bucketRows(df: DataFrame, idCol: String, vecCol: String,
+                         outId: String, planes: Int, tables: Int, dim: Int): DataFrame =
+    df.select(col(idCol).as(outId), posexplode(requireDim(col(vecCol), dim,
+        graft.functions.LshExpressions.lshBuckets(df.sparkSession, col(vecCol), planes, tables, dim)))
+      .as(Seq("tbl", "bucket")))
+
+  /** The embedding width: `dim` when the caller passes it, else the length
+    * of the first vector of the first non-empty source (a one-row driver
+    * lookup — an extra job composed pipelines avoid by passing `dim`). */
+  private def vectorDim(dim: Int, vecCol: String, sources: DataFrame*): Int =
+    if (dim > 0) dim
+    else sources.view.flatMap(_.select(size(col(vecCol))).head(1).headOption).head.getInt(0)
 
   /** Embedding near-duplicate pairs at corpus scale: LSH-bucketed candidate
     * generation + exact cosine verification — never an all-pairs self-join.
@@ -183,9 +199,8 @@ object Similarity {
                    threshold: Double, planes: Int = 4, tables: Int = 2,
                    dim: Int = -1): DataFrame = {
     val df = graft.core.Par.widen(df0)
-    val d = if (dim > 0) dim else df.select(size(col(vecCol))).head().getInt(0)
-    val bucketed = df.select(col(idCol).as("id"),
-      posexplode(lshBucketTables(df.sparkSession, col(vecCol), planes, tables, d)).as(Seq("tbl", "bucket")))
+    val bucketed = bucketRows(df, idCol, vecCol, "id", planes, tables,
+      vectorDim(dim, vecCol, df))
     val a = bucketed.select(col("id").as("id_a"), col("tbl"), col("bucket"))
     val b = bucketed.select(col("id").as("id_b"), col("tbl"), col("bucket"))
     // a pair bucketed together in several tables is still one candidate
@@ -240,11 +255,9 @@ object Similarity {
                    tables: Int = 2, dim: Int = -1): DataFrame = {
     val corpus = graft.core.Par.widen(corpus0)
     val spark = corpus.sparkSession
-    val d = if (dim > 0) dim else corpus.select(size(col(vecCol))).head().getInt(0)
-    def bucketed(df: DataFrame, outId: String) = df.select(col(idCol).as(outId),
-      posexplode(lshBucketTables(spark, col(vecCol), planes, tables, d)).as(Seq("tbl", "bucket")))
-    val cand = bucketed(corpus, "id")
-      .join(bucketed(probes, "probe_id"), Seq("tbl", "bucket"))
+    val d = vectorDim(dim, vecCol, corpus)
+    val cand = bucketRows(corpus, idCol, vecCol, "id", planes, tables, d)
+      .join(bucketRows(probes, idCol, vecCol, "probe_id", planes, tables, d), Seq("tbl", "bucket"))
       .dropDuplicates("id", "probe_id")
       .select(col("id"), col("probe_id"))
     val withC = corpus0.select(col(idCol).as("id"), col(vecCol).as("e_c")).join(cand, "id")
@@ -279,23 +292,6 @@ object Similarity {
       val raw = math.ceil(math.log(n / targetMates) / math.log(2.0)).toInt
       math.min(48, math.max(1, raw))
     }
-  }
-
-  /** [[nearDupPairs]] with `planes` sized by [[autoPlanes]] from the corpus
-    * count at call time: one count() pre-pass (parquet answers it from
-    * row-group metadata without touching the vector column) buys the
-    * linear-candidate contract automatically — at 10× the corpus this picks
-    * log₂ 10 ≈ 3–4 more planes and the candidate set grows ~10×, not ~100×.
-    * The fixed-knob [[nearDupPairs]] stays the right call when the corpus
-    * size is known and stable (and is what the md5-portable driver oracle
-    * pins); this is the operational entry point for a corpus that grows
-    * between runs. */
-  def nearDupPairsAuto(df: DataFrame, idCol: String, vecCol: String,
-                       threshold: Double, tables: Int = 2, dim: Int = -1,
-                       targetMates: Double = 32.0): DataFrame = {
-    val planes = autoPlanes(df.count(), targetMates)
-    nearDupPairs(df, idCol, vecCol, threshold, planes = planes,
-      tables = tables, dim = dim)
   }
 
   /** Scalar int8 quantization of an embedding column — the storage tier for
@@ -397,11 +393,7 @@ object Similarity {
       .join(qv, Seq("query_id"))
       .withColumn("cosine", graft.functions.VectorExpressions.cosineNative(
         corpus.sparkSession, col("qv"), col("cv")))
-    val wE = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    rescored.withColumn("__rk", row_number().over(wE))
-      .filter(col("__rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
+    cosineTopK(rescored, "query_id", k)
   }
 
   /** Per-candidate ADC: Σ_s T_q[s][code_s] over the query's once-evaluated
@@ -445,11 +437,13 @@ object Similarity {
     * previous centroid. Returns the Array[m][k][subDim] shape
     * [[pqEncode]]/[[pqTopK]]/[[lshPqTopK]] consume unchanged.
     *
-    * Trained artifacts are rows-only territory (no SQL oracle replays
-    * k-means — the s36 IVF precedent), so the query carrying this
-    * codebook is BENCH-ONLY (x120) and ScaleJoinsSpec bounds it against
-    * exact brute force instead: at full expand the re-rank is exact
-    * (identical to [[bruteForceTopK]]); at expand=4 a recall floor. */
+    * No SQL replays the k-means fit itself, but the fit is a pure
+    * function of the corpus: s143's oracle refits it at the same dir,
+    * inlines the constants and replays the serving chain downstream of
+    * it (docs/PLANS.md, "Round-15 widening: trained-PQ recall tier").
+    * ScaleJoinsSpec also bounds it against exact brute force: at full
+    * expand the re-rank is exact (identical to [[bruteForceTopK]]); at
+    * expand=4 a recall floor. */
   def pqCodebookTrained(corpus: DataFrame, idCol: String, vecCol: String,
                         m: Int, k: Int, subDim: Int, iters: Int = 5,
                         trainCap: Int = 4096): Array[Array[Array[Double]]] = {
@@ -511,21 +505,25 @@ object Similarity {
     * first-occurrence semantics in both engines. Output: (idCol,
     * pq_codes array<long>, 1-based codes). */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
-               codebook: Array[Array[Array[Double]]]): DataFrame = {
-    val m = codebook.length; val k = codebook(0).length
-    // the m·k distance table comes from ONE tight-loop codegen'd
-    // expression (graft.functions.PqDistTable — an unrolled-expression
-    // formulation put the plan's Janino compile time at ~10 s per fresh
-    // plan); the per-row argmin over each k-slice is cheap generic array
-    // ops, first-occurrence ties by array_position semantics
-    val tbl = graft.functions.PqExpressions.pqDistTable(
-      df.sparkSession, col(vecCol), codebook)
+               codebook: Array[Array[Array[Double]]]): DataFrame =
+    withPqCodes(df, vecCol, codebook, col(idCol))
+
+  /** `df` projected to `keep` plus `pq_codes`. The m·k distance table
+    * comes from ONE tight-loop codegen'd expression
+    * (graft.functions.PqDistTable — an unrolled-expression formulation put
+    * the plan's Janino compile time at ~10 s per fresh plan); the per-row
+    * argmin over each k-slice is cheap generic array ops,
+    * first-occurrence ties by array_position semantics. */
+  private def withPqCodes(df: DataFrame, vecCol: String,
+                          codebook: Array[Array[Array[Double]]], keep: Column*): DataFrame = {
+    val m = codebook.length; val kc = codebook(0).length
     val codes = array((0 until m).map { s =>
-      val sl = slice(col("__tbl"), s * k + 1, k)
+      val sl = slice(col("__tbl"), s * kc + 1, kc)
       array_position(sl, array_min(sl))
     }: _*)
-    df.withColumn("__tbl", tbl)
-      .select(col(idCol), codes.as("pq_codes"))
+    df.withColumn("__tbl", graft.functions.PqExpressions.pqDistTable(
+        df.sparkSession, col(vecCol), codebook))
+      .select(keep :+ codes.as("pq_codes"): _*)
   }
 
   /** PQ-compressed ANN with exact re-rank: the corpus is scanned as
@@ -587,21 +585,25 @@ object Similarity {
                 vecCol: String, k: Int, codebook: Array[Array[Array[Double]]],
                 planes: Int, dim: Int, expand: Int = 4): DataFrame = {
     require(k >= 1 && expand >= 1, s"k=$k expand=$expand must be >= 1")
-    val m = codebook.length; val kc = codebook(0).length
     val corpus = graft.core.Par.widen(corpus0)
-    val spark = corpus.sparkSession
-    val ctbl = graft.functions.PqExpressions.pqDistTable(spark, col(vecCol), codebook)
-    val codes = array((0 until m).map { s =>
-      val sl = slice(col("__ctbl"), s * kc + 1, kc)
-      array_position(sl, array_min(sl))
-    }: _*)
-    val coded = corpus.withColumn("__ctbl", ctbl)
-      .select(col(idCol).as("neighbor_id"),
-        lshBucket(col(vecCol), planes, dim).as("__b"), codes.as("pq_codes"))
+    servePqIndex(encodeIndexRows(corpus, idCol, vecCol, codebook, planes, dim),
+      corpus, queries, idCol, vecCol, k, codebook, planes, dim, expand)
+  }
+
+  /** The bucket-pruned serving chain [[lshPqTopK]] (in-memory index) and
+    * [[queryAnnIndex]] (persisted index) share: each query's coarse ADC
+    * scan touches only the (neighbor_id, bucket, pq_codes) index rows of
+    * its own bucket, then [[coarseCandidates]] → [[exactRerank]]. */
+  private def servePqIndex(index: DataFrame, corpus: DataFrame, queries: DataFrame,
+                           idCol: String, vecCol: String, k: Int,
+                           codebook: Array[Array[Array[Double]]], planes: Int,
+                           dim: Int, expand: Int): DataFrame = {
+    val m = codebook.length; val kc = codebook(0).length
     val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      lshBucket(col(vecCol), planes, dim).as("__b"),
-      graft.functions.PqExpressions.pqDistTable(spark, col(vecCol), codebook).as("__tbl")))
-    val coarse = coded.join(qv, Seq("__b"))
+      lshBucket(col(vecCol), planes, dim).as("bucket"),
+      graft.functions.PqExpressions.pqDistTable(
+        corpus.sparkSession, col(vecCol), codebook).as("__tbl")))
+    val coarse = index.join(qv, Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("__adc", adcExpr(m, kc))
     val cand = coarseCandidates(coarse, col("__adc").asc, k, expand)
@@ -641,23 +643,6 @@ object Similarity {
       val raw = math.floor(math.log(n / target) / math.log(2.0)).toInt
       math.min(48, math.max(1, raw))
     }
-  }
-
-  /** [[lshPqTopK]] with `planes` sized by [[autoServingPlanes]] from the
-    * corpus count at call time (one count() pre-pass — parquet answers it
-    * from row-group metadata without touching the vector column), the
-    * serving twin of [[nearDupPairsAuto]]: the operational entry point
-    * for a corpus that grows between runs, keeping per-query coarse cost
-    * flat and recall at its codebook ceiling while the prune ratio
-    * tracks n. The fixed-knob [[lshPqTopK]] stays the right call when
-    * the corpus size is known and stable (and is what the md5-portable
-    * driver oracle pins — s123/s143 replay planes=3 bit-for-bit). */
-  def lshPqTopKAuto(corpus: DataFrame, queries: DataFrame, idCol: String,
-                    vecCol: String, k: Int,
-                    codebook: Array[Array[Array[Double]]], dim: Int,
-                    expand: Int = 4, occupancyFactor: Double = 4.0): DataFrame = {
-    val planes = autoServingPlanes(corpus.count(), k, expand, occupancyFactor)
-    lshPqTopK(corpus, queries, idCol, vecCol, k, codebook, planes, dim, expand)
   }
 
   /** Reciprocal-rank fusion (round 16) of ranked candidate lists — the
@@ -703,18 +688,9 @@ object Similarity {
     * [[appendAnnIndex]]: (neighbor_id, bucket, pq_codes). */
   private def encodeIndexRows(corpus: DataFrame, idCol: String, vecCol: String,
                               codebook: Array[Array[Array[Double]]], planes: Int,
-                              dim: Int): DataFrame = {
-    val m = codebook.length; val kc = codebook(0).length
-    val ctbl = graft.functions.PqExpressions.pqDistTable(
-      corpus.sparkSession, col(vecCol), codebook)
-    val codes = array((0 until m).map { s =>
-      val sl = slice(col("__ctbl"), s * kc + 1, kc)
-      array_position(sl, array_min(sl))
-    }: _*)
-    corpus.withColumn("__ctbl", ctbl)
-      .select(col(idCol).as("neighbor_id"),
-        lshBucket(col(vecCol), planes, dim).as("bucket"), codes.as("pq_codes"))
-  }
+                              dim: Int): DataFrame =
+    withPqCodes(corpus, vecCol, codebook, col(idCol).as("neighbor_id"),
+      lshBucket(col(vecCol), planes, dim).as("bucket"))
 
   /** Persist the [[lshPqTopK]] serving index with the bucket as the
     * STORAGE partition key: one parquet layout `partitionBy(bucket)` of
@@ -741,8 +717,10 @@ object Similarity {
     * touch, rewrite, or even LIST the existing data: cost is
     * O(|new batch|) however large the index has grown, the property that
     * makes a serving index sustainable under a daily-crawl ingest at
-    * 100 TB (a full [[writeAnnIndex]] rebuild is x148's measured cost,
-    * paid once per codebook/planes revision instead of per batch).
+    * 100 TB (a full [[writeAnnIndex]] rebuild, about one serve query's
+    * cost at sf0.1 per docs/PLANS.md "Round-15: s148 write-side cost
+    * measured", is paid once per codebook/planes revision instead of per
+    * batch).
     * Same-id re-ingestion is the caller's contract to avoid (the layout
     * is append-only, like the d93 signature store); [[queryAnnIndex]]
     * over the grown layout is bit-for-bit [[lshPqTopK]] over the unioned
@@ -772,24 +750,15 @@ object Similarity {
     // does — without it the persisted-index path's exact re-rank ran at the
     // scan's native parallelism (r15 advice; results were unaffected)
     val corpus = graft.core.Par.widen(corpus0)
-    val m = codebook.length; val kc = codebook(0).length
-    val spark = corpus.sparkSession
     val qb = queries.select(lshBucket(col(vecCol), planes, dim).as("__b"))
       .distinct().collect().map(_.getLong(0))
     // partition-column values come back via directory-name inference —
     // normalize to the long the bucket expression produces
-    val idx = spark.read.parquet(path)
+    val idx = corpus.sparkSession.read.parquet(path)
       .filter(col("bucket").isin(qb.map(Long.box): _*))
-      .select(col("neighbor_id"), col("bucket").cast("long").as("__b"),
+      .select(col("neighbor_id"), col("bucket").cast("long").as("bucket"),
         col("pq_codes"))
-    val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      lshBucket(col(vecCol), planes, dim).as("__b"),
-      graft.functions.PqExpressions.pqDistTable(spark, col(vecCol), codebook).as("__tbl")))
-    val coarse = idx.join(qv, Seq("__b"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("__adc", adcExpr(m, kc))
-    val cand = coarseCandidates(coarse, col("__adc").asc, k, expand)
-    exactRerank(corpus, queries, cand, idCol, vecCol, k)
+    servePqIndex(idx, corpus, queries, idCol, vecCol, k, codebook, planes, dim, expand)
   }
 
   /** Per-LSH-bucket embedding centroids as a FLAT relation — one row per
@@ -1090,11 +1059,7 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", graft.functions.VectorExpressions.cosineNative(
         spark, col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
+    cosineTopK(scored, "query_id", k)
   }
 
   /** LSH-bucketed ANN: candidates = corpus rows sharing the query's bucket
@@ -1128,11 +1093,9 @@ object Similarity {
               dim: Int = -1, tables: Int = 1): DataFrame = {
     require(tables >= 1, s"tables=$tables must be >= 1")
     val corpus = graft.core.Par.widen(corpus0)
-    val d = if (dim > 0) dim else corpus.select(size(col(vecCol))).head().getInt(0)
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      posexplode(lshBucketTables(corpus.sparkSession, col(vecCol), planes, tables, d)).as(Seq("tbl", "bucket")))
-    val qb = broadcast(queries.select(col(idCol).as("query_id"),
-      posexplode(lshBucketTables(corpus.sparkSession, col(vecCol), planes, tables, d)).as(Seq("tbl", "bucket"))))
+    val d = vectorDim(dim, vecCol, corpus)
+    val c = bucketRows(corpus, idCol, vecCol, "neighbor_id", planes, tables, d)
+    val qb = broadcast(bucketRows(queries, idCol, vecCol, "query_id", planes, tables, d))
     val cand = c.join(qb, Seq("tbl", "bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -1144,11 +1107,7 @@ object Similarity {
     val scored = cand.join(cv, "neighbor_id").join(qv, "query_id")
       .withColumn("cosine", graft.functions.VectorExpressions.cosineNative(
         corpus.sparkSession, col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"))
+    cosineTopK(scored, "query_id", k)
   }
 
   /** Corpus k-NN GRAPH: for EVERY node, its top-k cosine neighbors among
@@ -1179,10 +1138,8 @@ object Similarity {
                planes: Int = 4, tables: Int = 2, dim: Int = -1): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     val df = graft.core.Par.widen(df0)
-    val d = if (dim > 0) dim else df.select(size(col(vecCol))).head().getInt(0)
-    val bucketed = df.select(col(idCol).as("id"),
-      posexplode(lshBucketTables(df.sparkSession, col(vecCol), planes, tables, d))
-        .as(Seq("tbl", "bucket")))
+    val bucketed = bucketRows(df, idCol, vecCol, "id", planes, tables,
+      vectorDim(dim, vecCol, df))
     val a = bucketed.select(col("id").as("node_id"), col("tbl"), col("bucket"))
     val b = bucketed.select(col("id").as("neighbor_id"), col("tbl"), col("bucket"))
     val cand = a.join(b, Seq("tbl", "bucket"))
@@ -1202,12 +1159,7 @@ object Similarity {
       .join(vecs.select(col("id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
       .withColumn("cosine", graft.functions.VectorExpressions.cosineNative(
         df.sparkSession, col("nv"), col("cv")))
-    val w = Window.partitionBy(col("node_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("node_id"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
+    cosineTopK(scored, "node_id", k)
   }
 
   /** INCREMENTAL [[knnGraph]] maintenance: fold a batch of new vectors
@@ -1237,11 +1189,7 @@ object Similarity {
     val batch = graft.core.Par.widen(batch0)
     // dim inference must survive an EMPTY batch (the steady-state zero-new-
     // vectors ingest — r17 review): fall back to the corpus side
-    val d = if (dim > 0) dim else {
-      val s = batch0.select(size(col(vecCol))).limit(1).collect()
-      if (s.nonEmpty) s.head.getInt(0)
-      else corpus0.select(size(col(vecCol))).head().getInt(0)
-    }
+    val d = vectorDim(dim, vecCol, batch0, corpus0)
     // PRECONDITION (r17 review): batch ids must be NEW — a re-ingested
     // existing id would leave stale edges on unaffected nodes AND join two
     // vectors per id in the fetch, silently breaking append ≡ rebuild.
@@ -1269,9 +1217,7 @@ object Similarity {
     require(bs.getLong(0) == bs.getLong(1),
       s"appendKnnGraph: batch carries ${bs.getLong(0) - bs.getLong(1)} " +
         "duplicate id(s) — ids must be unique within the batch")
-    def buckets(df: DataFrame) = df.select(col(idCol).as("id"),
-      posexplode(lshBucketTables(df.sparkSession, col(vecCol), planes, tables, d))
-        .as(Seq("tbl", "bucket")))
+    def buckets(df: DataFrame) = bucketRows(df, idCol, vecCol, "id", planes, tables, d)
     val bNew = buckets(batch)
     // ids-only but referenced THREE times (affected detection + both cand
     // sides via bAll) — staged so the corpus-wide hyperplane math runs
@@ -1298,14 +1244,8 @@ object Similarity {
       .join(vecs.select(col("id").as("neighbor_id"), col("v").as("cv")), "neighbor_id")
       .withColumn("cosine", graft.functions.VectorExpressions.cosineNative(
         batch.sparkSession, col("nv"), col("cv")))
-    val w = Window.partitionBy(col("node_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    val recomputed = scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("node_id"), col("neighbor_id"),
-        round(col("cosine"), 4).as("cosine"))
     graph.join(affected.select(col("id").as("node_id")), Seq("node_id"), "left_anti")
-      .unionByName(recomputed)
+      .unionByName(cosineTopK(scored, "node_id", k))
   }
 
   /** The MUTUAL edge list under [[mutualKnnClusters]] (and d173's triangle

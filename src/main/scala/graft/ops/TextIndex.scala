@@ -198,9 +198,10 @@ object TextIndex {
     * and the denominator, exactly as the per-doc LM score family already
     * treats them.
     *
-    * Scale shape (FUSED since r17 — the x144 decomposition measured the
-    * two-call form building the corpus bigram stream three times and
-    * aggregating per-doc twice): the corpus pair stream is STAGED once,
+    * Scale shape (FUSED since r17 — the t144 decomposition, docs/PLANS.md
+    * "Round-17: storm disposition probe", measured the two-call form
+    * building the corpus bigram stream three times and aggregating
+    * per-doc twice): the corpus pair stream is STAGED once,
     * both vocab²-bounded models (target + corpus) estimate from their own
     * relation, and ONE scoring pass joins both models onto the shared
     * stream and reduces both decimal sums in a single per-doc aggregate —

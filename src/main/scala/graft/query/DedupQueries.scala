@@ -108,11 +108,9 @@ object DedupQueries {
         .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
         .orderBy(col("id_a"), col("id_b"))
     }, Sql(
-      """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+      s"""WITH $vecCte,
         |p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  list_sum([a.e[i]*b.e[i] for i in range(1, len(a.e)+1)]) /
-        |  (sqrt(list_sum([a.e[i]*a.e[i] for i in range(1, len(a.e)+1)])) *
-        |   sqrt(list_sum([b.e[i]*b.e[i] for i in range(1, len(b.e)+1)]))) AS cosine
+        |  ${cosineSql("a.e", "b.e")} AS cosine
         |  FROM v a JOIN v b ON a.vec_id < b.vec_id)
         |SELECT id_a, id_b, round(cosine, 4) AS cosine FROM p WHERE cosine >= 0.35
         |ORDER BY id_a, id_b""".stripMargin)),
@@ -239,8 +237,8 @@ object DedupQueries {
     // survive whole. One end-to-end oracle: the d74 bucket CTE chained into
     // the d73 recursive-CTE components. At 100 TB every stage is the
     // already-audited scale shape; autoPlanes sizes the bucket count as the
-    // corpus grows (x74 evidence) — at the sf0.01 gate autoPlanes(500) = 4,
-    // matching the oracle's plane derivation
+    // corpus grows (docs/PLANS.md, "Late r7": autoPlanes) — at the sf0.01
+    // gate autoPlanes(500) = 4, matching the oracle's plane derivation
     // Oracle: d74's bucket/verify CTE chained into d73's recursive-CTE components:
     // one oracle for the full semantic-dedup pass, planes from autoPlanesOf
     QuerySpec("p92_semantic_dedup", (s, dir) => {
@@ -708,9 +706,6 @@ object DedupQueries {
   /** d74/p92's plane count, shared by each builder and its oracle. */
   private def autoPlanesOf(e: DataFrame): Int = Similarity.autoPlanes(e.count())
 
-  /** Oracle for d24: recompute the 60-bit md5 simhash per doc in SQL, then
-    * naive all-pairs Hamming distance (exactly equals the banded search for
-    * maxDist 3 < 4 bands, by pigeonhole). */
   /** CTE chain reproducing the simhash near-dup PAIRS relation `p`
     * (dist ≤ 3) — shared by the d24 oracle and d128's graph oracle. */
   private def simHashPairsCte: String = {
@@ -730,6 +725,9 @@ object DedupQueries {
        |    bit_count(xor(a.simhash, b.simhash)) <= 3)""".stripMargin
   }
 
+  /** Oracle for d24: recompute the 60-bit md5 simhash per doc in SQL, then
+    * naive all-pairs Hamming distance (exactly equals the banded search for
+    * maxDist 3 < 4 bands, by pigeonhole). */
   private def simHashOracle: String =
     s"""WITH $simHashPairsCte
        |SELECT id_a, id_b, dist FROM p ORDER BY id_a, id_b""".stripMargin
@@ -777,86 +775,57 @@ object DedupQueries {
        |  JOIN deg d ON d.node = s.node, nn)
        |SELECT node, pr FROM pr WHERE it = $iters ORDER BY node""".stripMargin
 
-  /** OR-amplified LSH near-dup oracle: table `t` buckets with hyperplane
-    * rows [t·planes, (t+1)·planes) of planeMatrix(tables·planes, dim) —
-    * identical to Similarity.nearDupPairs — candidates unioned across
-    * tables (UNION dedups), then exact cosine against `threshold`. */
-  private def nearDupLshOracle(planes: Int, tables: Int, dim: Int,
-                               threshold: Double): String = {
-    val mat = graft.ops.Similarity.planeMatrix(planes * tables, dim)
-    def lst(a: Array[Double]): String =
-      a.map(w => java.math.BigDecimal.valueOf(w).toPlainString).mkString("[", ", ", "]")
-    def bucketExpr(tbl: Int): String = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(tbl * planes + p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    val bucketCols = (0 until tables).map(tb => s"${bucketExpr(tb)} AS b$tb").mkString(", ")
+  /** d74's OR-amplified LSH candidate/verify chain, ending in `p`(id_a,
+    * id_b, cosine): table `t` buckets with hyperplane rows [t·planes,
+    * (t+1)·planes) of planeMatrix(tables·planes, dim) — identical to
+    * Similarity.nearDupPairs — candidates unioned across tables (UNION
+    * dedups), then exact cosine per candidate. */
+  private def nearDupCtes(planes: Int, tables: Int, dim: Int): String = {
     val cand = (0 until tables).map(tb =>
       s"SELECT a.vec_id AS id_a, b2.vec_id AS id_b FROM b a JOIN b b2 ON a.b$tb = b2.b$tb AND a.vec_id < b2.vec_id")
       .mkString(" UNION ")
-    s"""WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       |b AS (SELECT vec_id, e, $bucketCols FROM v),
+    s"""$vecCte,
+       |b AS (SELECT vec_id, e, ${lshBucketCols(planes, tables, dim)} FROM v),
        |cand AS ($cand),
        |p AS (SELECT id_a, id_b,
-       |  list_sum([va.e[i]*vb.e[i] for i in range(1, len(va.e)+1)]) /
-       |  (sqrt(list_sum([va.e[i]*va.e[i] for i in range(1, len(va.e)+1)])) *
-       |   sqrt(list_sum([vb.e[i]*vb.e[i] for i in range(1, len(vb.e)+1)]))) AS cosine
-       |  FROM cand JOIN v va ON va.vec_id = id_a JOIN v vb ON vb.vec_id = id_b)
-       |SELECT id_a, id_b, round(cosine, 4) AS cosine FROM p WHERE cosine >= $threshold
-       |ORDER BY id_a, id_b""".stripMargin
+       |  ${cosineSql("va.e", "vb.e")} AS cosine
+       |  FROM cand JOIN v va ON va.vec_id = id_a JOIN v vb ON vb.vec_id = id_b)""".stripMargin
   }
 
-  /** Cross-relation decontamination oracle (d159): [[nearDupLshOracle]]'s
+  /** d74 oracle: the [[nearDupCtes]] pairs at or above `threshold`. */
+  private def nearDupLshOracle(planes: Int, tables: Int, dim: Int,
+                               threshold: Double): String =
+    s"""WITH ${nearDupCtes(planes, tables, dim)}
+       |SELECT id_a, id_b, round(cosine, 4) AS cosine FROM p WHERE cosine >= $threshold
+       |ORDER BY id_a, id_b""".stripMargin
+
+  /** Cross-relation decontamination oracle (d159): [[nearDupCtes]]'
     * bucket/verify chain with the two sides drawn from the %25 split —
     * candidates are the cross equi-join per table (no id_a < id_b
     * orientation: the sides are disjoint relations), UNION-deduped. */
   private def crossNearDupOracle(planes: Int, tables: Int, dim: Int,
                                  threshold: Double): String = {
-    val mat = graft.ops.Similarity.planeMatrix(planes * tables, dim)
-    def lst(a: Array[Double]): String =
-      a.map(w => java.math.BigDecimal.valueOf(w).toPlainString).mkString("[", ", ", "]")
-    def bucketExpr(tbl: Int): String = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(tbl * planes + p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    val bucketCols = (0 until tables).map(tb => s"${bucketExpr(tb)} AS b$tb").mkString(", ")
+    val bucketCols = lshBucketCols(planes, tables, dim)
     val cand = (0 until tables).map(tb =>
       s"SELECT c.vec_id AS id, p2.vec_id AS probe_id FROM bc c JOIN bp p2 ON c.b$tb = p2.b$tb")
       .mkString(" UNION ")
-    s"""WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+    s"""WITH $vecCte,
        |bc AS (SELECT vec_id, e, $bucketCols FROM v WHERE vec_id % 25 <> 0),
        |bp AS (SELECT vec_id, e, $bucketCols FROM v WHERE vec_id % 25 = 0),
        |cand AS ($cand),
        |p AS (SELECT id, probe_id,
-       |  list_sum([vc.e[i]*vp.e[i] for i in range(1, len(vc.e)+1)]) /
-       |  (sqrt(list_sum([vc.e[i]*vc.e[i] for i in range(1, len(vc.e)+1)])) *
-       |   sqrt(list_sum([vp.e[i]*vp.e[i] for i in range(1, len(vp.e)+1)]))) AS cosine
+       |  ${cosineSql("vc.e", "vp.e")} AS cosine
        |  FROM cand JOIN v vc ON vc.vec_id = id JOIN v vp ON vp.vec_id = probe_id)
        |SELECT id, probe_id, round(cosine, 4) AS cosine FROM p WHERE cosine >= $threshold
        |ORDER BY id, probe_id""".stripMargin
   }
 
-  /** Semantic-dedup oracle (p92): the [[nearDupLshOracle]] candidate/verify
+  /** Semantic-dedup oracle (p92): the [[nearDupCtes]] candidate/verify
     * chain feeding the d73-shaped recursive-CTE connected components, then
     * the min-id keep rule; singletons survive as their own cluster of 1. */
   private def semanticDedupOracle(planes: Int, tables: Int, dim: Int,
-                                  threshold: Double): String = {
-    val mat = graft.ops.Similarity.planeMatrix(planes * tables, dim)
-    def lst(a: Array[Double]): String =
-      a.map(w => java.math.BigDecimal.valueOf(w).toPlainString).mkString("[", ", ", "]")
-    def bucketExpr(tbl: Int): String = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(tbl * planes + p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    val bucketCols = (0 until tables).map(tb => s"${bucketExpr(tb)} AS b$tb").mkString(", ")
-    val cand = (0 until tables).map(tb =>
-      s"SELECT a.vec_id AS id_a, b2.vec_id AS id_b FROM b a JOIN b b2 ON a.b$tb = b2.b$tb AND a.vec_id < b2.vec_id")
-      .mkString(" UNION ")
-    s"""WITH RECURSIVE v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       |b AS (SELECT vec_id, e, $bucketCols FROM v),
-       |cand AS ($cand),
-       |p AS (SELECT id_a, id_b,
-       |  list_sum([va.e[i]*vb.e[i] for i in range(1, len(va.e)+1)]) /
-       |  (sqrt(list_sum([va.e[i]*va.e[i] for i in range(1, len(va.e)+1)])) *
-       |   sqrt(list_sum([vb.e[i]*vb.e[i] for i in range(1, len(vb.e)+1)]))) AS cosine
-       |  FROM cand JOIN v va ON va.vec_id = id_a JOIN v vb ON vb.vec_id = id_b),
+                                  threshold: Double): String =
+    s"""WITH RECURSIVE ${nearDupCtes(planes, tables, dim)},
        |pr AS (SELECT id_a, id_b FROM p WHERE cosine >= $threshold),
        |edges AS (SELECT id_a AS a, id_b AS b FROM pr
        |          UNION SELECT id_b, id_a FROM pr),
@@ -874,5 +843,4 @@ object DedupQueries {
        |LEFT JOIN comp c ON c.node = emb.vec_id
        |LEFT JOIN sz s ON s.cid = c.cid
        |ORDER BY emb.vec_id""".stripMargin
-  }
 }

@@ -1,15 +1,15 @@
 package graft.query
 
 import graft.core.Tables
-import graft.ops.Dedup
+import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Helpers the query families share: table access, the exact-cents sums,
   * the memoized child sessions, the scratch directories, the pair-graph
-  * builders, the stopword list, the frozen BPE merges and the PSI oracle
-  * that p174 and q175 both replay. Every family imports this object, and
-  * it reads no family.
+  * builders, the stopword list, the frozen BPE merges, the PSI oracle
+  * that p174 and q175 both replay, and the DuckDB builders of the vector
+  * oracles. Every family imports this object, and it reads no family.
   *
   * Scratch rule: every file a query builder writes goes under ONE scratch
   * root per JVM ([[scratchDir]]), and one shutdown hook deletes that root
@@ -202,4 +202,119 @@ object Shared {
         |  CAST(term AS DOUBLE) AS term,
         |  floor(CAST(psi AS DOUBLE) * 1e6 + 0.5) / 1e6 AS psi
         |FROM t2, ps, rng ORDER BY bin""".stripMargin
+
+  // DuckDB builders of the vector-search oracles (DedupQueries and
+  // SimilarityQueries). Each writes one step of graft.ops.Similarity ONCE
+  // as SQL. They never call the Column-API helpers: the oracle stays an
+  // independent replay that shares only the md5 constants
+  // (Similarity.planeMatrix, Similarity.pqCodebook).
+
+  /** A double as an exact DECIMAL literal (BigDecimal's plain form). */
+  private[query] def decimalSql(d: Double): String =
+    java.math.BigDecimal.valueOf(d).toPlainString
+
+  /** A double as an exact DOUBLE: Double.toString's shortest round-trip
+    * form, parsed by strtod. For fitted constants, whose arbitrary
+    * mantissas would otherwise go through DECIMAL-width unification. */
+  private[query] def doubleSql(d: Double): String =
+    s"CAST('${java.lang.Double.toString(d)}' AS DOUBLE)"
+
+  private[query] def listSql(a: Array[Double], lit: Double => String = decimalSql): String =
+    a.map(lit).mkString("[", ", ", "]")
+
+  /** Every embedding as a DOUBLE list `e`, keyed by vec_id. */
+  private[query] val vecCte: String =
+    "v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings)"
+
+  /** Cosine of two DOUBLE-list expressions: sequential list_sums in index
+    * order, the engine kernel's left fold. */
+  private[query] def cosineSql(a: String, b: String): String = {
+    def dot(x: String, y: String) = s"list_sum([$x[i]*$y[i] for i in range(1, len($x)+1)])"
+    s"${dot(a, b)} /\n  (sqrt(${dot(a, a)}) *\n   sqrt(${dot(b, b)}))"
+  }
+
+  /** The ranking contract of Similarity.cosineTopK: per `key`, cosine
+    * descending, ties by the neighbor id `nb` ascending. */
+  private[query] def cosineRankSql(key: String, nb: String = "neighbor_id"): String =
+    s"row_number() OVER (PARTITION BY $key ORDER BY cosine DESC, $nb)"
+
+  /** LSH table `tbl`'s bucket id over list column `e`: bit p is set iff
+    * the projection on md5 hyperplane row tbl·planes + p is >= 0. A row
+    * of the plane matrix does not depend on its height, so table 0 is the
+    * single-table bucket of Similarity.lshBucket. */
+  private[query] def lshBucketSql(planes: Int, dim: Int, tbl: Int = 0): String = {
+    val mat = Similarity.planeMatrix((tbl + 1) * planes, dim)
+    (0 until planes).map { p =>
+      s"(CASE WHEN list_sum([e[i] * (${listSql(mat(tbl * planes + p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
+    }.mkString(" + ")
+  }
+
+  /** The OR-amplified tables' buckets as columns `b0` … `b{tables-1}`. */
+  private[query] def lshBucketCols(planes: Int, tables: Int, dim: Int): String =
+    (0 until tables).map(tb => s"${lshBucketSql(planes, dim, tb)} AS b$tb").mkString(", ")
+
+  /** A PQ codebook as ONE nested list literal, C[s][c][j] 1-based. */
+  private[query] def pqCodebookSql(cb: Array[Array[Array[Double]]],
+                                   lit: Double => String = decimalSql): String =
+    cb.map(sc => sc.map(listSql(_, lit)).mkString("[", ", ", "]")).mkString("[", ", ", "]")
+
+  /** Subspace `s`'s `kc` squared-L2 distances from list column `v` to the
+    * centroids of the codebook bound as `cb` (PqDistTable's slice s). */
+  private def pqDistsSql(v: String, cb: String, subDim: Int, kc: Int): String =
+    s"[ list_sum([ ($v[(s-1)*$subDim + j] - $cb[s][c][j]) * ($v[(s-1)*$subDim + j] - $cb[s][c][j]) for j in range(1, ${subDim + 1}) ]) for c in range(1, ${kc + 1}) ]"
+
+  /** Similarity.pqEncode of list column `e` under the codebook bound as
+    * `cb`: per subspace the first-position argmin of its distance list. */
+  private[query] def pqCodesSql(cb: String, m: Int, kc: Int, subDim: Int): String = {
+    val ds = pqDistsSql("e", cb, subDim, kc)
+    s"[ list_position($ds, list_min($ds)) for s in range(1, ${m + 1}) ]"
+  }
+
+  /** ADC of the query list `qe` against candidate `c`'s codes: per
+    * subspace one distance-list lookup, summed in subspace order. */
+  private[query] def pqAdcSql(cb: String, m: Int, kc: Int, subDim: Int): String =
+    s"list_sum([ ${pqDistsSql("qe", cb, subDim, kc)}[c.codes[s]] for s in range(1, ${m + 1}) ])"
+
+  /** The two-stage serving tail (Similarity.coarseCandidates →
+    * exactRerank): per query the `n` best rows of CTE `coarse` by
+    * `scoreOrder`, ties by neighbor id (`cand`), re-scored by exact cosine
+    * between the query CTE `qs`.qe and the corpus CTE `corpus`.e (`ex`)
+    * and ranked per query as `rk` (`r`); every CTE name carries `sfx`. */
+  private[query] def rerankCtes(coarse: String, scoreOrder: String, n: Int,
+                                corpus: String, sfx: String = ""): String =
+    s"""cand$sfx AS (SELECT query_id, neighbor_id FROM (
+       |  SELECT query_id, neighbor_id,
+       |    row_number() OVER (PARTITION BY query_id ORDER BY $scoreOrder, neighbor_id) AS rn
+       |  FROM $coarse) WHERE rn <= $n),
+       |ex$sfx AS (SELECT cand$sfx.query_id, cand$sfx.neighbor_id,
+       |  ${cosineSql("qs.qe", "ce.e")} AS cosine
+       |  FROM cand$sfx JOIN qs USING (query_id) JOIN $corpus ce ON ce.vec_id = cand$sfx.neighbor_id),
+       |r$sfx AS (SELECT query_id, neighbor_id, cosine,
+       |  ${cosineRankSql("query_id")} AS rk FROM ex$sfx)""".stripMargin
+
+  /** [[rerankCtes]] closed by the top-`k` select: the whole tail of a
+    * rerankTopK/pqTopK/lshPqTopK replay. */
+  private[query] def rerankTopKSql(coarse: String, scoreOrder: String, n: Int,
+                                   corpus: String, k: Int): String =
+    s"""${rerankCtes(coarse, scoreOrder, n, corpus)}
+       |SELECT query_id, neighbor_id, round(cosine, 4) AS cosine FROM r
+       |WHERE rk <= $k ORDER BY query_id, neighbor_id""".stripMargin
+
+  /** Similarity.recallAtK replayed: per query of the CTE `exact`, its
+    * overlap with the CTE `approx` (both (query_id, neighbor_id)),
+    * LEFT-joined so a query with no approximate row reports
+    * n_approx = 0. The report is CTE `rep$sfx`; `tierCol`, when given,
+    * is a leading select item. */
+  private[query] def recallCtes(approx: String, sfx: String = "", tierCol: String = ""): String =
+    s"""hits$sfx AS (SELECT e.query_id, count(*) AS n_exact,
+       |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS n_overlap
+       |  FROM exact e LEFT JOIN $approx a
+       |    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+       |  GROUP BY e.query_id),
+       |ac$sfx AS (SELECT query_id, count(*) AS n_approx FROM $approx GROUP BY query_id),
+       |rep$sfx AS (SELECT ${tierCol}hits$sfx.query_id,
+       |  coalesce(ac$sfx.n_approx, 0) AS n_approx, hits$sfx.n_exact,
+       |  CAST(hits$sfx.n_overlap AS BIGINT) AS n_overlap,
+       |  floor(CAST(hits$sfx.n_overlap AS DOUBLE) / hits$sfx.n_exact * 1e6 + 0.5) / 1e6 AS recall
+       |  FROM hits$sfx LEFT JOIN ac$sfx ON ac$sfx.query_id = hits$sfx.query_id)""".stripMargin
 }

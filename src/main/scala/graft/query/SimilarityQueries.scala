@@ -16,19 +16,7 @@ object SimilarityQueries {
       val e = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 8), "vec_id", "embedding", k = 10)
         .orderBy(col("query_id"), col("neighbor_id"))
-    }, Sql(
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS nid, embedding AS cv FROM embeddings),
-        |scored AS (
-        |  SELECT qid, nid,
-        |    list_sum([CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE) for i in range(1, len(qv)+1)]) /
-        |    (sqrt(list_sum([CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE) for i in range(1, len(qv)+1)])) *
-        |     sqrt(list_sum([CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE) for i in range(1, len(cv)+1)]))) AS cosine
-        |  FROM q, c WHERE qid <> nid),
-        |ranked AS (SELECT qid, nid, cosine,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rn FROM scored)
-        |SELECT qid AS query_id, nid AS neighbor_id, round(cosine, 4) AS cosine
-        |FROM ranked WHERE rn <= 10 ORDER BY query_id, neighbor_id""".stripMargin)),
+    }, Sql(s"WITH $vecCte,\n${bruteTopKSql("v", "e", k = 10)}")),
 
     // LSH-bucketed ANN (the scale path; approximate) — OR-amplified over 2
     // independent hyperplane tables, candidates deduped before the exact
@@ -126,9 +114,9 @@ object SimilarityQueries {
         .orderBy(col("bucket"), col("dim_pos"))
     }, Sql(centroidOracle(planes = 5, dim = 64))),
 
-    // AUTO-sized bucket-pruned PQ serving (round 15): lshPqTopKAuto's
-    // contract as a driver row — autoServingPlanes picks the largest
-    // plane count keeping expected bucket occupancy over 4·k·expand, so
+    // AUTO-sized bucket-pruned PQ serving (round 15): lshPqTopK at
+    // autoServingPlanes(n) as a driver row — the largest plane count
+    // keeping expected bucket occupancy over 4·k·expand, so
     // per-query coarse cost stays flat while the prune ratio tracks the
     // corpus. The oracle recomputes the knob from the same dir through
     // servingPlanesOf (the d74/p92 technique), so it replays the auto
@@ -275,13 +263,7 @@ object SimilarityQueries {
       val scored = c.crossJoin(q)
         .filter(col("neighbor_id") =!= col("query_id"))
         .withColumn("cosine", graft.ops.Similarity.cosine(col("qv"), col("cv")))
-      val win = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("neighbor_id").asc)
-      scored.withColumn("rn", row_number().over(win))
-        .filter(col("rn") <= 10)
-        .select(col("query_id"), col("neighbor_id"),
-          round(col("cosine"), 4).as("cosine"))
+      graft.ops.Similarity.cosineTopK(scored, "query_id", k = 10)
         .orderBy(col("query_id"), col("neighbor_id"))
     }, FromData((s, dir) => whitenedAnnOracle(whitenFitOf(t(s, dir, "embeddings")), kTop = 10))),
 
@@ -328,7 +310,7 @@ object SimilarityQueries {
           "vec_id", "embedding", k = 10, expand = 4)
         .orderBy(col("query_id"), col("neighbor_id"))
     }, Sql(
-      """WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+      s"""WITH $vecCte,
         |sc AS (SELECT vec_id, e, list_max([abs(x) for x in e]) / 127.0 AS scale FROM v),
         |q AS (SELECT vec_id, e, scale,
         |  [CAST(coalesce(round(x / nullif(scale, 0)), 0) AS BIGINT) for x in e] AS qv FROM sc),
@@ -336,19 +318,7 @@ object SimilarityQueries {
         |coarse AS (SELECT query_id, c.vec_id AS neighbor_id,
         |  CAST(list_sum([qqv[i] * c.qv[i] for i in range(1, len(qqv) + 1)]) AS DOUBLE) * qscale * c.scale AS approx
         |  FROM qs, q c WHERE c.vec_id <> query_id),
-        |cand AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT query_id, neighbor_id,
-        |    row_number() OVER (PARTITION BY query_id ORDER BY approx DESC, neighbor_id) AS rn
-        |  FROM coarse) WHERE rn <= 40),
-        |ex AS (SELECT cand.query_id, cand.neighbor_id,
-        |  list_sum([qs.qe[i] * ce.e[i] for i in range(1, len(qs.qe) + 1)]) /
-        |  (sqrt(list_sum([qs.qe[i] * qs.qe[i] for i in range(1, len(qs.qe) + 1)])) *
-        |   sqrt(list_sum([ce.e[i] * ce.e[i] for i in range(1, len(ce.e) + 1)]))) AS cosine
-        |  FROM cand JOIN qs USING (query_id) JOIN q ce ON ce.vec_id = cand.neighbor_id),
-        |r AS (SELECT query_id, neighbor_id, cosine,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk FROM ex)
-        |SELECT query_id, neighbor_id, round(cosine, 4) AS cosine FROM r
-        |WHERE rk <= 10 ORDER BY query_id, neighbor_id""".stripMargin)),
+        |${rerankTopKSql("coarse", "approx DESC", n = 40, corpus = "q", k = 10)}""".stripMargin)),
 
     // hard-negative mining: per query, the top-k most-similar vectors with
     // a DIFFERENT label — boundary-hugging negatives for contrastive
@@ -360,16 +330,15 @@ object SimilarityQueries {
           "vec_id", "embedding", "label", k = 10)
         .orderBy(col("query_id"), col("neighbor_id"))
     }, Sql(
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv, label AS ql FROM embeddings WHERE vec_id < 8),
-        |c AS (SELECT vec_id AS nid, embedding AS cv, label AS nl FROM embeddings),
+      s"""WITH q AS (SELECT vec_id AS qid, [CAST(x AS DOUBLE) for x in embedding] AS qv, label AS ql
+        |  FROM embeddings WHERE vec_id < 8),
+        |c AS (SELECT vec_id AS nid, [CAST(x AS DOUBLE) for x in embedding] AS cv, label AS nl FROM embeddings),
         |scored AS (
         |  SELECT qid, nid, nl,
-        |    list_sum([CAST(qv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE) for i in range(1, len(qv)+1)]) /
-        |    (sqrt(list_sum([CAST(qv[i] AS DOUBLE) * CAST(qv[i] AS DOUBLE) for i in range(1, len(qv)+1)])) *
-        |     sqrt(list_sum([CAST(cv[i] AS DOUBLE) * CAST(cv[i] AS DOUBLE) for i in range(1, len(cv)+1)]))) AS cosine
+        |    ${cosineSql("qv", "cv")} AS cosine
         |  FROM q, c WHERE qid <> nid AND nl <> ql),
         |ranked AS (SELECT qid, nid, nl, cosine,
-        |  row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rn FROM scored)
+        |  ${cosineRankSql("qid", "nid")} AS rn FROM scored)
         |SELECT qid AS query_id, nid AS neighbor_id, nl AS neg_label, round(cosine, 4) AS cosine
         |FROM ranked WHERE rn <= 10 ORDER BY query_id, neighbor_id""".stripMargin)),
 
@@ -394,9 +363,10 @@ object SimilarityQueries {
     // once (localCheckpoint) so the brute-force pass — the harness's real
     // cost at corpus scale — isn't recomputed per graded tier.
     // Round 15 adds tier 'pqt': the TRAINED per-subspace k-means codebook
-    // (x120's real-deployment form) graded in the same report. The fit is
-    // a deterministic driver artifact (capped md5-ordered sample, Lloyd
-    // with first-k-distinct seeding — Similarity.pqCodebookTrained), so
+    // (the real-deployment form pqCodebook's scaladoc names) graded in
+    // the same report. The fit is a deterministic driver artifact (capped
+    // md5-ordered sample, Lloyd with first-k-distinct seeding —
+    // Similarity.pqCodebookTrained), so
     // the oracle refits the codebook at the same dir (trainedCodebookOf),
     // inlines those constants and replays the serving chain bit-for-bit,
     // exactly as it does for the md5-grid constants — and because the
@@ -625,81 +595,35 @@ object SimilarityQueries {
     * subspace order, re-rank = the s29 cosine chain. Every reduction is a
     * sequential list_sum in the same index order as the engine's
     * left-assoc folds — bit-identical doubles end to end. */
-  private def pqOracle(m: Int, kc: Int, subDim: Int, kTop: Int, expand: Int): String = {
-    val cb = graft.ops.Similarity.pqCodebook(m, kc, subDim)
-    def num(d: Double) = java.math.BigDecimal.valueOf(d).toPlainString
-    val cLit = cb.map(sc => sc.map(cv => cv.map(num).mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    // per-subspace 16-entry squared-L2 distance list for vector column $v
-    def dsFor(v: String) =
-      s"[ list_sum([ ($v[(s-1)*$subDim + j] - C[s][c][j]) * ($v[(s-1)*$subDim + j] - C[s][c][j]) for j in range(1, ${subDim + 1}) ]) for c in range(1, ${kc + 1}) ]"
-    val dsE = dsFor("e"); val dsQ = dsFor("qe")
-    s"""WITH cb AS (SELECT $cLit AS C),
-       |v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
+  private def pqOracle(m: Int, kc: Int, subDim: Int, kTop: Int, expand: Int): String =
+    s"""WITH cb AS (SELECT ${pqCodebookSql(Similarity.pqCodebook(m, kc, subDim))} AS C),
+       |$vecCte,
        |codes AS (SELECT vec_id,
-       |  [ list_position($dsE, list_min($dsE)) for s in range(1, ${m + 1}) ] AS codes
+       |  ${pqCodesSql("C", m, kc, subDim)} AS codes
        |  FROM v, cb),
        |qs AS (SELECT vec_id AS query_id, e AS qe FROM v WHERE vec_id < 8),
        |coarse AS (SELECT query_id, c.vec_id AS neighbor_id,
-       |  list_sum([ $dsQ[c.codes[s]] for s in range(1, ${m + 1}) ]) AS adc
+       |  ${pqAdcSql("C", m, kc, subDim)} AS adc
        |  FROM qs, cb, codes c WHERE c.vec_id <> query_id),
-       |cand AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rn
-       |  FROM coarse) WHERE rn <= ${kTop * expand}),
-       |ex AS (SELECT cand.query_id, cand.neighbor_id,
-       |  list_sum([qs.qe[i] * ce.e[i] for i in range(1, len(qs.qe) + 1)]) /
-       |  (sqrt(list_sum([qs.qe[i] * qs.qe[i] for i in range(1, len(qs.qe) + 1)])) *
-       |   sqrt(list_sum([ce.e[i] * ce.e[i] for i in range(1, len(ce.e) + 1)]))) AS cosine
-       |  FROM cand JOIN qs USING (query_id) JOIN v ce ON ce.vec_id = cand.neighbor_id),
-       |r AS (SELECT query_id, neighbor_id, cosine,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk FROM ex)
-       |SELECT query_id, neighbor_id, round(cosine, 4) AS cosine FROM r
-       |WHERE rk <= $kTop ORDER BY query_id, neighbor_id""".stripMargin
-  }
+       |${rerankTopKSql("coarse", "adc", kTop * expand, "v", kTop)}""".stripMargin
 
   /** s123 oracle: the s100 bucket derivation + the s120 PQ chain with the
     * coarse pass restricted to the query's own bucket (the equi-join the
     * engine runs). Same sequential list_sums, same first-position argmin,
     * same tie-broken windows — bit-identical end to end. */
   private def lshPqOracle(m: Int, kc: Int, subDim: Int, planes: Int, dim: Int,
-                          kTop: Int, expand: Int): String = {
-    val cb = graft.ops.Similarity.pqCodebook(m, kc, subDim)
-    val mat = graft.ops.Similarity.planeMatrix(planes, dim)
-    def num(d: Double) = java.math.BigDecimal.valueOf(d).toPlainString
-    def lst(a: Array[Double]): String = a.map(num).mkString("[", ", ", "]")
-    val bucketExpr = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    val cLit = cb.map(sc => sc.map(cv => cv.map(num).mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    def dsFor(v: String) =
-      s"[ list_sum([ ($v[(s-1)*$subDim + j] - C[s][c][j]) * ($v[(s-1)*$subDim + j] - C[s][c][j]) for j in range(1, ${subDim + 1}) ]) for c in range(1, ${kc + 1}) ]"
-    val dsE = dsFor("e"); val dsQ = dsFor("qe")
-    s"""WITH cbk AS (SELECT $cLit AS C),
-       |v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       |b AS (SELECT vec_id, e, CAST($bucketExpr AS BIGINT) AS bkt FROM v),
+                          kTop: Int, expand: Int): String =
+    s"""WITH cbk AS (SELECT ${pqCodebookSql(Similarity.pqCodebook(m, kc, subDim))} AS C),
+       |$vecCte,
+       |b AS (SELECT vec_id, e, CAST(${lshBucketSql(planes, dim)} AS BIGINT) AS bkt FROM v),
        |codes AS (SELECT vec_id, bkt,
-       |  [ list_position($dsE, list_min($dsE)) for s in range(1, ${m + 1}) ] AS codes
+       |  ${pqCodesSql("C", m, kc, subDim)} AS codes
        |  FROM b, cbk),
        |qs AS (SELECT vec_id AS query_id, e AS qe, bkt AS qbkt FROM b WHERE vec_id < 8),
        |coarse AS (SELECT query_id, c.vec_id AS neighbor_id,
-       |  list_sum([ $dsQ[c.codes[s]] for s in range(1, ${m + 1}) ]) AS adc
+       |  ${pqAdcSql("C", m, kc, subDim)} AS adc
        |  FROM qs, cbk, codes c WHERE c.bkt = qs.qbkt AND c.vec_id <> query_id),
-       |cand AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rn
-       |  FROM coarse) WHERE rn <= ${kTop * expand}),
-       |ex AS (SELECT cand.query_id, cand.neighbor_id,
-       |  list_sum([qs.qe[i] * ce.e[i] for i in range(1, len(qs.qe) + 1)]) /
-       |  (sqrt(list_sum([qs.qe[i] * qs.qe[i] for i in range(1, len(qs.qe) + 1)])) *
-       |   sqrt(list_sum([ce.e[i] * ce.e[i] for i in range(1, len(ce.e) + 1)]))) AS cosine
-       |  FROM cand JOIN qs USING (query_id) JOIN v ce ON ce.vec_id = cand.neighbor_id),
-       |r AS (SELECT query_id, neighbor_id, cosine,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk FROM ex)
-       |SELECT query_id, neighbor_id, round(cosine, 4) AS cosine FROM r
-       |WHERE rk <= $kTop ORDER BY query_id, neighbor_id""".stripMargin
-  }
+       |${rerankTopKSql("coarse", "adc", kTop * expand, "v", kTop)}""".stripMargin
 
   /** s100 oracle: single-table sign-signature buckets (rows [0, planes) of
     * the md5 plane matrix, the [[graft.ops.Similarity.lshBucket]]
@@ -707,15 +631,9 @@ object SimilarityQueries {
     * taken through DECIMAL(27,7) — both engines round double→decimal
     * half-away-from-zero, so the sum (hence the mean) is reduction-order
     * independent and hash-comparable. */
-  private def centroidOracle(planes: Int, dim: Int): String = {
-    val mat = graft.ops.Similarity.planeMatrix(planes, dim)
-    def lst(a: Array[Double]): String =
-      a.map(w => java.math.BigDecimal.valueOf(w).toPlainString).mkString("[", ", ", "]")
-    val bucketExpr = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
+  private def centroidOracle(planes: Int, dim: Int): String =
     s"""WITH v AS (SELECT [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       |b AS (SELECT e, CAST($bucketExpr AS BIGINT) AS bucket FROM v),
+       |b AS (SELECT e, CAST(${lshBucketSql(planes, dim)} AS BIGINT) AS bucket FROM v),
        |x AS (SELECT bucket, i - 1 AS dim_pos, CAST(e[i] AS DECIMAL(27,7)) AS comp
        |  FROM b, (SELECT unnest(range(1, ${dim + 1})) AS i) u),
        |g AS (SELECT bucket, dim_pos, count(*) AS n_vectors, sum(comp) AS s
@@ -723,34 +641,55 @@ object SimilarityQueries {
        |SELECT bucket, dim_pos, n_vectors,
        |  floor(CAST(s AS DOUBLE) / n_vectors * 1e6 + 0.5) / 1e6 AS centroid
        |FROM g ORDER BY bucket, dim_pos""".stripMargin
-  }
+
+  /** Exact cosine top-k (Similarity.bruteForceTopK) of the vec_id < 8
+    * queries over the CTE `src`(vec_id, `vec`): everything after the CTEs
+    * that define `src`. The s29 and s166 oracles. */
+  private def bruteTopKSql(src: String, vec: String, k: Int): String =
+    s"""q AS (SELECT vec_id AS qid, $vec AS qv FROM $src WHERE vec_id < 8),
+       |c AS (SELECT vec_id AS nid, $vec AS cv FROM $src),
+       |scored AS (
+       |  SELECT qid, nid,
+       |    ${cosineSql("qv", "cv")} AS cosine
+       |  FROM q, c WHERE qid <> nid),
+       |ranked AS (SELECT qid, nid, cosine,
+       |  ${cosineRankSql("qid", "nid")} AS rn FROM scored)
+       |SELECT qid AS query_id, nid AS neighbor_id, round(cosine, 4) AS cosine
+       |FROM ranked WHERE rn <= $k ORDER BY query_id, neighbor_id""".stripMargin
+
+  /** The exact top-k of the vec_id < 8 queries over `v` as the CTE
+    * `exact`(query_id, neighbor_id): the graded side of both recall
+    * reports (s142, s143). */
+  private def exactCtes(k: Int): String =
+    s"""ex_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |  ${cosineSql("q.e", "c.e")} AS cosine
+       |  FROM v q, v c WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id),
+       |exact AS (SELECT query_id, neighbor_id FROM (
+       |  SELECT query_id, neighbor_id,
+       |    ${cosineRankSql("query_id")} AS rn
+       |  FROM ex_scored) WHERE rn <= $k)""".stripMargin
 
   /** Shared CTE chain (v → buckets → candidates → exact cosine → per-query
     * rank) replaying the md5-hyperplane LSH search in SQL; composed by the
-    * s30/s170 top-k oracles and d171's cluster oracle. */
+    * s30/s170 top-k oracles, s142's recall report and d171's cluster
+    * oracle. Table `t` buckets with hyperplane rows [t·planes,
+    * (t+1)·planes) of planeMatrix(tables·planes, dim), candidates are
+    * unioned across tables (UNION dedups, mirroring the pre-rerank
+    * dropDuplicates). */
   private def lshKnnCtes(planes: Int, tables: Int, dim: Int,
                          queryPred: String, outId: String): String = {
-    val mat = graft.ops.Similarity.planeMatrix(planes * tables, dim)
-    def lst(a: Array[Double]): String =
-      a.map(w => java.math.BigDecimal.valueOf(w).toPlainString).mkString("[", ", ", "]")
-    def bucketExpr(tbl: Int): String = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(tbl * planes + p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    val bucketCols = (0 until tables).map(tb => s"${bucketExpr(tb)} AS b$tb").mkString(", ")
     val cand = (0 until tables).map(tb =>
       s"SELECT q.vec_id AS $outId, c.vec_id AS neighbor_id FROM b q JOIN b c ON q.b$tb = c.b$tb " +
         s"WHERE $queryPred AND c.vec_id <> q.vec_id")
       .mkString(" UNION ")
-    s"""v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       |b AS (SELECT vec_id, e, $bucketCols FROM v),
+    s"""$vecCte,
+       |b AS (SELECT vec_id, e, ${lshBucketCols(planes, tables, dim)} FROM v),
        |cand AS ($cand),
        |scored AS (SELECT $outId, neighbor_id,
-       |  list_sum([qv.e[i]*cv.e[i] for i in range(1, len(qv.e)+1)]) /
-       |  (sqrt(list_sum([qv.e[i]*qv.e[i] for i in range(1, len(qv.e)+1)])) *
-       |   sqrt(list_sum([cv.e[i]*cv.e[i] for i in range(1, len(cv.e)+1)]))) AS cosine
+       |  ${cosineSql("qv.e", "cv.e")} AS cosine
        |  FROM cand JOIN v qv ON qv.vec_id = $outId JOIN v cv ON cv.vec_id = neighbor_id),
        |ranked AS (SELECT $outId, neighbor_id, cosine,
-       |  row_number() OVER (PARTITION BY $outId ORDER BY cosine DESC, neighbor_id) AS rn FROM scored)""".stripMargin
+       |  ${cosineRankSql(outId)} AS rn FROM scored)""".stripMargin
   }
 
   private def lshOracle(planes: Int, tables: Int, dim: Int, k: Int,
@@ -763,49 +702,12 @@ object SimilarityQueries {
   /** s142 oracle: the s30 LSH chain and the s29 exact chain joined into a
     * per-query recall report — exact side LEFT-joined to the approximate
     * hits so an empty-bucket query still reports with n_approx = 0. */
-  private def annRecallOracle(planes: Int, tables: Int, dim: Int, k: Int): String = {
-    val mat = graft.ops.Similarity.planeMatrix(planes * tables, dim)
-    def lst(a: Array[Double]): String =
-      a.map(w => java.math.BigDecimal.valueOf(w).toPlainString).mkString("[", ", ", "]")
-    def bucketExpr(tbl: Int): String = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(tbl * planes + p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    val bucketCols = (0 until tables).map(tb => s"${bucketExpr(tb)} AS b$tb").mkString(", ")
-    val cand = (0 until tables).map(tb =>
-      s"SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id FROM b q JOIN b c ON q.b$tb = c.b$tb " +
-        s"WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id")
-      .mkString(" UNION ")
-    s"""WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       |b AS (SELECT vec_id, e, $bucketCols FROM v),
-       |cand AS ($cand),
-       |scored AS (SELECT query_id, neighbor_id,
-       |  list_sum([qv.e[i]*cv.e[i] for i in range(1, len(qv.e)+1)]) /
-       |  (sqrt(list_sum([qv.e[i]*qv.e[i] for i in range(1, len(qv.e)+1)])) *
-       |   sqrt(list_sum([cv.e[i]*cv.e[i] for i in range(1, len(cv.e)+1)]))) AS cosine
-       |  FROM cand JOIN v qv ON qv.vec_id = query_id JOIN v cv ON cv.vec_id = neighbor_id),
-       |ranked AS (SELECT query_id, neighbor_id, cosine,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM scored),
+  private def annRecallOracle(planes: Int, tables: Int, dim: Int, k: Int): String =
+    s"""WITH ${lshKnnCtes(planes, tables, dim, "q.vec_id < 8", "query_id")},
        |approx AS (SELECT query_id, neighbor_id FROM ranked WHERE rn <= $k),
-       |ex_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |  list_sum([q.e[i]*c.e[i] for i in range(1, len(q.e)+1)]) /
-       |  (sqrt(list_sum([q.e[i]*q.e[i] for i in range(1, len(q.e)+1)])) *
-       |   sqrt(list_sum([c.e[i]*c.e[i] for i in range(1, len(c.e)+1)]))) AS cosine
-       |  FROM v q, v c WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id),
-       |ex_ranked AS (SELECT query_id, neighbor_id, cosine,
-       |  row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn FROM ex_scored),
-       |exact AS (SELECT query_id, neighbor_id FROM ex_ranked WHERE rn <= $k),
-       |hits AS (SELECT e.query_id, count(*) AS n_exact,
-       |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS n_overlap
-       |  FROM exact e LEFT JOIN approx a
-       |    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-       |  GROUP BY e.query_id),
-       |ac AS (SELECT query_id, count(*) AS n_approx FROM approx GROUP BY query_id)
-       |SELECT hits.query_id, coalesce(ac.n_approx, 0) AS n_approx, hits.n_exact,
-       |  CAST(hits.n_overlap AS BIGINT) AS n_overlap,
-       |  floor(CAST(hits.n_overlap AS DOUBLE) / hits.n_exact * 1e6 + 0.5) / 1e6 AS recall
-       |FROM hits LEFT JOIN ac ON ac.query_id = hits.query_id
-       |ORDER BY hits.query_id""".stripMargin
-  }
+       |${exactCtes(k)},
+       |${recallCtes("approx")}
+       |SELECT * FROM rep ORDER BY query_id""".stripMargin
 
   /** s143 oracle: ALL THREE PQ serving tiers replayed in SQL — the s120
     * ADC chain (full-scan coarse pass) and the s123 bucket-pruned chain
@@ -813,93 +715,44 @@ object SimilarityQueries {
     * first-position argmin, sequential list_sums — pqOracle/lshPqOracle's
     * determinism argument verbatim); the round-15 trained tier gets its
     * own codes CTE from the TRAINED constants ([[trainedCodebookOf]])
-    * (CAST('…' AS DOUBLE) literals — Double.toString's shortest-roundtrip
-    * form parsed by strtod reproduces the exact double, sidestepping
-    * DECIMAL-width unification on arbitrary mantissas). Each tier is
-    * graded against the s29 exact top-k with annRecallOracle's left-join
-    * recall shape, union'd under a tier tag. The k-means FIT itself is
-    * not replayed (no SQL replays Lloyd) — it is a deterministic,
-    * capped, driver-local artifact spec-bounded in ScaleJoinsSpec; what
-    * the oracle verifies bit-for-bit is the entire distributed serving
-    * chain downstream of it (encode, ADC, prune, re-rank, recall). */
+    * (exact-double [[doubleSql]] literals, sidestepping DECIMAL-width
+    * unification on arbitrary mantissas). Each tier is graded against the
+    * s29 exact top-k with s142's recall report, union'd under a tier tag.
+    * The k-means FIT itself is not replayed (no SQL replays Lloyd) — it is
+    * a deterministic, capped, driver-local artifact spec-bounded in
+    * ScaleJoinsSpec; what the oracle verifies bit-for-bit is the entire
+    * distributed serving chain downstream of it (encode, ADC, prune,
+    * re-rank, recall). */
   private def pqRecallOracle(m: Int, kc: Int, subDim: Int, planes: Int,
                              dim: Int, kTop: Int, expand: Int,
                              cbT: Array[Array[Array[Double]]]): String = {
-    val cb = graft.ops.Similarity.pqCodebook(m, kc, subDim)
-    val mat = graft.ops.Similarity.planeMatrix(planes, dim)
-    def num(d: Double) = java.math.BigDecimal.valueOf(d).toPlainString
-    def lst(a: Array[Double]): String = a.map(num).mkString("[", ", ", "]")
-    val bucketExpr = (0 until planes).map { p =>
-      s"(CASE WHEN list_sum([e[i] * (${lst(mat(p))})[i] for i in range(1, len(e)+1)]) >= 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString(" + ")
-    val cLit = cb.map(sc => sc.map(cv => cv.map(num).mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    def numT(d: Double) = s"CAST('${java.lang.Double.toString(d)}' AS DOUBLE)"
-    val cLitT = cbT.map(sc => sc.map(cv => cv.map(numT).mkString("[", ", ", "]"))
-      .mkString("[", ", ", "]")).mkString("[", ", ", "]")
-    def dsFor(v: String, cbVar: String) =
-      s"[ list_sum([ ($v[(s-1)*$subDim + j] - $cbVar[s][c][j]) * ($v[(s-1)*$subDim + j] - $cbVar[s][c][j]) for j in range(1, ${subDim + 1}) ]) for c in range(1, ${kc + 1}) ]"
-    val dsE = dsFor("e", "C"); val dsQ = dsFor("qe", "C")
-    val dsET = dsFor("e", "T"); val dsQT = dsFor("qe", "T")
     // one tier's approx top-k: coarse ADC pass (optionally bucket-pruned),
     // kTop·expand candidates, exact-cosine re-rank, keep rk <= kTop
     def tierCtes(tag: String, bucketPred: String, cbkCte: String,
-                 codesCte: String, dsq: String) =
+                 codesCte: String, cb: String) =
       s"""coarse_$tag AS (SELECT query_id, c.vec_id AS neighbor_id,
-         |  list_sum([ $dsq[c.codes[s]] for s in range(1, ${m + 1}) ]) AS adc
+         |  ${pqAdcSql(cb, m, kc, subDim)} AS adc
          |  FROM qs, $cbkCte, $codesCte c WHERE $bucketPred c.vec_id <> query_id),
-         |cand_$tag AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS rn
-         |  FROM coarse_$tag) WHERE rn <= ${kTop * expand}),
-         |exr_$tag AS (SELECT cand_$tag.query_id, cand_$tag.neighbor_id,
-         |  list_sum([qs.qe[i] * ce.e[i] for i in range(1, len(qs.qe) + 1)]) /
-         |  (sqrt(list_sum([qs.qe[i] * qs.qe[i] for i in range(1, len(qs.qe) + 1)])) *
-         |   sqrt(list_sum([ce.e[i] * ce.e[i] for i in range(1, len(ce.e) + 1)]))) AS cosine
-         |  FROM cand_$tag JOIN qs USING (query_id) JOIN v ce ON ce.vec_id = cand_$tag.neighbor_id),
-         |approx_$tag AS (SELECT query_id, neighbor_id FROM (
-         |  SELECT query_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rk
-         |  FROM exr_$tag) WHERE rk <= $kTop)""".stripMargin
-    // one tier's recall report rows against the shared exact CTE
-    def tierReport(tag: String, label: String) =
-      s"""hits_$tag AS (SELECT e.query_id, count(*) AS n_exact,
-         |  sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS n_overlap
-         |  FROM exact e LEFT JOIN approx_$tag a
-         |    ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-         |  GROUP BY e.query_id),
-         |ac_$tag AS (SELECT query_id, count(*) AS n_approx FROM approx_$tag GROUP BY query_id),
-         |rep_$tag AS (SELECT '$label' AS tier, hits_$tag.query_id,
-         |  coalesce(ac_$tag.n_approx, 0) AS n_approx, hits_$tag.n_exact,
-         |  CAST(hits_$tag.n_overlap AS BIGINT) AS n_overlap,
-         |  floor(CAST(hits_$tag.n_overlap AS DOUBLE) / hits_$tag.n_exact * 1e6 + 0.5) / 1e6 AS recall
-         |  FROM hits_$tag LEFT JOIN ac_$tag ON ac_$tag.query_id = hits_$tag.query_id)""".stripMargin
-    s"""WITH cbk AS (SELECT $cLit AS C),
-       |cbkt AS (SELECT $cLitT AS T),
-       |v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e FROM embeddings),
-       |b AS (SELECT vec_id, e, CAST($bucketExpr AS BIGINT) AS bkt FROM v),
+         |${rerankCtes(s"coarse_$tag", "adc", kTop * expand, "v", s"_$tag")},
+         |approx_$tag AS (SELECT query_id, neighbor_id FROM r_$tag WHERE rk <= $kTop)""".stripMargin
+    s"""WITH cbk AS (SELECT ${pqCodebookSql(Similarity.pqCodebook(m, kc, subDim))} AS C),
+       |cbkt AS (SELECT ${pqCodebookSql(cbT, doubleSql)} AS T),
+       |$vecCte,
+       |b AS (SELECT vec_id, e, CAST(${lshBucketSql(planes, dim)} AS BIGINT) AS bkt FROM v),
        |codes AS (SELECT vec_id, bkt,
-       |  [ list_position($dsE, list_min($dsE)) for s in range(1, ${m + 1}) ] AS codes
+       |  ${pqCodesSql("C", m, kc, subDim)} AS codes
        |  FROM b, cbk),
        |codes_t AS (SELECT vec_id,
-       |  [ list_position($dsET, list_min($dsET)) for s in range(1, ${m + 1}) ] AS codes
+       |  ${pqCodesSql("T", m, kc, subDim)} AS codes
        |  FROM b, cbkt),
        |qs AS (SELECT vec_id AS query_id, e AS qe, bkt AS qbkt FROM b WHERE vec_id < 8),
-       |${tierCtes("pq", "", "cbk", "codes", dsQ)},
-       |${tierCtes("lp", "c.bkt = qs.qbkt AND", "cbk", "codes", dsQ)},
-       |${tierCtes("pt", "", "cbkt", "codes_t", dsQT)},
-       |ex_scored AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |  list_sum([q.e[i]*c.e[i] for i in range(1, len(q.e)+1)]) /
-       |  (sqrt(list_sum([q.e[i]*q.e[i] for i in range(1, len(q.e)+1)])) *
-       |   sqrt(list_sum([c.e[i]*c.e[i] for i in range(1, len(c.e)+1)]))) AS cosine
-       |  FROM v q, v c WHERE q.vec_id < 8 AND c.vec_id <> q.vec_id),
-       |exact AS (SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rn
-       |  FROM ex_scored) WHERE rn <= $kTop),
-       |${tierReport("pq", "pq")},
-       |${tierReport("lp", "lshpq")},
-       |${tierReport("pt", "pqt")}
+       |${tierCtes("pq", "", "cbk", "codes", "C")},
+       |${tierCtes("lp", "c.bkt = qs.qbkt AND", "cbk", "codes", "C")},
+       |${tierCtes("pt", "", "cbkt", "codes_t", "T")},
+       |${exactCtes(kTop)},
+       |${recallCtes("approx_pq", "_pq", "'pq' AS tier, ")},
+       |${recallCtes("approx_lp", "_lp", "'lshpq' AS tier, ")},
+       |${recallCtes("approx_pt", "_pt", "'pqt' AS tier, ")}
        |SELECT * FROM rep_pq UNION ALL SELECT * FROM rep_lp UNION ALL SELECT * FROM rep_pt
        |ORDER BY tier, query_id""".stripMargin
   }
@@ -908,15 +761,11 @@ object SimilarityQueries {
     * from the fitted model's constants (exact-double CAST('…' AS DOUBLE) form),
     * same index/operand order as the Spark zip_with/aggregate chain, same
     * floor rounding. Shared by the s162 and s166 oracles. */
-  private def whitenYExprs(mu: Array[Double], w: Array[Array[Double]]): Seq[String] = {
-    def numT(d: Double) = s"CAST('${java.lang.Double.toString(d)}' AS DOUBLE)"
-    def lst(a: Array[Double]): String = a.map(numT).mkString("[", ", ", "]")
-    val dim = mu.length
+  private def whitenYExprs(mu: Array[Double], w: Array[Array[Double]]): Seq[String] =
     w.toSeq.map { row =>
-      s"floor(list_sum([ ((e[i] - (${lst(mu)})[i]) * (${lst(row)})[i]) " +
-        s"for i in range(1, ${dim + 1}) ]) * 1e6 + 0.5) / 1e6"
+      s"floor(list_sum([ ((e[i] - (${listSql(mu, doubleSql)})[i]) * (${listSql(row, doubleSql)})[i]) " +
+        s"for i in range(1, ${mu.length + 1}) ]) * 1e6 + 0.5) / 1e6"
     }
-  }
 
   /** Whitening oracle (s162): replays the k-component projection from the
     * model that [[whitenFitOf]] refits at the oracle's dir — exact-double
@@ -947,18 +796,7 @@ object SimilarityQueries {
     s"""WITH v AS (SELECT vec_id, [CAST(x AS DOUBLE) for x in embedding] AS e
        |  FROM embeddings WHERE len(embedding) = ${mu.length}),
        |wy AS (SELECT vec_id, $yList AS yv FROM v),
-       |q AS (SELECT vec_id AS qid, yv AS qv FROM wy WHERE vec_id < 8),
-       |c AS (SELECT vec_id AS nid, yv AS cv FROM wy),
-       |scored AS (
-       |  SELECT qid, nid,
-       |    list_sum([qv[i] * cv[i] for i in range(1, len(qv)+1)]) /
-       |    (sqrt(list_sum([qv[i] * qv[i] for i in range(1, len(qv)+1)])) *
-       |     sqrt(list_sum([cv[i] * cv[i] for i in range(1, len(cv)+1)]))) AS cosine
-       |  FROM q, c WHERE qid <> nid),
-       |ranked AS (SELECT qid, nid, cosine,
-       |  row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, nid) AS rn FROM scored)
-       |SELECT qid AS query_id, nid AS neighbor_id, round(cosine, 4) AS cosine
-       |FROM ranked WHERE rn <= $kTop ORDER BY query_id, neighbor_id""".stripMargin
+       |${bruteTopKSql("wy", "yv", kTop)}""".stripMargin
   }
 
   /** RRF fusion oracle (s160): both tier SQLs embedded as subqueries, each
@@ -971,8 +809,7 @@ object SimilarityQueries {
     }
     val ranks = tierSql.indices.map { i =>
       s"""r$i AS (SELECT query_id, neighbor_id,
-         |  CAST(floor(1e6 / ($rrfK + row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id))) AS BIGINT) AS pts
+         |  CAST(floor(1e6 / ($rrfK + ${cosineRankSql("query_id")})) AS BIGINT) AS pts
          |  FROM t$i)""".stripMargin
     }
     val unioned = tierSql.indices.map(i => s"SELECT * FROM r$i").mkString(" UNION ALL ")

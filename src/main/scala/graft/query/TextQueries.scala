@@ -875,17 +875,6 @@ object TextQueries {
         |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin))
   )
 
-  /** Oracle for s30: same hyperplane literals as the engine (inlined), same
-    * sign-signature bucketing, same cosine rerank as the s29 oracle. */
-  /** OR-amplified LSH top-k oracle: table `t` buckets with hyperplane rows
-    * [t·planes, (t+1)·planes) of planeMatrix(tables·planes, dim) — identical
-    * to Similarity.lshTopK — candidates unioned across tables (UNION dedups,
-    * mirroring the pre-rerank dropDuplicates), then exact cosine rerank. */
-  /** t102 oracle: the frozen merge list re-applied in DuckDB — each word
-    * rendered as the boundary-wrapped symbol string and every merge ONE
-    * literal `replace`, nested in rank order (string replace is
-    * left-to-right non-overlapping in both engines — the applyMerge fold
-    * semantics, spec-pinned). */
   /** Shared CTE chain of the BPE-encode reproduction (word stream -> frozen
     * merge replay -> per-doc token stats as `g`); t102 selects `g` directly,
     * t117 aggregates it per language. */
@@ -912,6 +901,11 @@ object TextQueries {
        |  FROM j GROUP BY doc_id)""".stripMargin
   }
 
+  /** t102 oracle: the frozen merge list re-applied in DuckDB — each word
+    * rendered as the boundary-wrapped symbol string and every merge ONE
+    * literal `replace`, nested in rank order (string replace is
+    * left-to-right non-overlapping in both engines — the applyMerge fold
+    * semantics, spec-pinned). */
   private def bpeEncodeOracle(merges: Seq[(String, String)], cap: Int): String =
     s"""WITH ${bpeEncodeCte(merges, cap)}
        |SELECT doc_id, n_tokens, tokens_head FROM g ORDER BY doc_id""".stripMargin
@@ -938,15 +932,14 @@ object TextQueries {
     * operator exactly: ((idf·tf)·k1p1)/(tf + k1·((1−b) + (b·dl)/(Σdl/N))). */
   private def bm25Oracle(terms: Seq[String], k1: Double, b: Double,
                          topN: Int): String = {
-    def num(d: Double) = java.math.BigDecimal.valueOf(d).toPlainString
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       s"CAST(len(list_filter(t, x -> x = '$t')) AS DOUBLE) AS tf$i"
     }.mkString(", ")
     val dfCols = terms.indices.map(i =>
       s"CAST(sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df$i").mkString(", ")
     val scoreExpr = terms.indices.map { i =>
-      s"ln(1 + (n - df$i + 0.5) / (df$i + 0.5)) * tf$i * ${num(k1 + 1.0)} / " +
-        s"(tf$i + ${num(k1)} * (${num(1.0 - b)} + ${num(b)} * dl / (sumdl / n)))"
+      s"ln(1 + (n - df$i + 0.5) / (df$i + 0.5)) * tf$i * ${decimalSql(k1 + 1.0)} / " +
+        s"(tf$i + ${decimalSql(k1)} * (${decimalSql(1.0 - b)} + ${decimalSql(b)} * dl / (sumdl / n)))"
     }.mkString(" + ")
     // terms are interpolated into SQL string literals — keep the guard in
     // lockstep with the tokenizer's alphabet so no escaping is ever needed

@@ -231,6 +231,25 @@ class PlanFingerprintSpec extends SparkSpec {
   pin("q85_upsert_snapshot",
     "shuffles=2 bcast=1 joins=[BroadcastHashJoin=1] scans=[1,1,4,4,4]")
 
+  // vector-family pins (the operators whose top-k, bucket projection and
+  // dim lookup share one definition in Similarity):
+  //  - s170: nearDupPairs' ids-only bucket self-join, candidate dedup,
+  //    two vector-fetch joins, the per-node top-k window.
+  //  - s172: the s170 graph plus the append: staged corpus buckets, the
+  //    affected set, the recompute joins and the left-anti carry.
+  //  - d159: the bucket equi-join between corpus and probes, candidate
+  //    dedup, two vector-fetch joins; no top-k (cosine threshold).
+  //  - s164: ivfTopK's cell join (shuffled at this scale) against the
+  //    exact brute-force side, graded by recallAtK.
+  //  - s166: the s29 broadcast-cross skeleton over the whitened vectors.
+  pin("s170_knn_graph", "shuffles=5 bcast=3 joins=[BroadcastHashJoin=3] scans=[2,2,2,2]")
+  pin("s172_knn_graph_append",
+    "shuffles=17 bcast=10 joins=[BroadcastHashJoin=10] scans=[1,1,2,2,2,2,2,2,2,2,2,2,2,2]")
+  pin("d159_semantic_decontam", "shuffles=3 bcast=3 joins=[BroadcastHashJoin=3] scans=[2,2,2,2]")
+  pin("s164_ivf_recall",
+    "shuffles=10 bcast=3 joins=[BroadcastHashJoin=2,SortMergeJoin=2,BroadcastNestedLoopJoin=1] scans=[2,2,2,2,2,2]")
+  pin("s166_whitened_ann", "shuffles=4 bcast=1 joins=[BroadcastNestedLoopJoin=1] scans=[2,2]")
+
   test("Engine.session keys shuffle parallelism off the real session width") {
     // every pin above runs under this session — their being green IS the
     // "local plans unchanged by the scale knobs" evidence; here pin the

@@ -127,6 +127,35 @@ class ScaleJoinsSpec extends SparkSpec {
     overlap.foreach(k => assert(ivf(k) == brute(k)))
   }
 
+  test("a tie at the k-th row keeps the lowest neighbor ids on every top-k path") {
+    // query 0 is v and ids 1-6 are copies of v: six neighbors tied at
+    // cosine 1.0 across the k = 3 cut. Ids 7-26 are distinct random
+    // vectors. Every path must keep the three lowest ids of the tie (the
+    // LSH paths because identical vectors share every bucket, the
+    // coarse-then-exact paths because expand covers the corpus).
+    val v = Seq(1f, -2f, 3f, 0.5f, -1f, 2f, 0.25f, 4f)
+    val rnd = new scala.util.Random(7)
+    val df = ((0L to 6L).map(_ -> v) ++
+        (7L to 26L).map(_ -> Seq.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("id", "vec")
+    val q = df.filter(col("id") === 0L)
+    val all = df.count().toInt / 3 + 1
+    val sim = ops.Similarity
+    def top(d: org.apache.spark.sql.DataFrame, key: String = "query_id") =
+      d.filter(col(key) === 0L).select(col("neighbor_id"), col("cosine"))
+        .as[(Long, Double)].collect().toSeq.sorted
+    val want = Seq((1L, 1.0), (2L, 1.0), (3L, 1.0))
+    Seq(
+      "bruteForceTopK" -> sim.bruteForceTopK(df, q, "id", "vec", 3),
+      "lshTopK" -> sim.lshTopK(df, q, "id", "vec", 3, planes = 4, dim = 8),
+      "ivfTopK" -> sim.ivfTopK(df, q, "id", "vec", 3, nlist = 4, nprobe = 4),
+      "rerankTopK" -> sim.rerankTopK(df, q, "id", "vec", 3, expand = all),
+      "pqTopK" -> sim.pqTopK(df, q, "id", "vec", 3, sim.pqCodebook(2, 4, 4), expand = all)
+    ).foreach { case (name, d) => assert(top(d) == want, name) }
+    assert(top(sim.knnGraph(df, "id", "vec", 3, planes = 2, tables = 2, dim = 8),
+      "node_id") == want, "knnGraph")
+  }
+
   test("stratifiedHashFraction: deterministic, engine-portable thresholds, f=1.0 keeps all") {
     val d = core.Tables.documents(spark, sf("sf0.001"))
     val fr = Map("en" -> 0.25, "fr" -> 1.0)
@@ -727,7 +756,7 @@ class ScaleJoinsSpec extends SparkSpec {
     assert(autoServingPlanes(Long.MaxValue, 1, 1, 1e-9) == 48)
   }
 
-  test("lshPqTopKAuto: auto planes release the bucket constraint the fixed knob binds") {
+  test("autoServingPlanes lshPqTopK: auto planes release the bucket constraint") {
     // the recall curve's driving observation (docs/PLANS.md, "Round-15
     // PQ serving auto-sizing contract"), pinned: at the 500-vector gate
     // corpus the fixed serving knob (planes=3,
@@ -741,9 +770,11 @@ class ScaleJoinsSpec extends SparkSpec {
     val exact = ops.Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 10)
     def mean(df: org.apache.spark.sql.DataFrame): Double =
       ops.Similarity.recallAtK(df, exact).agg(avg(col("recall"))).first().getDouble(0)
+    val n = e.count()
     for (expand <- Seq(4, 16)) {
-      val auto = mean(ops.Similarity.lshPqTopKAuto(e, q, "vec_id", "embedding",
-        k = 10, codebook = cb, dim = 64, expand = expand))
+      val auto = mean(ops.Similarity.lshPqTopK(e, q, "vec_id", "embedding",
+        k = 10, codebook = cb, planes = ops.Similarity.autoServingPlanes(n, 10, expand),
+        dim = 64, expand = expand))
       val fixed = mean(ops.Similarity.lshPqTopK(e, q, "vec_id", "embedding",
         k = 10, codebook = cb, planes = 3, dim = 64, expand = expand))
       assert(auto >= fixed,
