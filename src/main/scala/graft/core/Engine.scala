@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Session factory + table catalog for the graft engine.
@@ -193,6 +193,25 @@ object Par {
     val byRows = (rows + rowsPerPartition - 1) / rowsPerPartition
     math.max(1L, math.min(parallelism.toLong, byRows)).toInt
   }
+
+  /** Re-lay the cached iterative relation `df` at `p` partitions
+    * ([[iterCachePartitions]]) on `key`, and return the new cache, already
+    * materialized, with `df` unpersisted. It fires only when the rows-derived
+    * target BINDS (p < defaultParallelism: the relation is small for the
+    * session) AND the cache is ≥ 2× wider than p, so it removes most of
+    * the per-round task waves; otherwise `df` comes back unchanged. A big
+    * graph keeps its natural width, so this can never pessimize the
+    * at-scale layout. The re-layout is one shuffle of `df`, paid once at
+    * build. */
+  def relayoutIterCache(df: DataFrame, p: Int, key: Column): DataFrame =
+    if (p >= df.sparkSession.sparkContext.defaultParallelism ||
+        df.rdd.getNumPartitions <= 2 * p) df
+    else {
+      val compact = df.repartition(p, key).cache()
+      compact.count()
+      df.unpersist(blocking = false)
+      compact
+    }
 }
 
 /** Loaders for the driver-generated test tables (TESTDATA.md). One parquet

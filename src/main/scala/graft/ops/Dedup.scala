@@ -342,21 +342,14 @@ object Dedup {
     // exchange and ReuseExchange evaluates the signature projection once
     // for both sides (the old aggregate got that reuse for free from its
     // own exchange).
-    val banded = sigB
-      .select(col("id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band", "bsig")))
+    val banded = bandRows(sigB, col("bands"), col("bands"))
       .repartition(col("band"), col("bsig"))
     val a = banded.select(col("id").as("id_a"), col("bands").as("ba"),
       col("band"), col("bsig"))
     val b = banded.select(col("id").as("id_b"), col("bands").as("bb"),
       col("band"), col("bsig"))
-    // first-collision band: every band BELOW this bucket's must differ
-    val first = (0 until bands - 1).foldLeft(lit(true)) { (acc, j) =>
-      acc && (lit(j) >= col("band") ||
-        element_at(col("ba"), j + 1) =!= element_at(col("bb"), j + 1))
-    }
     val cand = a.join(b, Seq("band", "bsig"))
-      .filter(col("id_a") < col("id_b") && first)
+      .filter(col("id_a") < col("id_b") && firstCollision(bands)(bandsDiffer))
       .select(col("id_a"), col("id_b"))
     if (verifyThreshold <= 0) cand
     else verifyJaccard(df, idCol, textCol, cand, n, verifyThreshold)
@@ -424,26 +417,18 @@ object Dedup {
     val newSig = bandSignatures(batch, idCol, textCol, n, numHashes, bands)
     val oldSig = historySigs.getOrElse(
       bandSignatures(history, idCol, textCol, n, numHashes, bands))
-    val newB = newSig
-      .select(col("id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band", "bsig")))
+    val newB = bandRows(newSig, col("bands"), col("bands"))
       .repartition(col("band"), col("bsig"))
-    val oldB = oldSig.select(col("id"), col("bands"),
-      posexplode(col("bands")).as(Seq("band", "bsig")))
+    val oldB = bandRows(oldSig, col("bands"), col("bands"))
     val a = newB.select(col("id").as("id_a"), col("bands").as("ba"),
       col("band"), col("bsig"))
     val b = newB.select(col("id").as("id_b"), col("bands").as("bb"),
         col("band"), col("bsig"), lit(true).as("is_new"))
       .unionByName(oldB.select(col("id").as("id_b"), col("bands").as("bb"),
         col("band"), col("bsig"), lit(false).as("is_new")))
-    // first-collision band: every band BELOW this bucket's must differ
-    val first = (0 until bands - 1).foldLeft(lit(true)) { (acc, j) =>
-      acc && (lit(j) >= col("band") ||
-        element_at(col("ba"), j + 1) =!= element_at(col("bb"), j + 1))
-    }
     val cand = a.join(b, Seq("band", "bsig"))
       .filter((!col("is_new") || col("id_a") < col("id_b")) &&
-        col("id_a") =!= col("id_b") && first)
+        col("id_a") =!= col("id_b") && firstCollision(bands)(bandsDiffer))
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
     if (verifyThreshold <= 0) cand
@@ -452,6 +437,26 @@ object Dedup {
         .unionByName(history.select(col(idCol), col(textCol))),
       idCol, textCol, cand, n, verifyThreshold)
   }
+
+  /** LSH band rows of `sigs` (one bucket signature per band): one row
+    * per (band, bsig) bucket, carrying the doc `id` and `carry`, the column
+    * the [[firstCollision]] rule reads lower bands from. The input of the
+    * minHashLsh, incrementalMinHashLsh and simHashPairs bucket self-joins. */
+  private def bandRows(df: DataFrame, carry: Column, sigs: Column): DataFrame =
+    df.select(col("id"), carry, posexplode(sigs).as(Seq("band", "bsig")))
+
+  /** The first-collision-band rule: a pair that meets in bucket `band`
+    * is kept only if every band BELOW it differs (`differs(j)` for band j,
+    * read off the two sides' carried signatures), so each pair is emitted
+    * from exactly one band and no distinct pass exists. */
+  private def firstCollision(bands: Int)(differs: Int => Column): Column =
+    (0 until bands - 1).foldLeft(lit(true)) { (acc, j) =>
+      acc && (lit(j) >= col("band") || differs(j))
+    }
+
+  /** Band j of the MinHash band arrays `ba` and `bb` differs. */
+  private def bandsDiffer(j: Int): Column =
+    element_at(col("ba"), j + 1) =!= element_at(col("bb"), j + 1)
 
   /** Exact-Jaccard verification of an LSH candidate pair set: broadcast the
     * (small) candidate set through the corpus twice, computing shingle sets
@@ -545,24 +550,12 @@ object Dedup {
     val sym0 = edges.select(col(srcCol).cast("long").as("n"), col(dstCol).cast("long").as("m"))
       .union(edges.select(col(dstCol).cast("long").as("n"), col(srcCol).cast("long").as("m")))
       .repartition(col("m")).cache()
-    // ITERATIVE-CACHE PARTITION CAP (round 19, r18 verdict #3 — the
-    // Graph.pageRank discipline, see Par.iterCachePartitions): a cached
-    // repartition keeps the un-coalesced 8× initialPartitionNum width, so
-    // every CC round's neighbor join scheduled a ~256-task wave over
-    // KB-sized cached blocks at sf0.1. Re-laid to
-    // min(defaultParallelism, ceil(rows/32k)) partitions when that target
-    // BINDS (small relation) and removes ≥ half the waves; a big graph
-    // keeps its natural width, so the at-scale layout is untouched.
-    val par = edges.sparkSession.sparkContext.defaultParallelism
-    val pEdge = graft.core.Par.iterCachePartitions(sym0.count(), par)
-    val sym =
-      if (pEdge >= par || sym0.rdd.getNumPartitions <= 2 * pEdge) sym0
-      else {
-        val compact = sym0.repartition(pEdge, col("m")).cache()
-        compact.count()
-        sym0.unpersist(blocking = false)
-        compact
-      }
+    // ITERATIVE-CACHE PARTITION CAP (Par.iterCachePartitions, shared with
+    // Graph.pageRank): a cached repartition keeps the un-coalesced 8×
+    // initialPartitionNum width, so every CC round's neighbor join
+    // scheduled a ~256-task wave over KB-sized cached blocks at sf0.1.
+    val sym = graft.core.Par.relayoutIterCache(sym0, graft.core.Par.iterCachePartitions(
+      sym0.count(), edges.sparkSession.sparkContext.defaultParallelism), col("m"))
     // start labels: partition-local union-find over the cached edge
     // partitions, then the min over every partition that saw the node
     val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
@@ -717,11 +710,6 @@ object Dedup {
   private val simHashBands: Int = 4
   private def simHashBandSig(fp: Column, j: Int): Column =
     shiftright(fp, j * 15).bitwiseAND(0x7FFFL)
-  /** (id, simhash) → exploded (id, simhash, band, bsig) banding rows. */
-  private def simHashBanded(sims: DataFrame): DataFrame =
-    sims.select(col("id"), col("simhash"),
-      posexplode(array((0 until simHashBands).map(b =>
-        simHashBandSig(col("simhash"), b)): _*)).as(Seq("band", "bsig")))
 
   /** Hamming-distance pairs over simhash fingerprints within `maxDist`, using
     * 4 × 15-bit band buckets (any pair at distance ≤ 3 must share a band —
@@ -750,7 +738,6 @@ object Dedup {
     // silently drop qualifying pairs, so refuse it
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist=$maxDist: 4-band simhash LSH guarantees recall only for maxDist <= 3")
-    def sig(fp: Column, j: Int): Column = simHashBandSig(fp, j)
     // The explicit (band, bsig) repartition below the per-side renames is
     // the d23 exchange-reuse trick: it is the very distribution the
     // self-join needs, its two statically-planned copies are AQE-reused
@@ -764,16 +751,15 @@ object Dedup {
     // would have been split. The jaccardPairs path caps bucket width
     // upstream (maxShingleDf) instead; simhash buckets are 15-bit
     // signatures whose width is bounded by corpus duplication itself.
-    val banded = simHashBanded(sims)
+    val banded = bandRows(sims, col("simhash"), array((0 until simHashBands).map(j =>
+        simHashBandSig(col("simhash"), j)): _*))
       .repartition(col("band"), col("bsig"))
     val a = banded.select(col("id").as("id_a"), col("simhash").as("fp_a"),
       col("band"), col("bsig"))
     val b = banded.select(col("id").as("id_b"), col("simhash").as("fp_b"),
       col("band"), col("bsig"))
-    // first-collision band: every band BELOW this bucket's must differ
-    val first = (0 until simHashBands - 1).map { j =>
-      lit(j) >= col("band") || sig(col("fp_a"), j) =!= sig(col("fp_b"), j)
-    }.reduce(_ && _)
+    val first = firstCollision(simHashBands)(j =>
+      simHashBandSig(col("fp_a"), j) =!= simHashBandSig(col("fp_b"), j))
     a.join(b, Seq("band", "bsig"))
       .filter(col("id_a") < col("id_b") &&
         bit_count(col("fp_a").bitwiseXOR(col("fp_b"))) <= maxDist && first)

@@ -14,17 +14,6 @@ object Graph {
 
   private def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
-  /** One round's per-neighbor contribution stream: `sym(n,m)` joined with
-    * the node-sized `prIn(n,__c)`. Extracted so the PipelineSpec pageRank
-    * suite can pin both join strategies' physical shapes
-    * (BroadcastHashJoin vs ShuffledHashJoin) without running a whole
-    * iteration. */
-  private[graft] def contribution(sym: DataFrame, prIn: DataFrame,
-                                useBroadcast: Boolean): DataFrame =
-    (if (useBroadcast) sym.join(broadcast(prIn), "n")
-     else sym.join(prIn.hint("shuffle_hash"), "n"))
-      .select(col("m").as("node"), col("__c"))
-
   /** PageRank over an UNDIRECTED edge list, fixed iteration count —
     * engineered for exact cross-engine reproducibility, which no floating
     * PageRank normally has:
@@ -40,8 +29,11 @@ object Graph {
     *
     * Scale shape (the [[Dedup.connectedComponents]] discipline): the
     * symmetrized edge list is cached pre-partitioned on the contribution
-    * key and crosses the network ONCE; each round shuffles only the
-    * edge list and the node-sized rank relation, and `localCheckpoint`
+    * key `m` and crosses the network ONCE; each round BROADCASTS the
+    * node-sized rank relation into the edge join, so the edge cache never
+    * moves again (the rank relation is re-sent to every executor every
+    * round: 4M nodes × ~16 B ≈ 64 MB serialized, so the cost at cluster
+    * scale is rounds × executors × nodes), and `localCheckpoint`
     * truncates lineage per round (superseded round blocks released after
     * the next round materializes). Isolated nodes don't exist in an edge
     * list; every node has degree ≥ 1, so no dangling-mass correction is
@@ -52,43 +44,22 @@ object Graph {
     * what matters, and on near-dup graphs — tight, dense clusters — the
     * within-cluster order stabilizes within about the cluster diameter
     * (the d73 convergence argument); 5 rounds ranks them, 10+ is for
-    * rank VALUES on long-diameter graphs. Returns (node, pr).
-    *
-    * `broadcastMaxNodes` gates the per-round join strategy. At or below
-    * it, the node-sized rank relation is BROADCAST each round and the
-    * edge cache (partitioned on the contribution key `m`) never moves —
-    * the fast path for graphs whose node set fits comfortably on the
-    * driver and every executor (4M × ~16 B/row ≈ 64 MB serialized, but
-    * re-sent to every executor every round — the real cost at cluster
-    * scale is rounds × executors × size). ABOVE it — a 100 TB corpus's
-    * near-dup graph can reach 10^8-10^9 nodes, where a per-round
-    * node-sized broadcast is a driver OOM — the edge cache is instead
-    * partitioned on the JOIN key `n` and each round shuffle-hash-joins
-    * the rank relation against it: only the node-sized rank rows and the
-    * node-sized partial contribution sums cross the network per round;
-    * the edge list never re-shuffles after the one-time build. Both
-    * paths are bit-identical (the DECIMAL(27,7) contribution sums are
-    * order-independent, so partitioning cannot leak into any kept bit —
-    * pinned by PipelineSpec's pageRank join-strategy tests). */
+    * rank VALUES on long-diameter graphs. Returns (node, pr). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 10, damping: Double = 0.85,
-               teleport: Double = 0.15,
-               broadcastMaxNodes: Long = 4000000L): DataFrame = {
+               teleport: Double = 0.15): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     // teleport is an EXPLICIT constant, never computed as 1 − damping:
     // 1.0 - 0.85 = 0.15000000000000002 in IEEE double, a different number
     // than the literal 0.15 the SQL oracle would write — the kind of
     // last-ulp divergence the whole design exists to exclude
-    // In broadcast mode the cache is partitioned on the CONTRIBUTION-SUM
-    // key `m`, not the join key `n`: the broadcast join imposes no
-    // distribution on the edge list, but the per-round groupBy(m) does.
-    // Partitioning the cache on m lets every round's HashAggregate reuse
-    // the cached distribution (alias-aware output partitioning carries
-    // m→node through the project), so after the one-time build NO round
-    // shuffles the edge list at all. The mode decision needs the node
-    // count, so the m-partitioned cache is built first either way (the
-    // caller's edge pipeline must run exactly ONCE); the shuffle-mode
-    // re-layout below reads from this cache, not from the pipeline.
+    // The cache is partitioned on the CONTRIBUTION-SUM key `m`, not the
+    // join key `n`: the broadcast join imposes no distribution on the edge
+    // list, but the per-round groupBy(m) does. Partitioning the cache on m
+    // lets every round's HashAggregate reuse the cached distribution
+    // (alias-aware output partitioning carries m→node through the
+    // project), so after the one-time build NO round shuffles the edge
+    // list at all.
     val symM0 = edges.select(col(srcCol).as("n"), col(dstCol).as("m"))
       .union(edges.select(col(dstCol).as("n"), col(srcCol).as("m")))
       .repartition(col("m")).cache()
@@ -97,30 +68,6 @@ object Graph {
     val nodes0 = symM0.groupBy(col("n")).agg(count(lit(1)).as("deg"))
       .select(col("n").as("node"), col("deg")).cache()
     val nN = nodes0.count() // node-sized aggregate, one driver scalar; materializes the cache
-    // ITERATIVE-CACHE PARTITION CAP (round 19, r18 verdict #3): a cached
-    // repartition keeps the un-coalesced 8× initialPartitionNum width (AQE
-    // cannot re-layout cached plans), so every one of the loop's per-round
-    // jobs scheduled a ~256-task wave over KB-sized blocks at sf0.1 —
-    // scheduling overhead in a healthy window, the storm amplifier in a
-    // contended one. Both caches are re-laid to
-    // min(defaultParallelism, ceil(rows/32k)) partitions when that removes
-    // most of the waves; the counts are cached scans (cheap), the
-    // re-layout is one edge-relation shuffle paid once at build. At
-    // cluster scale f(rows) saturates the parallelism cap and full width
-    // is kept — this is a small-relation fix, not a local[32] tuning.
-    val par = edges.sparkSession.sparkContext.defaultParallelism
-    // fires only when the rows-derived target BINDS (p < parallelism, i.e.
-    // the relation is small for the session) AND the cache is ≥ 2× wider
-    // than it — a big graph keeps its natural width untouched, so this can
-    // never pessimize the at-scale layout
-    def relayout(df: DataFrame, p: Int, key: Column): DataFrame =
-      if (p >= par || df.rdd.getNumPartitions <= 2 * p) df
-      else {
-        val compact = df.repartition(p, key).cache()
-        compact.count()
-        df.unpersist(blocking = false)
-        compact
-      }
     val nE = symM0.count() // cached scan — cheap, and the count the cap needs
     // ONE edge-derived width for BOTH caches (r19 review): the per-round
     // `sums` aggregate inherits the edge cache's hashpartitioning(node)
@@ -128,25 +75,10 @@ object Graph {
     // EnsureRequirements to re-shuffle one side of the nodes⋈sums join
     // every round — a per-round exchange the old uniform-width shape never
     // paid. nodes is node-sized, so pEdge partitions of it are cheap.
-    val pEdge = graft.core.Par.iterCachePartitions(nE, par)
-    val useBroadcast = nN <= broadcastMaxNodes
-    // in shuffle mode the m-layout is never read by any round (the rounds
-    // join on the n-layout built below) — relaying it first would shuffle
-    // and cache the whole edge relation just to discard it (r19 review),
-    // so the m-relayout is broadcast-mode-only
-    val symM = if (useBroadcast) relayout(symM0, pEdge, col("m")) else symM0
-    val nodes = relayout(nodes0, pEdge, col("node"))
-    val sym = if (useBroadcast) symM else {
-      // one extra edge shuffle at BUILD time (m-layout → n-layout), paid
-      // once so that no round pays it: the per-round join is then
-      // co-located on the cached n-partitioning (capped width only when
-      // the rows-derived target binds; natural width at scale)
-      val s = (if (pEdge < par) symM.repartition(pEdge, col("n"))
-               else symM.repartition(col("n"))).cache()
-      s.count()
-      symM.unpersist(blocking = false)
-      s
-    }
+    val pEdge = graft.core.Par.iterCachePartitions(nE,
+      edges.sparkSession.sparkContext.defaultParallelism)
+    val sym = graft.core.Par.relayoutIterCache(symM0, pEdge, col("m"))
+    val nodes = graft.core.Par.relayoutIterCache(nodes0, pEdge, col("node"))
     // Shared eager-truncate discipline (see Checkpointing's scaladoc,
     // pinned by CheckpointingSpec): pageRank was the WIDER deadlock window
     // pre-fix — every round runs an explicit broadcast(prIn) exchange, and
@@ -157,21 +89,18 @@ object Graph {
     var pr = truncate(nodes.select(col("node"), col("deg"),
       r6(lit(1.0) / lit(nN.toDouble)).as("pr")))
     for (_ <- 1 to iters) {
-      // Fast path — explicit broadcast: the truncated rank relation is a
-      // LogicalRDD with no stats, so the planner would otherwise
-      // shuffle-join against the (much larger) edge cache every round.
-      // The rank side is NODE-sized — the same candidate-sized-broadcast
-      // contract dedupByClusters runs on — and broadcasting it keeps the
-      // edge list where its cache already lives. (At sf0.1 the d128 cost
-      // is dominated by building the 271k-pair graph plus ~1 s/round of
+      // Explicit broadcast: the truncated rank relation is a LogicalRDD
+      // with no stats, so the planner would otherwise shuffle-join against
+      // the (much larger) edge cache every round. The rank side is
+      // NODE-sized — the same candidate-sized-broadcast contract
+      // dedupByClusters runs on — and broadcasting it keeps the edge list
+      // where its cache already lives. (At sf0.1 the d128 cost is
+      // dominated by building the 271k-pair graph plus ~1 s/round of
       // join+agg — the iterative floor of the CC family.)
-      // Scale path — shuffle_hash hint: build the per-partition hash map
-      // from the node-sized rank side, never sort (SMJ would re-sort the
-      // edge cache every round); the edge side stays where the
-      // n-partitioned cache put it.
       val prIn = pr.select(col("node").as("n"), r6(col("pr") / col("deg")).as("__c"))
-      val contrib = contribution(sym, prIn, useBroadcast)
-      val sums = contrib.groupBy(col("node"))
+      val sums = sym.join(broadcast(prIn), "n")
+        .select(col("m").as("node"), col("__c"))
+        .groupBy(col("node"))
         .agg(sum(col("__c").cast("decimal(27,7)")).as("__s"))
       pr = truncate(nodes.join(sums, Seq("node"), "left")
         .select(col("node"), col("deg"),

@@ -135,7 +135,10 @@ object Similarity {
       lit(s" != dim $dim"))))
 
   /** Sign-signature under `planes` deterministic hyperplanes → integer
-    * bucket. `dim` is the (fixed) embedding dimensionality. */
+    * bucket. `dim` is the (fixed) embedding dimensionality. The per-plane
+    * `aggregate(zip_with(...))` form: every operator buckets through the
+    * fused kernel ([[bucketRows]], [[fusedBucket]]), and this stays as the
+    * reference the specs compare that kernel against. */
   def lshBucket(vec: Column, planes: Int, dim: Int): Column = {
     val mat = planeMatrix(planes, dim)
     val sigBits = (0 until planes).map { p =>
@@ -166,6 +169,14 @@ object Similarity {
     df.select(col(idCol).as(outId), posexplode(requireDim(col(vecCol), dim,
         graft.functions.LshExpressions.lshBuckets(df.sparkSession, col(vecCol), planes, tables, dim)))
       .as(Seq("tbl", "bucket")))
+
+  /** The single-table bucket of [[lshBucket]] from the fused kernel:
+    * element 0 of one-table [[graft.functions.LshBuckets]], with
+    * [[requireDim]] outside as in [[bucketRows]]. Bit-identical to
+    * [[lshBucket]] by construction (PipelineSpec pins kernel ≡ HOF). */
+  private def fusedBucket(df: DataFrame, vecCol: String, planes: Int, dim: Int): Column =
+    requireDim(col(vecCol), dim, graft.functions.LshExpressions.lshBuckets(
+      df.sparkSession, col(vecCol), planes, 1, dim).getItem(0))
 
   /** The embedding width: `dim` when the caller passes it, else the length
     * of the first vector of the first non-empty source (a one-row driver
@@ -600,7 +611,7 @@ object Similarity {
                            dim: Int, expand: Int): DataFrame = {
     val m = codebook.length; val kc = codebook(0).length
     val qv = broadcast(queries.select(col(idCol).as("query_id"),
-      lshBucket(col(vecCol), planes, dim).as("bucket"),
+      fusedBucket(queries, vecCol, planes, dim).as("bucket"),
       graft.functions.PqExpressions.pqDistTable(
         corpus.sparkSession, col(vecCol), codebook).as("__tbl")))
     val coarse = index.join(qv, Seq("bucket"))
@@ -690,7 +701,7 @@ object Similarity {
                               codebook: Array[Array[Array[Double]]], planes: Int,
                               dim: Int): DataFrame =
     withPqCodes(corpus, vecCol, codebook, col(idCol).as("neighbor_id"),
-      lshBucket(col(vecCol), planes, dim).as("bucket"))
+      fusedBucket(corpus, vecCol, planes, dim).as("bucket"))
 
   /** Persist the [[lshPqTopK]] serving index with the bucket as the
     * STORAGE partition key: one parquet layout `partitionBy(bucket)` of
@@ -750,7 +761,7 @@ object Similarity {
     // does — without it the persisted-index path's exact re-rank ran at the
     // scan's native parallelism (r15 advice; results were unaffected)
     val corpus = graft.core.Par.widen(corpus0)
-    val qb = queries.select(lshBucket(col(vecCol), planes, dim).as("__b"))
+    val qb = queries.select(fusedBucket(queries, vecCol, planes, dim).as("__b"))
       .distinct().collect().map(_.getLong(0))
     // partition-column values come back via directory-name inference —
     // normalize to the long the bucket expression produces
@@ -782,7 +793,7 @@ object Similarity {
   def bucketCentroids(df: DataFrame, idCol: String, vecCol: String,
                       planes: Int, dim: Int): DataFrame = {
     val bucketed = df.select(
-      lshBucket(col(vecCol), planes, dim).as("bucket"), col(vecCol).as("__v"))
+      fusedBucket(df, vecCol, planes, dim).as("bucket"), col(vecCol).as("__v"))
     bucketed.select(col("bucket"), posexplode(col("__v")).as(Seq("dim_pos", "comp")))
       .withColumn("dim_pos", col("dim_pos").cast("long"))
       .groupBy(col("bucket"), col("dim_pos"))

@@ -33,15 +33,8 @@ object DedupQueries {
           threshold = 0.8, maxShingleDf = 500)
         .orderBy(col("id_a"), col("id_b"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |shc AS (SELECT doc_id, s FROM (SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM sh) WHERE df <= 500),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(n * 1.0 / (sa.sz + sb.sz - n), 4) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8 ORDER BY id_a, id_b""".stripMargin)),
+      s"""WITH ${setPairCtes(0.8, maxDf = Some(500))}
+         |SELECT id_a, id_b, round(sim, 4) AS jaccard FROM pairs ORDER BY id_a, id_b""".stripMargin)),
 
     // MinHash + LSH candidates, exact-verified at the same threshold
     // Oracle: LSH with 16 bands of 4 catches J>=0.8 pairs w.p. ~0.9998 each; verified
@@ -51,14 +44,8 @@ object DedupQueries {
           n = 3, numHashes = 64, bands = 16, verifyThreshold = 0.8)
         .orderBy(col("id_a"), col("id_b"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(n * 1.0 / (sa.sz + sb.sz - n), 4) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8 ORDER BY id_a, id_b""".stripMargin)),
+      s"""WITH ${setPairCtes(0.8)}
+         |SELECT id_a, id_b, round(sim, 4) AS jaccard FROM pairs ORDER BY id_a, id_b""".stripMargin)),
 
     // incremental near-dup for a GROWING corpus: d23's semantics restricted
     // to pairs TOUCHING the newly-ingested batch (doc_id % 4 == 0), computed
@@ -75,15 +62,9 @@ object DedupQueries {
           verifyThreshold = 0.8)
         .orderBy(col("id_a"), col("id_b"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(n * 1.0 / (sa.sz + sb.sz - n), 4) AS jaccard
-        |FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8
-        |  AND (id_a % 4 = 0 OR id_b % 4 = 0) ORDER BY id_a, id_b""".stripMargin)),
+      s"""WITH ${setPairCtes(0.8)}
+         |SELECT id_a, id_b, round(sim, 4) AS jaccard FROM pairs
+         |WHERE id_a % 4 = 0 OR id_b % 4 = 0 ORDER BY id_a, id_b""".stripMargin)),
 
     // SimHash near-dup pairs (banded Hamming buckets)
     // Oracle: The simhash fingerprint is md5-derived (Dedup.SimHashBits = 60), so the
@@ -125,10 +106,10 @@ object DedupQueries {
         .select(col("id").as("doc_id"), col("n_shared"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |ev AS (SELECT DISTINCT unnest(list_distinct([array_to_string(t[i:i+4], ' ') for i in range(1, len(t)-3)])) AS s
+      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |ev AS (SELECT DISTINCT unnest(list_distinct(${ngramsSql(5)})) AS s
         |       FROM toks WHERE doc_id % 25 = 0),
-        |cs AS (SELECT doc_id, unnest(list_distinct([array_to_string(t[i:i+4], ' ') for i in range(1, len(t)-3)])) AS s
+        |cs AS (SELECT doc_id, unnest(list_distinct(${ngramsSql(5)})) AS s
         |       FROM toks WHERE doc_id % 25 <> 0)
         |SELECT cs.doc_id, count(*) AS n_shared FROM cs JOIN ev USING (s)
         |GROUP BY cs.doc_id ORDER BY cs.doc_id""".stripMargin)),
@@ -150,25 +131,11 @@ object DedupQueries {
           col("cluster_size"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT id_a, id_b FROM inter
-        |          JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |          WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(node, lbl) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
-        |comp AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node)
-        |SELECT c.node AS doc_id, c.cluster_id, n.cluster_size
-        |FROM comp c JOIN (SELECT cluster_id, count(*) AS cluster_size
-        |                  FROM comp GROUP BY cluster_id) n USING (cluster_id)
-        |ORDER BY doc_id""".stripMargin)),
+      s"""WITH RECURSIVE $jaccardCompCtes
+         |SELECT c.node AS doc_id, c.cluster_id, n.cluster_size
+         |FROM comp c JOIN (SELECT cluster_id, count(*) AS cluster_size
+         |                  FROM comp GROUP BY cluster_id) n USING (cluster_id)
+         |ORDER BY doc_id""".stripMargin)),
 
     // PRIORITY-aware cluster resolution: the step after d73 — each near-dup
     // cluster keeps the copy from the most-trusted source (numeric src rank,
@@ -183,29 +150,15 @@ object DedupQueries {
         .select(col("doc_id"), col("source"), col("lang"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT id_a, id_b FROM inter
-        |          JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |          WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(node, lbl) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
-        |comp AS (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
-        |prio AS (SELECT node, cluster_id, CAST(substr(d.source, 4) AS INT) AS p
-        |         FROM comp JOIN documents d ON d.doc_id = comp.node),
-        |losers AS (SELECT node FROM (
-        |  SELECT node, row_number() OVER (PARTITION BY cluster_id ORDER BY p, node) AS rn
-        |  FROM prio) WHERE rn > 1)
-        |SELECT doc_id, source, lang FROM documents
-        |WHERE doc_id NOT IN (SELECT node FROM losers)
-        |ORDER BY doc_id""".stripMargin)),
+      s"""WITH RECURSIVE $jaccardCompCtes,
+         |prio AS (SELECT node, cluster_id, CAST(substr(d.source, 4) AS INT) AS p
+         |         FROM comp JOIN documents d ON d.doc_id = comp.node),
+         |losers AS (SELECT node FROM (
+         |  SELECT node, row_number() OVER (PARTITION BY cluster_id ORDER BY p, node) AS rn
+         |  FROM prio) WHERE rn > 1)
+         |SELECT doc_id, source, lang FROM documents
+         |WHERE doc_id NOT IN (SELECT node FROM losers)
+         |ORDER BY doc_id""".stripMargin)),
 
     // embedding near-dup at corpus scale: LSH-bucketed candidates
     // (OR-amplified over 2 hyperplane tables), exact-cosine-verified — the
@@ -217,7 +170,8 @@ object DedupQueries {
     // identical buckets, and it derives the planes VALUE from the same dir
     // through autoPlanesOf, so it replays THIS scale's knob: what was a
     // documented permanent cross-scale pin through r14 is exact at every
-    // SF. At the sf0.01 gate autoPlanes(500) = 4, which SimilaritySpec pins
+    // SF. At the sf0.01 gate autoPlanes(500) = 4, which PipelineSpec's
+    // "autoPlanes at the sf0.01 gate" test pins
     // Oracle: same plane derivation, OR-amplified across 2 tables: candidates from
     // either table's bucket join, UNION-deduped, exact cosine >= threshold.
     QuerySpec("d74_embed_neardup_lsh", (s, dir) => {
@@ -366,8 +320,8 @@ object DedupQueries {
           "source", "text", n = 3, lgK = 20)
         .orderBy(col("slice_a"), col("slice_b"))
     }, Sql(
-      """WITH toks AS (SELECT source, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT DISTINCT source, unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)]) AS s FROM toks),
+      s"""WITH toks AS (SELECT source, string_split(text, ' ') AS t FROM documents),
+        |sh AS (SELECT DISTINCT source, unnest(${ngramsSql(3)}) AS s FROM toks),
         |n AS (SELECT source, count(*) AS n FROM sh GROUP BY source),
         |i AS (SELECT a.source AS sa, b.source AS sb, count(*) AS n_inter
         |      FROM sh a JOIN sh b ON a.s = b.s AND a.source < b.source GROUP BY 1, 2)
@@ -397,12 +351,12 @@ object DedupQueries {
           concat(col("text"), lit(" v2"))).otherwise(col("text")))
       graft.ops.Sketches.thetaNovelty(snapA, snapB, "text", n = 3, lgK = 20)
     }, Sql(
-      """WITH a0 AS (SELECT string_split(text, ' ') AS t FROM documents WHERE doc_id % 23 <> 0),
-        |ash AS (SELECT DISTINCT unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)]) AS s FROM a0),
+      s"""WITH a0 AS (SELECT string_split(text, ' ') AS t FROM documents WHERE doc_id % 23 <> 0),
+        |ash AS (SELECT DISTINCT unnest(${ngramsSql(3)}) AS s FROM a0),
         |b0 AS (SELECT CASE WHEN doc_id % 17 = 0 THEN text || ' v2' ELSE text END AS text
         |       FROM documents WHERE doc_id % 29 <> 0),
         |bt AS (SELECT string_split(text, ' ') AS t FROM b0),
-        |bsh AS (SELECT DISTINCT unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)]) AS s FROM bt),
+        |bsh AS (SELECT DISTINCT unnest(${ngramsSql(3)}) AS s FROM bt),
         |na AS (SELECT count(*) AS n FROM ash),
         |nb AS (SELECT count(*) AS n FROM bsh),
         |nov AS (SELECT count(*) AS n FROM bsh WHERE s NOT IN (SELECT s FROM ash))
@@ -436,15 +390,8 @@ object DedupQueries {
           threshold = 0.9, maxShingleDf = 500L)
         .orderBy(col("id_a"), col("id_b"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |shc AS (SELECT doc_id, s FROM (SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM sh) WHERE df <= 500),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id_a, id_b, round(n * 1.0 / least(sa.sz, sb.sz), 4) AS containment
-        |FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |WHERE n * 1.0 / least(sa.sz, sb.sz) >= 0.9 ORDER BY id_a, id_b""".stripMargin)),
+      s"""WITH ${setPairCtes(0.9, maxDf = Some(500), containment = true)}
+         |SELECT id_a, id_b, round(sim, 4) AS containment FROM pairs ORDER BY id_a, id_b""".stripMargin)),
 
     // segment-level exact dedup with reassembly (Lee et al.): every
     // repeated 16-word block keeps only its FIRST occurrence (min (doc,
@@ -568,19 +515,11 @@ object DedupQueries {
           n = 3, minJ = 0.1, maxShingleDf = 500)
         .orderBy(col("bin"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |shc AS (SELECT doc_id, s FROM (SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM sh) WHERE df <= 500),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM shc a JOIN shc b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |j AS (SELECT n * 1.0 / (sa.sz + sb.sz - n) AS jac
-        |      FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |      WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.1),
-        |b AS (SELECT CAST(least(floor(jac * 10), 9) AS BIGINT) AS bin FROM j)
-        |SELECT bin, bin / 10.0 AS bin_lo, (bin + 1) / 10.0 AS bin_hi,
-        |  count(*) AS n_pairs
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin)),
+      s"""WITH ${setPairCtes(0.1, maxDf = Some(500))},
+         |b AS (SELECT CAST(least(floor(sim * 10), 9) AS BIGINT) AS bin FROM pairs)
+         |SELECT bin, bin / 10.0 AS bin_lo, (bin + 1) / 10.0 AS bin_hi,
+         |  count(*) AS n_pairs
+         |FROM b GROUP BY bin ORDER BY bin""".stripMargin)),
 
     // verbatim-phrase decontamination (the high-precision complement of
     // d61's shingle overlap): corpus docs containing a FULL eval phrase
@@ -646,25 +585,18 @@ object DedupQueries {
       graft.ops.Graph.triangleStats(jaccardPairGraph(s, dir), "id_a", "id_b")
         .orderBy(col("id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |shsz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS MATERIALIZED (SELECT id_a, id_b FROM inter
-        |          JOIN shsz sa ON sa.doc_id = id_a JOIN shsz sb ON sb.doc_id = id_b
-        |          WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8),
-        |tris AS (SELECT e1.id_a AS x, e1.id_b AS y, e2.id_b AS z
-        |  FROM pairs e1 JOIN pairs e2 ON e2.id_a = e1.id_b
-        |  JOIN pairs e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b),
-        |tpn AS (SELECT id, count(*) AS t FROM
-        |  (SELECT unnest([x, y, z]) AS id FROM tris) GROUP BY id),
-        |deg AS (SELECT id, count(*) AS degree FROM
-        |  (SELECT id_a AS id FROM pairs UNION ALL SELECT id_b FROM pairs) GROUP BY id)
-        |SELECT deg.id, deg.degree, CAST(coalesce(tpn.t, 0) AS BIGINT) AS triangles,
-        |  CASE WHEN deg.degree < 2 THEN 0.0
-        |       ELSE floor(2.0 * coalesce(tpn.t, 0) / (deg.degree * (deg.degree - 1)) * 1e6 + 0.5) / 1e6 END AS clustering
-        |FROM deg LEFT JOIN tpn USING (id) ORDER BY deg.id""".stripMargin)),
+      s"""WITH ${setPairCtes(0.8)},
+         |tris AS (SELECT e1.id_a AS x, e1.id_b AS y, e2.id_b AS z
+         |  FROM pairs e1 JOIN pairs e2 ON e2.id_a = e1.id_b
+         |  JOIN pairs e3 ON e3.id_a = e1.id_a AND e3.id_b = e2.id_b),
+         |tpn AS (SELECT id, count(*) AS t FROM
+         |  (SELECT unnest([x, y, z]) AS id FROM tris) GROUP BY id),
+         |deg AS (SELECT id, count(*) AS degree FROM
+         |  (SELECT id_a AS id FROM pairs UNION ALL SELECT id_b FROM pairs) GROUP BY id)
+         |SELECT deg.id, deg.degree, CAST(coalesce(tpn.t, 0) AS BIGINT) AS triangles,
+         |  CASE WHEN deg.degree < 2 THEN 0.0
+         |       ELSE floor(2.0 * coalesce(tpn.t, 0) / (deg.degree * (deg.degree - 1)) * 1e6 + 0.5) / 1e6 END AS clustering
+         |FROM deg LEFT JOIN tpn USING (id) ORDER BY deg.id""".stripMargin)),
 
     // SOFT DEDUP (round 17): inverse-cluster-size training weights over
     // d73's near-dup components — keep every duplicate, downweight it so
@@ -679,32 +611,23 @@ object DedupQueries {
           jaccardCcGraph(s, dir), "doc_id", "node", "component")
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |shsz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT id_a, id_b FROM inter
-        |          JOIN shsz sa ON sa.doc_id = id_a JOIN shsz sb ON sb.doc_id = id_b
-        |          WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8),
-        |edges AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(node, lbl) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
-        |comp AS MATERIALIZED (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
-        |allc AS MATERIALIZED (SELECT node AS doc_id, cluster_id FROM comp
-        |  UNION ALL SELECT doc_id, doc_id FROM documents
-        |  WHERE doc_id NOT IN (SELECT node FROM comp)),
-        |csz AS (SELECT cluster_id, count(*) AS cluster_size FROM allc GROUP BY 1)
-        |SELECT a.doc_id, a.cluster_id, csz.cluster_size,
-        |  floor(1e6 / csz.cluster_size + 0.5) / 1e6 AS weight
-        |FROM allc a JOIN csz USING (cluster_id) ORDER BY a.doc_id""".stripMargin))
+      s"""WITH RECURSIVE $jaccardCompCtes,
+         |allc AS MATERIALIZED (SELECT node AS doc_id, cluster_id FROM comp
+         |  UNION ALL SELECT doc_id, doc_id FROM documents
+         |  WHERE doc_id NOT IN (SELECT node FROM comp)),
+         |csz AS (SELECT cluster_id, count(*) AS cluster_size FROM allc GROUP BY 1)
+         |SELECT a.doc_id, a.cluster_id, csz.cluster_size,
+         |  floor(1e6 / csz.cluster_size + 0.5) / 1e6 AS weight
+         |FROM allc a JOIN csz USING (cluster_id) ORDER BY a.doc_id""".stripMargin))
   )
 
   /** d74/p92's plane count, shared by each builder and its oracle. */
   private def autoPlanesOf(e: DataFrame): Int = Similarity.autoPlanes(e.count())
+
+  /** The component map over the 3-gram Jaccard ≥ 0.8 pair graph as CTE
+    * `comp(node, cluster_id)`: the oracle of [[Shared.jaccardCcGraph]],
+    * read by d73, d95 and d172. */
+  private def jaccardCompCtes: String = s"${setPairCtes(0.8)},\n${closureCtes("pairs")}"
 
   /** CTE chain reproducing the simhash near-dup PAIRS relation `p`
     * (dist ≤ 3) — shared by the d24 oracle and d128's graph oracle. */
@@ -740,13 +663,8 @@ object DedupQueries {
     val t1 = graft.ops.Sampling.hex5(trainCum)
     val t2 = graft.ops.Sampling.hex5(valCum)
     s"""WITH RECURSIVE $simHashPairsCte,
-       |edges AS (SELECT id_a AS a, id_b AS b FROM p UNION SELECT id_b, id_a FROM p),
-       |reach(node, lbl) AS (
-       |  SELECT a, a FROM edges
-       |  UNION
-       |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
-       |comp AS (SELECT node, min(lbl) AS comp FROM reach GROUP BY node),
-       |rep AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS rep_id
+       |${closureCtes("p")},
+       |rep AS (SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS rep_id
        |        FROM documents d LEFT JOIN comp c ON c.node = d.doc_id)
        |SELECT doc_id, rep_id,
        |  CASE WHEN substr(md5(CAST(rep_id AS VARCHAR)), 1, 5) < '$t1' THEN 'train'
@@ -827,20 +745,14 @@ object DedupQueries {
                                   threshold: Double): String =
     s"""WITH RECURSIVE ${nearDupCtes(planes, tables, dim)},
        |pr AS (SELECT id_a, id_b FROM p WHERE cosine >= $threshold),
-       |edges AS (SELECT id_a AS a, id_b AS b FROM pr
-       |          UNION SELECT id_b, id_a FROM pr),
-       |reach(node, lbl) AS (
-       |  SELECT a, a FROM edges
-       |  UNION
-       |  SELECT r.node, e2.b FROM reach r JOIN edges e2 ON e2.a = r.lbl),
-       |comp AS (SELECT node, min(lbl) AS cid FROM reach GROUP BY node),
-       |sz AS (SELECT cid, count(*) AS cluster_size FROM comp GROUP BY cid)
+       |${closureCtes("pr")},
+       |sz AS (SELECT cluster_id, count(*) AS cluster_size FROM comp GROUP BY cluster_id)
        |SELECT emb.vec_id,
-       |  coalesce(c.cid, emb.vec_id) AS cluster_id,
+       |  coalesce(c.cluster_id, emb.vec_id) AS cluster_id,
        |  CAST(coalesce(s.cluster_size, 1) AS BIGINT) AS cluster_size,
-       |  CAST(CASE WHEN c.node IS NULL OR c.cid = emb.vec_id THEN 1 ELSE 0 END AS BIGINT) AS keep
+       |  CAST(CASE WHEN c.node IS NULL OR c.cluster_id = emb.vec_id THEN 1 ELSE 0 END AS BIGINT) AS keep
        |FROM embeddings emb
        |LEFT JOIN comp c ON c.node = emb.vec_id
-       |LEFT JOIN sz s ON s.cid = c.cid
+       |LEFT JOIN sz s ON s.cluster_id = c.cluster_id
        |ORDER BY emb.vec_id""".stripMargin
 }

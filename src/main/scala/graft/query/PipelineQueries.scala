@@ -67,12 +67,7 @@ object PipelineQueries {
     // connected-component cluster resolution → temperature-balanced mixing.
     // Every stage is also separately oracle-verified (d21/t63/d87/d23/d73/
     // d81); this row proves their COMPOSITION is, too
-    // Oracle: the composed pipeline as ONE oracle: each stage reuses its own
-    // query's oracle shape (p67 quality, d87 spans, d23 exact-jaccard —
-    // LSH recall ≡ exact holds on any SUBSET of the corpus since
-    // signatures and band collisions are per-pair — d73 recursive-CTE
-    // components, d81 md5 thresholds). The span cap is omitted: it is a
-    // no-op below 10k docs sharing a span, unreachable in oracle data
+    // Oracle: the composed pipeline as ONE oracle, [[composedCorpusCtes]]
     QuerySpec("p90_composed_corpus", (s, dir) => {
       // p91 builds the same corpus pass, each from its own lineage
       val deduped = composedDedupedBuild(s, dir)
@@ -80,55 +75,8 @@ object PipelineQueries {
         .groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
         .orderBy(col("lang"))
     }, Sql(
-      """WITH RECURSIVE
-        |keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
-        |d2 AS (SELECT d.* FROM documents d JOIN keep USING (doc_id)),
-        |toks0 AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM d2),
-        |parts AS (SELECT doc_id, lang, text,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks0),
-        |clean AS (SELECT doc_id, lang, text FROM parts
-        |  WHERE round(greatest(0.0, least(1.0,
-        |    (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) >= 0.3),
-        |spans AS (SELECT doc_id, unnest([md5(substr(text, o + 1, 50))
-        |                                 for o in range(0, len(text) - 50 + 1, 25)]) AS h
-        |          FROM clean WHERE len(text) >= 50),
-        |nd AS (SELECT h, count(DISTINCT doc_id) AS nd FROM spans GROUP BY h),
-        |rep AS (SELECT s.doc_id, count(*) AS n_spans,
-        |               count(CASE WHEN nd.nd > 1 THEN 1 END) AS n_rep
-        |        FROM spans s JOIN nd USING (h) GROUP BY s.doc_id),
-        |boiler AS (SELECT doc_id FROM rep WHERE round(n_rep * 1.0 / n_spans, 4) >= 0.5),
-        |pruned AS (SELECT c.* FROM clean c WHERE c.doc_id NOT IN (SELECT doc_id FROM boiler)),
-        |ptoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM pruned),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM ptoks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT id_a, id_b FROM inter
-        |          JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |          WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(node, lbl) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
-        |comp AS (SELECT node, min(lbl) AS cid FROM reach GROUP BY node),
-        |dd AS (SELECT p.* FROM pruned p
-        |       WHERE p.doc_id NOT IN (SELECT node FROM comp WHERE node <> cid)),
-        |c AS (SELECT lang, count(*) AS n FROM dd WHERE lang IS NOT NULL GROUP BY 1),
-        |m AS (SELECT min(n) AS minn FROM c),
-        |th AS (SELECT lang,
-        |  CASE WHEN CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT) >= 1048576
-        |       THEN 'g'
-        |       ELSE printf('%05x', CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT))
-        |  END AS thresh
-        |  FROM c, m),
-        |bal AS (SELECT d.doc_id, d.lang FROM dd d JOIN th USING (lang)
-        |        WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 5) < th.thresh)
-        |SELECT lang, count(*) AS n_docs FROM bal GROUP BY lang ORDER BY lang""".stripMargin)),
+      s"""WITH RECURSIVE $composedCorpusCtes
+         |SELECT lang, count(*) AS n_docs FROM bal GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // p90's corpus pass extended through the PREP TAIL — the full
     // corpus→training-sequences flow a pretraining pipeline actually ships:
@@ -163,58 +111,11 @@ object PipelineQueries {
           budget = 2048, shardCols = Seq("lang"))
         .orderBy(col("lang"), col("bin"), col("chunk_uid"))
     }, Sql(
-      """WITH RECURSIVE
-        |keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
-        |d2 AS (SELECT d.* FROM documents d JOIN keep USING (doc_id)),
-        |toks0 AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM d2),
-        |parts AS (SELECT doc_id, lang, text,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks0),
-        |clean AS (SELECT doc_id, lang, text FROM parts
-        |  WHERE round(greatest(0.0, least(1.0,
-        |    (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) >= 0.3),
-        |spans AS (SELECT doc_id, unnest([md5(substr(text, o + 1, 50))
-        |                                 for o in range(0, len(text) - 50 + 1, 25)]) AS h
-        |          FROM clean WHERE len(text) >= 50),
-        |nd AS (SELECT h, count(DISTINCT doc_id) AS nd FROM spans GROUP BY h),
-        |rep AS (SELECT s.doc_id, count(*) AS n_spans,
-        |               count(CASE WHEN nd.nd > 1 THEN 1 END) AS n_rep
-        |        FROM spans s JOIN nd USING (h) GROUP BY s.doc_id),
-        |boiler AS (SELECT doc_id FROM rep WHERE round(n_rep * 1.0 / n_spans, 4) >= 0.5),
-        |pruned AS (SELECT c.* FROM clean c WHERE c.doc_id NOT IN (SELECT doc_id FROM boiler)),
-        |ptoks AS (SELECT doc_id, string_split(text, ' ') AS t FROM pruned),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM ptoks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT id_a, id_b FROM inter
-        |          JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |          WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-        |          UNION SELECT id_b, id_a FROM pairs),
-        |reach(node, lbl) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
-        |comp AS (SELECT node, min(lbl) AS cid FROM reach GROUP BY node),
-        |dd AS (SELECT p.* FROM pruned p
-        |       WHERE p.doc_id NOT IN (SELECT node FROM comp WHERE node <> cid)),
-        |c AS (SELECT lang, count(*) AS n FROM dd WHERE lang IS NOT NULL GROUP BY 1),
-        |m AS (SELECT min(n) AS minn FROM c),
-        |th AS (SELECT lang,
-        |  CASE WHEN CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT) >= 1048576
-        |       THEN 'g'
-        |       ELSE printf('%05x', CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT))
-        |  END AS thresh
-        |  FROM c, m),
-        |bal AS (SELECT d.doc_id, d.lang, d.text FROM dd d JOIN th USING (lang)
-        |        WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 5) < th.thresh),
+      s"""WITH RECURSIVE $composedCorpusCtes,
         |evt AS (SELECT string_split(text, ' ') AS t FROM documents WHERE doc_id % 25 = 0),
-        |ev AS (SELECT DISTINCT unnest(list_distinct([array_to_string(t[i:i+4], ' ') for i in range(1, len(t)-3)])) AS s FROM evt),
+        |ev AS (SELECT DISTINCT unnest(list_distinct(${ngramsSql(5)})) AS s FROM evt),
         |bt AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM bal),
-        |csh AS (SELECT doc_id, unnest(list_distinct([array_to_string(t[i:i+4], ' ') for i in range(1, len(t)-3)])) AS s FROM bt),
+        |csh AS (SELECT doc_id, unnest(list_distinct(${ngramsSql(5)})) AS s FROM bt),
         |cont AS (SELECT DISTINCT csh.doc_id AS doc_id FROM csh JOIN ev USING (s)),
         |fin AS (SELECT doc_id, lang, t FROM bt WHERE doc_id NOT IN (SELECT doc_id FROM cont)),
         |sts AS (SELECT doc_id, lang, t,
@@ -372,6 +273,40 @@ object PipelineQueries {
         |SELECT doc_id, n_tokens, pos, CAST(pos // 32 AS BIGINT) AS shard
         |FROM p ORDER BY pos""".stripMargin))
   )
+
+  /** The oracle of [[composedDedupedBuild]] plus temperatureBalance, the
+    * p90/p91 corpus pass as ONE CTE chain ending in `bal(doc_id, lang,
+    * text)`: each stage reuses its own query's oracle shape (p67 quality,
+    * d87 spans, d23 exact Jaccard — LSH recall ≡ exact holds on any subset
+    * of the corpus, since signatures and band collisions are per pair —
+    * d73 components, d81 md5 thresholds). The span cap is omitted: it is a
+    * no-op below 10k docs sharing a span, unreachable in oracle data. */
+  private def composedCorpusCtes: String =
+    s"""keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
+       |d2 AS (SELECT d.* FROM documents d JOIN keep USING (doc_id)),
+       |toks0 AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM d2),
+       |parts AS (SELECT doc_id, lang, text,
+       |  least(len(t) / 50.0, 1.0) AS len_score,
+       |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
+       |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
+       |  FROM toks0),
+       |clean AS (SELECT doc_id, lang, text FROM parts
+       |  WHERE round(greatest(0.0, least(1.0,
+       |    (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) >= 0.3),
+       |spans AS (SELECT doc_id, unnest([md5(substr(text, o + 1, 50))
+       |                                 for o in range(0, len(text) - 50 + 1, 25)]) AS h
+       |          FROM clean WHERE len(text) >= 50),
+       |nd AS (SELECT h, count(DISTINCT doc_id) AS nd FROM spans GROUP BY h),
+       |rep AS (SELECT s.doc_id, count(*) AS n_spans,
+       |               count(CASE WHEN nd.nd > 1 THEN 1 END) AS n_rep
+       |        FROM spans s JOIN nd USING (h) GROUP BY s.doc_id),
+       |boiler AS (SELECT doc_id FROM rep WHERE round(n_rep * 1.0 / n_spans, 4) >= 0.5),
+       |pruned AS (SELECT c.* FROM clean c WHERE c.doc_id NOT IN (SELECT doc_id FROM boiler)),
+       |${setPairCtes(0.8, src = "pruned")},
+       |${closureCtes("pairs")},
+       |dd AS (SELECT p.* FROM pruned p
+       |       WHERE p.doc_id NOT IN (SELECT node FROM comp WHERE node <> cluster_id)),
+       |${temperatureCtes("dd")}""".stripMargin
 
   /** The p90/p91 composed-corpus pass through near-dup cluster dedup
     * (exact dedup → quality floor → boilerplate span prune → LSH pair

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * the memoized child sessions, the scratch directories, the pair-graph
   * builders, the stopword list, the frozen BPE merges, the PSI oracle
   * that p174 and q175 both replay, and the DuckDB builders of the vector
-  * oracles. Every family imports this object, and it reads no family.
+  * and near-dup oracles. Every family imports this object, and it reads no
+  * family.
   *
   * Scratch rule: every file a query builder writes goes under ONE scratch
   * root per JVM ([[scratchDir]]), and one shutdown hook deletes that root
@@ -317,4 +318,79 @@ object Shared {
        |  CAST(hits$sfx.n_overlap AS BIGINT) AS n_overlap,
        |  floor(CAST(hits$sfx.n_overlap AS DOUBLE) / hits$sfx.n_exact * 1e6 + 0.5) / 1e6 AS recall
        |  FROM hits$sfx LEFT JOIN ac$sfx ON ac$sfx.query_id = hits$sfx.query_id)""".stripMargin
+
+  // DuckDB builders of the near-dup oracles: the word n-gram list, the
+  // exact set-similarity pair chain, the connected-component closure and
+  // the temperature-balance threshold, each written ONCE as SQL. Like the
+  // vector builders they share no Column-API code with graft.ops.Dedup,
+  // Graph or Sampling, so the oracle stays an independent replay.
+
+  /** The word `n`-gram list of token list `t`: element i is t[i] … t[i+n-1]
+    * joined by single spaces, one per full window. */
+  private[query] def ngramsSql(n: Int, t: String = "t"): String = {
+    require(n >= 2, s"ngramsSql: n=$n < 2")
+    val gram = (0 until n).map(j => if (j == 0) s"$t[i]" else s"$t[i+$j]").mkString(" || ' ' || ")
+    val end = if (n == 2) s"len($t)" else s"len($t)-${n - 2}"
+    s"[$gram for i in range(1, $end)]"
+  }
+
+  /** The exact set-similarity pair chain over distinct word 3-gram sets,
+    * ending in CTE `pairs(id_a, id_b, sim)`: every doc pair of `src`
+    * (doc_id, text) that shares a 3-gram and whose `sim` is at least
+    * `threshold`. `sim` is Jaccard, or with `containment` the overlap over
+    * the smaller set. With `maxDf`, 3-grams held by more than maxDf docs
+    * leave the overlap count while the set sizes stay exact (Dedup's
+    * maxShingleDf). `pairs` is MATERIALIZED: most callers read it twice
+    * or more. */
+  private[query] def setPairCtes(threshold: Double, src: String = "documents",
+                                 maxDf: Option[Int] = None,
+                                 containment: Boolean = false): String = {
+    val capped = maxDf.fold("")(df =>
+      s"\nshc AS (SELECT doc_id, s FROM (SELECT doc_id, s, count(*) OVER (PARTITION BY s) AS df FROM sh) WHERE df <= $df),")
+    val idx = if (maxDf.isDefined) "shc" else "sh"
+    val sim = if (containment) "n * 1.0 / least(sa.sz, sb.sz)" else "n * 1.0 / (sa.sz + sb.sz - n)"
+    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM $src),
+       |sh AS (SELECT doc_id, unnest(list_distinct(${ngramsSql(3)})) AS s FROM toks),
+       |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),$capped
+       |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
+       |          FROM $idx a JOIN $idx b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+       |pairs AS MATERIALIZED (SELECT id_a, id_b, $sim AS sim
+       |          FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
+       |          WHERE $sim >= $threshold)""".stripMargin
+  }
+
+  /** Connected components of the undirected graph whose edges are the
+    * rows (`a`, `b`) of `pairs`, as CTE `comp(node, cluster_id)` with
+    * cluster_id the min node reachable: the label
+    * Dedup.connectedComponents converges to. `reach` is the transitive
+    * closure (DuckDB's UNION-distinct recursion reaches a fixpoint), so
+    * the caller's WITH must be RECURSIVE. `edges` and `comp` are
+    * MATERIALIZED: DuckDB re-evaluates a plain CTE per reference, and
+    * every recursion step reads `edges`. */
+  private[query] def closureCtes(pairs: String, a: String = "id_a", b: String = "id_b"): String =
+    s"""edges AS MATERIALIZED (SELECT $a AS a, $b AS b FROM $pairs
+       |          UNION SELECT $b, $a FROM $pairs),
+       |reach(node, lbl) AS (
+       |  SELECT a, a FROM edges
+       |  UNION
+       |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
+       |comp AS MATERIALIZED (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node)""".stripMargin
+
+  /** Sampling.temperatureBalance over `src` (doc_id, lang, …) as CTE
+    * `bal` with src's columns: per non-null lang, f = sqrt(min_n / n),
+    * and a row stays iff the first 5 hex digits of md5(doc_id) sort below
+    * f·2^20 as `%05x`. The min stratum's f = 1 gives 2^20, whose 6-digit
+    * hex would break the compare, so it caps to 'g', which sorts above
+    * every hex digit. */
+  private[query] def temperatureCtes(src: String): String =
+    s"""c AS (SELECT lang, count(*) AS n FROM $src WHERE lang IS NOT NULL GROUP BY 1),
+       |m AS (SELECT min(n) AS minn FROM c),
+       |th AS (SELECT lang,
+       |  CASE WHEN CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT) >= 1048576
+       |       THEN 'g'
+       |       ELSE printf('%05x', CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT))
+       |  END AS thresh
+       |  FROM c, m),
+       |bal AS (SELECT d.* FROM $src d JOIN th USING (lang)
+       |        WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 5) < th.thresh)""".stripMargin
 }

@@ -151,10 +151,10 @@ object SimilarityQueries {
           "doc_id", "text", threshold = 0.5, maxDf = 500, ngram = 3)
         .orderBy(col("id_a"), col("id_b"))
     }, Sql(
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
         |  FROM documents),
-        |terms AS (SELECT doc_id, unnest([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)]) AS w
+        |terms AS (SELECT doc_id, unnest(${ngramsSql(3)}) AS w
         |          FROM toks WHERE len(t) >= 3),
         |tf AS (SELECT doc_id, w, count(*) AS tf FROM terms GROUP BY 1, 2),
         |dfq AS (SELECT w, count(*) AS df FROM tf GROUP BY w),
@@ -560,10 +560,7 @@ object SimilarityQueries {
          |mutual AS (SELECT x.node_id AS a, x.neighbor_id AS b FROM g x
          |  JOIN g y ON x.node_id = y.neighbor_id AND x.neighbor_id = y.node_id
          |  WHERE x.node_id < x.neighbor_id),
-         |edges AS MATERIALIZED (SELECT a, b FROM mutual UNION SELECT b, a FROM mutual),
-         |reach(node, lbl) AS (SELECT a, a FROM edges
-         |  UNION SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
-         |comp AS MATERIALIZED (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node),
+         |${closureCtes("mutual", "a", "b")},
          |allc AS MATERIALIZED (SELECT node AS vec_id, cluster_id FROM comp
          |  UNION ALL SELECT vec_id, vec_id FROM embeddings
          |  WHERE vec_id NOT IN (SELECT node FROM comp)),

@@ -240,17 +240,8 @@ object StatsQueries {
         .select(col("doc_id"), col("lang"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
-        |m AS (SELECT min(n) AS minn FROM c),
-        |th AS (SELECT lang,
-        |  CASE WHEN CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT) >= 1048576
-        |       THEN 'g'
-        |       ELSE printf('%05x', CAST(floor(sqrt(CAST(minn AS DOUBLE) / n) * 1048576) AS BIGINT))
-        |  END AS thresh
-        |  FROM c, m)
-        |SELECT d.doc_id, d.lang FROM documents d JOIN th USING (lang)
-        |WHERE substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 5) < th.thresh
-        |ORDER BY d.doc_id""".stripMargin)),
+      s"""WITH ${temperatureCtes("documents")}
+         |SELECT doc_id, lang FROM bal ORDER BY doc_id""".stripMargin)),
 
     // join-key distribution profile: heavy hitters with share + cumulative
     // share and the global skew ratio — the diagnostic that picks between

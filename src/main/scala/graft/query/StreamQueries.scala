@@ -121,16 +121,9 @@ object StreamQueries {
         .select(col("doc_id"), col("lang"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] for i in range(1, len(t)-1)])) AS s FROM toks),
-        |sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |dropped AS (SELECT DISTINCT id_b
-        |  FROM inter JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-        |  WHERE n * 1.0 / (sa.sz + sb.sz - n) >= 0.8)
-        |SELECT d.doc_id, d.lang FROM documents d
-        |WHERE d.doc_id NOT IN (SELECT id_b FROM dropped) ORDER BY d.doc_id""".stripMargin), streaming = true),
+      s"""WITH ${setPairCtes(0.8)}
+         |SELECT d.doc_id, d.lang FROM documents d
+         |WHERE d.doc_id NOT IN (SELECT id_b FROM pairs) ORDER BY d.doc_id""".stripMargin), streaming = true),
 
     // STREAM-STREAM interval join (real run): click→view attribution — every
     // view by the same user in the 6 h before a click. Watermarks on both

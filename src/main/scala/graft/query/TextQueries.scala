@@ -257,8 +257,8 @@ object TextQueries {
           TextFunctions.topTokenFraction(col("text")).as("top_token_frac"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (SELECT doc_id, t, [t[i] || ' ' || t[i+1] for i in range(1, len(t))] AS grams FROM toks)
+      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |g AS (SELECT doc_id, t, ${ngramsSql(2)} AS grams FROM toks)
         |SELECT doc_id,
         |  CASE WHEN len(grams) = 0 THEN 0.0
         |       ELSE round(1.0 - CAST(len(list_distinct(grams)) AS DOUBLE) / len(grams), 4) END AS dup_2gram_frac,
@@ -760,8 +760,8 @@ object TextQueries {
           col("novelty"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |sh AS (SELECT doc_id, unnest(list_distinct([array_to_string(t[i:i+4], ' ') for i in range(1, len(t)-3)])) AS s FROM toks),
+      s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        |sh AS (SELECT doc_id, unnest(list_distinct(${ngramsSql(5)})) AS s FROM toks),
         |dfc AS (SELECT doc_id, count(*) OVER (PARTITION BY s) AS df FROM sh)
         |SELECT doc_id, count(*) AS n_shingles,
         |  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,

@@ -36,4 +36,22 @@ class OracleSpec extends SparkSpec {
       Seq("s162_whitening", "s166_whitened_ann").foreach(q =>
         assert(sql(q).contains(literal(mu(0))), q))
     }
+
+  test("near-dup oracle steps are written once, in Shared") {
+    // the word n-gram list, the recursive component closure and the
+    // temperature threshold each have one DuckDB builder in Shared
+    // (ngramsSql, closureCtes, temperatureCtes); a family file that types
+    // one of them again is a second definition to keep in step
+    val root = new java.io.File("src/main/scala/graft/query")
+    val sources = root.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+    assert(sources.exists(_.getName == "DedupQueries.scala"), root.getAbsolutePath)
+    val steps = Seq("t[i] || ' ' || t[i+1]", "reach(node, lbl)", "sqrt(CAST(minn AS DOUBLE) / n)")
+    val offenders = for {
+      f <- sources if f.getName != "Shared.scala"
+      (line, i) <- scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
+        _.getLines().toVector).zipWithIndex
+      step <- steps if line.contains(step)
+    } yield s"${f.getName}:${i + 1}: $step"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

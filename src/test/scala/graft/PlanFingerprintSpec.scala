@@ -250,6 +250,51 @@ class PlanFingerprintSpec extends SparkSpec {
     "shuffles=10 bcast=3 joins=[BroadcastHashJoin=2,SortMergeJoin=2,BroadcastNestedLoopJoin=1] scans=[2,2,2,2,2,2]")
   pin("s166_whitened_ann", "shuffles=4 bcast=1 joins=[BroadcastNestedLoopJoin=1] scans=[2,2]")
 
+  /** Jobs the builder of `name` starts before it returns that broadcast a
+    * checkpointed relation: a stage holding both an RDD of a
+    * BroadcastExchange and a LocalCheckpointRDD. An iterative operator
+    * runs its rounds inside the builder call and checkpoints each round's
+    * result, so its final plan shows none of the rounds' joins; a round
+    * that broadcasts the previous round's result into a
+    * BroadcastHashJoin shows here as one such job. */
+  private def checkpointBroadcasts(name: String): (DataFrame, Long) = {
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists { st =>
+              st.rddInfos.exists(_.scope.exists(_.name == "BroadcastExchange")) &&
+                st.rddInfos.exists(_.name == "LocalCheckpointRDD")
+            }) n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
+      org.apache.spark.graft.ListenerBus.drain(sc)
+      (df, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  //  - d93: the batch's band rows probe batch ∪ history band rows through
+  //    one (band, bsig) exchange per side, then the broadcast verify tail.
+  //  - d73/d130: connectedComponents' rounds run inside the builder; the
+  //    final plan joins the checkpointed label map back (sizes for d73,
+  //    the split's broadcast map for d130).
+  //  - d128: pageRank's final plan is the checkpointed last round; each of
+  //    the 5 rounds broadcasts the rank relation into its edge join.
+  pin("d93_incremental_lsh",
+    "shuffles=6 bcast=3 joins=[BroadcastHashJoin=3] scans=[2,2,2,2,2,2,2]")
+  pin("d73_dup_clusters", "shuffles=3 bcast=0 joins=[SortMergeJoin=1] scans=[]")
+  pin("d130_cluster_split", "shuffles=1 bcast=1 joins=[BroadcastHashJoin=1] scans=[1]")
+  test("plan fingerprint: d128_pagerank") {
+    val (df, rounds) = checkpointBroadcasts("d128_pagerank")
+    val got = s"${fingerprint(df)} checkpoint_broadcasts=$rounds"
+    val expected = "shuffles=1 bcast=0 joins=[] scans=[] checkpoint_broadcasts=5"
+    assert(got == expected,
+      s"\nd128_pagerank plan shape changed:\n  got      $got\n  expected $expected")
+  }
+
   test("Engine.session keys shuffle parallelism off the real session width") {
     // every pin above runs under this session — their being green IS the
     // "local plans unchanged by the scale knobs" evidence; here pin the
