@@ -39,11 +39,6 @@ object Sinks {
   def writeJson(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
 
-  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
   /** Display sink (reference MAX_DISP_ROWS=1000, view.rs:472). */
   def show(df: DataFrame, n: Int = 1000): Unit = df.show(n, truncate = false)
 

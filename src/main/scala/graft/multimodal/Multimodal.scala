@@ -20,11 +20,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** Metadata carried next to every media payload. */
-  val mediaMetaType: StructType = StructType(Seq(
-    StructField("format", StringType), StructField("width", IntegerType),
-    StructField("height", IntegerType), StructField("n_bytes", LongType)))
-
   /** Wrap a source column as an opaque media payload with metadata — the
     * ingestion shape for binary assets. (Here the payload is the UTF-8 bytes
     * of a text column; for real files use [[attachBinaryFiles]].) */

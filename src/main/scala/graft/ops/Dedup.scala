@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable.floor6
+
 /** Deduplication operators for corpus-scale pipelines (beyond the reference
   * surface; agnes only has exact distinct-rows via `unique_values`,
   * src/view.rs:1083-1091).
@@ -66,7 +68,7 @@ object Dedup {
     *
     * One (shingle) exchange for the global document frequency (the same
     * distribution d22's df cap rides) + one (id) aggregate — nothing else
-    * touches the corpus. Ratio through the portable floor form. Returns
+    * touches the corpus. Ratio through [[floor6]]. Returns
     * (id, n_shingles, n_unique, novelty); docs too short for one shingle
     * are absent (no shingles → no novelty claim). */
   def noveltyScore(df0: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
@@ -76,9 +78,7 @@ object Dedup {
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("__df") === 1, 1L).otherwise(0L)).as("n_unique"))
-      .withColumn("novelty",
-        floor(col("n_unique").cast("double") / col("n_shingles") * lit(1e6) + lit(0.5))
-          / lit(1e6))
+      .withColumn("novelty", floor6(col("n_unique").cast("double") / col("n_shingles")))
   }
 
   /** Exact n-gram Jaccard similarity pairs with sim >= `threshold`, via an
@@ -940,7 +940,7 @@ object Dedup {
     * trusting a dedup threshold: per candidate pair, both lengths, the
     * exact character edit distance (Levenshtein — identical unit-cost
     * semantics in Spark and DuckDB), and the length-normalized edit
-    * ratio (portable floor rounding; 0 = identical, →1 = unrelated).
+    * ratio (6 dp; 0 = identical, →1 = unrelated).
     *
     * Scale shape: the corpus is scanned twice to FETCH pair-member texts
     * via broadcast joins of the candidate-sized id sets (never shuffled);
@@ -962,9 +962,9 @@ object Dedup {
         length(col("__ta")).cast("long").as("len_a"),
         length(col("__tb")).cast("long").as("len_b"),
         ed.as("edit_distance"),
-        (floor(ed.cast("double") /
-          greatest(length(col("__ta")), length(col("__tb")), lit(1)).cast("double")
-          * lit(1e6) + lit(0.5)) / lit(1e6)).as("edit_ratio"))
+        floor6(ed.cast("double") /
+          greatest(length(col("__ta")), length(col("__tb")), lit(1)).cast("double"))
+          .as("edit_ratio"))
   }
 
   // ---- Bloom-prefiltered incremental dedup ---------------------------------

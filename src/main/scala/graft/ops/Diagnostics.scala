@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.Portable.floor6
 
 /** Data-distribution diagnostics — the profiling pass that decides HOW to
   * run the expensive queries (beyond the reference surface; a single-node
@@ -37,11 +39,6 @@ object Diagnostics {
       count(lit(1)).as("n_keys"),
       sum(col("cnt")).as("total_rows"),
       max(col("cnt")).as("max_cnt"))
-    // the share/cum_share/skew ratios are small rationals (cnt/total_rows)
-    // that CAN land exactly on a 6-dp tie; floor(x·1e6 + 0.5)/1e6 is pure
-    // IEEE double math every engine reproduces bit-for-bit, where round()
-    // ties differ between Spark (shortest-repr HALF_UP) and DuckDB
-    def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     // a NULL key is a legal group (count(1) counts it); Spark default-sorts
     // nulls FIRST ascending while DuckDB sorts them LAST, so a null group
     // tying at the topN boundary would select different rows per engine —
@@ -60,12 +57,12 @@ object Diagnostics {
       .select(
         col("__skew_rank").cast("long").as("rank"),
         col("key").cast("string").as("key"), col("cnt"),
-        r6(col("cnt") / col("total_rows")).as("share"),
-        r6(col("__skew_cum") / col("total_rows")).as("cum_share"),
+        floor6(col("cnt") / col("total_rows")).as("share"),
+        floor6(col("__skew_cum") / col("total_rows")).as("cum_share"),
         col("n_keys"), col("total_rows"),
         // max_cnt·n_keys in doubles: the long product overflows at
         // plausible (hot key × high cardinality) combinations under ANSI
-        r6(col("max_cnt").cast("double") * col("n_keys") / col("total_rows"))
+        floor6(col("max_cnt").cast("double") * col("n_keys") / col("total_rows"))
           .as("skew_ratio"))
   }
 }

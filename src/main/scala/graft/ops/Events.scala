@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable.floor6
+
 /** Ordered-sequence analytics over an event stream (beyond the reference
   * surface — the product-analytics queries a clickstream warehouse runs).
   */
@@ -58,7 +60,7 @@ object Events {
     // and 0/0 must be 0.0, not an ANSI division error
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("step"))
     def safeDiv(n: Column, d: Column): Column =
-      when(d === 0L, lit(0.0)).otherwise(r6(n / d))
+      when(d === 0L, lit(0.0)).otherwise(floor6(n / d))
     // "__funnel_prev": direct window alias = StrictPlanGuard allowlist
     // token (audited pre-reduced site: one row per funnel step)
     counts
@@ -70,12 +72,6 @@ object Events {
         safeDiv(col("users"), col("first_users")).as("conv_from_first"))
       .orderBy(col("step"))
   }
-
-  // NOT round(): user-count ratios are small rationals, which CAN land
-  // exactly on a 6-dp boundary (denominator divisible by 2^7) — the
-  // portable floor(x·1e6 + 0.5)/1e6 IEEE form rounds identically in any
-  // engine (same rationale as Similarity.bucketCentroids)
-  private def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
 
   /** Cohort retention: users are cohorted by the DAY of their first event;
     * cell (cohort_day, day_offset) counts the cohort's users active
@@ -98,7 +94,7 @@ object Events {
       .join(sizes, "cohort_day")
       .select(col("cohort_day"), col("day_offset"), col("active_users"),
         col("cohort_users"),
-        r6(col("active_users") / col("cohort_users")).as("retention"))
+        floor6(col("active_users") / col("cohort_users")).as("retention"))
   }
 
   /** Regular-grid resampling with forward fill — the time-series

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.Portable.floor6
 
 /** Graph analytics over candidate-pair graphs (the near-dup graph being
   * the one a training-data pipeline actually owns). [[Dedup.connectedComponents]]
@@ -12,14 +14,11 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  private def r6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-
   /** PageRank over an UNDIRECTED edge list, fixed iteration count —
     * engineered for exact cross-engine reproducibility, which no floating
     * PageRank normally has:
     *  - every per-node quantity (init, out-contribution, new rank) is
-    *    rounded through the portable floor(x·1e6 + 0.5)/1e6 IEEE form at
-    *    the SAME points in both engines;
+    *    rounded through [[floor6]] at the SAME points in both engines;
     *  - the neighbor-contribution sum runs through DECIMAL(27,7), so the
     *    distributed reduction is order-independent (the bucketCentroids
     *    trick) — two runs, two partitionings, or two ENGINES cannot
@@ -87,7 +86,7 @@ object Graph {
     val truncator = new Checkpointing.Truncator(reliable = false)
     def truncate(df: DataFrame): DataFrame = truncator.truncate(df)
     var pr = truncate(nodes.select(col("node"), col("deg"),
-      r6(lit(1.0) / lit(nN.toDouble)).as("pr")))
+      floor6(lit(1.0) / lit(nN.toDouble)).as("pr")))
     for (_ <- 1 to iters) {
       // Explicit broadcast: the truncated rank relation is a LogicalRDD
       // with no stats, so the planner would otherwise shuffle-join against
@@ -97,14 +96,14 @@ object Graph {
       // where its cache already lives. (At sf0.1 the d128 cost is
       // dominated by building the 271k-pair graph plus ~1 s/round of
       // join+agg — the iterative floor of the CC family.)
-      val prIn = pr.select(col("node").as("n"), r6(col("pr") / col("deg")).as("__c"))
+      val prIn = pr.select(col("node").as("n"), floor6(col("pr") / col("deg")).as("__c"))
       val sums = sym.join(broadcast(prIn), "n")
         .select(col("m").as("node"), col("__c"))
         .groupBy(col("node"))
         .agg(sum(col("__c").cast("decimal(27,7)")).as("__s"))
       pr = truncate(nodes.join(sums, Seq("node"), "left")
         .select(col("node"), col("deg"),
-          r6(lit(teleport) / lit(nN.toDouble) +
+          floor6(lit(teleport) / lit(nN.toDouble) +
             lit(damping) * coalesce(col("__s").cast("double"), lit(0.0))).as("pr")))
     }
     // Every round already materialized and released its predecessor inside
@@ -157,7 +156,7 @@ object Graph {
       .select(col("id"), col("degree"),
         coalesce(col("__t"), lit(0L)).as("triangles"),
         when(col("degree") < 2, lit(0.0))
-          .otherwise(r6(lit(2.0) * coalesce(col("__t"), lit(0L)) /
+          .otherwise(floor6(lit(2.0) * coalesce(col("__t"), lit(0L)) /
             (col("degree") * (col("degree") - 1))))
           .as("clustering"))
   }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable.floor6
+
 /** Declarative data-quality constraint checking — the validation gate a
   * pipeline runs before a table feeds training or analytics (the
   * Great-Expectations/Deequ role, Spark-first). Every check yields one
@@ -164,11 +166,10 @@ object Quality {
     val mad = orderStats(
       scores.select(abs(col("__score") - lit(med)).as("__score")),
       Seq(0.5), "robustZ").head
-    val r6 = (c: Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val z =
       if (mad == 0.0) when(col(scoreCol).isNull, lit(null).cast("double")).otherwise(lit(0.0))
       else when(col(scoreCol).isNull, lit(null).cast("double"))
-        .otherwise(r6((col(scoreCol).cast("double") - lit(med)) / lit(mad)))
+        .otherwise(floor6((col(scoreCol).cast("double") - lit(med)) / lit(mad)))
     df.select(col(idCol), col(scoreCol), z.as("z"))
   }
 
@@ -276,13 +277,12 @@ object Quality {
       .join(meds, col(groupCol) <=> col("__grp"), "inner").drop("__grp")
       .select(col(groupCol), abs(col("__score") - col("__med")).as("__score"))
     val mads = groupOrderStats(devs, groupCol, Seq(0.5 -> "__mad"))
-    val r6 = (c: Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     df.join(meds, col(groupCol) <=> col("__grp"), "left").drop("__grp")
       .join(mads, col(groupCol) <=> col("__grp"), "left").drop("__grp")
       .select(col(idCol), col(groupCol), col(scoreCol),
         when(col(scoreCol).isNull, lit(null).cast("double"))
           .otherwise(when(col("__mad") === 0.0, lit(0.0))
-            .otherwise(r6((col(scoreCol).cast("double") - col("__med")) / col("__mad"))))
+            .otherwise(floor6((col(scoreCol).cast("double") - col("__med")) / col("__mad"))))
           .as("z"))
   }
 }

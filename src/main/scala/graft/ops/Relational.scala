@@ -198,8 +198,6 @@ object Relational {
     * src/view.rs:8-10); by-name union with Spark. */
   def union(l: DataFrame, r: DataFrame): DataFrame = l.unionByName(r)
 
-  def limitRows(df: DataFrame, n: Int): DataFrame = df.limit(n)
-
   /** Top-k rows per group under `order` (with a ranking column `rankCol`).
     * One shuffle on the group keys; Spark's `WindowGroupLimit` rewrite
     * bounds the per-partition sort to k rows, so the full group is never

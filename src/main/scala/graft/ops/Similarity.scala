@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable.floor6
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`), beyond the reference surface (agnes has no vector
   * support).
@@ -800,21 +802,15 @@ object Similarity {
       .agg(count(lit(1)).as("n_vectors"),
         sum(col("comp").cast("double").cast("decimal(27,7)")).as("__s"))
       .select(col("bucket"), col("dim_pos"), col("n_vectors"),
-        // NOT round(): the exact-decimal sum over a small group can put the
-        // mean exactly ON a 6-dp boundary, where Spark (BigDecimal of the
-        // shortest double repr, HALF_UP) and other engines (scaled double)
-        // disagree. floor(x·1e6 + 0.5)/1e6 is pure IEEE double arithmetic —
-        // every engine computes the identical bit pattern
-        (floor(col("__s").cast("double") / col("n_vectors") * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("centroid"))
+        floor6(col("__s").cast("double") / col("n_vectors")).as("centroid"))
   }
 
   /** Upper-triangle covariance matrix of the embedding distribution —
     * the whitening/PCA-prep statistic (SemDeDup-style semantic dedup and
     * IVF/PQ quantizers both work measurably better on whitened vectors;
     * this is the one-pass-per-moment input to that transform).
-    * cov(i,j) = E[x_i·x_j] − E[x_i]·E[x_j], each expectation floor-rounded
-    * through the portable `floor(x·1e6+0.5)/1e6` form and every summed
+    * cov(i,j) = E[x_i·x_j] − E[x_i]·E[x_j], each expectation rounded
+    * through [[floor6]] and every summed
     * term quantized to DECIMAL(27,7) first (the [[bucketCentroids]]
     * discipline) — order-independent reductions, so two runs, two
     * partitionings, or two engines agree bit-for-bit.
@@ -838,7 +834,6 @@ object Similarity {
     * passes (means + second moments) in a single collect. */
   private[ops] def covarianceUpperWithMu(df: DataFrame, vecCol: String,
                                          dim: Int): DataFrame = {
-    val r6 = (c: Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val v = graft.core.Par.widen(df)
       .select(col(vecCol).as("__v")).filter(size(col("__v")) === dim)
     val comp = v.select(posexplode(col("__v")).as(Seq("i", "x")))
@@ -846,7 +841,7 @@ object Similarity {
       .agg(count(lit(1)).as("__n"),
         sum(col("x").cast("double").cast("decimal(27,7)")).as("__s"))
       .select(col("i").cast("long").as("i"),
-        r6(col("__s").cast("double") / col("__n")).as("mu"))
+        floor6(col("__s").cast("double") / col("__n")).as("mu"))
     val pairs = v
       .select(col("__v"), posexplode(col("__v")).as(Seq("i", "x")))
       .select(col("i"), col("x"), posexplode(col("__v")).as(Seq("j", "y")))
@@ -856,12 +851,12 @@ object Similarity {
         sum((col("x").cast("double") * col("y").cast("double"))
           .cast("decimal(27,7)")).as("__s"))
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"),
-        r6(col("__s").cast("double") / col("__n")).as("__exy"))
+        floor6(col("__s").cast("double") / col("__n")).as("__exy"))
     val mi = broadcast(comp.select(col("i"), col("mu").as("__mi")))
     val mj = broadcast(comp.select(col("i").as("j"), col("mu").as("__mj")))
     pairs.join(mi, "i").join(mj, "j")
       .select(col("i"), col("j"),
-        r6(col("__exy") - col("__mi") * col("__mj")).as("cov"),
+        floor6(col("__exy") - col("__mi") * col("__mj")).as("cov"),
         col("__mi").as("mu_i"))
   }
 
@@ -971,15 +966,14 @@ object Similarity {
     * whitened components — one codegen'd zip_with/aggregate chain per
     * component over LITERAL model arrays (no UDF, no shuffle; the same
     * higher-order-expression discipline as [[dot]]), outputs
-    * floor-rounded through the portable 1e6 form. Returns
+    * rounded through [[floor6]]. Returns
     * (id, y0 … y{k−1}). */
   def whiten(df: DataFrame, idCol: String, vecCol: String,
              mu: Array[Double], w: Array[Array[Double]]): DataFrame = {
-    val r6 = (c: Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val xd = transform(col(vecCol), x => x.cast("double"))
     val centered = zip_with(xd, lit(mu), (x, m) => x - m)
     val ys = w.zipWithIndex.map { case (row, c) =>
-      r6(aggregate(zip_with(centered, lit(row), (a, b) => a * b),
+      floor6(aggregate(zip_with(centered, lit(row), (a, b) => a * b),
         lit(0.0), (s, t) => s + t)).as(s"y$c")
     }
     graft.core.Par.widen(df).filter(size(col(vecCol)) === mu.length)
@@ -991,7 +985,7 @@ object Similarity {
     * planes/tables/nprobe (recall is THE accuracy axis those knobs trade
     * against cost; shipping a bucket config without measuring it is
     * guessing). Per query: |approx ∩ exact| / |exact|, with the ratio
-    * through the portable floor form. Queries whose approximate result is
+    * through [[floor6]]. Queries whose approximate result is
     * empty (every probe missed) still appear, with n_approx = 0 — the
     * failure mode the report exists to expose.
     *
@@ -1010,8 +1004,7 @@ object Similarity {
     hits.join(ac, Seq("query_id"), "left")
       .select(col("query_id"), coalesce(col("n_approx"), lit(0L)).as("n_approx"),
         col("n_exact"), col("n_overlap"),
-        (floor(col("n_overlap").cast("double") / col("n_exact") * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("recall"))
+        floor6(col("n_overlap").cast("double") / col("n_exact")).as("recall"))
   }
 
   /** IVF (inverted-file) ANN: a coarse k-means quantizer partitions the

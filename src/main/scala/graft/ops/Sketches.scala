@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable.floor6
+
 /** Sketch-based corpus set algebra over Apache DataSketches Theta sketches
   * (Spark's built-in `theta_*` functions, public API since Spark 4.x).
   *
@@ -52,8 +54,7 @@ object Sketches {
         est(theta_intersection(col("ska"), col("skb"))).as("n_inter"),
         est(theta_union(col("ska"), col("skb"), lgK)).as("n_union"))
       .withColumn("jaccard",
-        floor(col("n_inter").cast("double") / col("n_union").cast("double")
-          * lit(1e6) + lit(0.5)) / lit(1e6))
+        floor6(col("n_inter").cast("double") / col("n_union").cast("double")))
   }
 
   /** Cross-snapshot vocabulary NOVELTY — theta_difference completes the
@@ -75,7 +76,6 @@ object Sketches {
         theta_sketch_estimate(col("skb")).as("n_b"),
         theta_sketch_estimate(theta_difference(col("skb"), col("ska"))).as("n_novel"))
       .withColumn("novelty",
-        floor(col("n_novel").cast("double") / col("n_b").cast("double")
-          * lit(1e6) + lit(0.5)) / lit(1e6))
+        floor6(col("n_novel").cast("double") / col("n_b").cast("double")))
   }
 }

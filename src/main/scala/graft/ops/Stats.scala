@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.Portable.floor6
+
 /** Column summary statistics — the reference's `view_stats` sink
   * (agnes src/view_stats.rs:219-303: Field/Type/Min/Max/Sum/Mean/StDev per
   * column) plus the per-statistic primitives from src/stats.rs.
@@ -243,7 +245,6 @@ object Stats {
     val totals = joined.agg(sum(col("base_n")).as("__nb"), sum(col("cur_n")).as("__nc"))
     val p = (col("base_n") + lit(0.5)) / (col("__nb") + lit(0.5) * lit(bins))
     val q = (col("cur_n") + lit(0.5)) / (col("__nc") + lit(0.5) * lit(bins))
-    val r6 = (c: Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val terms = joined.crossJoin(broadcast(totals))
       .withColumn("p", p).withColumn("q", q)
       .withColumn("__term", ((col("p") - col("q")) * log(col("p") / col("q")))
@@ -252,9 +253,9 @@ object Stats {
     terms.crossJoin(broadcast(psi))
       .select(col("bin"), round(lit(mn) + col("bin") * lit(w), 6).as("bin_lo"),
         col("base_n"), col("cur_n"),
-        r6(col("p")).as("p"), r6(col("q")).as("q"),
+        floor6(col("p")).as("p"), floor6(col("q")).as("q"),
         col("__term").cast(DoubleType).as("term"),
-        r6(col("__psi").cast(DoubleType)).as("psi"))
+        floor6(col("__psi").cast(DoubleType)).as("psi"))
   }
 
   /** The binning aggregation under [[psiDrift]] — (bin, n) counts over

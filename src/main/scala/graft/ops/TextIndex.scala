@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable.floor6
+
 /** Corpus indexing and n-gram language-model statistics — the retrieval /
   * quality-filtering side of a training-data pipeline (beyond the reference
   * surface; the reference has no text-indexing operators).
@@ -17,6 +19,40 @@ object TextIndex {
 
   private def tokensExpr(textCol: String) =
     filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")
+
+  /** The adjacent-token pairs `(w1, w2)` of every doc with 2+ tokens, one
+    * row per bigram occurrence, led by the doc's id as `doc_id` when `idCol`
+    * is given: a projection + explode, no shuffle. */
+  private def bigramRows(df: DataFrame, textCol: String,
+                         idCol: Option[String]): DataFrame = {
+    val id = idCol.map(c => col(c).as("doc_id")).toSeq
+    val keep = idCol.map(_ => col("doc_id")).toSeq
+    df.select(id :+ tokensExpr(textCol).as("t"): _*)
+      .filter(size(col("t")) >= 2)
+      .select(keep :+ explode(zip_with(
+        slice(col("t"), lit(1), size(col("t")) - 1),
+        slice(col("t"), lit(2), size(col("t")) - 1),
+        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"): _*)
+      .select(keep ++ Seq(col("bg.w1").as("w1"), col("bg.w2").as("w2")): _*)
+  }
+
+  /** The add-k bigram model of a [[bigramRows]] stream, every column
+    * suffixed by `tag`: pair counts `c12` (localCheckpointed: vocab²-bounded,
+    * and every caller reads them more than once), left totals `c1` and the
+    * continuation vocabulary `v` (one row). */
+  private def addKModel(pairs: DataFrame, tag: String = "") = {
+    val counts = pairs.groupBy(col("w1"), col("w2"))
+      .agg(count(lit(1)).as(s"c12$tag")).localCheckpoint()
+    val totals = counts.groupBy(col("w1")).agg(sum(col(s"c12$tag")).as(s"c1$tag"))
+    val vocab = counts.agg(countDistinct(col("w2")).as(s"v$tag"))
+    (counts, totals, vocab)
+  }
+
+  /** ln P(w2 | w1) = ln((c12 + k) / (c1 + k·v)) over the `tag` model's
+    * columns; a pair or left word the model never saw counts as 0. */
+  private def addKLogProb(k: Double, tag: String = ""): Column =
+    log((coalesce(col(s"c12$tag"), lit(0L)) + lit(k)) /
+      (coalesce(col(s"c1$tag"), lit(0L)) + lit(k) * col(s"v$tag")))
 
   /** Inverted index: token → document frequency + a capped, sorted posting
     * list (as a CSV string, so the relation stays flat and engine-portable).
@@ -71,26 +107,12 @@ object TextIndex {
   def bigramConditional(df: DataFrame, textCol: String, topN: Int,
                         k: Double = 0.5): DataFrame = {
     require(topN >= 1, "topN must be >= 1")
-    val toks = df.select(tokensExpr(textCol).as("t"))
-      .filter(size(col("t")) >= 2)
-    val pairs = toks.select(explode(zip_with(
-        slice(col("t"), lit(1), size(col("t")) - 1),
-        slice(col("t"), lit(2), size(col("t")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val counts = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val vocab = counts.agg(countDistinct(col("w2")).as("v"))
+    val (counts, _, vocab) = addKModel(bigramRows(df, textCol, None))
     val leftW = Window.partitionBy(col("w1"))
     counts.withColumn("c1", sum(col("c12")).over(leftW))
       .crossJoin(broadcast(vocab))
       .select(col("w1"), col("w2"), col("c12"),
-        // portable floor form, not round(): add-k probabilities are small
-        // rationals that can tie exactly at 6 dp, where Spark's and
-        // DuckDB's round() half-up conventions diverge
-        (floor((col("c12") + lit(k)) / (col("c1") + lit(k) * col("v"))
-            * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("p_cond"))
+        floor6((col("c12") + lit(k)) / (col("c1") + lit(k) * col("v"))).as("p_cond"))
       .orderBy(col("c12").desc, col("w1"), col("w2"))
       .limit(topN)
   }
@@ -109,81 +131,21 @@ object TextIndex {
     * back off to k/(c1 + k·V), unseen left-words to 1/V.
     *
     * Determinism: each ln(p) is rounded through DECIMAL(27,7) before the
-    * per-doc sum, so the distributed mean is reduction-order independent;
-    * the final rounding is the portable floor form. */
+    * per-doc sum, so the distributed mean is reduction-order independent. */
   def bigramLogProbScore(df: DataFrame, idCol: String, textCol: String,
                          k: Double = 0.5): DataFrame = {
-    val toks = df.select(col(idCol).as("doc_id"), tokensExpr(textCol).as("t"))
-      .filter(size(col("t")) >= 2)
-    val pairs = toks.select(col("doc_id"), explode(zip_with(
-        slice(col("t"), lit(1), size(col("t")) - 1),
-        slice(col("t"), lit(2), size(col("t")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val counts = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val totals = counts.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-    val vocab = counts.agg(countDistinct(col("w2")).as("v"))
+    val pairs = bigramRows(df, textCol, Some(idCol))
+    val (counts, totals, vocab) = addKModel(pairs)
     pairs
       .join(counts, Seq("w1", "w2"), "left")
       .join(totals, Seq("w1"), "left")
       .crossJoin(broadcast(vocab))
-      .withColumn("lp", log((coalesce(col("c12"), lit(0L)) + lit(k)) /
-        (coalesce(col("c1"), lit(0L)) + lit(k) * col("v"))))
+      .withColumn("lp", addKLogProb(k))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("lp").cast("decimal(27,7)")).as("__s"))
       .select(col("doc_id"), col("n_bigrams"),
-        (floor(col("__s").cast("double") / col("n_bigrams") * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("avg_logprob"))
-  }
-
-  /** [[bigramLogProbScore]]'s cross-domain sibling: score `docs` under an
-    * add-k bigram model estimated from a DIFFERENT relation (`modelDocs`) —
-    * the building block importance weighting needs (score the whole corpus
-    * under the target-domain model). Same determinism contract: each ln
-    * decimal-rounded pre-sum, final mean through the portable floor form.
-    *
-    * Scale shape: model counts are vocab²-bounded regardless of corpus
-    * size, localCheckpointed once (three consumers), join strategy left to
-    * AQE; the scored stream is a projection until the model joins. */
-  def bigramLogProbScoreUnder(docs: DataFrame, modelDocs: DataFrame,
-                              idCol: String, textCol: String,
-                              k: Double = 0.5): DataFrame = {
-    def pairsOf(df: DataFrame) = df
-      .select(col(idCol).as("doc_id"), tokensExpr(textCol).as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(zip_with(
-        slice(col("t"), lit(1), size(col("t")) - 1),
-        slice(col("t"), lit(2), size(col("t")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-    val scored = pairsOf(docs)
-    val counts = pairsOf(modelDocs)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    // a model with ZERO bigrams (every modelDoc under 2 tokens) cannot be
-    // estimated: the smoothing denominator c1 + k·v collapses to 0 and
-    // non-ANSI division would publish silently-null avg_logprob while a
-    // strict engine errors — fail loudly at the call site instead
-    // (counts is already eagerly localCheckpointed, so this is one cheap
-    // limit-1 job over materialized blocks, not a recompute)
-    require(!counts.isEmpty,
-      "bigramLogProbScoreUnder: modelDocs yields no bigrams (every doc has < 2 tokens) — an add-k bigram model cannot be estimated from an empty stream")
-    val totals = counts.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-    val vocab = counts.agg(countDistinct(col("w2")).as("v"))
-    scored
-      .join(counts, Seq("w1", "w2"), "left")
-      .join(totals, Seq("w1"), "left")
-      .crossJoin(broadcast(vocab))
-      .withColumn("lp", log((coalesce(col("c12"), lit(0L)) + lit(k)) /
-        (coalesce(col("c1"), lit(0L)) + lit(k) * col("v"))))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(col("lp").cast("decimal(27,7)")).as("__s"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (floor(col("__s").cast("double") / col("n_bigrams") * lit(1e6) + lit(0.5))
-          / lit(1e6)).as("avg_logprob"))
+        floor6(col("__s").cast("double") / col("n_bigrams")).as("avg_logprob"))
   }
 
   /** DSIR-style importance resampling (Xie et al. 2023, "Data Selection
@@ -222,54 +184,40 @@ object TextIndex {
     // contract must not lean on that internal detail
     require(!corpus.columns.contains("__dsir_idx"),
       "dsirResample: input already has a column named __dsir_idx (reserved internal name)")
-    def pairsOf(df: DataFrame) = df
-      .select(col(idCol).as("doc_id"), tokensExpr(textCol).as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(zip_with(
-        slice(col("t"), lit(1), size(col("t")) - 1),
-        slice(col("t"), lit(2), size(col("t")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     // the corpus stream feeds the corpus model AND the scoring pass: left
     // LAZY deliberately — the explode is a codegen'd projection, and
     // recomputing it for the model pass is measurably cheaper than
     // materializing ~n·len pair rows through a persist (the r17 probe
     // tried the staged form first: the checkpoint write ate the win)
-    val pairs = pairsOf(corpus)
-    def model(src: DataFrame, tag: String) = {
-      val counts = src.groupBy(col("w1"), col("w2"))
-        .agg(count(lit(1)).as(s"c12$tag")).localCheckpoint()
-      val totals = counts.groupBy(col("w1")).agg(sum(col(s"c12$tag")).as(s"c1$tag"))
-      val vocab = counts.agg(countDistinct(col("w2")).as(s"v$tag"))
-      (counts, totals, vocab)
-    }
-    val (countsT, totalsT, vocabT) = model(pairsOf(target), "t")
-    // same loud guard as bigramLogProbScoreUnder: a bigram-less target
-    // cannot estimate a model (counts already materialized — cheap check)
+    val pairs = bigramRows(corpus, textCol, Some(idCol))
+    val (countsT, totalsT, vocabT) = addKModel(bigramRows(target, textCol, Some(idCol)), "t")
+    // a model with ZERO bigrams (every target doc under 2 tokens) cannot be
+    // estimated: the smoothing denominator c1 + k·v collapses to 0 and
+    // non-ANSI division would publish silently-null scores while a strict
+    // engine errors — fail loudly at the call site instead (counts is
+    // already eagerly localCheckpointed, so this is one cheap limit-1 job
+    // over materialized blocks, not a recompute)
     require(!countsT.isEmpty,
       "dsirResample: target yields no bigrams (every doc has < 2 tokens) — an add-k bigram model cannot be estimated from an empty stream")
-    val (countsC, totalsC, vocabC) = model(pairs, "c")
-    def lp(c12: Column, c1: Column, v: Column): Column =
-      log((coalesce(c12, lit(0L)) + lit(k)) / (coalesce(c1, lit(0L)) + lit(k) * v))
-    val r6 = (c: Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
+    val (countsC, totalsC, vocabC) = addKModel(pairs, "c")
     val scored = pairs
       .join(countsT, Seq("w1", "w2"), "left").join(totalsT, Seq("w1"), "left")
       .join(countsC, Seq("w1", "w2"), "left").join(totalsC, Seq("w1"), "left")
       .crossJoin(broadcast(vocabT)).crossJoin(broadcast(vocabC))
-      .withColumn("lpt", lp(col("c12t"), col("c1t"), col("vt")))
-      .withColumn("lpc", lp(col("c12c"), col("c1c"), col("vc")))
+      .withColumn("lpt", addKLogProb(k, "t"))
+      .withColumn("lpc", addKLogProb(k, "c"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("lpt").cast("decimal(27,7)")).as("__st"),
         sum(col("lpc").cast("decimal(27,7)")).as("__sc"))
       .select(col("doc_id"),
-        r6(col("__st").cast("double") / col("n_bigrams")).as("lp_target"),
-        r6(col("__sc").cast("double") / col("n_bigrams")).as("lp_corpus"))
+        floor6(col("__st").cast("double") / col("n_bigrams")).as("lp_target"),
+        floor6(col("__sc").cast("double") / col("n_bigrams")).as("lp_corpus"))
       // both means are 6-dp floor-rounded, so the difference is a double
       // subtraction of identical values in any engine; re-floor for a
       // stable 6-dp output column
       .select(col("doc_id"), col("lp_target"), col("lp_corpus"),
-        r6(col("lp_target") - col("lp_corpus")).as("importance"))
+        floor6(col("lp_target") - col("lp_corpus")).as("importance"))
     val ordered = scored.orderBy(col("importance").desc, col("doc_id").asc)
     val (indexed, total) = Relational.withRowIndexCounted(ordered, "__dsir_idx")
     val keepN = math.floor(total * fraction).toLong
@@ -323,7 +271,7 @@ object TextIndex {
       .orderBy(col("__score").desc, col("doc_id"))
       .limit(topN)
       .select(col("doc_id"),
-        (floor(col("__score") * lit(1e6) + lit(0.5)) / lit(1e6)).as("score"))
+        floor6(col("__score")).as("score"))
   }
 
   /** Top-k bigram COLLOCATIONS by a PMI-monotone ratio (round 16): how
@@ -376,7 +324,7 @@ object TextIndex {
       .orderBy(col("__r").desc, col("a"), col("b"))
       .limit(topK)
       .select(col("a"), col("b"), col("n_ab"),
-        (floor(col("__r") * lit(1e6) + lit(0.5)) / lit(1e6)).as("pmi_ratio"))
+        floor6(col("__r")).as("pmi_ratio"))
   }
 
   /** Sparse "more-like-this": document pairs by TF-IDF COSINE over the
@@ -387,9 +335,9 @@ object TextIndex {
     *
     * Weights use the log-free rational idf of the t75 family,
     * tf·(N−df+0.5)/(df+0.5), QUANTIZED to integer milli-units
-    * (floor(w·1e3+0.5) as BIGINT — the portable floor form), so the dot
-    * products and norms are sums of exact integer products carried in
-    * DECIMAL(38,0): order-independent, engine-exact. The published cosine
+    * (floor(w·1e3+0.5) as BIGINT), so the dot products and norms are sums
+    * of exact integer products carried in DECIMAL(38,0):
+    * order-independent, engine-exact. The published cosine
     * divides through IEEE doubles (sqrt is correctly rounded by the
     * standard in every engine) and floor-rounds to 6 dp.
     *
@@ -432,7 +380,6 @@ object TextIndex {
     val tf = toks.groupBy(col("id"), col("w")).agg(count(lit(1)).as("tf"))
     val dfq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val n = broadcast(df.agg(count(lit(1)).as("__n")))
-    // integer milli-unit weight: exact in both engines (floor form)
     // staged ONCE (localCheckpoint): three consumers below — both sides of
     // the pair join and the norms — would otherwise each re-run the whole
     // explode→tf→df lineage (measured 3× the query cost at sf0.1)
@@ -489,7 +436,7 @@ object TextIndex {
       .withColumn("__cos", cos)
       .filter(col("__cos") >= threshold)
       .select(col("id_a"), col("id_b"),
-        (floor(col("__cos") * lit(1e6) + lit(0.5)) / lit(1e6)).as("cosine"))
+        floor6(col("__cos")).as("cosine"))
   }
 
   /** ZIPF FIT — the corpus-health diagnostic on the token frequency
@@ -502,7 +449,7 @@ object TextIndex {
     * identical doubles, every regression term (x, y, x·y, x²) is rounded
     * through DECIMAL(27,7) BEFORE its sum (the t110 contract — no float
     * reduction order), and slope/intercept derive from the decimal sums
-    * through the portable 6 dp floor.
+    * through [[floor6]].
     *
     * Scale shape: one token-count exchange (map-side combined), a
     * TakeOrdered top-N (no global sort), ranks via the terasort row-index
@@ -530,10 +477,9 @@ object TextIndex {
     val nD = col("n").cast("double")
     val (sx, sy, sxy, sxx) = (col("sx").cast("double"), col("sy").cast("double"),
       col("sxy").cast("double"), col("sxx").cast("double"))
-    val r6 = (c: Column) => floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-    val slope = r6((nD * sxy - sx * sy) / (nD * sxx - sx * sx))
+    val slope = floor6((nD * sxy - sx * sy) / (nD * sxx - sx * sx))
     sums.select(col("n").as("n_tokens"), slope.as("slope"),
-      r6((sy - slope * sx) / nD).as("intercept"))
+      floor6((sy - slope * sx) / nD).as("intercept"))
   }
 
   /** LABEL-NOISE AUDIT via a corpus-trained multinomial Naive Bayes
@@ -629,8 +575,7 @@ object TextIndex {
       .orderBy(col("score").desc, col("cand").asc)
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
       .select(col("doc_id"), col("label"), col("cand").as("pred_label"),
-        (floor(col("score").cast("double") * lit(1e6) + lit(0.5)) / lit(1e6))
-          .as("score"),
+        floor6(col("score").cast("double")).as("score"),
         (col("label") === col("cand")).as("agree"))
   }
 }

@@ -328,8 +328,7 @@ object DedupQueries {
         |SELECT na.source AS slice_a, nb.source AS slice_b, na.n AS n_a, nb.n AS n_b,
         |  coalesce(i.n_inter, 0) AS n_inter,
         |  na.n + nb.n - coalesce(i.n_inter, 0) AS n_union,
-        |  floor(CAST(coalesce(i.n_inter, 0) AS DOUBLE)
-        |    / (na.n + nb.n - coalesce(i.n_inter, 0)) * 1e6 + 0.5) / 1e6 AS jaccard
+        |  ${floor6Sql("CAST(coalesce(i.n_inter, 0) AS DOUBLE) / (na.n + nb.n - coalesce(i.n_inter, 0))")} AS jaccard
         |FROM n na JOIN n nb ON na.source < nb.source
         |LEFT JOIN i ON i.sa = na.source AND i.sb = nb.source
         |ORDER BY slice_a, slice_b""".stripMargin)),
@@ -361,7 +360,7 @@ object DedupQueries {
         |nb AS (SELECT count(*) AS n FROM bsh),
         |nov AS (SELECT count(*) AS n FROM bsh WHERE s NOT IN (SELECT s FROM ash))
         |SELECT na.n AS n_a, nb.n AS n_b, nov.n AS n_novel,
-        |  floor(CAST(nov.n AS DOUBLE) / nb.n * 1e6 + 0.5) / 1e6 AS novelty
+        |  ${floor6Sql("CAST(nov.n AS DOUBLE) / nb.n")} AS novelty
         |FROM na, nb, nov""".stripMargin)),
 
     // SEMANTIC decontamination (round 16): corpus vectors embedding-close
@@ -447,8 +446,7 @@ object DedupQueries {
     // edit distance + normalized ratio — the O(len²) DP runs only on the
     // LSH-shrunk pair set, with texts fetched by candidate-sized
     // broadcast joins (the corpus is never shuffled)
-    // Oracle: identical unit-cost Levenshtein in both engines; the ratio uses the
-    // portable floor form
+    // Oracle: identical unit-cost Levenshtein in both engines
     QuerySpec("d129_pair_explain", (s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.simHashPairs(
@@ -463,7 +461,7 @@ object DedupQueries {
          |SELECT id_a, id_b,
          |  CAST(length(ta) AS BIGINT) AS len_a, CAST(length(tb) AS BIGINT) AS len_b,
          |  CAST(levenshtein(ta, tb) AS BIGINT) AS edit_distance,
-         |  floor(CAST(levenshtein(ta, tb) AS DOUBLE) / greatest(length(ta), length(tb), 1) * 1e6 + 0.5) / 1e6 AS edit_ratio
+         |  ${floor6Sql("CAST(levenshtein(ta, tb) AS DOUBLE) / greatest(length(ta), length(tb), 1)")} AS edit_ratio
          |FROM j ORDER BY id_a, id_b""".stripMargin)),
 
     // deterministic PageRank over the near-dup graph (d24's simhash
@@ -595,7 +593,7 @@ object DedupQueries {
          |  (SELECT id_a AS id FROM pairs UNION ALL SELECT id_b FROM pairs) GROUP BY id)
          |SELECT deg.id, deg.degree, CAST(coalesce(tpn.t, 0) AS BIGINT) AS triangles,
          |  CASE WHEN deg.degree < 2 THEN 0.0
-         |       ELSE floor(2.0 * coalesce(tpn.t, 0) / (deg.degree * (deg.degree - 1)) * 1e6 + 0.5) / 1e6 END AS clustering
+         |       ELSE ${floor6Sql("2.0 * coalesce(tpn.t, 0) / (deg.degree * (deg.degree - 1))")} END AS clustering
          |FROM deg LEFT JOIN tpn USING (id) ORDER BY deg.id""".stripMargin)),
 
     // SOFT DEDUP (round 17): inverse-cluster-size training weights over
@@ -681,13 +679,13 @@ object DedupQueries {
        |deg AS (SELECT n AS node, count(*) AS deg FROM sym GROUP BY n),
        |nn AS (SELECT CAST(count(*) AS DOUBLE) AS nv FROM deg),
        |pr AS (
-       |  SELECT 0 AS it, node, deg, floor(1.0 / nv * 1e6 + 0.5) / 1e6 AS pr
+       |  SELECT 0 AS it, node, deg, ${floor6Sql("1.0 / nv")} AS pr
        |  FROM deg, nn
        |  UNION ALL
        |  SELECT s.it + 1, d.node, d.deg,
-       |    floor((0.15 / nn.nv + 0.85 * CAST(s.s AS DOUBLE)) * 1e6 + 0.5) / 1e6
+       |    ${floor6Sql("0.15 / nn.nv + 0.85 * CAST(s.s AS DOUBLE)")}
        |  FROM (SELECT p2.it, sym.m AS node,
-       |          sum(CAST(floor(p2.pr / p2.deg * 1e6 + 0.5) / 1e6 AS DECIMAL(27,7))) AS s
+       |          sum(CAST(${floor6Sql("p2.pr / p2.deg")} AS DECIMAL(27,7))) AS s
        |        FROM pr p2 JOIN sym ON sym.n = p2.node
        |        WHERE p2.it < $iters GROUP BY p2.it, sym.m) s
        |  JOIN deg d ON d.node = s.node, nn)

@@ -46,16 +46,10 @@ object PipelineQueries {
         .select(col("doc_id"), col("lang"), col("quality"))
         .orderBy(col("lang"), col("doc_id"))
     }, Sql(
-      """WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
+      s"""WITH keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
         |d2 AS (SELECT d.* FROM documents d JOIN keep USING (doc_id)),
         |toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM d2),
-        |parts AS (SELECT doc_id, lang,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |q AS (SELECT doc_id, lang, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality FROM parts),
+        |q AS (SELECT doc_id, lang, $qualitySql AS quality FROM toks),
         |filt AS (SELECT * FROM q WHERE quality >= 0.3),
         |rn AS (SELECT doc_id, lang, quality, row_number() OVER (
         |  PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM filt)
@@ -139,8 +133,8 @@ object PipelineQueries {
     // publishes with a release — doc/token/lang counts, exact-dup rate,
     // quality mean (decimal sum) and exact percentiles, as a flat
     // (metric, value) relation. One aggregate over one scan.
-    // Oracle: same quality chain + the same portable floor-rounding; percentile ↔
-    // quantile_cont (the q39-established interpolation parity)
+    // Oracle: t63's quality score; percentile ↔ quantile_cont (the
+    // q39-established interpolation parity)
     QuerySpec("p106_corpus_card", (s, dir) => {
       val scored = t(s, dir, "documents").select(col("lang"), col("text"),
         TextFunctions.qualityScore(col("text"), stopwords).as("q"),
@@ -154,9 +148,9 @@ object PipelineQueries {
         expr("percentile(q, 0.5)").as("p50"),
         expr("percentile(q, 0.9)").as("p90"))
       a.select(expr(
-        """stack(7,
-          |  'dup_rate', floor((1.0 - CAST(n_distinct AS DOUBLE) / n_docs) * 1e6 + 0.5) / 1e6,
-          |  'mean_quality', floor(CAST(qsum AS DOUBLE) / n_docs * 1e6 + 0.5) / 1e6,
+        s"""stack(7,
+          |  'dup_rate', ${floor6Sql("1.0 - CAST(n_distinct AS DOUBLE) / n_docs")},
+          |  'mean_quality', ${floor6Sql("CAST(qsum AS DOUBLE) / n_docs")},
           |  'n_docs', CAST(n_docs AS DOUBLE),
           |  'n_langs', CAST(n_langs AS DOUBLE),
           |  'n_tokens', CAST(n_tokens AS DOUBLE),
@@ -164,21 +158,15 @@ object PipelineQueries {
           |  'p90_quality', round(p90, 4)) AS (metric, value)""".stripMargin))
         .orderBy(col("metric"))
     }, Sql(
-      """WITH toks AS (SELECT lang, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT lang, text, len(t) AS ntok,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |scored AS (SELECT lang, text, ntok, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS q FROM parts),
+      s"""WITH toks AS (SELECT lang, text, string_split(text, ' ') AS t FROM documents),
+        |scored AS (SELECT lang, text, len(t) AS ntok, $qualitySql AS q FROM toks),
         |a AS (SELECT count(*) AS n_docs, CAST(sum(ntok) AS BIGINT) AS n_tokens,
         |  count(DISTINCT lang) AS n_langs, count(DISTINCT text) AS n_distinct,
         |  sum(CAST(q AS DECIMAL(27,7))) AS qsum,
         |  quantile_cont(q, 0.5) AS p50, quantile_cont(q, 0.9) AS p90 FROM scored)
         |SELECT metric, value FROM (
-        |  SELECT 'dup_rate' AS metric, floor((1.0 - CAST(n_distinct AS DOUBLE) / n_docs) * 1e6 + 0.5) / 1e6 AS value FROM a
-        |  UNION ALL SELECT 'mean_quality', floor(CAST(qsum AS DOUBLE) / n_docs * 1e6 + 0.5) / 1e6 FROM a
+        |  SELECT 'dup_rate' AS metric, ${floor6Sql("1.0 - CAST(n_distinct AS DOUBLE) / n_docs")} AS value FROM a
+        |  UNION ALL SELECT 'mean_quality', ${floor6Sql("CAST(qsum AS DOUBLE) / n_docs")} FROM a
         |  UNION ALL SELECT 'n_docs', CAST(n_docs AS DOUBLE) FROM a
         |  UNION ALL SELECT 'n_langs', CAST(n_langs AS DOUBLE) FROM a
         |  UNION ALL SELECT 'n_tokens', CAST(n_tokens AS DOUBLE) FROM a
@@ -255,14 +243,8 @@ object PipelineQueries {
       graft.ops.Sampling.shuffleShards(kept, "doc_id", shardSize = 32L)
         .orderBy(col("pos"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id, len(t) AS nt,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |q AS (SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS score FROM parts),
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
+        |q AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens, $qualitySql AS score FROM toks),
         |c AS (SELECT doc_id, score, n_tokens,
         |  CAST(sum(n_tokens) OVER (ORDER BY score DESC, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
         |  FROM q),
@@ -285,14 +267,7 @@ object PipelineQueries {
     s"""keep AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
        |d2 AS (SELECT d.* FROM documents d JOIN keep USING (doc_id)),
        |toks0 AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM d2),
-       |parts AS (SELECT doc_id, lang, text,
-       |  least(len(t) / 50.0, 1.0) AS len_score,
-       |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-       |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-       |  FROM toks0),
-       |clean AS (SELECT doc_id, lang, text FROM parts
-       |  WHERE round(greatest(0.0, least(1.0,
-       |    (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) >= 0.3),
+       |clean AS (SELECT doc_id, lang, text FROM toks0 WHERE $qualitySql >= 0.3),
        |spans AS (SELECT doc_id, unnest([md5(substr(text, o + 1, 50))
        |                                 for o in range(0, len(text) - 50 + 1, 25)]) AS h
        |          FROM clean WHERE len(text) >= 50),

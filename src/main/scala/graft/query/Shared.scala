@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
 /** Helpers the query families share: table access, the exact-cents sums,
   * the memoized child sessions, the scratch directories, the pair-graph
   * builders, the stopword list, the frozen BPE merges, the PSI oracle
-  * that p174 and q175 both replay, and the DuckDB builders of the vector
-  * and near-dup oracles. Every family imports this object, and it reads no
-  * family.
+  * that p174 and q175 both replay, the DuckDB builders of the vector,
+  * near-dup and text oracles, and the SQL form of the 6-dp rounding.
+  * Every family imports this object, and it reads no family.
   *
   * Scratch rule: every file a query builder writes goes under ONE scratch
   * root per JVM ([[scratchDir]]), and one shutdown hook deletes that root
@@ -183,7 +183,7 @@ object Shared {
     * and q175 (streaming current side) — stream ≡ batch is exactly what
     * the same-oracle equality witnesses. */
   private[query] val psiEnZhOracle: String =
-    """WITH b AS (SELECT CAST(n_chars AS DOUBLE) AS v FROM documents WHERE lang = 'en' AND n_chars IS NOT NULL),
+    s"""WITH b AS (SELECT CAST(n_chars AS DOUBLE) AS v FROM documents WHERE lang = 'en' AND n_chars IS NOT NULL),
         |c AS (SELECT CAST(n_chars AS DOUBLE) AS v FROM documents WHERE lang = 'zh' AND n_chars IS NOT NULL),
         |rng AS (SELECT min(v) AS mn, max(v) AS mx, (max(v) - min(v)) / 10 AS w FROM b),
         |bb AS (SELECT least(greatest(CAST(floor((v - mn) / w) AS BIGINT), 0), 9) AS bin, count(*) AS n FROM b, rng GROUP BY 1),
@@ -199,9 +199,9 @@ object Shared {
         |  FROM j, tot),
         |ps AS (SELECT sum(term) AS psi FROM t2)
         |SELECT bin, round(mn + bin * w, 6) AS bin_lo, base_n, cur_n,
-        |  floor(p * 1e6 + 0.5) / 1e6 AS p, floor(q * 1e6 + 0.5) / 1e6 AS q,
+        |  ${floor6Sql("p")} AS p, ${floor6Sql("q")} AS q,
         |  CAST(term AS DOUBLE) AS term,
-        |  floor(CAST(psi AS DOUBLE) * 1e6 + 0.5) / 1e6 AS psi
+        |  ${floor6Sql("CAST(psi AS DOUBLE)")} AS psi
         |FROM t2, ps, rng ORDER BY bin""".stripMargin
 
   // DuckDB builders of the vector-search oracles (DedupQueries and
@@ -316,7 +316,7 @@ object Shared {
        |rep$sfx AS (SELECT ${tierCol}hits$sfx.query_id,
        |  coalesce(ac$sfx.n_approx, 0) AS n_approx, hits$sfx.n_exact,
        |  CAST(hits$sfx.n_overlap AS BIGINT) AS n_overlap,
-       |  floor(CAST(hits$sfx.n_overlap AS DOUBLE) / hits$sfx.n_exact * 1e6 + 0.5) / 1e6 AS recall
+       |  ${floor6Sql(s"CAST(hits$sfx.n_overlap AS DOUBLE) / hits$sfx.n_exact")} AS recall
        |  FROM hits$sfx LEFT JOIN ac$sfx ON ac$sfx.query_id = hits$sfx.query_id)""".stripMargin
 
   // DuckDB builders of the near-dup oracles: the word n-gram list, the
@@ -375,6 +375,68 @@ object Shared {
        |  UNION
        |  SELECT r.node, e.b FROM reach r JOIN edges e ON e.a = r.lbl),
        |comp AS MATERIALIZED (SELECT node, min(lbl) AS cluster_id FROM reach GROUP BY node)""".stripMargin
+
+  // DuckDB builders of the text oracles and of the 6-dp rounding. Like the
+  // vector and near-dup builders they share no Column-API code with
+  // graft.functions or graft.ops.TextIndex; they only read `stopwords`.
+
+  /** `x` rounded half up to 6 dp: the SQL form of
+    * graft.functions.Portable.floor6, for the same reason (round() breaks
+    * exact 6-dp ties differently in Spark and DuckDB). */
+  private[query] def floor6Sql(x: String): String = s"floor(($x) * 1e6 + 0.5) / 1e6"
+
+  /** TextIndex's portable token list of column `text`: lowercased, split
+    * on runs of characters outside [a-z0-9], empty tokens dropped. */
+  private[query] val tokensSql: String =
+    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
+
+  /** TextFunctions.alphaRatio of column `text`, 4 dp. */
+  private[query] val alphaRatioSql: String =
+    "round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4)"
+
+  /** TextFunctions.stopwordRatio with [[stopwords]] over the whitespace
+    * token list `t`, 4 dp. */
+  private[query] val stopwordRatioSql: String = {
+    val isStop = stopwords.map(w => s"x = '$w'").mkString(" OR ")
+    s"round(CAST(len([x for x in t if $isStop]) AS DOUBLE) / len(t), 4)"
+  }
+
+  /** TextFunctions.qualityScore (t63's composite score) of the whitespace
+    * token list `t` and its source column `text`: the mean of the length
+    * score, the alpha ratio and the stopword closeness to 15 %, clamped to
+    * [0, 1], 4 dp. */
+  private[query] val qualitySql: String =
+    s"""round(greatest(0.0, least(1.0,
+       |  (least(len(t) / 50.0, 1.0) + $alphaRatioSql
+       |   + (1.0 - abs($stopwordRatioSql - 0.15))) / 3.0)), 4)""".stripMargin
+
+  /** Quality.orderStats' type-1 rank rule: the 0-based index of the
+    * `p`-quantile among `n` sorted values, max(ceil(p·n) − 1, 0). */
+  private[query] def rankIdxSql(p: Double): String =
+    s"greatest(CAST(ceil(${decimalSql(p)} * n) AS BIGINT) - 1, 0)"
+
+  /** The adjacent-pair list of token list `t`, one struct (w1, w2) per
+    * bigram: TextIndex's bigram stream. */
+  private[query] val bigramsSql: String =
+    "[{'w1': t[i], 'w2': t[i+1]} for i in range(1, len(t))]"
+
+  /** TextIndex's add-0.5 bigram model and per-doc score over the bigram CTE
+    * `p(doc_id, w1, w2, …)`, every CTE name suffixed by `sfx`: pair counts
+    * `c`, left totals `f`, vocabulary `v` (from `p` rows matching `where`,
+    * when given), each bigram's ln P(w2 | w1) rounded through DECIMAL(27,7)
+    * as `lp`, and per doc `g(doc_id, n_bigrams, mean_lp)` with the mean
+    * floor-rounded to 6 dp. */
+  private[query] def lmChainCtes(sfx: String = "", where: String = ""): String = {
+    val filt = if (where.isEmpty) "" else s" WHERE $where"
+    s"""c$sfx AS (SELECT w1, w2, count(*) AS c12 FROM p$filt GROUP BY 1, 2),
+       |f$sfx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c$sfx GROUP BY 1),
+       |v$sfx AS (SELECT count(DISTINCT w2) AS nv FROM c$sfx),
+       |lp$sfx AS (SELECT doc_id,
+       |  CAST(ln((CAST(coalesce(c$sfx.c12, 0) AS DOUBLE) + 0.5) / (CAST(coalesce(f$sfx.c1, 0) AS DOUBLE) + 0.5 * CAST(v$sfx.nv AS DOUBLE))) AS DECIMAL(27,7)) AS l
+       |  FROM p LEFT JOIN c$sfx USING (w1, w2) LEFT JOIN f$sfx USING (w1), v$sfx),
+       |g$sfx AS (SELECT doc_id, count(*) AS n_bigrams,
+       |  ${floor6Sql("CAST(sum(l) AS DOUBLE) / count(*)")} AS mean_lp FROM lp$sfx GROUP BY doc_id)""".stripMargin
+  }
 
   /** Sampling.temperatureBalance over `src` (doc_id, lang, …) as CTE
     * `bal` with src's columns: per non-null lang, f = sqrt(min_n / n),

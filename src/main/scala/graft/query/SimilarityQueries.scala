@@ -142,8 +142,8 @@ object SimilarityQueries {
     // Integer milli-unit weights, DECIMAL-exact dots/norms, IEEE-exact
     // sqrt/divide, floor-rounded output; the d22 df-cap bounds the pair
     // generator
-    // Oracle: s157: trigram-term tf-idf cosine pairs — integer milli-unit weights
-    // (floor form), exact integer dots/norms (DuckDB sums BIGINT into
+    // Oracle: s157: trigram-term tf-idf cosine pairs — integer milli-unit weights,
+    // exact integer dots/norms (DuckDB sums BIGINT into
     // HUGEINT; the engine carries DECIMAL(38,0)), IEEE sqrt/divide in the
     // operator's operand order, floor-rounded
     QuerySpec("s157_sparse_mlt", (s, dir) => {
@@ -151,9 +151,7 @@ object SimilarityQueries {
           "doc_id", "text", threshold = 0.5, maxDf = 500, ngram = 3)
         .orderBy(col("id_a"), col("id_b"))
     }, Sql(
-      s"""WITH toks AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH toks AS (SELECT doc_id, $tokensSql AS t FROM documents),
         |terms AS (SELECT doc_id, unnest(${ngramsSql(3)}) AS w
         |          FROM toks WHERE len(t) >= 3),
         |tf AS (SELECT doc_id, w, count(*) AS tf FROM terms GROUP BY 1, 2),
@@ -169,7 +167,7 @@ object SimilarityQueries {
         |cosv AS (SELECT id_a, id_b,
         |  CAST(dot AS DOUBLE) / (sqrt(CAST(na.norm2 AS DOUBLE)) * sqrt(CAST(nb.norm2 AS DOUBLE))) AS c
         |  FROM dots JOIN norms na ON na.doc_id = id_a JOIN norms nb ON nb.doc_id = id_b)
-        |SELECT id_a, id_b, floor(c * 1e6 + 0.5) / 1e6 AS cosine
+        |SELECT id_a, id_b, ${floor6Sql("c")} AS cosine
         |FROM cosv WHERE c >= 0.5 ORDER BY id_a, id_b""".stripMargin)),
 
     // PERSISTED PQ serving index (round 15): s123's composition with the
@@ -404,19 +402,17 @@ object SimilarityQueries {
       Similarity.covarianceUpper(t(s, dir, "embeddings"), "embedding", dim = 64)
         .orderBy(col("i"), col("j"))
     }, Sql(
-      """WITH u AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS i,
+      s"""WITH u AS (SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS i,
         |  CAST(unnest(embedding) AS DOUBLE) AS x
         |  FROM embeddings WHERE len(embedding) = 64),
-        |mu AS (SELECT i, floor(CAST(sum(CAST(x AS DECIMAL(27,7))) AS DOUBLE)
-        |                      / count(*) * 1e6 + 0.5) / 1e6 AS mu
+        |mu AS (SELECT i, ${floor6Sql("CAST(sum(CAST(x AS DECIMAL(27,7))) AS DOUBLE) / count(*)")} AS mu
         |       FROM u GROUP BY i),
         |m2 AS (SELECT a.i AS i, b.i AS j, count(*) AS n,
         |         sum(CAST(a.x * b.x AS DECIMAL(27,7))) AS s
         |       FROM u a JOIN u b ON a.vec_id = b.vec_id AND a.i <= b.i
         |       GROUP BY a.i, b.i)
         |SELECT m2.i, m2.j,
-        |  floor((floor(CAST(s AS DOUBLE) / n * 1e6 + 0.5) / 1e6 - ma.mu * mb.mu)
-        |        * 1e6 + 0.5) / 1e6 AS cov
+        |  ${floor6Sql(floor6Sql("CAST(s AS DOUBLE) / n") + " - ma.mu * mb.mu")} AS cov
         |FROM m2 JOIN mu ma ON ma.i = m2.i JOIN mu mb ON mb.i = m2.j
         |ORDER BY m2.i, m2.j""".stripMargin)),
 
@@ -636,7 +632,7 @@ object SimilarityQueries {
        |g AS (SELECT bucket, dim_pos, count(*) AS n_vectors, sum(comp) AS s
        |  FROM x GROUP BY bucket, dim_pos)
        |SELECT bucket, dim_pos, n_vectors,
-       |  floor(CAST(s AS DOUBLE) / n_vectors * 1e6 + 0.5) / 1e6 AS centroid
+       |  ${floor6Sql("CAST(s AS DOUBLE) / n_vectors")} AS centroid
        |FROM g ORDER BY bucket, dim_pos""".stripMargin
 
   /** Exact cosine top-k (Similarity.bruteForceTopK) of the vec_id < 8
@@ -760,8 +756,8 @@ object SimilarityQueries {
     * floor rounding. Shared by the s162 and s166 oracles. */
   private def whitenYExprs(mu: Array[Double], w: Array[Array[Double]]): Seq[String] =
     w.toSeq.map { row =>
-      s"floor(list_sum([ ((e[i] - (${listSql(mu, doubleSql)})[i]) * (${listSql(row, doubleSql)})[i]) " +
-        s"for i in range(1, ${mu.length + 1}) ]) * 1e6 + 0.5) / 1e6"
+      floor6Sql(s"list_sum([ ((e[i] - (${listSql(mu, doubleSql)})[i]) * (${listSql(row, doubleSql)})[i]) " +
+        s"for i in range(1, ${mu.length + 1}) ])")
     }
 
   /** Whitening oracle (s162): replays the k-component projection from the

@@ -109,6 +109,7 @@ object StatsQueries {
 
     // stateful sessionization (batch run of the streaming operator —
     // flatMapGroupsWithState; gap = 2h)
+    // Oracle: gaps-and-islands in SQL (2h gap, ms epochs)
     QuerySpec("e32_sessionize", (s, dir) => {
       import s.implicits._
       val ev = t(s, dir, "events")
@@ -251,17 +252,17 @@ object StatsQueries {
     QuerySpec("q101_skew_profile", (s, dir) => {
       graft.ops.Diagnostics.keyProfile(t(s, dir, "events"), "user_id", topN = 20)
     }, Sql(
-      """WITH c AS (SELECT user_id AS key, count(*) AS cnt FROM events GROUP BY 1),
+      s"""WITH c AS (SELECT user_id AS key, count(*) AS cnt FROM events GROUP BY 1),
         |st AS (SELECT count(*) AS n_keys, CAST(sum(cnt) AS BIGINT) AS total_rows, max(cnt) AS max_cnt FROM c),
         |top AS (SELECT key, cnt,
         |  row_number() OVER (ORDER BY cnt DESC, key NULLS LAST) AS rank,
         |  sum(cnt) OVER (ORDER BY cnt DESC, key NULLS LAST ROWS UNBOUNDED PRECEDING) AS cum_cnt
         |  FROM c QUALIFY rank <= 20)
         |SELECT CAST(rank AS BIGINT) AS rank, CAST(key AS VARCHAR) AS key, cnt,
-        |  floor(CAST(cnt AS DOUBLE) / total_rows * 1e6 + 0.5) / 1e6 AS share,
-        |  floor(CAST(cum_cnt AS DOUBLE) / total_rows * 1e6 + 0.5) / 1e6 AS cum_share,
+        |  ${floor6Sql("CAST(cnt AS DOUBLE) / total_rows")} AS share,
+        |  ${floor6Sql("CAST(cum_cnt AS DOUBLE) / total_rows")} AS cum_share,
         |  n_keys, total_rows,
-        |  floor(CAST(max_cnt AS DOUBLE) * n_keys / total_rows * 1e6 + 0.5) / 1e6 AS skew_ratio
+        |  ${floor6Sql("CAST(max_cnt AS DOUBLE) * n_keys / total_rows")} AS skew_ratio
         |FROM top, st ORDER BY rank""".stripMargin)),
 
     // ordered funnel over the event stream: step k+1 counts only strictly
@@ -275,7 +276,7 @@ object StatsQueries {
       graft.ops.Events.funnel(t(s, dir, "events"), "user_id", "event_type", "ts_ns",
         Seq("signup", "view", "click", "purchase"))
     }, Sql(
-      """WITH e AS (SELECT user_id AS u, event_type AS t, epoch_ns(ts) AS ts FROM events),
+      s"""WITH e AS (SELECT user_id AS u, event_type AS t, epoch_ns(ts) AS ts FROM events),
         |s1 AS (SELECT u, min(ts) AS ts FROM e WHERE t = 'signup' GROUP BY u),
         |s2 AS (SELECT e.u, min(e.ts) AS ts FROM e JOIN s1 ON e.u = s1.u AND e.ts > s1.ts WHERE e.t = 'view' GROUP BY e.u),
         |s3 AS (SELECT e.u, min(e.ts) AS ts FROM e JOIN s2 ON e.u = s2.u AND e.ts > s2.ts WHERE e.t = 'click' GROUP BY e.u),
@@ -287,9 +288,9 @@ object StatsQueries {
         |f AS (SELECT users AS first_users FROM c WHERE step = 1)
         |SELECT CAST(step AS BIGINT) AS step, event_type, users,
         |  CASE WHEN coalesce(lag(users) OVER (ORDER BY step), users) = 0 THEN 0.0
-        |       ELSE floor(CAST(users AS DOUBLE) / coalesce(lag(users) OVER (ORDER BY step), users) * 1e6 + 0.5) / 1e6 END AS conv_from_prev,
+        |       ELSE ${floor6Sql("CAST(users AS DOUBLE) / coalesce(lag(users) OVER (ORDER BY step), users)")} END AS conv_from_prev,
         |  CASE WHEN first_users = 0 THEN 0.0
-        |       ELSE floor(CAST(users AS DOUBLE) / first_users * 1e6 + 0.5) / 1e6 END AS conv_from_first
+        |       ELSE ${floor6Sql("CAST(users AS DOUBLE) / first_users")} END AS conv_from_first
         |FROM c, f ORDER BY step""".stripMargin)),
 
     // cohort retention triangle: users cohorted by first-event day, one
@@ -302,13 +303,13 @@ object StatsQueries {
       graft.ops.Events.retention(ev, "user_id", "day")
         .orderBy(col("cohort_day"), col("day_offset"))
     }, Sql(
-      """WITH ev AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d FROM events),
+      s"""WITH ev AS (SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS d FROM events),
         |c AS (SELECT u, min(d) AS cohort_day FROM ev GROUP BY u),
         |s AS (SELECT cohort_day, count(*) AS cohort_users FROM c GROUP BY 1),
         |a AS (SELECT c.cohort_day, CAST(ev.d - c.cohort_day AS BIGINT) AS day_offset, count(*) AS active_users
         |  FROM ev JOIN c USING (u) GROUP BY 1, 2)
         |SELECT a.cohort_day, day_offset, active_users, cohort_users,
-        |  floor(CAST(active_users AS DOUBLE) / cohort_users * 1e6 + 0.5) / 1e6 AS retention
+        |  ${floor6Sql("CAST(active_users AS DOUBLE) / cohort_users")} AS retention
         |FROM a JOIN s USING (cohort_day) ORDER BY cohort_day, day_offset""".stripMargin)),
 
     // quality-weighted corpus downsampling to an expected 200-doc budget:
@@ -323,14 +324,8 @@ object StatsQueries {
           targetRows = 200L)
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |q AS (SELECT doc_id, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS weight FROM parts),
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
+        |q AS (SELECT doc_id, $qualitySql AS weight FROM toks),
         |tw AS (SELECT sum(CAST(weight AS DECIMAL(27,7))) AS tw FROM q),
         |k AS (SELECT doc_id, weight,
         |  CAST(floor(weight * (200.0 / CAST(tw AS DOUBLE)) * 1048576.0 + 0.5) AS BIGINT) AS qq
@@ -439,14 +434,8 @@ object StatsQueries {
       graft.ops.Sampling.topKByScore(scored, "source", "doc_id", "quality", k = 10)
         .orderBy(col("source"), col("quality").desc, col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |q AS (SELECT doc_id, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality FROM parts),
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
+        |q AS (SELECT doc_id, $qualitySql AS quality FROM toks),
         |d AS (SELECT q.doc_id, doc.source, q.quality FROM q JOIN documents doc USING (doc_id)),
         |r AS (SELECT doc_id, source, quality, row_number() OVER (
         |  PARTITION BY source ORDER BY quality DESC, md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk FROM d)

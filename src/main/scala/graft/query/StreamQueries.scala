@@ -82,19 +82,13 @@ object StreamQueries {
       sq.awaitTermination()
       s.read.parquet(s"$tmp/out").orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id, lang, text,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |q AS (SELECT doc_id, lang, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality,
+      raw"""WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
+        |q AS (SELECT doc_id, lang, $qualitySql AS quality,
         |  md5(regexp_replace(regexp_replace(regexp_replace(text,
         |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
         |    'https?://[^\s]+', '<URL>', 'g'),
         |    '[0-9]{7,}', '<NUM>', 'g')) AS scrub_md5
-        |  FROM parts)
+        |  FROM toks)
         |SELECT doc_id, lang, quality, scrub_md5 FROM q
         |WHERE quality >= 0.3 ORDER BY doc_id""".stripMargin), streaming = true),
 

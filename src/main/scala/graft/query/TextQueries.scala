@@ -2,6 +2,7 @@ package graft.query
 
 import graft.ops.{Dedup, Similarity}
 import graft.functions.TextFunctions
+import graft.functions.Portable.floor6
 import org.apache.spark.sql.functions._
 
 import Shared._
@@ -21,11 +22,11 @@ object TextQueries {
           TextFunctions.alphaRatio(col("text")).as("alpha_ratio"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents)
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents)
         |SELECT doc_id, len(t) AS n_tokens,
         |  round(CAST(list_sum([len(x) for x in t]) AS DOUBLE) / len(t), 4) AS avg_token_len,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stopword_ratio,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha_ratio
+        |  $stopwordRatioSql AS stopword_ratio,
+        |  $alphaRatioSql AS alpha_ratio
         |FROM toks ORDER BY doc_id""".stripMargin)),
 
     // regex (BPE-ish) token counting
@@ -102,15 +103,9 @@ object TextQueries {
           TextFunctions.qualityScore(col("text"), stopwords).as("quality"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks)
-        |SELECT doc_id, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality
-        |FROM parts ORDER BY doc_id""".stripMargin)),
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents)
+        |SELECT doc_id, $qualitySql AS quality
+        |FROM toks ORDER BY doc_id""".stripMargin)),
 
     // winsorized quality normalization (round 17): t63's composite score
     // clamped to its exact [p05, p95] band — rank-selected (type-1)
@@ -132,20 +127,12 @@ object TextQueries {
       graft.ops.Quality.winsorize(scored, "doc_id", "quality", pLo = 0.05, pHi = 0.95)
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |s AS (SELECT doc_id, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality FROM parts),
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
+        |s AS (SELECT doc_id, $qualitySql AS quality FROM toks),
         |cnt AS (SELECT count(*) AS n FROM s),
         |srt AS (SELECT quality, row_number() OVER (ORDER BY quality) - 1 AS idx FROM s),
-        |lo AS (SELECT quality AS lo FROM srt, cnt
-        |       WHERE idx = greatest(CAST(ceil(0.05 * n) AS BIGINT) - 1, 0)),
-        |hi AS (SELECT quality AS hi FROM srt, cnt
-        |       WHERE idx = greatest(CAST(ceil(0.95 * n) AS BIGINT) - 1, 0))
+        |lo AS (SELECT quality AS lo FROM srt, cnt WHERE idx = ${rankIdxSql(0.05)}),
+        |hi AS (SELECT quality AS hi FROM srt, cnt WHERE idx = ${rankIdxSql(0.95)})
         |SELECT doc_id, quality, least(greatest(quality, lo), hi) AS clamped
         |FROM s, lo, hi ORDER BY doc_id""".stripMargin)),
 
@@ -161,25 +148,17 @@ object TextQueries {
       graft.ops.Quality.robustZ(scored, "doc_id", "quality")
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |s AS (SELECT doc_id, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality FROM parts),
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
+        |s AS (SELECT doc_id, $qualitySql AS quality FROM toks),
         |cnt AS (SELECT count(*) AS n FROM s),
         |r1 AS (SELECT quality, row_number() OVER (ORDER BY quality) - 1 AS idx FROM s),
-        |med AS (SELECT quality AS med FROM r1, cnt
-        |        WHERE idx = greatest(CAST(ceil(n / 2.0) AS BIGINT) - 1, 0)),
+        |med AS (SELECT quality AS med FROM r1, cnt WHERE idx = ${rankIdxSql(0.5)}),
         |r2 AS (SELECT abs(quality - med) AS d,
         |       row_number() OVER (ORDER BY abs(quality - med)) - 1 AS idx FROM s, med),
-        |mad AS (SELECT d AS mad FROM r2, cnt
-        |        WHERE idx = greatest(CAST(ceil(n / 2.0) AS BIGINT) - 1, 0))
+        |mad AS (SELECT d AS mad FROM r2, cnt WHERE idx = ${rankIdxSql(0.5)})
         |SELECT doc_id, quality,
         |  CASE WHEN mad = 0 THEN 0.0
-        |       ELSE floor((quality - med) / mad * 1e6 + 0.5) / 1e6 END AS z
+        |       ELSE ${floor6Sql("(quality - med) / mad")} END AS z
         |FROM s, med, mad ORDER BY doc_id""".stripMargin)),
 
     // GROUP-WISE winsorize (round 17): t167's clamp applied WITHIN each
@@ -199,23 +178,16 @@ object TextQueries {
           pLo = 0.05, pHi = 0.95)
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id, lang,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |s AS (SELECT doc_id, lang, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality FROM parts),
+      s"""WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
+        |s AS (SELECT doc_id, lang, $qualitySql AS quality FROM toks),
         |r AS (SELECT lang, quality,
         |  row_number() OVER (PARTITION BY lang ORDER BY quality) - 1 AS idx,
         |  count(*) OVER (PARTITION BY lang) AS n FROM s),
         |th AS (SELECT lang,
-        |  min(CASE WHEN idx = greatest(CAST(ceil(0.05 * n) AS BIGINT) - 1, 0) THEN quality END) AS lo,
-        |  min(CASE WHEN idx = greatest(CAST(ceil(0.95 * n) AS BIGINT) - 1, 0) THEN quality END) AS hi
+        |  min(CASE WHEN idx = ${rankIdxSql(0.05)} THEN quality END) AS lo,
+        |  min(CASE WHEN idx = ${rankIdxSql(0.95)} THEN quality END) AS hi
         |  FROM r
-        |  WHERE idx = greatest(CAST(ceil(0.05 * n) AS BIGINT) - 1, 0)
-        |     OR idx = greatest(CAST(ceil(0.95 * n) AS BIGINT) - 1, 0)
+        |  WHERE idx = ${rankIdxSql(0.05)} OR idx = ${rankIdxSql(0.95)}
         |  GROUP BY lang)
         |SELECT s.doc_id, s.lang, s.quality, least(greatest(s.quality, th.lo), th.hi) AS clamped
         |FROM s JOIN th USING (lang) ORDER BY doc_id""".stripMargin)),
@@ -233,15 +205,8 @@ object TextQueries {
           frac = 0.25)
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id, lang,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |q AS (SELECT doc_id, lang, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality
-        |  FROM parts),
+      s"""WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
+        |q AS (SELECT doc_id, lang, $qualitySql AS quality FROM toks),
         |r AS (SELECT doc_id, lang, quality,
         |  row_number() OVER (PARTITION BY lang
         |    ORDER BY quality DESC, md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk,
@@ -389,9 +354,7 @@ object TextQueries {
           minDf = 50L, capPostings = 20)
         .orderBy(col("token"))
     }, Sql(
-      """WITH tok0 AS (SELECT doc_id,
-        |  unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS token
-        |  FROM documents),
+      s"""WITH tok0 AS (SELECT doc_id, unnest($tokensSql) AS token FROM documents),
         |tok AS (SELECT DISTINCT doc_id, token FROM tok0),
         |r AS (SELECT doc_id, token,
         |  row_number() OVER (PARTITION BY token ORDER BY doc_id) AS rn FROM tok),
@@ -410,13 +373,13 @@ object TextQueries {
       graft.ops.TextIndex.bigramConditional(t(s, dir, "documents"), "text",
         topN = 100)
     }, Sql(
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t FROM documents),
+      s"""WITH tk AS (SELECT $tokensSql AS t FROM documents),
         |tk2 AS (SELECT t FROM tk WHERE len(t) >= 2),
-        |bg AS (SELECT unnest([{'w1': t[i], 'w2': t[i+1]} for i in range(1, len(t))]) AS s FROM tk2),
+        |bg AS (SELECT unnest($bigramsSql) AS s FROM tk2),
         |c AS (SELECT s.w1 AS w1, s.w2 AS w2, count(*) AS c12 FROM bg GROUP BY 1, 2),
         |v AS (SELECT count(DISTINCT w2) AS nv FROM c),
         |f AS (SELECT w1, w2, c12, sum(c12) OVER (PARTITION BY w1) AS c1 FROM c)
-        |SELECT w1, w2, c12, floor((c12 + 0.5) / (c1 + 0.5 * nv) * 1e6 + 0.5) / 1e6 AS p_cond
+        |SELECT w1, w2, c12, ${floor6Sql("(c12 + 0.5) / (c1 + 0.5 * nv)")} AS p_cond
         |FROM f, v ORDER BY c12 DESC, w1, w2 LIMIT 100""".stripMargin)),
 
     // apply the FROZEN tokenizer (t97 trains, this encodes): per-distinct-
@@ -433,27 +396,19 @@ object TextQueries {
     // CCNet-style LM quality score: per-doc mean bigram log-prob under the
     // corpus's own add-0.5 model; each ln rounds through DECIMAL before the
     // per-doc sum so the distributed mean is order-independent
-    // Oracle: sessionization oracle: gaps-and-islands in SQL (2h gap, ms epochs)
-    // the t89 model chain + a per-doc scoring join; ln() of identical
+    // Oracle: the t89 model chain + a per-doc scoring join; ln() of identical
     // doubles in both engines, each term decimal-rounded pre-sum
     QuerySpec("t110_doc_logprob", (s, dir) => {
       graft.ops.TextIndex.bigramLogProbScore(t(s, dir, "documents"),
           "doc_id", "text")
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t FROM documents),
+      s"""WITH tk AS (SELECT doc_id, $tokensSql AS t FROM documents),
         |tk2 AS (SELECT doc_id, t FROM tk WHERE len(t) >= 2),
-        |bg AS (SELECT doc_id, unnest([{'w1': t[i], 'w2': t[i+1]} for i in range(1, len(t))]) AS s FROM tk2),
+        |bg AS (SELECT doc_id, unnest($bigramsSql) AS s FROM tk2),
         |p AS (SELECT doc_id, s.w1 AS w1, s.w2 AS w2 FROM bg),
-        |c AS (SELECT w1, w2, count(*) AS c12 FROM p GROUP BY 1, 2),
-        |f AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM c GROUP BY 1),
-        |v AS (SELECT count(DISTINCT w2) AS nv FROM c),
-        |lp AS (SELECT doc_id,
-        |  CAST(ln((CAST(coalesce(c.c12, 0) AS DOUBLE) + 0.5) / (CAST(coalesce(f.c1, 0) AS DOUBLE) + 0.5 * CAST(nv AS DOUBLE))) AS DECIMAL(27,7)) AS l
-        |  FROM p LEFT JOIN c USING (w1, w2) LEFT JOIN f USING (w1), v),
-        |g AS (SELECT doc_id, count(*) AS n_bigrams, sum(l) AS s FROM lp GROUP BY doc_id)
-        |SELECT doc_id, n_bigrams,
-        |  floor(CAST(s AS DOUBLE) / n_bigrams * 1e6 + 0.5) / 1e6 AS avg_logprob
+        |${lmChainCtes()}
+        |SELECT doc_id, n_bigrams, mean_lp AS avg_logprob
         |FROM g ORDER BY doc_id""".stripMargin)),
 
     // DSIR-style importance resampling (Xie et al. 2023, arXiv:2302.03169):
@@ -472,26 +427,14 @@ object TextQueries {
           "doc_id", "text", fraction = 0.25)
         .orderBy(col("importance").desc, col("doc_id"))
     }, Sql(
-      """WITH tk AS (SELECT doc_id, lang, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t FROM documents),
+      s"""WITH tk AS (SELECT doc_id, lang, $tokensSql AS t FROM documents),
         |tk2 AS (SELECT doc_id, lang, t FROM tk WHERE len(t) >= 2),
-        |bg AS (SELECT doc_id, lang, unnest([{'w1': t[i], 'w2': t[i+1]} for i in range(1, len(t))]) AS s FROM tk2),
+        |bg AS (SELECT doc_id, lang, unnest($bigramsSql) AS s FROM tk2),
         |p AS (SELECT doc_id, lang, s.w1 AS w1, s.w2 AS w2 FROM bg),
-        |ct AS (SELECT w1, w2, count(*) AS c12 FROM p WHERE lang = 'en' GROUP BY 1, 2),
-        |ft AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM ct GROUP BY 1),
-        |vt AS (SELECT count(DISTINCT w2) AS nv FROM ct),
-        |lpt AS (SELECT doc_id,
-        |  CAST(ln((CAST(coalesce(ct.c12, 0) AS DOUBLE) + 0.5) / (CAST(coalesce(ft.c1, 0) AS DOUBLE) + 0.5 * CAST(vt.nv AS DOUBLE))) AS DECIMAL(27,7)) AS l
-        |  FROM p LEFT JOIN ct USING (w1, w2) LEFT JOIN ft USING (w1), vt),
-        |gt AS (SELECT doc_id, floor(CAST(sum(l) AS DOUBLE) / count(*) * 1e6 + 0.5) / 1e6 AS lp_target FROM lpt GROUP BY doc_id),
-        |cc AS (SELECT w1, w2, count(*) AS c12 FROM p GROUP BY 1, 2),
-        |fc AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM cc GROUP BY 1),
-        |vc AS (SELECT count(DISTINCT w2) AS nv FROM cc),
-        |lpc AS (SELECT doc_id,
-        |  CAST(ln((CAST(coalesce(cc.c12, 0) AS DOUBLE) + 0.5) / (CAST(coalesce(fc.c1, 0) AS DOUBLE) + 0.5 * CAST(vc.nv AS DOUBLE))) AS DECIMAL(27,7)) AS l
-        |  FROM p LEFT JOIN cc USING (w1, w2) LEFT JOIN fc USING (w1), vc),
-        |gc AS (SELECT doc_id, floor(CAST(sum(l) AS DOUBLE) / count(*) * 1e6 + 0.5) / 1e6 AS lp_corpus FROM lpc GROUP BY doc_id),
-        |sc AS (SELECT gt.doc_id AS doc_id, lp_target, lp_corpus,
-        |  floor((lp_target - lp_corpus) * 1e6 + 0.5) / 1e6 AS importance
+        |${lmChainCtes("t", where = "lang = 'en'")},
+        |${lmChainCtes("c")},
+        |sc AS (SELECT gt.doc_id AS doc_id, gt.mean_lp AS lp_target, gc.mean_lp AS lp_corpus,
+        |  ${floor6Sql("gt.mean_lp - gc.mean_lp")} AS importance
         |  FROM gt JOIN gc ON gc.doc_id = gt.doc_id),
         |n AS (SELECT CAST(floor(count(*) * 0.25) AS BIGINT) AS keep FROM sc),
         |r AS (SELECT sc.*, row_number() OVER (ORDER BY importance DESC, doc_id) AS rn FROM sc)
@@ -510,16 +453,16 @@ object TextQueries {
     QuerySpec("t145_char_entropy", (s, dir) => {
       t(s, dir, "documents").select(col("doc_id"),
           coalesce(length(col("text")), lit(0)).cast("long").as("n_chars"),
-          (floor(graft.functions.EntropyExpressions.charEntropy(s, col("text"))
-            * lit(1e6) + lit(0.5)) / lit(1e6)).as("entropy"))
+          floor6(graft.functions.EntropyExpressions.charEntropy(s, col("text")))
+            .as("entropy"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH cps AS (SELECT doc_id, unnest(regexp_extract_all(text, '(?s).')) AS ch FROM documents),
+      s"""WITH cps AS (SELECT doc_id, unnest(regexp_extract_all(text, '(?s).')) AS ch FROM documents),
         |cnt AS (SELECT doc_id, ch, CAST(count(*) AS DOUBLE) AS c FROM cps GROUP BY doc_id, ch),
         |agg AS (SELECT doc_id, sum(c) AS n, list_sum(list(c * ln(c) ORDER BY ch)) AS s
         |        FROM cnt GROUP BY doc_id)
         |SELECT d.doc_id, CAST(coalesce(length(d.text), 0) AS BIGINT) AS n_chars,
-        |  floor((ln(a.n) - a.s / a.n) / ln(2) * 1e6 + 0.5) / 1e6 AS entropy
+        |  ${floor6Sql("(ln(a.n) - a.s / a.n) / ln(2)")} AS entropy
         |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin)),
 
@@ -534,16 +477,15 @@ object TextQueries {
       val toks = graft.functions.TextFunctions.tokens(col("text"))
       t(s, dir, "documents").select(col("doc_id"),
           coalesce(size(toks), lit(0)).cast("long").as("n_tokens"),
-          (floor(graft.functions.EntropyExpressions.tokenEntropy(s, toks)
-            * lit(1e6) + lit(0.5)) / lit(1e6)).as("entropy"))
+          floor6(graft.functions.EntropyExpressions.tokenEntropy(s, toks)).as("entropy"))
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
+      s"""WITH tk AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
         |cnt AS (SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS c FROM tk GROUP BY doc_id, tok),
         |agg AS (SELECT doc_id, sum(c) AS n, list_sum(list(c * ln(c) ORDER BY tok)) AS s
         |        FROM cnt GROUP BY doc_id)
         |SELECT d.doc_id, CAST(coalesce(len(string_split(d.text, ' ')), 0) AS BIGINT) AS n_tokens,
-        |  floor((ln(a.n) - a.s / a.n) / ln(2) * 1e6 + 0.5) / 1e6 AS entropy
+        |  ${floor6Sql("(ln(a.n) - a.s / a.n) / ln(2)")} AS entropy
         |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
         |ORDER BY d.doc_id""".stripMargin)),
 
@@ -600,12 +542,10 @@ object TextQueries {
           topK = 50, minCount = 5)
         .orderBy(col("pmi_ratio").desc, col("a"), col("b"))
     }, Sql(
-      """WITH toks AS (
-        |  SELECT list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t
-        |  FROM documents),
+      s"""WITH toks AS (SELECT $tokensSql AS t FROM documents),
         |uni2 AS (SELECT w, count(*) AS n FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w),
-        |bi0 AS (SELECT p.a AS wa, p.b AS wb, count(*) AS n_ab FROM (
-        |         SELECT unnest([{'a': t[i], 'b': t[i+1]} for i in range(1, len(t))]) AS p
+        |bi0 AS (SELECT p.w1 AS wa, p.w2 AS wb, count(*) AS n_ab FROM (
+        |         SELECT unnest($bigramsSql) AS p
         |         FROM toks WHERE len(t) >= 2) GROUP BY 1, 2),
         |bi AS (SELECT * FROM bi0 WHERE n_ab >= 5),
         |tot AS (SELECT (SELECT sum(n) FROM uni2) AS tt, (SELECT sum(n_ab) FROM bi0) AS tb),
@@ -615,7 +555,7 @@ object TextQueries {
         |  JOIN uni2 ua ON ua.w = bi.wa
         |  JOIN uni2 ub ON ub.w = bi.wb),
         |top AS (SELECT * FROM sc ORDER BY r DESC, wa, wb LIMIT 50)
-        |SELECT wa AS a, wb AS b, n_ab, floor(r * 1e6 + 0.5) / 1e6 AS pmi_ratio
+        |SELECT wa AS a, wb AS b, n_ab, ${floor6Sql("r")} AS pmi_ratio
         |FROM top ORDER BY pmi_ratio DESC, a, b""".stripMargin)),
 
     // unigram-LM tokenizer, stage 2 (round 16): hard-EM training over the
@@ -688,14 +628,8 @@ object TextQueries {
           "n_tokens", budgetTokens = 10000L)
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id, len(t) AS nt,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |q AS (SELECT doc_id, CAST(nt AS BIGINT) AS n_tokens, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS score FROM parts),
+      s"""WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS t FROM documents),
+        |q AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS n_tokens, $qualitySql AS score FROM toks),
         |c AS (SELECT doc_id, score, n_tokens,
         |  CAST(sum(n_tokens) OVER (ORDER BY score DESC, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
         |  FROM q)
@@ -721,10 +655,8 @@ object TextQueries {
           sum(col("n_chars")).as("n_chars"))
         .select(col("lang"), col("n_docs"), col("n_tokens"), col("n_words"),
           col("n_chars"),
-          (floor(col("n_chars").cast("double") / col("n_tokens") * lit(1e6)
-            + lit(0.5)) / lit(1e6)).as("bytes_per_token"),
-          (floor(col("n_tokens").cast("double") / col("n_words") * lit(1e6)
-            + lit(0.5)) / lit(1e6)).as("tokens_per_word"))
+          floor6(col("n_chars").cast("double") / col("n_tokens")).as("bytes_per_token"),
+          floor6(col("n_tokens").cast("double") / col("n_words")).as("tokens_per_word"))
         .orderBy(col("lang"))
     }, Sql(bpeCoverageOracle(frozenBpeMerges, cap = 12))),
 
@@ -765,7 +697,7 @@ object TextQueries {
         |dfc AS (SELECT doc_id, count(*) OVER (PARTITION BY s) AS df FROM sh)
         |SELECT doc_id, count(*) AS n_shingles,
         |  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
-        |  floor(CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*) * 1e6 + 0.5) / 1e6 AS novelty
+        |  ${floor6Sql("CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS DOUBLE) / count(*)")} AS novelty
         |FROM dfc GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // ZIPF FIT (round 17): least-squares slope of ln(tf) on ln(rank) over
@@ -776,8 +708,9 @@ object TextQueries {
     // Oracle: the same (c desc, w) top-N cut, ranks by row_number, decimal term
     // sums, and the rounded slope feeding the intercept
     QuerySpec("t174_zipf_fit", (s, dir) =>
-      graft.ops.TextIndex.zipfFit(t(s, dir, "documents"), "text", topN = 1000), Sql(
-      """WITH tok AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS w FROM documents),
+      graft.ops.TextIndex.zipfFit(t(s, dir, "documents"), "text", topN = 1000), Sql {
+      val slope = floor6Sql("(n * sxy - sx * sy) / (n * sxx - sx * sx)")
+      s"""WITH tok AS (SELECT unnest($tokensSql) AS w FROM documents),
         |c AS (SELECT w, count(*) AS c FROM tok GROUP BY w),
         |top AS (SELECT w, c FROM c ORDER BY c DESC, w LIMIT 1000),
         |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, w) AS rank FROM top),
@@ -788,9 +721,10 @@ object TextQueries {
         |s AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
         |  CAST(sum(xy) AS DOUBLE) AS sxy, CAST(sum(xx) AS DOUBLE) AS sxx FROM t)
         |SELECT n AS n_tokens,
-        |  floor((n * sxy - sx * sy) / (n * sxx - sx * sx) * 1e6 + 0.5) / 1e6 AS slope,
-        |  floor((sy - (floor((n * sxy - sx * sy) / (n * sxx - sx * sx) * 1e6 + 0.5) / 1e6) * sx) / n * 1e6 + 0.5) / 1e6 AS intercept
-        |FROM s""".stripMargin)),
+        |  $slope AS slope,
+        |  ${floor6Sql(s"(sy - ($slope) * sx) / n")} AS intercept
+        |FROM s""".stripMargin
+    }),
 
     // GROUP-WISE robust z (round 17): t169's median/MAD standardization
     // WITHIN each language — |z| > k flags compare a doc against its own
@@ -807,28 +741,20 @@ object TextQueries {
       graft.ops.Quality.robustZBy(scored, "lang", "doc_id", "quality")
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
-        |parts AS (SELECT doc_id, lang,
-        |  least(len(t) / 50.0, 1.0) AS len_score,
-        |  round(CAST(length(regexp_replace(text, '[^A-Za-z ]', '', 'g')) AS DOUBLE) / length(text), 4) AS alpha,
-        |  round(CAST(len([x for x in t if x = 'the' OR x = 'a']) AS DOUBLE) / len(t), 4) AS stop
-        |  FROM toks),
-        |s AS (SELECT doc_id, lang, round(greatest(0.0, least(1.0,
-        |  (len_score + alpha + (1.0 - abs(stop - 0.15))) / 3.0)), 4) AS quality FROM parts),
+      s"""WITH toks AS (SELECT doc_id, lang, text, string_split(text, ' ') AS t FROM documents),
+        |s AS (SELECT doc_id, lang, $qualitySql AS quality FROM toks),
         |r1 AS (SELECT lang, quality,
         |  row_number() OVER (PARTITION BY lang ORDER BY quality) - 1 AS idx,
         |  count(*) OVER (PARTITION BY lang) AS n FROM s),
-        |med AS (SELECT lang, quality AS med FROM r1
-        |        WHERE idx = greatest(CAST(ceil(0.5 * n) AS BIGINT) - 1, 0)),
+        |med AS (SELECT lang, quality AS med FROM r1 WHERE idx = ${rankIdxSql(0.5)}),
         |d AS (SELECT s.lang, abs(s.quality - med.med) AS dd FROM s JOIN med USING (lang)),
         |r2 AS (SELECT lang, dd,
         |  row_number() OVER (PARTITION BY lang ORDER BY dd) - 1 AS idx,
         |  count(*) OVER (PARTITION BY lang) AS n FROM d),
-        |mad AS (SELECT lang, dd AS mad FROM r2
-        |        WHERE idx = greatest(CAST(ceil(0.5 * n) AS BIGINT) - 1, 0))
+        |mad AS (SELECT lang, dd AS mad FROM r2 WHERE idx = ${rankIdxSql(0.5)})
         |SELECT s.doc_id, s.lang, s.quality,
         |  CASE WHEN mad.mad = 0 THEN 0.0
-        |       ELSE floor((s.quality - med.med) / mad.mad * 1e6 + 0.5) / 1e6 END AS z
+        |       ELSE ${floor6Sql("(s.quality - med.med) / mad.mad")} END AS z
         |FROM s JOIN med USING (lang) JOIN mad USING (lang) ORDER BY doc_id""".stripMargin)),
 
     // Naive-Bayes LABEL-NOISE AUDIT (round 17): add-0.5 token models
@@ -846,8 +772,7 @@ object TextQueries {
           "doc_id", "text", "lang")
         .orderBy(col("doc_id"))
     }, Sql(
-      """WITH d AS (SELECT doc_id, lang AS label,
-        |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t FROM documents),
+      s"""WITH d AS (SELECT doc_id, lang AS label, $tokensSql AS t FROM documents),
         |tok AS (SELECT doc_id, label, unnest(t) AS token FROM d),
         |c AS (SELECT label, token, count(*) AS c_lt FROM tok GROUP BY 1, 2),
         |tot AS (SELECT label, CAST(sum(c_lt) AS BIGINT) AS c_l FROM c GROUP BY 1),
@@ -870,7 +795,7 @@ object TextQueries {
         |  FROM pd CROSS JOIN ls LEFT JOIN m ON m.doc_id = pd.doc_id AND m.cand = ls.cand),
         |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand) AS rn FROM sc)
         |SELECT doc_id, label, cand AS pred_label,
-        |  floor(CAST(score AS DOUBLE) * 1e6 + 0.5) / 1e6 AS score,
+        |  ${floor6Sql("CAST(score AS DOUBLE)")} AS score,
         |  (label = cand) AS agree
         |FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin))
   )
@@ -911,7 +836,7 @@ object TextQueries {
        |SELECT doc_id, n_tokens, tokens_head FROM g ORDER BY doc_id""".stripMargin
 
   /** t117 oracle: the same encode chain aggregated per language with the
-    * portable floor-rounded efficiency ratios. */
+    * 6-dp efficiency ratios. */
   private def bpeCoverageOracle(merges: Seq[(String, String)], cap: Int): String =
     s"""WITH ${bpeEncodeCte(merges, cap)},
        |d AS (SELECT doc_id, lang, CAST(length(text) AS BIGINT) AS n_chars,
@@ -921,8 +846,8 @@ object TextQueries {
        |  CAST(sum(n_words) AS BIGINT) AS n_words, CAST(sum(n_chars) AS BIGINT) AS n_chars
        |  FROM jj GROUP BY lang)
        |SELECT lang, n_docs, n_tokens, n_words, n_chars,
-       |  floor(CAST(n_chars AS DOUBLE) / n_tokens * 1e6 + 0.5) / 1e6 AS bytes_per_token,
-       |  floor(CAST(n_tokens AS DOUBLE) / n_words * 1e6 + 0.5) / 1e6 AS tokens_per_word
+       |  ${floor6Sql("CAST(n_chars AS DOUBLE) / n_tokens")} AS bytes_per_token,
+       |  ${floor6Sql("CAST(n_tokens AS DOUBLE) / n_words")} AS tokens_per_word
        |FROM a ORDER BY lang""".stripMargin
 
   /** t150 oracle: BM25 replayed term by term in the query's fixed order,
@@ -949,12 +874,12 @@ object TextQueries {
     // every level: in DuckDB an ORDER BY on the rounded output alias would
     // bind to the alias, silently diverging from the operator's
     // unrounded-score ordering whenever two scores differ by < 1e-6
-    s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS t FROM documents),
+    s"""WITH tk AS (SELECT doc_id, $tokensSql AS t FROM documents),
        |d AS (SELECT doc_id, CAST(len(t) AS DOUBLE) AS dl, $tfCols FROM tk),
        |st AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(dl) AS sumdl, $dfCols FROM d),
        |sc AS (SELECT doc_id, $scoreExpr AS s0 FROM d, st),
        |top AS (SELECT doc_id, s0 FROM sc WHERE s0 > 0 ORDER BY s0 DESC, doc_id LIMIT $topN)
-       |SELECT doc_id, floor(s0 * 1e6 + 0.5) / 1e6 AS score FROM top
+       |SELECT doc_id, ${floor6Sql("s0")} AS score FROM top
        |ORDER BY s0 DESC, doc_id""".stripMargin
   }
 }

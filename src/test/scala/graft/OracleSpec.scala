@@ -37,21 +37,39 @@ class OracleSpec extends SparkSpec {
         assert(sql(q).contains(literal(mu(0))), q))
     }
 
-  test("near-dup oracle steps are written once, in Shared") {
-    // the word n-gram list, the recursive component closure and the
-    // temperature threshold each have one DuckDB builder in Shared
-    // (ngramsSql, closureCtes, temperatureCtes); a family file that types
-    // one of them again is a second definition to keep in step
-    val root = new java.io.File("src/main/scala/graft/query")
-    val sources = root.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
-    assert(sources.exists(_.getName == "DedupQueries.scala"), root.getAbsolutePath)
-    val steps = Seq("t[i] || ' ' || t[i+1]", "reach(node, lbl)", "sqrt(CAST(minn AS DOUBLE) / n)")
-    val offenders = for {
-      f <- sources if f.getName != "Shared.scala"
+  /** Every line of the `.scala` files under `dir` (recursively) that
+    * contains one of `steps`, as `File.scala:line: step`, skipping `skip`. */
+  private def offenders(dir: String, steps: Seq[String], skip: String): Seq[String] = {
+    val root = new java.io.File(dir)
+    def files(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val sources = files(root)
+    assert(sources.size > 5, root.getAbsolutePath)
+    for {
+      f <- sources if f.getName != skip
       (line, i) <- scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
         _.getLines().toVector).zipWithIndex
       step <- steps if line.contains(step)
     } yield s"${f.getName}:${i + 1}: $step"
-    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("near-dup and text oracle steps are written once, in Shared") {
+    // the word n-gram list, the recursive component closure, the
+    // temperature threshold, the portable tokenizer, the quality score's
+    // stopword and closeness terms, the type-1 rank rule and the 6-dp floor
+    // each have one DuckDB builder in Shared (ngramsSql, closureCtes,
+    // temperatureCtes, tokensSql, stopwordRatioSql, qualitySql, rankIdxSql,
+    // floor6Sql); a family file that types one of them again is a second
+    // definition to keep in step
+    val steps = Seq("t[i] || ' ' || t[i+1]", "reach(node, lbl)", "sqrt(CAST(minn AS DOUBLE) / n)",
+      "'[^a-z0-9]+'", "abs(stop - 0.15)", "x = 'the' OR x = 'a'", "CAST(ceil(",
+      "* 1e6 + 0.5) / 1e6")
+    val found = offenders("src/main/scala/graft/query", steps, skip = "Shared.scala")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the engine's 6-dp floor is written once, in functions.Portable") {
+    val found = offenders("src/main/scala/graft", Seq("lit(1e6) + lit(0.5)"), skip = "Portable.scala")
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -219,6 +219,17 @@ class PlanFingerprintSpec extends SparkSpec {
   // one 3-col scan; the two exchanges are the per-lang window hash
   // partitioning and the final presentation sort
   pin("t82_sequence_pack", "shuffles=2 bcast=0 joins=[] scans=[3]")
+  // the text family's bigram LM and quality score. t89: the counts are
+  // localCheckpointed (no scan in the plan), window-summed and cross-joined
+  // with the one-row vocabulary; t110: the 2-col pair stream joins the
+  // checkpointed counts and totals; t144's builder runs the row-index jobs,
+  // so only the final sort is left; t63: one 2-col scan and the output sort
+  pin("t89_bigram_lm",
+    "shuffles=3 bcast=1 joins=[BroadcastNestedLoopJoin=1] scans=[]")
+  pin("t110_doc_logprob",
+    "shuffles=5 bcast=3 joins=[BroadcastHashJoin=2,BroadcastNestedLoopJoin=1] scans=[2]")
+  pin("t144_dsir_resample", "shuffles=1 bcast=0 joins=[] scans=[]")
+  pin("t63_quality_score", "shuffles=1 bcast=0 joins=[] scans=[2]")
   // r8: pinned after their r7 local inflations (0.49→0.72 s / 0.32→0.39 s)
   // plan-dumped identical to the documented round-6 shapes — host noise.
   // q83: one round-robin exchange bounds the sink file count; the sort is

@@ -232,35 +232,32 @@ class TextIndexSpec extends SparkSpec {
     assert(second.getString(1) == "b" && second.getDouble(4) == 0.9)
   }
 
-  test("bigramLogProbScoreUnder/dsirResample: cross-domain scores match the same-corpus form on identical inputs") {
-    // scoring docs under a model estimated from THEMSELVES must equal
-    // bigramLogProbScore exactly — the shared estimation path, different
-    // entry points
-    val same = TextIndex.bigramLogProbScoreUnder(docs, docs, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
+  test("dsirResample: target and corpus scores equal bigramLogProbScore's mean") {
+    // with the target model estimated from the corpus itself, both of a
+    // doc's scores must equal bigramLogProbScore's mean exactly: one
+    // estimation path, two entry points
     val self = TextIndex.bigramLogProbScore(docs, "doc_id", "text")
-      .orderBy("doc_id").collect().toSeq
-    assert(same == self)
+      .select("doc_id", "avg_logprob").orderBy("doc_id").collect().toSeq
+      .map(r => r.getLong(0) -> r.getDouble(1))
+    val both = TextIndex.dsirResample(docs, docs, "doc_id", "text", 1.0)
+      .select("doc_id", "lp_target", "lp_corpus").orderBy("doc_id").collect().toSeq
+    assert(both.map(r => r.getLong(0) -> r.getDouble(1)) == self)
+    assert(both.map(r => r.getLong(0) -> r.getDouble(2)) == self)
     // fraction=1 keeps every SCORED doc (all 4 here have ≥ 2 tokens)
     val all = TextIndex.dsirResample(docs, docs.limit(2), "doc_id", "text", 1.0)
     assert(all.count() == 4)
   }
 
-  test("bigramLogProbScoreUnder: a zero-bigram model fails loudly, not with null scores") {
-    // every model doc under 2 tokens → no bigrams → the add-k denominator
+  test("dsirResample: a zero-bigram target model fails loudly, not with null scores") {
+    // every target doc under 2 tokens → no bigrams → the add-k denominator
     // c1 + k·v would be 0 and non-ANSI division would publish silently
-    // null avg_logprob (the DuckDB replay errors instead — divergent
-    // failure modes); the require names the precondition at the call site
+    // null scores (the DuckDB replay errors instead — divergent failure
+    // modes); the require names the precondition at the call site
     val emptyModel = Seq((9L, "single"), (10L, "")).toDF("doc_id", "text")
     val ex = intercept[IllegalArgumentException] {
-      TextIndex.bigramLogProbScoreUnder(docs, emptyModel, "doc_id", "text")
-    }
-    assert(ex.getMessage.contains("no bigrams"))
-    // dsirResample with an unusable target slice hits the same guard
-    val ex2 = intercept[IllegalArgumentException] {
       TextIndex.dsirResample(docs, emptyModel, "doc_id", "text", 0.5)
     }
-    assert(ex2.getMessage.contains("no bigrams"))
+    assert(ex.getMessage.contains("no bigrams"))
   }
 
   test("dsirResample: reserved __dsir_idx input column fails loudly at the call site") {
