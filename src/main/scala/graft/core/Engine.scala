@@ -172,21 +172,20 @@ object Par {
     if (parts < target) df.repartition(target) else df
   }
 
-  /** Partition count for an ITERATIVE LOOP's cached relation (round 19,
-    * r18 verdict #3): `min(defaultParallelism, ceil(rows / rowsPerPart))`,
-    * floored at 1. Why it exists: the CC/pageRank edge and node caches are
-    * built by `repartition(col(key)).cache()`, and a CACHED plan pins its
-    * output partitioning — AQE's partition coalescing is disabled there
-    * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` defaults
-    * false), so the cache keeps the 8× `initialPartitionNum` width (256
-    * partitions of ~2k rows each for d128's sf0.1 edge cache). Every one
-    * of the loop's per-round jobs then schedules a 256-task wave over
-    * cached blocks measured in KB — pure scheduling overhead in a healthy
-    * window, and the amplifier under host contention (d128's 17× driver
-    * storms hit exactly these waves). Scale-adaptive by construction:
-    * f(rows) grows linearly with data and the cap is the session's own
-    * parallelism, so a 100 TB run keeps full-width caches while sf0.1
-    * collapses to a handful of right-sized partitions. */
+  /** Partition count for an ITERATIVE LOOP's cached relation:
+    * `min(defaultParallelism, ceil(rows / rowsPerPart))`, floored at 1.
+    * The CC/pageRank edge and node caches are built at this width by
+    * [[edgeCache]]. A cached plan pins its output partitioning (AQE may not
+    * coalesce it: `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+    * defaults false), so a cache built by `repartition(col(key))` keeps the
+    * 8× `initialPartitionNum` width (256 partitions of ~2k rows each for
+    * d128's sf0.1 edge cache), and every per-round job of the loop then
+    * schedules a task wave that wide over cached blocks measured in KB:
+    * scheduling overhead in a healthy window, and the amplifier under host
+    * contention (d128's 17× driver storms hit exactly these waves). The
+    * rule follows the data: f(rows) grows linearly with it and the cap is
+    * the session's own parallelism, so a 100 TB run keeps full-width
+    * caches while sf0.01 fits one partition. */
   def iterCachePartitions(rows: Long, parallelism: Int,
                           rowsPerPartition: Long = 32768L): Int = {
     require(rowsPerPartition > 0, "rowsPerPartition must be positive")
@@ -194,24 +193,26 @@ object Par {
     math.max(1L, math.min(parallelism.toLong, byRows)).toInt
   }
 
-  /** Re-lay the cached iterative relation `df` at `p` partitions
-    * ([[iterCachePartitions]]) on `key`, and return the new cache, already
-    * materialized, with `df` unpersisted. It fires only when the rows-derived
-    * target BINDS (p < defaultParallelism: the relation is small for the
-    * session) AND the cache is ≥ 2× wider than p, so it removes most of
-    * the per-round task waves; otherwise `df` comes back unchanged. A big
-    * graph keeps its natural width, so this can never pessimize the
-    * at-scale layout. The re-layout is one shuffle of `df`, paid once at
-    * build. */
-  def relayoutIterCache(df: DataFrame, p: Int, key: Column): DataFrame =
-    if (p >= df.sparkSession.sparkContext.defaultParallelism ||
-        df.rdd.getNumPartitions <= 2 * p) df
-    else {
-      val compact = df.repartition(p, key).cache()
-      compact.count()
-      df.unpersist(blocking = false)
-      compact
-    }
+  /** An iterative loop's symmetric edge cache: one `(n, m)` row per
+    * direction of every `src`–`dst` edge of `edges`, hash-partitioned on
+    * `m` at [[iterCachePartitions]] of its row count, so the edge list
+    * crosses the network once, at build, and no round shuffles it. The
+    * edge lineage runs once: `truncator` checkpoints the `(a, b)` edge list
+    * in one job that also counts it, outside its round rotation, and the
+    * cache is built over that checkpoint at its final width, to be
+    * materialized by its first consumer's job. Returns the cache, its
+    * width and the call that frees the cache and the checkpoint, which
+    * must live as long as the cache (a lost cache block is recomputed from
+    * it). */
+  private[graft] def edgeCache(edges: DataFrame, src: Column, dst: Column,
+                               truncator: graft.ops.Checkpointing.Truncator): (DataFrame, Int, () => Unit) = {
+    val (e, rows, held) = truncator.hold(edges.select(src.as("a"), dst.as("b")))
+    val p = iterCachePartitions(2 * rows, edges.sparkSession.sparkContext.defaultParallelism)
+    val sym = e.select(col("a").as("n"), col("b").as("m"))
+      .union(e.select(col("b").as("n"), col("a").as("m")))
+      .repartition(p, col("m")).cache()
+    (sym, p, () => { sym.unpersist(); truncator.release(held) })
+  }
 }
 
 /** Loaders for the driver-generated test tables (TESTDATA.md). One parquet

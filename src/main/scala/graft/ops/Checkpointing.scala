@@ -91,33 +91,36 @@ private[graft] object Checkpointing {
     def eager[T](rdd: RDD[T]): RDD[T] = { eagerFold(rdd)(rowCount); rdd }
 
     /** [[eager]] whose materializing job also folds each partition;
-      * returns the exact sum of the per-partition folds. */
-    private def eagerFold[T](rdd: RDD[T])(fold: Iterator[T] => BigInt): BigInt = {
+      * returns the exact sum of the per-partition folds. With `rotate`
+      * off the RDD stays out of the rotation until [[release]]. */
+    private def eagerFold[T](rdd: RDD[T], rotate: Boolean = true)(fold: Iterator[T] => BigInt): BigInt = {
       if (reliable) { rdd.cache(); rdd.checkpoint() }
       else rdd.localCheckpoint()
       // EAGER: materialize serially, no concurrent planner yet
       val total = rdd.sparkContext.runJob(rdd, fold).sum
-      pendingUnpersist += rdd
-      while (pendingUnpersist.length > 1) { // newest is live; older are unreachable
-        val old = pendingUnpersist.remove(0)
-        // Reliable tier: also delete the retired round's checkpoint FILES.
-        // Spark never cleans them unprompted (cleanCheckpoints defaults
-        // off), so a long maxIter loop would otherwise leave one
-        // node-sized file set per round on the checkpoint store until
-        // context stop. Safe by the same argument as the unpersist: the
-        // newest round's materializing job has returned, its own files are
-        // complete, and every future plan reads ONLY the newest checkpoint
-        // (each round's plan is rebuilt over the newest RDD — nothing
-        // references an older round's files once its successor is
-        // materialized).
-        old.getCheckpointFile.foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(old.sparkContext.hadoopConfiguration).delete(p, true)
-        }
-        // not old.unpersist: it WARNs for every locally checkpointed RDD
-        Blocks.drop(old)
+      if (rotate) {
+        pendingUnpersist += rdd
+        // newest is live; older are unreachable
+        while (pendingUnpersist.length > 1) release(pendingUnpersist.remove(0))
       }
       total
+    }
+
+    /** Free a checkpointed RDD no future plan reads: its blocks and, in
+      * the reliable tier, its checkpoint FILES. Spark never cleans those
+      * unprompted (cleanCheckpoints defaults off), so a long maxIter loop
+      * would otherwise leave one node-sized file set per round on the
+      * checkpoint store until context stop. A retired round is safe to
+      * free: the newest round's materializing job has returned, its own
+      * files are complete, and each round's plan is rebuilt over the
+      * newest RDD only. */
+    def release(rdd: RDD[_]): Unit = {
+      rdd.getCheckpointFile.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+      // not rdd.unpersist: it WARNs for every locally checkpointed RDD
+      Blocks.drop(rdd)
     }
 
     /** Truncate a DataFrame's lineage AND its carried Statistics: eager
@@ -128,10 +131,23 @@ private[graft] object Checkpointing {
     /** [[truncate]] that also returns the sum of `fold` over the
       * checkpointed rows' partitions, computed by the same materializing
       * job (no second plan over the new frame). */
-    def truncateFold(df: DataFrame)(fold: Iterator[Row] => BigInt): (DataFrame, BigInt) = {
+    def truncateFold(df: DataFrame)(fold: Iterator[Row] => BigInt): (DataFrame, BigInt) =
+      checkpoint(df, rotate = true)(fold) match { case (out, total, _) => (out, total) }
+
+    /** [[truncate]] for a relation every round reads (an iterative loop's
+      * edge list), so it is kept out of the rotation: it lives until the
+      * caller passes the returned RDD to [[release]]. Also returns the
+      * row count, from the same materializing job. */
+    def hold(df: DataFrame): (DataFrame, Long, RDD[Row]) = {
+      val (out, rows, rdd) = checkpoint(df, rotate = false)(rowCount)
+      (out, rows.toLong, rdd)
+    }
+
+    private def checkpoint(df: DataFrame, rotate: Boolean)(
+        fold: Iterator[Row] => BigInt): (DataFrame, BigInt, RDD[Row]) = {
       val rdd: RDD[Row] = df.rdd
-      val total = eagerFold(rdd)(fold)
-      (df.sparkSession.createDataFrame(rdd, df.schema), total)
+      val total = eagerFold(rdd, rotate)(fold)
+      (df.sparkSession.createDataFrame(rdd, df.schema), total, rdd)
     }
   }
 

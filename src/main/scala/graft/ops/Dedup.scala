@@ -495,10 +495,10 @@ object Dedup {
     * exactly, and each node starts at the min id of its partition-local
     * component (min over the partitions that see it) — a valid start
     * labeling (label(x) <= x, inside x's component), so the loop only has
-    * to merge across partitions. An edge list that fits one partition is
-    * solved exactly before the loop, whose first round only confirms it;
-    * near-dup clusters are tight, so larger edge lists need a few merge
-    * rounds. `maxIter` caps a pathological chain. Each round shuffles only the edge
+    * to merge across partitions. An edge list whose cache is one
+    * partition is solved exactly by the seed, which is returned without a
+    * round; near-dup clusters are tight, so larger edge lists need a few
+    * merge rounds. `maxIter` caps a pathological chain. Each round shuffles only the edge
     * list and the label map — both candidate-set sized, orders of
     * magnitude below the corpus — and the convergence test costs no job of
     * its own: the round's checkpointing job also returns the label map's
@@ -538,24 +538,16 @@ object Dedup {
     // doCheckpoint deadlock; old rounds' blocks rotated out): see
     // Checkpointing's scaladoc, pinned by CheckpointingSpec.
     val truncator = new Checkpointing.Truncator(reliable = checkpointDir.isDefined)
-    // cached pre-partitioned on m — the per-round neighbor join's key — so
-    // the edge list (the one relation here that isn't label-map-thin)
-    // crosses the network ONCE at build, not once per round: the cached
-    // layout's HashPartitioning(m) satisfies the join's distribution
-    // requirement every round. NOT deduplicated: min-propagation is
-    // idempotent, so duplicate edges cost join fan-out but never change a
-    // label — candidate-pair producers emit unique pairs already, and a
-    // caller with a genuinely dirty edge list can distinct() it themselves.
-    // Ids are bigint at every caller (the cast is a no-op for them).
-    val sym0 = edges.select(col(srcCol).cast("long").as("n"), col(dstCol).cast("long").as("m"))
-      .union(edges.select(col(dstCol).cast("long").as("n"), col(srcCol).cast("long").as("m")))
-      .repartition(col("m")).cache()
-    // ITERATIVE-CACHE PARTITION CAP (Par.iterCachePartitions, shared with
-    // Graph.pageRank): a cached repartition keeps the un-coalesced 8×
-    // initialPartitionNum width, so every CC round's neighbor join
-    // scheduled a ~256-task wave over KB-sized cached blocks at sf0.1.
-    val sym = graft.core.Par.relayoutIterCache(sym0, graft.core.Par.iterCachePartitions(
-      sym0.count(), edges.sparkSession.sparkContext.defaultParallelism), col("m"))
+    // The edge cache (Par.edgeCache, shared with Graph.pageRank) is
+    // partitioned on m, the per-round neighbor join's key: its
+    // HashPartitioning(m) satisfies the join's distribution every round.
+    // NOT deduplicated: min-propagation is idempotent, so duplicate edges
+    // cost join fan-out but never change a label — candidate-pair
+    // producers emit unique pairs already, and a caller with a genuinely
+    // dirty edge list can distinct() it themselves. Ids are bigint at
+    // every caller (the cast is a no-op for them).
+    val (sym, p, release) = graft.core.Par.edgeCache(edges,
+      col(srcCol).cast("long"), col(dstCol).cast("long"), truncator)
     // start labels: partition-local union-find over the cached edge
     // partitions, then the min over every partition that saw the node
     val pair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
@@ -569,7 +561,9 @@ object Dedup {
     // a false match.
     var (labels, prevSum) = truncator.truncateFold(seed)(sumLabels)
     var iter = 0
-    var converged = false
+    // one cache partition: localComponents saw every edge, so the seed
+    // already is the component map and no round runs
+    var converged = p == 1
     while (!converged && iter < maxIter) {
       // min over own + neighbors' labels
       val viaNbr = sym.join(labels.select(col("node").as("m"), col("label")), "m")
@@ -593,7 +587,7 @@ object Dedup {
       converged = curSum == prevSum
       prevSum = curSum
     }
-    sym.unpersist()
+    release()
     // a partially-converged label map would silently split real clusters
     // (and dedupByClusters would keep several "canonical" docs per cluster)
     if (!converged) throw new IllegalStateException(

@@ -28,7 +28,8 @@ object Graph {
     *
     * Scale shape (the [[Dedup.connectedComponents]] discipline): the
     * symmetrized edge list is cached pre-partitioned on the contribution
-    * key `m` and crosses the network ONCE; each round BROADCASTS the
+    * key `m` at the width its size calls for and crosses the network ONCE
+    * ([[graft.core.Par.edgeCache]]); each round BROADCASTS the
     * node-sized rank relation into the edge join, so the edge cache never
     * moves again (the rank relation is re-sent to every executor every
     * round: 4M nodes × ~16 B ≈ 64 MB serialized, so the cost at cluster
@@ -52,40 +53,29 @@ object Graph {
     // 1.0 - 0.85 = 0.15000000000000002 in IEEE double, a different number
     // than the literal 0.15 the SQL oracle would write — the kind of
     // last-ulp divergence the whole design exists to exclude
-    // The cache is partitioned on the CONTRIBUTION-SUM key `m`, not the
-    // join key `n`: the broadcast join imposes no distribution on the edge
-    // list, but the per-round groupBy(m) does. Partitioning the cache on m
-    // lets every round's HashAggregate reuse the cached distribution
-    // (alias-aware output partitioning carries m→node through the
-    // project), so after the one-time build NO round shuffles the edge
-    // list at all.
-    val symM0 = edges.select(col(srcCol).as("n"), col(dstCol).as("m"))
-      .union(edges.select(col(dstCol).as("n"), col(srcCol).as("m")))
-      .repartition(col("m")).cache()
-    // Degrees are node-sized and read every round — cache them too, or
-    // each round re-runs the edge-sized degree aggregation.
-    val nodes0 = symM0.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      .select(col("n").as("node"), col("deg")).cache()
-    val nN = nodes0.count() // node-sized aggregate, one driver scalar; materializes the cache
-    val nE = symM0.count() // cached scan — cheap, and the count the cap needs
-    // ONE edge-derived width for BOTH caches (r19 review): the per-round
-    // `sums` aggregate inherits the edge cache's hashpartitioning(node)
-    // width, and a nodes cache at a DIFFERENT width would force
-    // EnsureRequirements to re-shuffle one side of the nodes⋈sums join
-    // every round — a per-round exchange the old uniform-width shape never
-    // paid. nodes is node-sized, so pEdge partitions of it are cheap.
-    val pEdge = graft.core.Par.iterCachePartitions(nE,
-      edges.sparkSession.sparkContext.defaultParallelism)
-    val sym = graft.core.Par.relayoutIterCache(symM0, pEdge, col("m"))
-    val nodes = graft.core.Par.relayoutIterCache(nodes0, pEdge, col("node"))
     // Shared eager-truncate discipline (see Checkpointing's scaladoc,
     // pinned by CheckpointingSpec): pageRank was the WIDER deadlock window
     // pre-fix — every round runs an explicit broadcast(prIn) exchange, and
     // all rounds' lazy checkpoints used to materialize in one cascaded
     // post-loop action right into those exchange threads.
     val truncator = new Checkpointing.Truncator(reliable = false)
-    def truncate(df: DataFrame): DataFrame = truncator.truncate(df)
-    var pr = truncate(nodes.select(col("node"), col("deg"),
+    // The edge cache (Par.edgeCache) is partitioned on the CONTRIBUTION-SUM
+    // key `m`, not the join key `n`: the broadcast join imposes no
+    // distribution on the edge list, but the per-round groupBy(m) does, and
+    // alias-aware output partitioning carries m→node through the project,
+    // so after the one-time build NO round shuffles the edge list at all.
+    val (sym, _, release) = graft.core.Par.edgeCache(edges, col(srcCol), col(dstCol), truncator)
+    // Degrees are node-sized and read every round — cache them too, or
+    // each round re-runs the edge-sized degree aggregation. The edge list
+    // is symmetric, so a node's degree is its row count under m as well as
+    // under n, and grouping the cache on m lays the nodes out on node at
+    // the edge cache's width with no shuffle: the per-round `sums`
+    // aggregate has that same layout, so the nodes⋈sums join shuffles
+    // neither side.
+    val nodes = sym.groupBy(col("m")).agg(count(lit(1)).as("deg"))
+      .select(col("m").as("node"), col("deg")).cache()
+    val nN = nodes.count() // node-sized aggregate, one driver scalar; materializes both caches
+    var pr = truncator.truncate(nodes.select(col("node"), col("deg"),
       floor6(lit(1.0) / lit(nN.toDouble)).as("pr")))
     for (_ <- 1 to iters) {
       // Explicit broadcast: the truncated rank relation is a LogicalRDD
@@ -101,7 +91,7 @@ object Graph {
         .select(col("m").as("node"), col("__c"))
         .groupBy(col("node"))
         .agg(sum(col("__c").cast("decimal(27,7)")).as("__s"))
-      pr = truncate(nodes.join(sums, Seq("node"), "left")
+      pr = truncator.truncate(nodes.join(sums, Seq("node"), "left")
         .select(col("node"), col("deg"),
           floor6(lit(teleport) / lit(nN.toDouble) +
             lit(damping) * coalesce(col("__s").cast("double"), lit(0.0))).as("pr")))
@@ -112,7 +102,7 @@ object Graph {
     // when both were measured at sf0.1 on the 271k-edge near-dup graph
     // (per-round 13.5 s vs cascade 12.8-26.8 s); the cost is the ten
     // edge-join rounds themselves, see the iters guidance above.
-    sym.unpersist()
+    release()
     nodes.unpersist()
     pr.select(col("node"), col("pr"))
   }
@@ -177,8 +167,8 @@ object Graph {
     * `rounds` hops stays unlabeled (absent from the output — the caller's
     * left join reads that as NULL, the honest answer).
     *
-    * Scale shape per round: one edge×labels join (labels is node-sized,
-    * ids+label only — AQE broadcasts while it fits, shuffles beyond), one
+    * Scale shape per round: one edge×labels shuffled hash join, built on
+    * the node-sized label map (ids+label only), one
     * (node,label)-keyed aggregate bounded by nodes × |labels|, one
     * per-node WindowGroupLimit rank; the label map is staged per round
     * (the CC plan-growth discipline, bounded by `rounds` ≤ 5). */
@@ -197,8 +187,12 @@ object Graph {
     val seedMap = seeds.select(col(idCol).as("__id"), col(labelCol).as("__lab"))
     var lab = seedMap
     for (_ <- 1 to rounds) {
+      // the hint builds the hash table on the label map: both sides are
+      // shuffle stages of unknown size, so AQE would broadcast whichever
+      // finished first, and the join's generated class would change with
+      // that race (the Relational.bindColumns case)
       val votes = g
-        .join(lab.withColumnRenamed("__id", "neighbor_id"), Seq("neighbor_id"))
+        .join(lab.withColumnRenamed("__id", "neighbor_id").hint("shuffle_hash"), Seq("neighbor_id"))
         .groupBy(col("node_id"), col("__lab"))
         .agg(sum(col("__w")).as("__v"))
       val w = Window.partitionBy(col("node_id"))

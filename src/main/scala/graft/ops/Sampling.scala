@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable.floor6
+
 /** Sampling operators for training-data pipelines (beyond the reference
   * surface). Two flavors:
   *  - fractional: per-stratum keep rates via a content-hash threshold;
@@ -237,9 +239,9 @@ object Sampling {
     * [[Dedup.connectedComponents]] over near-dup pairs); docs absent from
     * it are singletons under their own id with weight 1.0.
     *
-    * weight = 1/cluster_size through the portable 6 dp floor (identical
-    * integer division in any engine). Scale shape: the cluster map is
-    * candidate-sized; one groups-sized size aggregate; two joins the
+    * weight = 1/cluster_size through [[floor6]], the portable 6 dp
+    * floor. Scale shape: the cluster map is candidate-sized; one
+    * groups-sized size aggregate; two joins the
     * corpus streams through (AQE broadcasts the map/sizes while they fit).
     * Output: (idCol, cluster_id, cluster_size, weight). */
   def clusterWeights(docs: DataFrame, clusters: DataFrame, idCol: String,
@@ -250,7 +252,7 @@ object Sampling {
     val sizes = labeled.groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
     labeled.join(sizes, "cluster_id")
       .select(col(idCol), col("cluster_id"), col("cluster_size"),
-        (floor(lit(1e6) / col("cluster_size") + lit(0.5)) / lit(1e6)).as("weight"))
+        floor6(lit(1.0) / col("cluster_size")).as("weight"))
   }
 
   /** Mean corpus-frequency rank of a document's tokens — a cheap

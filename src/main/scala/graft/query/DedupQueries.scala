@@ -615,7 +615,7 @@ object DedupQueries {
          |  WHERE doc_id NOT IN (SELECT node FROM comp)),
          |csz AS (SELECT cluster_id, count(*) AS cluster_size FROM allc GROUP BY 1)
          |SELECT a.doc_id, a.cluster_id, csz.cluster_size,
-         |  floor(1e6 / csz.cluster_size + 0.5) / 1e6 AS weight
+         |  ${floor6Sql("1.0 / csz.cluster_size")} AS weight
          |FROM allc a JOIN csz USING (cluster_id) ORDER BY a.doc_id""".stripMargin))
   )
 

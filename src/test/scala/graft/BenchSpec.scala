@@ -13,8 +13,8 @@ class BenchSpec extends SparkSpec {
     val dir = tempDir()
     val (storm, calm) = ("d130_cluster_split", "q01_pricing_summary")
     val hostName = java.net.InetAddress.getLocalHost.getHostName
-    // a same-sf, same-host prior: storm's warm wall at sf0.001 (1.7–2.3 s
-    // on 4 vCPU, more on a shared host; its 16 build-time jobs are work no
+    // a same-sf, same-host prior: storm's warm wall at sf0.001 (1.2–1.4 s
+    // on 4 vCPU, more on a shared host; its 7 build-time jobs are work no
     // fast rep can skip) is far above 3.5 × 0.05 s + 0.3 s; calm runs far
     // below its 5 s prior.
     // Should a slow host censor a storm rep, the query is a suspect all the

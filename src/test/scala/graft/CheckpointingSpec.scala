@@ -82,6 +82,35 @@ class CheckpointingSpec extends SparkSpec {
     } finally sc.removeSparkListener(l)
   }
 
+  test("connectedComponents and pageRank run their edge lineage once and keep only their result") {
+    // the edge projection bumps an accumulator per row: building the
+    // symmetric edge cache as a union over both directions of the raw
+    // lineage runs it twice per edge row; the loops checkpoint the edge
+    // list once and count it in that same job. After
+    // each call only the returned label or rank checkpoint stays persisted
+    // (the edge checkpoint and the edge and node caches are freed).
+    val sc = spark.sparkContext
+    val bumps = sc.longAccumulator("edge rows")
+    val bump = org.apache.spark.sql.functions.udf { (x: Long) => bumps.add(1); x }
+    // 100 stars: 600 edges fit one cache partition, 40,000 take three
+    for (n <- Seq(600L, 40000L)) {
+      val edges = spark.range(100L, 100L + n, 1L, 4)
+        .select(bump($"id").as("a"), ($"id" % 100L).as("b"))
+      val calls = Seq[() => org.apache.spark.sql.DataFrame](
+        () => ops.Dedup.connectedComponents(edges, "a", "b"),
+        () => ops.Graph.pageRank(edges, "a", "b", iters = 2))
+      for (call <- calls) {
+        bumps.reset()
+        val before = sc.getPersistentRDDs.keySet
+        val out = call()
+        val grown = sc.getPersistentRDDs.keySet -- before
+        assert(bumps.value == n, s"$n edges: the edge projection ran ${bumps.value} times")
+        assert(grown.size <= 1, s"$n edges: persisted RDDs left after the call: $grown")
+        assert(out.count() == n + 100)
+      }
+    }
+  }
+
   test("truncate(): resets carried plan Statistics (the per-round stats cube)") {
     val t = new ops.Checkpointing.Truncator(reliable = false)
     val df = (1L to 50L).map(i => (i, i * 2)).toDF("a", "b")

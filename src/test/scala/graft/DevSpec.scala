@@ -47,11 +47,14 @@ class DevSpec extends SparkSpec {
     // the three perfbench corpus queries generate about 110 classes: at
     // Spark's default 100 entries (four LRU segments of 25) the warm round
     // recompiled 63 of them, and with the AQE-ordered stage id in each
-    // class name a warm d22 rep still recompiled up to 12
+    // class name a warm d22 rep still recompiled up to 12. s173 rides
+    // along: AQE broadcast either side of its vote join, whichever shuffle
+    // stage finished first, so a warm rep could recompile the join's class
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       core.Engine.CodegenCacheEntries.toString)
     assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
-    val names = Seq("d22_jaccard_pairs", "d130_cluster_split", "q68_stream_dedup")
+    val names = Seq("d22_jaccard_pairs", "d130_cluster_split", "q68_stream_dedup",
+      "s173_label_propagation")
     val timer = new Dev.RepTimer(spark)
     try {
       val Seq(cold, warm) = (1 to 2).map(_ => names.map(timer.run(_, sf("sf0.001"))))

@@ -905,8 +905,8 @@ class PipelineSpec extends SparkSpec {
 
   test("connectedComponents: long chain converges under the iteration cap") {
     // path of 200 nodes: hash-min alone needs ~199 rounds; the
-    // partition-local union-find seed solves it (one edge partition) and
-    // the loop confirms it well within the default maxIter of 50
+    // partition-local union-find seed solves it (one edge partition), so
+    // it is returned without a round
     val edges = (1L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val cc = Dedup.connectedComponents(edges, "id_a", "id_b")
     assert(cc.select("component").distinct().as[Long].collect().toSeq == Seq(1L))
