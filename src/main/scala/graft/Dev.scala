@@ -6,8 +6,9 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 
 /** Developer CLI over `SparkEntry.queries`: one local session, four
@@ -26,15 +27,20 @@ object Dev {
   /** One timed rep: wall time and the Spark work its jobs did (jobs run
     * while the query is built included; `buildJobs` counts those alone),
     * plus Janino compiles (codegen cache misses) and JVM JIT time spent
-    * during it. `qe` is the executed query, for plan reads. */
+    * during it. A rep that runs streams also reports their micro-batches
+    * (progress events) and the widest state operator's shuffle partitions,
+    * its state-store count (0 without a stateful operator). `qe` is the
+    * executed query, for plan reads. */
   final case class Rep(wallS: Double, jobs: Long, buildJobs: Long, stages: Long, tasks: Long,
                        shuffleWriteBytes: Long, shuffleReadBytes: Long, inputBytes: Long,
-                       janinoCompiles: Long, jitMs: Long, qe: QueryExecution) {
+                       janinoCompiles: Long, jitMs: Long, microBatches: Long, stateParts: Long,
+                       qe: QueryExecution) {
     def line: String =
       f"jobs=$jobs build_jobs=$buildJobs stages=$stages tasks=$tasks " +
         f"shuffleW=${shuffleWriteBytes / 1024}KB " +
         f"shuffleR=${shuffleReadBytes / 1024}KB input=${inputBytes / 1024}KB " +
-        f"wall=$wallS%.3f s janino_compiles=$janinoCompiles jit_ms=$jitMs"
+        f"wall=$wallS%.3f s janino_compiles=$janinoCompiles jit_ms=$jitMs " +
+        f"micro_batches=$microBatches state_parts=$stateParts"
   }
 
   /** The local property that tags every job of a rep. The rep also runs in
@@ -54,11 +60,15 @@ object Dev {
     private val sc = spark.sparkContext
     private val seq = new AtomicLong
     private final class Counts {
-      val jobs, buildJobs, stages, tasks, shufW, shufR, input = new AtomicLong
+      val jobs, buildJobs, stages, tasks, shufW, shufR, input, batches, stateParts = new AtomicLong
     }
     private val byRep = new ConcurrentHashMap[String, Counts]
     private val stageRep = new ConcurrentHashMap[Int, String]
     private def counts(rep: String) = byRep.computeIfAbsent(rep, _ => new Counts)
+    /** The running rep's counts, which its streams' progress events go to:
+      * the events carry no local property, so a rep takes every event
+      * posted between its start and its drain. */
+    @volatile private var streaming: Counts = null
     private val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty(RepKey))).foreach { rep =>
@@ -78,6 +88,15 @@ object Dev {
             c.input.addAndGet(m.inputMetrics.bytesRead)
           }
         }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: StreamingQueryListener.QueryProgressEvent =>
+          Option(streaming).foreach { c =>
+            c.batches.incrementAndGet()
+            val parts = p.progress.stateOperators.map(_.numShufflePartitions).foldLeft(0L)(_ max _)
+            c.stateParts.accumulateAndGet(parts, (a, b) => a max b)
+          }
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
 
@@ -90,6 +109,8 @@ object Dev {
     def run(name: String, dir: String): Rep = {
       val build = SparkEntry.queries(name)
       val rep = s"graft-dev-${seq.incrementAndGet()}"
+      ListenerBus.drain(sc)
+      streaming = counts(rep)
       sc.setJobGroup(rep, name)
       sc.setLocalProperty(RepKey, rep)
       sc.setLocalProperty(BuildKey, "true")
@@ -109,9 +130,10 @@ object Dev {
         }
       val (janino, jit) = (janinoCompiles - janino0, jitMs - jit0)
       ListenerBus.drain(sc)
+      streaming = null
       val c = counts(rep)
       Rep(wallS, c.jobs.get, c.buildJobs.get, c.stages.get, c.tasks.get, c.shufW.get,
-        c.shufR.get, c.input.get, janino, jit, qe)
+        c.shufR.get, c.input.get, janino, jit, c.batches.get, c.stateParts.get, qe)
     }
   }
 

@@ -227,7 +227,9 @@ object Par {
   * values as the same UTC instants the oracle engine's `epoch()` assumes.
   */
 object Tables {
-  import org.apache.hadoop.fs.Path
+  import scala.jdk.CollectionConverters._
+
+  import org.apache.hadoop.fs.{FileStatus, Path}
   import org.apache.parquet.format.converter.ParquetMetadataConverter
   import org.apache.parquet.hadoop.Footer
   import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -261,21 +263,38 @@ object Tables {
     * Spark's inference reads when there is no summary file. */
   def schemaOf(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val file = if (!st.isDirectory) st else {
-      val data = fs.listStatus(p).filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      require(data.nonEmpty, s"no parquet data file in $path")
-      data.minBy(_.getPath.toString)
-    }
+    val file = dataFiles(path, conf).minBy(_.getPath.toString)
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The rows of the parquet table at `path` (a file, or every data file
+    * of a directory): the sum of its footers' row-group counts, read on
+    * the driver, so it starts no Spark job. */
+  def rowsOf(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(path, conf).iterator.map { f =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
+  }
+
+  /** The file at `path`, or the data files of the directory at `path`
+    * (no `_`/`.`-prefixed names, as Spark's file index lists them). */
+  private def dataFiles(path: String, conf: org.apache.hadoop.conf.Configuration): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) Seq(st) else {
+      val data = fs.listStatus(p).toSeq.filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      require(data.nonEmpty, s"no parquet data file in $path")
+      data
+    }
   }
 
   /** A driver table, read with its footer schema ([[schemaOf]]): building

@@ -951,7 +951,12 @@ object Dedup {
     val tb = docs.select(col(idCol).as("id_b"), col(textCol).as("__tb"))
       .join(broadcast(p.select(col("id_b")).distinct()), Seq("id_b"))
     val ed = levenshtein(col("__ta"), col("__tb")).cast("long")
-    p.join(ta, Seq("id_a")).join(tb, Seq("id_b"))
+    // the hints build each join's hash table on the text side: the pair
+    // side and the text side are shuffle stages of unknown size, so AQE
+    // would broadcast whichever finished first, and the class that fuses
+    // the edit distance into the id_b join would change with that race
+    // (the Relational.bindColumns case)
+    p.join(ta.hint("shuffle_hash"), Seq("id_a")).join(tb.hint("shuffle_hash"), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         length(col("__ta")).cast("long").as("len_a"),
         length(col("__tb")).cast("long").as("len_b"),

@@ -1,6 +1,6 @@
 package graft.query
 
-import graft.core.Tables
+import graft.core.{Par, Tables}
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,10 +16,9 @@ object StreamQueries {
     // window agg → memory sink (one AvailableNow run); result equals the
     // batch oracle because windows align to epoch hours and sums are decimal
     QuerySpec("q58_stream_window", (s0, dir) => {
-      // the MEMOIZED streaming child session (see streamSession): scopes
-      // the reduced shuffle-partition conf away from the main session
-      // while keeping one stable classloader so codegen cache-hits
-      val s = streamSession(s0)
+      // the stream child session (see streamSession): state stores sized
+      // to the rows that reach the windowed aggregate, one micro-batch
+      val s = streamSession(s0, rowsOf(s0, dir, "events"))
       val ev = eventStream(s, dir)
       val agged = graft.streaming.Streams.windowedAgg(ev, "ts", "event_type", "1 hour",
         aggs = Seq(count(lit(1)).as("n"), round(dsum(col("value")), 2).as("total")))
@@ -39,7 +38,8 @@ object StreamQueries {
     // proving the duplicate copy was dropped with watermark-bounded state
     // Oracle: the doubled stream deduped on event_id must equal the original table
     QuerySpec("q68_stream_dedup", (s0, dir) => {
-      val s = streamSession(s0) // memoized scoped child, see q58
+      // the dedup state sees every event twice (the stream is doubled)
+      val s = streamSession(s0, 2 * rowsOf(s0, dir, "events"))
       val ev = eventStream(s, dir)
         .select(col("event_id"), col("ts"), col("event_type"))
       val deduped = graft.streaming.Streams.dedupStream(
@@ -61,7 +61,7 @@ object StreamQueries {
     // the original table, so the batch scrub+quality over `documents` is the
     // exact expected sink content
     QuerySpec("p72_stream_pipeline", (s0, dir) => {
-      val s = streamSession(s0) // memoized scoped child, see q58
+      val s = streamSession(s0, 2 * rowsOf(s0, dir, "documents")) // doubled, as q68
       val schema = Tables.schemaOf(s, s"$dir/documents.parquet")
       val docs = graft.streaming.Streams.readStream(s, dir, schema,
         glob = Some("documents.parquet"))
@@ -100,14 +100,16 @@ object StreamQueries {
     // every exact-Jaccard ≥0.8 pair (LSH recall is total at these knobs on
     // this corpus — d23's oracle row proves it)
     QuerySpec("q94_stream_neardup", (s0, dir) => {
-      val s = streamSession(s0) // memoized scoped child, see q58
+      // the bucket state sees one row per document and band
+      val bands = 16
+      val s = streamSession(s0, bands * rowsOf(s0, dir, "documents"))
       val schema = Tables.schemaOf(s, s"$dir/documents.parquet")
       val docs = graft.streaming.Streams.readStream(s, dir, schema,
         glob = Some("documents.parquet"))
       // synthetic event-time from doc_id (see p72): arrival order is id order
       val ev = docs.withColumn("ts", timestamp_micros((col("doc_id") + 1) * 1000000L))
       val markers = graft.streaming.Streams.nearDupMarkStream(
-        ev, "doc_id", "text", "ts", n = 3, numHashes = 64, bands = 16,
+        ev, "doc_id", "text", "ts", n = 3, numHashes = 64, bands = bands,
         threshold = 0.8)
       val dropped = drainToMemory(s, "graft_q94_sink", markers, "append").distinct()
         .withColumnRenamed("id", "doc_id")
@@ -123,7 +125,8 @@ object StreamQueries {
     // view by the same user in the 6 h before a click. Watermarks on both
     // sides bound the join state; the batch oracle is the same range join
     QuerySpec("q96_stream_join", (s0, dir) => {
-      val s = streamSession(s0) // memoized scoped child, see q58
+      // two event streams feed the join state
+      val s = streamSession(s0, 2 * rowsOf(s0, dir, "events"))
       def stream() = eventStream(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val clicks = stream().filter(col("event_type") === "click")
@@ -148,7 +151,7 @@ object StreamQueries {
     // Oracle: the batch replay of the streaming lifetime cap: first 5 per user in
     // (ts_ns, event_id) order
     QuerySpec("q140_stream_quota", (s0, dir) => {
-      val s = streamSession(s0) // memoized scoped child, see q58
+      val s = streamSession(s0, rowsOf(s0, dir, "events"))
       import s.implicits._
       val ev = eventStream(s, dir)
         .select(col("user_id"), col("event_id"), col("ts_ns"))
@@ -170,7 +173,7 @@ object StreamQueries {
     // output the batch oracle's non-current rows reproduce exactly
     // Oracle: the streaming emission is exactly the batch history's CLOSED rows
     QuerySpec("q124_stream_scd2", (s0, dir) => {
-      val s = streamSession(s0) // memoized scoped child, see q58
+      val s = streamSession(s0, rowsOf(s0, dir, "events"))
       import s.implicits._
       val ev = eventStream(s, dir)
         .select(col("user_id"), col("event_id"), col("event_type"), col("ts_ns"))
@@ -205,7 +208,7 @@ object StreamQueries {
     // after every micro-batch without rescanning history. Same
     // computation as p174 ⇒ the SAME oracle proves stream ≡ batch
     QuerySpec("q175_stream_psi", (s0, dir) => {
-      val s = streamSession(s0)
+      val s = streamSession(s0, rowsOf(s0, dir, "documents"))
       val static = t(s, dir, "documents")
       val (mn, mx) = graft.ops.Stats.psiBaseRange(
         static.filter(col("lang") === "en"), "n_chars")
@@ -234,7 +237,7 @@ object StreamQueries {
     // Oracle: the streaming state is an exact decimal sketch, so the oracle is a
     // plain batch aggregation + the p170/q09 derivations
     QuerySpec("q172_stream_moments", (s0, dir) => {
-      val s = streamSession(s0)
+      val s = streamSession(s0, rowsOf(s0, dir, "events"))
       val ev = eventStream(s, dir)
       val sk = graft.ops.Stats.momentsSketchBy(ev, Seq("event_type"), "value")
       graft.ops.Stats.momentsReport(
@@ -255,12 +258,39 @@ object StreamQueries {
         |FROM m ORDER BY event_type""".stripMargin), streaming = true)
   )
 
-  /** The streaming queries' shared child: 8 shuffle partitions = 8
-    * state-store instances — the keyspaces here are tiny (event types,
-    * LSH buckets, ≤150 users), so 8 stores cut the per-micro-batch
-    * checkpoint fsync count 4× without changing any result. */
-  private def streamSession(s0: SparkSession): SparkSession =
-    childSession(s0, "stream8", "spark.sql.shuffle.partitions" -> "8")
+  /** The child session a streaming query runs in, for a stream whose
+    * stateful operator sees `stateRows` rows. Two confs, scoped away from
+    * the root session:
+    *
+    *  - `spark.sql.shuffle.partitions` is
+    *    `Par.iterCachePartitions(stateRows, defaultParallelism)`: one state
+    *    store per 32,768 rows, at most one per core. A run fixes its store
+    *    count in its checkpoint, and every store costs a task and its
+    *    checkpoint files per micro-batch whatever rows it holds, so the
+    *    width follows the data (one store at sf0.01).
+    *  - No-data micro-batches are off, so an AvailableNow run is exactly
+    *    one micro-batch over everything in the source. The batch Spark
+    *    would otherwise run after it only advances the watermark to evict
+    *    state, in a checkpoint deleted after the run. That batch emits
+    *    nothing here: q68's and p72's `dropDuplicatesWithinWatermark`
+    *    emits on arrival, q96 is an inner interval join, q58, q172 and
+    *    q175 run in complete mode, q94's event-time timeouts only remove
+    *    state and q124 and q140 have no timeout. An append-mode
+    *    watermarked aggregation, an outer stream-stream join or a timeout
+    *    that emits rows would need it: their rows would be lost.
+    *
+    * Each width has one memoized child ([[Shared.childSession]]), so the
+    * codegen classloader stays stable from run to run. Batch work over a
+    * sink in this session plans at the same width. */
+  private def streamSession(s0: SparkSession, stateRows: Long): SparkSession = {
+    val p = Par.iterCachePartitions(stateRows, s0.sparkContext.defaultParallelism)
+    childSession(s0, s"stream$p", "spark.sql.shuffle.partitions" -> p.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+  }
+
+  /** The rows of the driver table `table` under `dir`, from its footer. */
+  private def rowsOf(s: SparkSession, dir: String, table: String): Long =
+    Tables.rowsOf(s, s"$dir/$table.parquet")
 
   /** The events table as a file stream (glob-filtered out of the table
     * directory), `ts` normalized as in the batch table. */
@@ -269,8 +299,10 @@ object StreamQueries {
       Tables.schemaOf(s, s"$dir/events.parquet"), glob = Some("events.parquet")))
 
   /** One AvailableNow run of `df` into the memory sink `name`, returning
-    * the sink's table. The checkpoint is a fresh scratch dir, deleted once
-    * the run has terminated, so no run resumes an earlier one.
+    * the sink's table. In a [[streamSession]] the run is one micro-batch
+    * over the whole source, with the session's state-store width. The
+    * checkpoint is a fresh scratch dir, deleted once the run has
+    * terminated, so no run resumes an earlier one.
     *
     * Memory-sink hygiene for the SHARED stream session: with
     * newSession()-per-run each run's sink view died with its session; the

@@ -320,6 +320,27 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("every streaming driver query runs one micro-batch over state stores sized to its input") {
+    // the rows that reach each query's stateful operator: q68, p72 and q96
+    // see their input twice, q94 one row per document and band (16)
+    val dir = sf("sf0.001")
+    def rows(table: String) = core.Tables.rowsOf(spark, s"$dir/$table.parquet")
+    val (events, docs) = (rows("events"), rows("documents"))
+    val stateRows = Map(
+      "q58_stream_window" -> events, "q68_stream_dedup" -> 2 * events,
+      "p72_stream_pipeline" -> 2 * docs, "q94_stream_neardup" -> 16 * docs,
+      "q96_stream_join" -> 2 * events, "q140_stream_quota" -> events,
+      "q124_stream_scd2" -> events, "q175_stream_psi" -> docs,
+      "q172_stream_moments" -> events)
+    assert(stateRows.keySet == SparkEntry.streamingQueries)
+    val timer = new Dev.RepTimer(spark)
+    try stateRows.foreach { case (q, n) =>
+      val r = timer.run(q, dir)
+      val width = core.Par.iterCachePartitions(n, spark.sparkContext.defaultParallelism)
+      assert(r.microBatches == 1 && r.stateParts == width, s"$q (width $width): ${r.line}")
+    } finally timer.close()
+  }
+
   test("streaming reruns hit the codegen cache (the r16 JIT-class fix)") {
     // Four rounds of bench incidents (d22 r10, q94 r13, s131/q127 r14,
     // q94 r15) traced to one cause: Spark 4 keys its codegen cache by

@@ -59,6 +59,17 @@ class TablesSpec extends SparkSpec {
       }
     }
 
+  for (scale <- Seq("sf0.001", "sf0.01"))
+    test(s"rowsOf counts every $scale table from its footers and starts no job") {
+      val dir = sf(scale)
+      names.foreach { name =>
+        val path = s"$dir/$name.parquet"
+        val (rows, jobs) = jobsDuring(Tables.rowsOf(spark, path))
+        assert(jobs == 0, s"$name: $jobs jobs while its rows were counted")
+        assert(rows == spark.read.parquet(path).count(), name)
+      }
+    }
+
   test("schemaOf reads Spark's row metadata: decimal, non-nullable, nested struct, timestamp") {
     val path = tempDir().resolve("t.parquet").toString
     spark.range(20).select(
@@ -95,6 +106,7 @@ class TablesSpec extends SparkSpec {
     val got = Tables.schemaOf(spark, dir.toString)
     assert(got.fieldNames.toSeq == Seq("x", "y"))
     assert(got == inferred(dir.toString))
+    assert(Tables.rowsOf(spark, dir.toString) == 10) // both parts
   }
 
   test("a table read starts no Spark job") {
